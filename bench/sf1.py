@@ -11,14 +11,11 @@ from doc_id/vec_id) — then:
   1. runs the standard bench.py suite at BOTH sf0.1 and sf1 in the same
      host window (subprocesses, BENCH_REPS=2) so per-phase 10x-data
      scaling ratios are probe-comparable;
-  2. builds the sf1 index in-process and probes the two-phase WAND gate
-     (WAND_TWO_PHASE_MIN_POSTINGS): records the auto decision, the
-     executor pruning counters (LAST_WAND_STATS), result identity vs
-     the forced-exhaustive run, and the wall for both;
+  2. builds the sf1 index in-process and re-runs the physical-plan
+     audit (plans.audit.audit_plans) against it, asserting no plan-shape
+     change;
   3. times the dedup/cluster/ANN tier — the registered driver entries —
-     at sf1, recording hot-bucket drop counts (LAST_BUCKET_DROP_OBS);
-  4. re-runs the physical-plan audit (plans.audit.audit_plans) against
-     the sf1 index and asserts no plan-shape change.
+     at sf1, recording hot-bucket drop counts (LAST_BUCKET_DROP_OBS).
 
 Prints ONE JSON document; BENCH/BASELINE.md §BENCH_SF1 is written from
 it.  Usage:
@@ -171,90 +168,6 @@ def _bench_subprocess(sf_dir: str, reps: int = 2) -> dict:
     return json.loads(lines[-1])
 
 
-def wand_gate_probe(
-    spark, root: str, query: str = "data stream join hash merge"
-) -> dict:
-    """Auto two-phase vs forced-exhaustive on a query whose posting
-    volume crosses WAND_TWO_PHASE_MIN_POSTINGS, with executor counters.
-
-    The default query (5 flat-vocab terms, ~5 x n_docs postings at sf1)
-    crosses the gate on the driver-shaped documents table; note that on
-    that FLAT corpus (uniform word draw, tf~1) block maxima are uniform
-    and pruning is structurally ~0 — the skew the gate exploits lives in
-    the zipf probe (wand_gate_probe on the gen_pages corpus)."""
-    from pyspark.sql import functions as F
-
-    from websearchengine_spark.operators import topk as T
-
-    runs: dict[str, dict] = {}
-    for mode, tp in (("auto", None), ("two_phase", True), ("exhaustive", False)):
-        best, rows, stats = None, None, None
-        for _ in range(3):
-            t0 = time.time()
-            rows = T.wand_topk(spark, root, query, k=10, two_phase=tp).collect()
-            w = time.time() - t0
-            if best is None or w < best:
-                best = w
-                stats = {k: v.value for k, v in T.LAST_WAND_STATS.items()}
-        runs[mode] = {
-            "wall_sec": round(best, 3),
-            "stats": stats,
-            "top": [(r["doc_id"], round(r["score"], 9)) for r in rows],
-        }
-    identical = (
-        runs["auto"]["top"] == runs["exhaustive"]["top"] == runs["two_phase"]["top"]
-    )
-    dec = runs["two_phase"]["stats"]["blocks_decoded"]
-    tot = runs["two_phase"]["stats"]["blocks_total"]
-    # did the auto path actually choose two-phase?  Recompute its
-    # decision from the same inputs wand_topk uses
-    from websearchengine_spark.operators.query import (
-        analyze_tokens,
-        index_analyzer,
-        parse_query,
-    )
-    from websearchengine_spark.sources.storage import IndexStorage
-
-    store = IndexStorage(root)
-    terms = sorted(
-        {w for ws in analyze_tokens(parse_query(query), index_analyzer(store))
-         for w in ws}
-    )
-    total_postings = sum(
-        r["df"]
-        for r in store.read_table(spark, "term_stats")
-        .filter(F.col("term").isin(terms))
-        .collect()
-    )
-    n_shards = int(
-        store.read_manifest().get("config", {}).get("n_shards", 1) or 1
-    )
-    per_shard = total_postings / max(1, n_shards)
-    return {
-        "query": query,
-        "gate_threshold": T.WAND_TWO_PHASE_MIN_POSTINGS,
-        "gate_shard_threshold": T.WAND_TWO_PHASE_MIN_SHARD_POSTINGS,
-        "total_postings": int(total_postings),
-        "postings_per_shard": round(per_shard, 1),
-        "gate_fired": bool(
-            total_postings >= T.WAND_TWO_PHASE_MIN_POSTINGS
-            and per_shard >= T.WAND_TWO_PHASE_MIN_SHARD_POSTINGS
-            and per_shard <= T.WAND_PHASE1_MAX_POSTINGS  # phase-1 driver cap
-        ),
-        "auto": {k: runs["auto"][k] for k in ("wall_sec", "stats")},
-        "two_phase": {k: runs["two_phase"][k] for k in ("wall_sec", "stats")},
-        "exhaustive": {k: runs["exhaustive"][k] for k in ("wall_sec", "stats")},
-        "identical_topk": identical,
-        "block_skip_rate": round(1 - dec / max(1, tot), 4),
-        "auto_speedup_vs_exhaustive": round(
-            runs["exhaustive"]["wall_sec"] / runs["auto"]["wall_sec"], 3
-        ),
-        "two_phase_speedup_vs_exhaustive": round(
-            runs["exhaustive"]["wall_sec"] / runs["two_phase"]["wall_sec"], 3
-        ),
-    }
-
-
 TIER_ENTRIES = [
     "minhash_signatures",
     "ngram_jaccard_pairs",
@@ -290,7 +203,7 @@ def main() -> None:
         k: round(q1[k] / q01[k], 2) for k in q1 if k in q01
     }
 
-    # ---- 2. sf1 index in-process: WAND gate + plan audit ---------------
+    # ---- 2. sf1 index in-process: plan audit ----------------------------
     import tempfile
 
     from pyspark.sql import functions as F
@@ -309,27 +222,6 @@ def main() -> None:
         analyzer="whitespace", keep_doc_terms=False,
     )
     report["sf1_index_build_sec"] = round(time.time() - t0, 2)
-    report["wand_gate"] = wand_gate_probe(spark, root)
-    print("# wand gate probed (flat docs corpus)", flush=True)
-
-    # gate probe #2: the zipf-vocab web corpus (sources/corpus.py) at the
-    # same doc count — super-head terms (>90% df) + zipf tf give block
-    # maxima actual skew, the regime the champion-head layout and the
-    # phase-1 threshold exist for
-    from websearchengine_spark.sources.corpus import gen_pages_df
-
-    zroot = tempfile.mkdtemp(prefix="wse_sf1_zipf_")
-    t0 = time.time()
-    build_index(
-        spark, gen_pages_df(spark, N_DOCS, seed=42), zroot,
-        n_shards=32, n_groups=2,
-    )
-    zbuild = round(time.time() - t0, 2)
-    report["wand_gate_zipf"] = wand_gate_probe(
-        spark, zroot, query="the data search of and"
-    )
-    report["wand_gate_zipf"]["index_build_sec"] = zbuild
-    print("# wand gate probed (zipf web corpus)", flush=True)
 
     from websearchengine_spark.plans.audit import audit_plans
 

@@ -110,73 +110,43 @@ def test_posting_blocks_skip_decode_positions():
 
 @given(posting_list())
 @settings(max_examples=50, deadline=None)
-def test_hybrid_head_layout_roundtrip(pl):
-    """Round-3 champion-head layout: encode with head_frac splits long
-    lists into head+tail runs, decode must re-merge to the EXACT same
-    doc-ordered (doc_ids, tfs, dls, positions) as the plain layout."""
-    from websearchengine_spark.functions.codec import HEAD_MIN_BLOCKS, bm25_impact
+def test_decode_remerges_interleaved_block_runs(pl):
+    """Indexes written with the retired champion-head layout store a
+    list as two doc-ordered runs whose block ranges interleave (the
+    top-impact postings, then the rest).  Decoding must re-merge them to
+    the EXACT doc-ordered (doc_ids, tfs, dls, positions) of the plain
+    layout, and the kernel must score them identically."""
+    from websearchengine_spark.functions.codec import bm25_impact
+    from websearchengine_spark.operators.topk import shard_bm25_topk
 
     doc_ids, tfs, dls, positions = pl
     avg_dl = float(dls.mean())
-    bsz = 8  # small blocks so hypothesis-sized lists actually split
-    blocks = encode_posting_blocks(
-        doc_ids, tfs, dls, positions, avg_dl, block_size=bsz, head_frac=0.1
-    )
-    d, t, dl, p = decode_posting_blocks(blocks, want_doclens=True)
+    impacts = bm25_impact(tfs.astype(float), dls.astype(float), avg_dl)
+    head = np.zeros(len(doc_ids), dtype=bool)
+    head[np.argsort(-impacts, kind="stable")[: max(1, len(doc_ids) // 10)]] = True
+    starts = np.concatenate([[0], np.cumsum(tfs)[:-1]])
+
+    def run(mask):
+        pos = [positions[s : s + t] for s, t in zip(starts[mask], tfs[mask])]
+        return encode_posting_blocks(
+            doc_ids[mask], tfs[mask], dls[mask],
+            np.concatenate(pos) if pos else np.empty(0, np.int64),
+            avg_dl, block_size=8,
+        )
+
+    legacy = [b[:6] + (True,) for b in run(head)] + (run(~head) if (~head).any() else [])
+    d, t, dl, p = decode_posting_blocks(legacy, want_doclens=True)
     assert d.tolist() == doc_ids.tolist()
     assert t.tolist() == tfs.tolist()
     assert dl.tolist() == dls.tolist()
     assert p.tolist() == positions.tolist()
-    heads = [b for b in blocks if b[6]]
-    tails = [b for b in blocks if not b[6]]
-    if len(doc_ids) >= HEAD_MIN_BLOCKS * bsz:
-        assert heads, "long list must have head blocks"
-        # the layout's whole point: every tail max_impact <= head cutoff
-        impacts = bm25_impact(tfs.astype(float), dls.astype(float), avg_dl)
-        n_head = sum(b[2] for b in heads)
-        cutoff = np.sort(impacts)[::-1][n_head - 1]
-        for b in tails:
-            assert b[4] <= cutoff + 1e-12
-    else:
-        assert not heads
 
-
-def test_hybrid_kernel_identity_and_tail_skip():
-    """The kernel must return the identical top-k on plain and hybrid
-    layouts, and on an impact-concentrated list the hybrid layout must
-    decode strictly fewer blocks under a threshold."""
-    import math
-
-    from websearchengine_spark.operators.topk import shard_bm25_topk
-
-    rng = np.random.default_rng(11)
-    n_docs, df, avg_dl, k = 200_000, 40_000, 200.0, 10
-    def synth(head_frac):
-        r = np.random.default_rng(3)
-        docs = np.sort(r.choice(n_docs, size=df, replace=False)).astype(np.int64)
-        tfs = r.zipf(1.8, size=df).clip(1, 100).astype(np.int64)
-        dls = np.maximum((avg_dl * r.lognormal(0, 1.0, size=df)).astype(np.int64), tfs + 1)
-        pos = np.arange(int(tfs.sum()), dtype=np.int64)
-        return encode_posting_blocks(docs, tfs, dls, pos, avg_dl, head_frac=head_frac)
-
-    idf = {"a": math.log(4.0), "b": math.log(5.0)}
-    qw = {"a": 1.0, "b": 1.0}
-    tl_plain = {"a": synth(0.0), "b": synth(0.0)}
-    tl_hyb = {"a": synth(0.05), "b": synth(0.05)}
-    # same synthetic data in both (seeded inside synth), layouts differ
-    d0, s0, _ = shard_bm25_topk(tl_plain, qw, idf, avg_dl, k)
-    thr = float(s0[k - 1]) - 1e-9
-    d1, s1, st1 = shard_bm25_topk(tl_hyb, qw, idf, avg_dl, k)
-    assert d1.tolist() == d0.tolist()
-    np.testing.assert_allclose(s1, s0, atol=1e-12)
-    d2, s2, st2 = shard_bm25_topk(tl_hyb, qw, idf, avg_dl, k, threshold=thr)
-    assert d2.tolist() == d0.tolist()
-    np.testing.assert_allclose(s2, s0, atol=1e-12)
-    dp, sp, stp = shard_bm25_topk(tl_plain, qw, idf, avg_dl, k, threshold=thr)
-    assert dp.tolist() == d0.tolist()
-    assert st2["blocks_decoded"] < stp["blocks_decoded"], (
-        st2["blocks_decoded"], stp["blocks_decoded"],
-    )
+    plain = encode_posting_blocks(doc_ids, tfs, dls, positions, avg_dl, block_size=8)
+    spec = [(0, {"t": 1.0}, [])]
+    want = shard_bm25_topk({"t": plain}, spec, {"t": 1.0}, avg_dl, 5)
+    got = shard_bm25_topk({"t": legacy}, spec, {"t": 1.0}, avg_dl, 5)
+    for w, g in zip(want[:3], got[:3]):
+        np.testing.assert_array_equal(w, g)
 
 
 # ---- batched varbyte (the build/compaction encode path) ---------------
@@ -227,16 +197,16 @@ def test_encode_posting_blocks_defer_bytes_identical():
     )
 
     rng = np.random.default_rng(11)
-    for head_frac, m in [(0.0, 5), (0.0, 300), (0.05, 2000)]:
+    for m in [5, 300]:
         docs = np.sort(rng.choice(100000, size=m, replace=False)).astype(np.int64)
         tfs = rng.integers(1, 5, size=m).astype(np.int64)
         dls = rng.integers(10, 200, size=m).astype(np.int64)
         pos = np.concatenate(
             [np.sort(rng.integers(0, 200, size=t)) for t in tfs]
         ).astype(np.int64)
-        eager = encode_posting_blocks(docs, tfs, dls, pos, 55.0, head_frac=head_frac)
+        eager = encode_posting_blocks(docs, tfs, dls, pos, 55.0)
         deferred = encode_posting_blocks(
-            docs, tfs, dls, pos, 55.0, head_frac=head_frac, _defer_bytes=True
+            docs, tfs, dls, pos, 55.0, _defer_bytes=True
         )
         datas = varbyte_encode_many([b[5] for b in deferred])
         rebuilt = [b[:5] + (d,) + b[6:] for b, d in zip(deferred, datas)]

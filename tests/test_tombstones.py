@@ -250,18 +250,14 @@ def test_legacy_root_without_catalog_listing_scans_dir(spark, upserted):
     assert [f["n"] for f in absorbed] == [None]
 
 
-def test_two_phase_with_exclude_df_identical(spark, upserted):
-    """Forced two-phase pruning composes with the executor-resident
-    exclusion: phase 1 collects only the phase-1 shard's tombstone
-    slice, and the result equals the exhaustive run with the same
-    exclusions (and the closure-kwarg form)."""
-    import warnings
-
+def test_exclude_df_masks_ids(spark, upserted):
+    """wand_topk(exclude_df=) masks exactly the given ids, spread across
+    every shard: none of them comes back, and the exclusion actually
+    changes the result."""
     from websearchengine_spark.operators.topk import wand_topk
 
     root = upserted["root"]
     seg = os.path.join(root, "delta-000000000")
-    # tombstone ids spread across shards, including shard 0 (phase-1)
     ids = [0, 1, 2, 3, 8, 13]
     ex = spark.createDataFrame(
         [(i % N_SHARDS, i) for i in ids], "shard int, doc_id long"
@@ -270,33 +266,31 @@ def test_two_phase_with_exclude_df_identical(spark, upserted):
     def rows(df):
         return [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
 
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # no phase-1 overflow fallback
-        two = rows(
-            wand_topk(
-                spark, seg, "data mining", k=10, two_phase=True,
-                exclude_df=ex, docs_join=False,
-            )
-        )
-    exhaustive = rows(
+    masked = rows(
         wand_topk(
-            spark, seg, "data mining", k=10, two_phase=False,
-            exclude_df=ex, docs_join=False,
+            spark, seg, "data mining", k=10, exclude_df=ex, docs_join=False,
         )
     )
-    closure = rows(
-        wand_topk(
-            spark, seg, "data mining", k=10, two_phase=False,
-            exclude_doc_ids=ids, docs_join=False,
-        )
-    )
-    assert two == exhaustive == closure
-    assert not any(d in set(ids) for d, _ in two)
+    assert not any(d in set(ids) for d, _ in masked)
     # and the unexcluded run differs (the exclusion actually bit)
     plain = rows(
         wand_topk(spark, seg, "data mining", k=10, docs_join=False)
     )
-    assert plain != two
+    assert plain != masked
+
+
+@pytest.mark.parametrize("search", ["search_live", "search_live_batch"])
+def test_overdue_compaction_warns(spark, upserted, monkeypatch, search):
+    """Both live search entry points raise the compaction-overdue
+    RuntimeWarning once pending tombstones pass the gauge threshold."""
+    root = upserted["root"]
+    assert pending_tombstones(root) == 30
+    monkeypatch.setattr(ingest, "COMPACTION_OVERDUE_TOMBSTONES", 10)
+    query = "fresh recrawl"
+    arg = query if search == "search_live" else [query]
+    with pytest.warns(RuntimeWarning, match="pending tombstones"):
+        hits = getattr(ingest, search)(spark, root, arg, k=50).collect()
+    assert {r["url"] for r in hits} == upserted["recrawled_urls"]
 
 
 def test_tombstone_files_are_seg_partitioned(spark, upserted):

@@ -63,13 +63,17 @@ def _mk_lists(avg_dl=10.0):
     return {"rare": rare, "common": common}
 
 
+def _spec(*terms, phrases=()):
+    return [(0, {t: 1.0 for t in terms}, list(phrases))]
+
+
 def test_kernel_block_skipping():
     tl = _mk_lists()
-    qw = {"rare": 1.0, "common": 1.0}
     idf = {"rare": 3.0, "common": 0.5}
-    d, s, stats = shard_bm25_topk(tl, qw, idf, avg_dl=10.0, k=10)
+    q, d, s, stats = shard_bm25_topk(tl, _spec("rare", "common"), idf, avg_dl=10.0, k=10)
     # conjunctive: docs 500 and 900 are even (in common), 5 is odd (not)
     assert d.tolist() == [900, 500]  # 900 has tf=3 for rare -> higher score
+    assert q.tolist() == [0, 0]
     assert s[0] > s[1]
     # the common term has ceil(500/16)=32 blocks; only the ones containing
     # candidates {5,500,900} may be decoded (2 blocks)
@@ -78,27 +82,64 @@ def test_kernel_block_skipping():
     assert stats["blocks_decoded"] < stats["blocks_total"]
 
 
+def test_kernel_batch_shares_decode_and_keeps_skip():
+    """Several queries in one kernel call: each (term, block) is decoded
+    at most once, the per-query block skip still holds, and each query's
+    rows equal its single-query run."""
+    tl = _mk_lists()
+    idf = {"rare": 3.0, "common": 0.5}
+    specs = [
+        (0, {"rare": 1.0, "common": 1.0}, []),
+        (1, {"rare": 2.0}, []),
+        (2, {"rare": 1.0, "common": 1.0}, []),
+        (3, {"absent": 1.0}, []),
+    ]
+    q, d, s, stats = shard_bm25_topk(tl, specs, idf, 10.0, k=10)
+    assert stats["blocks_decoded"] <= 2 + 3  # shared, not 3x
+    for qid, qw, ph in specs:
+        _q1, d1, s1, _ = shard_bm25_topk(tl, [(qid, qw, ph)], idf, 10.0, k=10)
+        assert d[q == qid].tolist() == d1.tolist()
+        np.testing.assert_array_equal(s[q == qid], s1)
+    assert not (q == 3).any()
+    assert (q == 1).sum() == 3
+
+
+def test_kernel_phrase_adjacency():
+    """Phrase specs keep only docs whose words are adjacent: rare's
+    positions are {5: [0, 1], 500: [4], 900: [2, 3, 7]}.  Common at the
+    doc's rank among the evens (500 -> 250, 900 -> 450) never follows
+    it; common at position 5 in docs 500 and 900 follows it in 500 only."""
+    tl = _mk_lists()
+    idf = {"rare": 3.0, "common": 0.5}
+    _q, d, _s, _ = shard_bm25_topk(
+        tl, _spec("rare", "common", phrases=[("rare", "common")]), idf, 10.0, k=10
+    )
+    assert d.size == 0
+    tl["common"] = encode_posting_blocks(
+        np.array([500, 900]), np.array([1, 1]), np.array([12, 8]),
+        np.array([5, 5]), 10.0, block_size=16,
+    )
+    _q, d, _s, _ = shard_bm25_topk(
+        tl, _spec("rare", "common", phrases=[("rare", "common")]), idf, 10.0, k=10
+    )
+    assert d.tolist() == [500]
+
+
+def test_kernel_exclude_masks_before_topk():
+    tl = _mk_lists()
+    idf = {"rare": 3.0, "common": 0.5}
+    _q, d, _s, _ = shard_bm25_topk(
+        tl, _spec("rare", "common"), idf, 10.0, k=1, exclude=np.array([900])
+    )
+    assert d.tolist() == [500]
+
+
 def test_kernel_missing_term_means_empty():
     tl = _mk_lists()
-    qw = {"rare": 1.0, "common": 1.0, "absent": 1.0}
-    d, s, stats = shard_bm25_topk(tl, qw, {"rare": 1, "common": 1, "absent": 1}, 10.0, 10)
-    assert d.size == 0
-
-
-def test_kernel_threshold_pruning_never_changes_topk():
-    tl = _mk_lists()
-    qw = {"rare": 1.0, "common": 1.0}
-    idf = {"rare": 3.0, "common": 0.5}
-    d0, s0, st0 = shard_bm25_topk(tl, qw, idf, 10.0, k=1)
-    # threshold just below the best score must still return the best doc
-    d1, s1, st = shard_bm25_topk(tl, qw, idf, 10.0, k=1, threshold=s0[0] - 1e-9)
-    assert d1.tolist() == d0.tolist()[:1]
-    # the weaker candidate was pruned — either whole blocks were skipped
-    # before decode (block-max skip) or the doc was UB-pruned after
-    # intersection
-    assert (
-        st["blocks_decoded"] < st0["blocks_decoded"] or st["pruned_by_ub"] >= 1
-    ), (st0, st)
+    q, d, s, stats = shard_bm25_topk(
+        tl, _spec("rare", "common", "absent"), {"rare": 1, "common": 1, "absent": 1}, 10.0, 10
+    )
+    assert d.size == 0 and q.size == 0
 
 
 def test_kernel_tie_break_doc_id_asc():
@@ -107,16 +148,16 @@ def test_kernel_tie_break_doc_id_asc():
     same = encode_posting_blocks(
         docs, np.ones(3, dtype=np.int64), np.full(3, 10), np.arange(3), avg_dl
     )
-    d, s, _ = shard_bm25_topk({"t": same}, {"t": 1.0}, {"t": 1.0}, avg_dl, k=2)
+    _q, d, s, _ = shard_bm25_topk({"t": same}, _spec("t"), {"t": 1.0}, avg_dl, k=2)
     assert d.tolist() == [3, 7]  # equal scores -> lowest doc_ids win
 
 
 @pytest.fixture(scope="module")
 def fine_block_index(spark, corpus_pdf, tmp_path_factory):
     """Index with block_size=8: at 200 docs the default 128-doc blocks
-    collapse each shard to 1-2 blocks per term, so every candidate shares
-    the block max and the UB can never separate them — fine blocks give
-    the UB the resolution the default has at real scale."""
+    collapse each shard to 1-2 blocks per term, leaving the block-range
+    skip nothing to skip — fine blocks give it the resolution the default
+    has at real scale."""
     from websearchengine_spark.operators.build import build_index
 
     root = str(tmp_path_factory.mktemp("fine_idx"))
@@ -125,89 +166,32 @@ def fine_block_index(spark, corpus_pdf, tmp_path_factory):
     return root
 
 
-def test_serve_path_two_phase_pruning(spark, fine_block_index, oracle_index):
-    """Round 2: the SERVE path itself must prune — phase 1 scores shard 0
-    driver-side, phase 2 broadcasts its k-th score as the UB threshold.
-    Evidence: executor-side accumulator > 0 on a high-df query, with rank
-    identity preserved."""
-    from websearchengine_spark.operators.topk import LAST_WAND_STATS
-
-    # high-df terms at small k -> tight threshold -> real pruning
+def test_serve_path_fine_blocks_rank_identity(spark, fine_block_index, oracle_index):
+    """The serve path on 8-doc blocks (many blocks per shard, so the
+    block skip has real work to do) stays rank-identical to the oracle
+    on a high-df query at small k."""
     q = "the of"
     got = [
         (r["doc_id"], r["score"])
-        for r in wand_topk(spark, fine_block_index, q, k=3, two_phase=True).collect()
+        for r in wand_topk(spark, fine_block_index, q, k=3).collect()
     ]
     want = oracle_index.bm25(q, 3)
     assert [d for d, _ in got] == [d for d, _ in want]
     for (d1, s1), (d2, s2) in zip(got, want):
         assert abs(s1 - s2) < 1e-9
-    assert LAST_WAND_STATS["pruned_by_ub"].value > 0, (
-        "two-phase threshold never pruned a candidate on a high-df query"
-    )
-
-
-@pytest.mark.parametrize("query", ["web search", "google map", "the of"])
-def test_two_phase_equals_exhaustive(spark, built_index, query):
-    a = [
-        (r["doc_id"], round(r["score"], 9))
-        for r in wand_topk(spark, built_index, query, k=10, two_phase=True).collect()
-    ]
-    b = [
-        (r["doc_id"], round(r["score"], 9))
-        for r in wand_topk(spark, built_index, query, k=10, two_phase=False).collect()
-    ]
-    assert a == b
-
-
-def test_explicit_two_phase_respects_driver_cap(spark, built_index, oracle_index, monkeypatch):
-    """ADVICE round-3: the phase-1 driver-collect size cap must apply on
-    the EXPLICIT two_phase=True path too — when a shard's posting share
-    exceeds it, fall back to exhaustive (identical top-k) with a warning
-    instead of collecting unbounded blocks to the driver."""
-    import warnings
-
-    from websearchengine_spark.operators import topk as topk_mod
-
-    monkeypatch.setattr(topk_mod, "WAND_PHASE1_MAX_POSTINGS", 1)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        got = [
-            (r["doc_id"], round(r["score"], 9))
-            for r in topk_mod.wand_topk(
-                spark, built_index, "web search", k=10, two_phase=True
-            ).collect()
-        ]
-    assert any("WAND_PHASE1_MAX_POSTINGS" in str(x.message) for x in w)
-    want = [(d, round(s, 9)) for d, s in oracle_index.bm25("web search", 10)]
-    assert [d for d, _ in got] == [d for d, _ in want]
 
 
 def test_hybrid_head_blocks_exist_and_rank_identity(spark, corpus_pdf, oracle_index, tmp_path):
-    """Round-3 e2e proof that the champion-head layout is ACTIVE in a
-    real stored index (not just the synthetic kernel tests) and that
-    both serve paths stay rank-identical on it: with n_shards=1 and
-    block_size=8 the head terms (df~190 >= HEAD_MIN_BLOCKS*8) split."""
-    from pyspark.sql import functions as F
-
+    """Both serve paths stay rank-identical on a one-shard index with
+    8-doc blocks, where head terms span ~24 blocks in a single shard."""
     from websearchengine_spark.operators.build import build_index
     from websearchengine_spark.operators.query import run_query
-    from websearchengine_spark.sources.storage import IndexStorage
 
     root = str(tmp_path / "hyb_idx")
     pages = spark.createDataFrame(corpus_pdf)
     build_index(spark, pages, root, n_shards=1, n_groups=1, block_size=8)
 
-    store = IndexStorage(root)
-    heads = (
-        store.read_partitioned(spark, "postings")
-        .select(F.explode("blocks").alias("b"))
-        .filter(F.col("b.head"))
-        .count()
-    )
-    assert heads > 0, "expected head-flagged blocks in the stored index"
-
-    # WAND on a head-split term, exhaustive and thresholded
+    # WAND on a high-df and a mid-df query
     for q in ["the of", "web search"]:
         got = [
             (r["doc_id"], round(r["score"], 9))
@@ -215,76 +199,10 @@ def test_hybrid_head_blocks_exist_and_rank_identity(spark, corpus_pdf, oracle_in
         ]
         want = [(d, round(s, 9)) for d, s in oracle_index.bm25(q, 10)]
         assert got == want, q
-    # phrase DataFrame path: hybrid positional decode must re-merge runs
+    # phrase DataFrame path
     got_ph = [
         r["doc_id"]
         for r in run_query(spark, root, '"data mining"', ranker="comprehensive", k=10).collect()
     ]
     want_ph = [d for d, _ in oracle_index.query('"data mining"', "comprehensive", 10)]
     assert got_ph == want_ph
-
-
-def test_bound_scale_revalidates_stale_block_bounds():
-    """Live multi-segment search scores a segment with the UNION avg_dl,
-    but the stored per-block max_impact bounds were encoded with the
-    segment's OWN avg_dl — when avg_dl_union > avg_dl_segment they are
-    no longer upper bounds and the two-phase gate can prune true top-k
-    docs.  bound_scale = avg_q/avg_enc re-validates them (see the
-    shard_bm25_topk docstring for the algebra).  This test constructs
-    the failure: blocks encoded at avg_dl=2, scored at avg_dl=50 —
-    unscaled gating drops EVERY block; scaled gating is exact."""
-    import numpy as np
-
-    from websearchengine_spark.functions.codec import encode_posting_blocks
-    from websearchengine_spark.operators.topk import shard_bm25_topk
-
-    enc_avg, query_avg = 2.0, 50.0
-    d = np.arange(16, dtype=np.int64)
-    tf = np.ones(16, dtype=np.int64)
-    dl = np.full(16, 50, dtype=np.int64)
-    blocks = encode_posting_blocks(d, tf, dl, None, enc_avg, block_size=4)
-    term_lists = {"t": blocks}
-    qw, idf = {"t": 1.0}, {"t": 1.0}
-
-    d_ex, s_ex, _ = shard_bm25_topk(term_lists, qw, idf, query_avg, 4)
-    assert d_ex.size == 4
-    thr = float(s_ex[3]) - 1e-9  # a VALID phase-1 threshold at query_avg
-
-    # the bug: stored bounds (encoded at avg_dl=2) sit far below the
-    # query-time scores, so an unscaled gate skips every block
-    d_bug, _, st_bug = shard_bm25_topk(
-        term_lists, qw, idf, query_avg, 4, threshold=thr, bound_scale=1.0
-    )
-    assert d_bug.size == 0 and st_bug["blocks_decoded"] == 0
-
-    # the fix: scaling by avg_q/avg_enc restores validity -> exact top-k
-    d_fix, s_fix, _ = shard_bm25_topk(
-        term_lists, qw, idf, query_avg, 4,
-        threshold=thr, bound_scale=query_avg / enc_avg,
-    )
-    np.testing.assert_array_equal(d_fix, d_ex)
-    np.testing.assert_allclose(s_fix, s_ex, atol=1e-12)
-
-
-def test_wand_corpus_stats_override_sets_bound_scale(spark, built_index):
-    """End-to-end: wand_topk with a corpus_stats override whose avg_dl
-    exceeds the index's own must return the SAME top-k with two-phase
-    forced on as with it off (the override path computes bound_scale
-    internally)."""
-    from websearchengine_spark.operators.topk import _corpus_stats
-    from websearchengine_spark.sources.storage import IndexStorage
-
-    store = IndexStorage(built_index)
-    nd, tt, _ = _corpus_stats(spark, store)
-    fake = (nd + 1000, tt * 30)  # avg_dl ~6x the index's own
-
-    def run(two_phase):
-        return [
-            (r["doc_id"], round(r["score"], 9))
-            for r in wand_topk(
-                spark, built_index, "web search", k=10,
-                corpus_stats=fake, two_phase=two_phase, docs_join=False,
-            ).collect()
-        ]
-
-    assert run(True) == run(False)

@@ -27,7 +27,7 @@ required)::
     log_miner_type: numviews
 
 Engine extras (optional, default sensibly): ``n_shards``, ``n_groups``,
-``spell_assist``, ``keep_doc_tokens``, ``head_frac``, ``block_size``,
+``spell_assist``, ``keep_doc_tokens``, ``block_size``,
 ``public_root`` (serve-mode static assets; defaults to ``./public`` /
 ``../public`` when one exists, exactly the reference's root probing —
 SearchEngine.java:168-177), ``host``.
@@ -146,15 +146,6 @@ def _opt_int(opts: dict, key: str, default: int | None) -> int | None:
         check(False, f"Invalid integer for {key}: {opts[key]}")
 
 
-def _opt_float(opts: dict, key: str) -> float | None:
-    if key not in opts:
-        return None
-    try:
-        return float(opts[key])
-    except ValueError:
-        check(False, f"Invalid number for {key}: {opts[key]}")
-
-
 def _opt_bool(opts: dict, key: str, default: bool) -> bool:
     if key not in opts:
         return default
@@ -196,9 +187,6 @@ def run_index(spark, opts: dict):
     if os.path.exists(signals_path(opts)):
         signals = spark.read.parquet(signals_path(opts))
     kwargs = {}
-    hf = _opt_float(opts, "head_frac")
-    if hf is not None:
-        kwargs["head_frac"] = hf
     bs = _opt_int(opts, "block_size", None)
     if bs is not None:
         kwargs["block_size"] = bs

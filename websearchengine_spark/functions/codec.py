@@ -122,27 +122,6 @@ def varbyte_decode(data: bytes | np.ndarray) -> np.ndarray:
 BM25_K1 = 1.2
 BM25_B = 0.75
 
-# Champion-head hybrid layout: with head_frac > 0, a posting list that
-# spans at least HEAD_MIN_BLOCKS blocks is split into a HEAD (its
-# top-impact postings, doc-ordered among themselves, blocks flagged
-# head=True) and a doc-ordered TAIL.  The tail's per-block max_impact is
-# then capped by the head cutoff, so the block-max gate can skip the
-# ENTIRE tail when a running threshold is high — the classic block-max
-# win that a plain doc-ordered layout never realizes (doc-ordered
-# 128-doc blocks all have near-max maxima).  Doc-ordered range skipping
-# still works: head and tail are each internally doc-ordered, so
-# selective (rare-term-driven) queries pay at most the head's extra
-# blocks (~head_frac of the list).
-#
-# 0.05 measured (bench/wand_pruning.py): on a heavy-tailed tf/dl corpus
-# (realistic web text) the threshold gate then skips ~95% of block
-# decodes (6-7x kernel speedup, identical top-k); 0.01 leaves the tail
-# cap above the gate and buys nothing.  On a flat synthetic corpus the
-# impact distribution is too narrow for ANY layout to cap the tail
-# below the conjunctive bound — that case stays ~1x, honestly.
-DEFAULT_HEAD_FRAC = 0.05
-HEAD_MIN_BLOCKS = 8
-
 
 def bm25_impact(tfs: np.ndarray, dls: np.ndarray, avg_dl: float) -> np.ndarray:
     """Per-posting BM25 term impact (idf excluded): the tf-saturation part
@@ -173,23 +152,43 @@ def _gather_segments(
     return values[idx]
 
 
-def _encode_run(
+def encode_posting_blocks(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
     doc_lens: np.ndarray,
     positions: np.ndarray | None,
-    impacts: np.ndarray,
-    block_size: int,
-    head: bool,
+    avg_dl: float,
+    block_size: int = BLOCK_SIZE,
     _defer_bytes: bool = False,
 ) -> list[tuple[int, int, int, int, float, bytes, bool]]:
-    """Encode one doc-ordered posting run into flagged blocks.
+    """Encode one term's posting list into block-max blocks.
+
+    ``doc_ids`` strictly ascending int64 (len m); ``tfs``/``doc_lens``
+    int64 (len m); ``positions`` int64 concatenation of each doc's
+    ascending position list (len sum(tfs)).  ``avg_dl`` is the corpus
+    average doc length (stats.total_tf / stats.num_docs), baked into the
+    per-block ``max_impact`` BM25 upper bound (k1=1.2, b=0.75).
+
+    Returns (first_docid, last_docid, n, max_tf, max_impact, data, head)
+    tuples; ``data`` is one varbyte stream of [gaps, tfs, dls, posdeltas].
+    ``head`` is always False: the stored struct keeps the field so that
+    indexes written with the retired champion-head layout (head blocks
+    whose doc ranges overlap the tail's) still decode and merge.
 
     ``_defer_bytes=True`` returns the per-block VALUE ARRAY in the data
     slot instead of varbyte bytes, so a batching caller can run ONE
     ``varbyte_encode_many`` over many blocks (byte-identical output;
-    the build's Arrow encoder uses this — guide §4.2)."""
+    the build's Arrow encoder uses this — guide §4.2).
+    """
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    tfs = np.asarray(tfs, dtype=np.int64)
+    doc_lens = np.asarray(doc_lens, dtype=np.int64)
+    # positions=None -> doconly-style positionless blocks: the data stream
+    # is just [gaps, tfs, dls] (decode with want_positions=False only)
+    if positions is not None:
+        positions = np.asarray(positions, dtype=np.int64)
     m = doc_ids.size
+    impacts = bm25_impact(tfs.astype(np.float64), doc_lens.astype(np.float64), avg_dl)
     pos_offsets = np.zeros(m + 1, dtype=np.int64)
     np.cumsum(tfs, out=pos_offsets[1:])
     blocks = []
@@ -217,116 +216,49 @@ def _encode_run(
                 int(t.max()),
                 float(impacts[start:end].max()),
                 data,
-                head,
+                False,
             )
         )
     return blocks
 
 
-def encode_posting_blocks(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    doc_lens: np.ndarray,
-    positions: np.ndarray | None,
-    avg_dl: float,
-    block_size: int = BLOCK_SIZE,
-    head_frac: float = 0.0,
-    _defer_bytes: bool = False,
-) -> list[tuple[int, int, int, int, float, bytes, bool]]:
-    """Encode one term's posting list into block-max blocks.
-
-    ``doc_ids`` strictly ascending int64 (len m); ``tfs``/``doc_lens``
-    int64 (len m); ``positions`` int64 concatenation of each doc's
-    ascending position list (len sum(tfs)).  ``avg_dl`` is the corpus
-    average doc length (stats.total_tf / stats.num_docs), baked into the
-    per-block ``max_impact`` BM25 upper bound (k1=1.2, b=0.75).
-
-    ``head_frac`` > 0 enables the champion-head hybrid layout (see
-    DEFAULT_HEAD_FRAC note above): lists spanning >= HEAD_MIN_BLOCKS
-    blocks put their top ceil(head_frac*m) impacts (at least one full
-    block) into doc-ordered head blocks flagged head=True, capping every
-    tail block's max_impact at the head cutoff.
-
-    Returns (first_docid, last_docid, n, max_tf, max_impact, data, head)
-    tuples; ``data`` is one varbyte stream of [gaps, tfs, dls, posdeltas].
-    """
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    tfs = np.asarray(tfs, dtype=np.int64)
-    doc_lens = np.asarray(doc_lens, dtype=np.int64)
-    # positions=None -> doconly-style positionless blocks: the data stream
-    # is just [gaps, tfs, dls] (decode with want_positions=False only)
-    with_positions = positions is not None
-    if with_positions:
-        positions = np.asarray(positions, dtype=np.int64)
-    m = doc_ids.size
-    impacts = bm25_impact(tfs.astype(np.float64), doc_lens.astype(np.float64), avg_dl)
-    if head_frac > 0.0 and m >= HEAD_MIN_BLOCKS * block_size:
-        h = max(block_size, int(np.ceil(m * head_frac)))
-        head_sel = np.sort(np.argpartition(-impacts, h - 1)[:h])
-        mask = np.zeros(m, dtype=bool)
-        mask[head_sel] = True
-        tail_sel = np.flatnonzero(~mask)
-        pos_offsets = np.zeros(m + 1, dtype=np.int64)
-        np.cumsum(tfs, out=pos_offsets[1:])
-        out = []
-        for sel, is_head in ((head_sel, True), (tail_sel, False)):
-            p = (
-                _gather_segments(positions, pos_offsets[:-1], tfs, sel)
-                if with_positions
-                else None
-            )
-            out.extend(
-                _encode_run(
-                    doc_ids[sel], tfs[sel], doc_lens[sel], p,
-                    impacts[sel], block_size, is_head,
-                    _defer_bytes=_defer_bytes,
-                )
-            )
-        return out
-    return _encode_run(
-        doc_ids, tfs, doc_lens, positions, impacts, block_size, False,
-        _defer_bytes=_defer_bytes,
-    )
-
-
-def decode_posting_blocks(
-    blocks: list[tuple] | list,
-    want_positions: bool = True,
-    want_doclens: bool = False,
+def decode_block(
+    blk: tuple, want_positions: bool = True, want_doclens: bool = False
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray | None, np.ndarray | None]:
-    """Decode blocks back to (doc_ids, tfs, doclens-or-None, positions-
-    or-None), ALWAYS doc_id-ascending: hybrid head+tail layouts (or any
-    block subset whose runs interleave) are merge-sorted back into one
-    global doc order, positions re-gathered segment-wise."""
-    all_docs, all_tfs, all_dls, all_pos = [], [], [], []
-    for blk in blocks:
-        first_docid, _last, n, _max_tf, _max_imp, data = blk[:6]
-        vals = varbyte_decode(np.frombuffer(data, dtype=np.uint8))
-        gaps = vals[:n]
-        tfs = vals[n : 2 * n]
-        docs = np.cumsum(gaps) + first_docid
-        all_docs.append(docs)
-        all_tfs.append(tfs)
-        if want_doclens:
-            all_dls.append(vals[2 * n : 3 * n])
-        if want_positions:
-            pdelta = vals[3 * n :]
-            pos = np.cumsum(pdelta)
-            # reset the running sum at each doc boundary: pdelta stores
-            # pos[0] absolute per doc, so recompute with segmented cumsum
-            starts = np.zeros(n, dtype=np.int64)
-            np.cumsum(tfs[:-1], out=starts[1:])
-            seg_base = np.repeat(pos[starts] - pdelta[starts], tfs)
-            all_pos.append(pos - seg_base)
+    """Decode ONE block to (doc_ids, tfs, doclens-or-None,
+    positions-or-None); doc_ids ascending within the block."""
+    first_docid, _last, n, _max_tf, _max_imp, data = blk[:6]
+    vals = varbyte_decode(np.frombuffer(data, dtype=np.uint8))
+    tfs = vals[n : 2 * n]
+    docs = np.cumsum(vals[:n]) + first_docid
+    dls = vals[2 * n : 3 * n] if want_doclens else None
+    pos = None
+    if want_positions:
+        pdelta = vals[3 * n :]
+        pos = np.cumsum(pdelta)
+        # reset the running sum at each doc boundary: pdelta stores
+        # pos[0] absolute per doc, so recompute with segmented cumsum
+        starts = np.zeros(n, dtype=np.int64)
+        np.cumsum(tfs[:-1], out=starts[1:])
+        pos = pos - np.repeat(pos[starts] - pdelta[starts], tfs)
+    return docs, tfs, dls, pos
+
+
+def concat_decoded(
+    parts: list, want_positions: bool = True, want_doclens: bool = False
+) -> tuple[np.ndarray, np.ndarray, np.ndarray | None, np.ndarray | None]:
+    """Join decode_block outputs into one posting list, ALWAYS doc_id-
+    ascending: block runs whose doc ranges interleave (the retired
+    champion-head layout, or any block subset) are merge-sorted back
+    into one global doc order, positions re-gathered segment-wise."""
     empty = np.empty(0, dtype=np.int64)
-    doc_ids = np.concatenate(all_docs) if all_docs else empty
-    tfs = np.concatenate(all_tfs) if all_tfs else empty
-    doclens = (
-        (np.concatenate(all_dls) if all_dls else empty) if want_doclens else None
-    )
-    positions = (
-        (np.concatenate(all_pos) if all_pos else empty) if want_positions else None
-    )
+
+    def cat(i):
+        return np.concatenate([p[i] for p in parts]) if parts else empty
+
+    doc_ids, tfs = cat(0), cat(1)
+    doclens = cat(2) if want_doclens else None
+    positions = cat(3) if want_positions else None
     if doc_ids.size > 1 and np.any(doc_ids[1:] < doc_ids[:-1]):
         order = np.argsort(doc_ids, kind="stable")
         if positions is not None and positions.size:
@@ -338,3 +270,16 @@ def decode_posting_blocks(
         if doclens is not None and doclens.size:
             doclens = doclens[order]
     return doc_ids, tfs, doclens, positions
+
+
+def decode_posting_blocks(
+    blocks: list[tuple] | list,
+    want_positions: bool = True,
+    want_doclens: bool = False,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray | None, np.ndarray | None]:
+    """Decode blocks back to (doc_ids, tfs, doclens-or-None, positions-
+    or-None), doc_id-ascending (see concat_decoded)."""
+    return concat_decoded(
+        [decode_block(b, want_positions, want_doclens) for b in blocks],
+        want_positions, want_doclens,
+    )

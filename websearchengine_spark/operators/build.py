@@ -259,7 +259,6 @@ def build_index(
     analyzer: str = "reference",
     block_size: int | None = None,
     positions: bool = True,
-    head_frac: float | None = None,
     spell_assist: bool = False,
 ) -> IndexStorage:
     """Build the full index at ``index_root``; resumable per shard-group.
@@ -274,12 +273,6 @@ def build_index(
     [gaps, tfs, dls] — ~2-3x smaller, and the position column is dropped
     from the build shuffle itself.  Plain conjunctive/BM25 queries are
     unchanged; phrase queries (which need positions) raise ValueError.
-
-    ``head_frac`` (default codec.DEFAULT_HEAD_FRAC): champion-head
-    hybrid block layout — long posting lists split their top-impact
-    postings into head blocks so tail blocks carry genuinely low
-    max_impact bounds and the WAND threshold gate can skip them
-    wholesale.  0.0 restores the plain doc-ordered layout.
     """
     phase_t: dict[str, float] = {}
     _t = [time.time()]
@@ -430,10 +423,8 @@ def build_index(
         ).withColumn("shard", (F.col("doc_id") % F.lit(n_shards)).cast("int"))
 
     from websearchengine_spark.functions.codec import BLOCK_SIZE as _DEFAULT_BSZ
-    from websearchengine_spark.functions.codec import DEFAULT_HEAD_FRAC
 
     _bsz = block_size if block_size is not None else _DEFAULT_BSZ
-    _hfrac = head_frac if head_frac is not None else DEFAULT_HEAD_FRAC
 
     # Arrow type of the blocks column (mirrors POSTINGS_SCHEMA)
     import pyarrow as pa
@@ -509,7 +500,7 @@ def build_index(
                     p = None
                 blocks = encode_posting_blocks(
                     uniq, counts, dls, p, avg_dl, block_size=_bsz,
-                    head_frac=_hfrac, _defer_bytes=True,
+                    _defer_bytes=True,
                 )
                 flat_blocks.extend(blocks)
                 n_blocks.append(len(blocks))
@@ -748,7 +739,6 @@ def build_index(
             "num_docs": int(srow["num_docs"]),
             "total_tf": int(srow["total_tf"]),
             "positions": positions,
-            "head_frac": _hfrac,
             "spell_assist": bool(spell_assist),
             "phase_timings_sec": phase_t,
         }

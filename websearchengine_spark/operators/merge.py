@@ -26,9 +26,8 @@ Scale design (the 100 TB story):
     query path never assumes density.
   * posting lists re-encode because df and avg_dl change after the
     merge: per-block ``max_impact`` upper bounds bake in avg_dl
-    (codec.bm25_impact), and the champion-head split is an impact
-    quantile — both must be recomputed for WAND pruning to stay a
-    *valid* bound over the merged corpus.
+    (codec.bm25_impact), so they must be recomputed to stay *valid*
+    bounds over the merged corpus.
   * per shard-group resumable commits + lineage in the manifest, same
     contract as build_index (north_rule: checkpoint resume, per-
     partition metrics).
@@ -49,7 +48,6 @@ from pyspark.sql import functions as F
 
 from websearchengine_spark.functions.codec import (
     BLOCK_SIZE,
-    DEFAULT_HEAD_FRAC,
     decode_posting_blocks,
     encode_posting_blocks,
     varbyte_encode_many,
@@ -74,7 +72,6 @@ def merge_indexes(
     out_root: str,
     n_groups: int | None = None,
     block_size: int = BLOCK_SIZE,
-    head_frac: float | None = None,
     resume: bool = True,
 ) -> IndexStorage:
     """Merge built indexes at ``root_a`` and ``root_b`` into ``out_root``.
@@ -83,15 +80,14 @@ def merge_indexes(
     num_docs (shard-preserving).  Posting blocks are decoded, shifted,
     concatenated (A-then-B keeps doc order: every shifted B id exceeds
     every A id) and re-encoded against the merged corpus avg_dl, so
-    block-max WAND bounds and the champion-head layout stay valid.
+    block-max WAND bounds stay valid.
     Returns the output IndexStorage; queries on it are score-identical
     to a from-scratch build of the union corpus (doc_ids differ, so
     exact score ties may order differently).
     """
     return merge_many_indexes(
         spark, [root_a, root_b], out_root,
-        n_groups=n_groups, block_size=block_size, head_frac=head_frac,
-        resume=resume,
+        n_groups=n_groups, block_size=block_size, resume=resume,
     )
 
 
@@ -144,7 +140,6 @@ def merge_many_indexes(
     out_root: str,
     n_groups: int | None = None,
     block_size: int = BLOCK_SIZE,
-    head_frac: float | None = None,
     resume: bool = True,
     deleted_doc_ids: dict[int, "list[int]"] | None = None,
 ) -> IndexStorage:
@@ -183,8 +178,6 @@ def merge_many_indexes(
         positions = bool(_require(cfgs[0], cfgs[i], "positions", True))
     if n_groups is None:
         n_groups = int(cfgs[0].get("n_groups", 1) or 1)
-    if head_frac is None:
-        head_frac = DEFAULT_HEAD_FRAC
 
     # offsets derive from each segment's ID-SPACE EXTENT (id_span), not
     # its live doc count: deletions drop ids without remapping the
@@ -351,7 +344,7 @@ def merge_many_indexes(
                 p = np.concatenate(pos_l) if positions else None
                 blocks = encode_posting_blocks(
                     d, t, dl, p, avg_dl, block_size=block_size,
-                    head_frac=head_frac, _defer_bytes=True,
+                    _defer_bytes=True,
                 )
                 out_rows["shard"].append(int(shard))
                 out_rows["term"].append(term)
@@ -457,7 +450,6 @@ def merge_many_indexes(
         "num_docs": num_docs,
         "total_tf": total_tf,
         "positions": positions,
-        "head_frac": head_frac,
         "merged_from": list(roots),
         "doc_id_offsets": offsets,
         "id_span": id_span,

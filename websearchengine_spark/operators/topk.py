@@ -3,32 +3,32 @@
 intersection over per-partition index shards followed by a global top-k
 merge").
 
-Physical shape:
+Physical shape (a single query is a batch of one):
 
-    postings (doc-sharded) filtered to the query terms     [parquet pushdown]
-      -> groupBy(shard).applyInPandas(kernel)              [one task per shard]
-           kernel: rarest-first block-skip intersection + vectorized BM25
-           -> per-shard top-k
-      -> orderBy(score desc, doc_id asc).limit(k)          [global merge]
+    postings (doc-sharded) filtered to the queries' terms  [parquet pushdown]
+      -> groupBy(shard).applyInArrow(kernel)               [one task per shard]
+           kernel: per query, rarest-first block-skip intersection,
+           phrase adjacency, tombstone mask, vectorized BM25
+           -> per-shard, per-query top-k
+      -> global merge                                      [wand_topk:
+           orderBy(score desc, doc_id asc).limit(k);        wand_topk_batch:
+           rank window per query]
       -> broadcast join docs for url/title                 [J3]
 
 The kernel is the doc-at-a-time galloping intersection of the reference
 (IndexerInvertedCompressed.java:438-462) re-expressed for a columnar
-engine: the rarest term's docids drive; for every other term only the
-blocks whose [first_docid, last_docid] range intersects the current
-candidate set are DECODED (the block-max skip — block metadata is read,
-block bytes are not), then candidates intersect via sorted-array
-intersection and the surviving docs get exact vectorized BM25 scores.
-``max_impact`` block bounds additionally let the kernel drop candidate
-docs whose summed upper bounds cannot reach the running k-th score
-before exact scoring.
+engine, a batch of queries at a time: for each query the rarest term's
+docids drive; for every other term only the blocks whose
+[first_docid, last_docid] range intersects the current candidate set
+are DECODED (the block-max skip — block metadata is read, block bytes
+are not), then candidates intersect via sorted-array intersection and
+the surviving docs get exact vectorized BM25 scores.  Each
+(term, block) is decoded at most once per shard task, so the queries of
+a batch share their decode work.
 
 Scores are identical to the DataFrame fallback path and the NumPy
-oracle: pruning only skips work, never changes the top-k (asserted by
+oracle: skipping only avoids work, never changes the top-k (asserted by
 tests at multiple shard counts).
-
-Phrase tokens require positions and take the DataFrame path
-(operators/query.py); this kernel handles plain conjunctive queries.
 """
 
 from __future__ import annotations
@@ -36,14 +36,14 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from websearchengine_spark.functions.codec import (
     BM25_B,
     BM25_K1,
-    decode_posting_blocks,
+    concat_decoded,
+    decode_block,
 )
 from websearchengine_spark.operators.query import (
     RESULT_COLS,
@@ -54,146 +54,135 @@ from websearchengine_spark.operators.query import (
 from websearchengine_spark.sources.storage import IndexStorage
 
 
-def _decode_blocks_overlapping(blocks, cand: np.ndarray, min_impact: float = -math.inf):
-    """Decode only blocks whose docid range intersects ``cand`` AND whose
-    ``max_impact`` clears ``min_impact`` (the block-max skip: a block whose
-    best possible contribution still can't lift any doc past the running
-    threshold is dropped WITHOUT decoding, docs and all).
-
-    Returns (doc_ids, tfs, dls, n_decoded, n_total)."""
-    selected = []
-    for b in blocks:
-        if b[4] <= min_impact:
-            continue
-        lo, hi = b[0], b[1]
-        i = np.searchsorted(cand, lo, side="left")
-        if i < cand.size and cand[i] <= hi:
-            selected.append(b)
-    d, t, dl, _ = decode_posting_blocks(selected, want_positions=False, want_doclens=True)
-    return d, t, dl, len(selected), len(blocks)
+def _phrase_docs(phrase: tuple[str, ...], cand: np.ndarray, per_term: dict) -> np.ndarray:
+    """Docs in ``cand`` containing the words adjacently: intersect the
+    per-word sets {doc<<32 | (pos - i)} — fully vectorized across all
+    candidate docs at once."""
+    keys = None
+    for i, w in enumerate(phrase):
+        d, tf, _dl, pos = per_term[w]
+        rep = np.repeat(d, tf)
+        m = np.isin(rep, cand)
+        # arithmetic add, not OR: (pos - i) can be negative for later
+        # words at small positions (such keys match nothing — a doc's
+        # valid offsets are far from 2^32, so no cross-doc collision)
+        kw = (rep[m].astype(np.int64) << 32) + (pos[m].astype(np.int64) - i)
+        keys = kw if keys is None else np.intersect1d(keys, kw, assume_unique=False)
+        if keys.size == 0:
+            return np.empty(0, np.int64)
+    return np.unique(keys >> 32)
 
 
 def shard_bm25_topk(
     term_lists: dict[str, list],
-    qweights: dict[str, float],
+    query_specs: list[tuple[int, dict[str, float], list[tuple[str, ...]]]],
     idf: dict[str, float],
     avg_dl: float,
     k: int,
-    threshold: float = -math.inf,
     exclude: np.ndarray | None = None,
-    bound_scale: float = 1.0,
-) -> tuple[np.ndarray, np.ndarray, dict]:
-    """Pure kernel for ONE shard: term -> blocks, returns (doc_ids, scores,
-    stats).  ``threshold``: scores <= threshold may be dropped (used for
-    cross-shard pruning when a running bound is known; -inf = exact).
-    ``exclude``: doc_ids masked out of the candidate set BEFORE scoring
-    (live-index tombstones: docs superseded by a re-crawl but not yet
-    physically removed by compaction) — the surviving top-k is exact
-    over the non-excluded corpus.
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, dict]:
+    """Pure kernel for ONE shard: score every query of ``query_specs``
+    against the shard's posting blocks (``term_lists``: term -> block
+    tuples as codec.encode_posting_blocks writes them).
 
-    ``bound_scale``: multiplier that re-validates the STORED per-block
-    ``max_impact`` bounds when scoring uses a different avg_dl than the
-    one they were encoded with (live multi-index search with union
-    statistics).  BM25's per-term impact is (k1+1)tf / (A + B/avg_dl)
-    with A = tf + k1(1-b) > 0, B = k1·b·dl >= 0, so
-    impact(avg_q)/impact(avg_enc) = (A + B/avg_enc)/(A + B/avg_q)
-    <= max(1, avg_q/avg_enc) for every (tf, dl): stored_bound ×
-    max(1, avg_q/avg_enc) is a valid upper bound under the query-time
-    avg_dl.  1.0 = bounds already exact (same avg_dl).
+    ``query_specs``: [(query_id, {term: weight}, phrases)...] where
+    ``phrases`` is a (possibly empty) list of word tuples that must occur
+    ADJACENTLY (positions p, p+1, ...); positions are decoded only for
+    terms that take part in some phrase.  Conjunctive semantics: a doc
+    must contain ALL of a query's terms.  ``exclude``: doc_ids masked out
+    of the candidate sets BEFORE scoring (live-index tombstones: docs
+    superseded by a re-crawl but not yet physically removed by
+    compaction) — the surviving top-k is exact over the non-excluded
+    corpus.
 
-    Conjunctive semantics: a doc must contain ALL terms.  Stats record
-    blocks decoded vs total (the block-max skip evidence).
-    """
-    stats = {"blocks_total": 0, "blocks_decoded": 0, "candidates": 0, "pruned_by_ub": 0}
-    terms = sorted(term_lists, key=lambda t: sum(b[2] for b in term_lists[t]))
-    if len(terms) < len(qweights):
-        return np.empty(0, np.int64), np.empty(0, np.float64), stats
+    Returns parallel arrays (query_ids, doc_ids, scores) of per-query
+    top-k, each query's rows in (score desc, doc_id asc) order, and
+    stats {"blocks_total", "blocks_decoded"} over the shard's term
+    lists (the block-max skip evidence)."""
+    pos_terms = {w for _, _, phrases in query_specs for ph in phrases for w in ph}
+    size = {t: sum(b[2] for b in blocks) for t, blocks in term_lists.items()}
+    decoded: dict[tuple[str, int], tuple] = {}
+    joined: dict[tuple[str, tuple[int, ...]], tuple] = {}
 
-    # With a threshold, a block of term t can be skipped BEFORE decoding if
-    # even its best doc — block max_impact for t plus every OTHER term's
-    # global max impact — cannot clear the threshold.  Docs dropped this
-    # way score <= threshold < the global k-th score: provably out.
-    min_imp = {t: -math.inf for t in terms}
-    if threshold > -math.inf:
-        gmax = {
-            t: (max(b[4] for b in term_lists[t]) * bound_scale)
-            if term_lists[t]
-            else 0.0
-            for t in terms
-        }
-        for t in terms:
-            others = sum(qweights[u] * idf[u] * gmax[u] for u in terms if u != t)
-            w = qweights[t] * idf[t]
-            # qw*idf*max_impact + others <= threshold  <=>  max_impact <= ...
-            # (divide the cutoff by bound_scale so the stored b[4] values
-            # compare against it directly: b[4]*scale <= cut <=> b[4] <= cut/scale)
-            min_imp[t] = (
-                (threshold - others) / w / bound_scale if w > 0 else -math.inf
+    def postings(t: str, cand: np.ndarray | None) -> tuple:
+        """t's (docs, tfs, dls, positions-or-None) over the blocks whose
+        docid range meets ``cand`` (every block when cand is None, or
+        when an earlier query already decoded them all: a superset of
+        the candidates' postings is as good, and costs no decode)."""
+        blocks = term_lists[t]
+        sel = tuple(range(len(blocks)))
+        if cand is not None and (t, sel) not in joined:
+            first = np.array([b[0] for b in blocks], dtype=np.int64)
+            last = np.array([b[1] for b in blocks], dtype=np.int64)
+            j = np.minimum(np.searchsorted(cand, first), cand.size - 1)
+            sel = tuple(np.flatnonzero((cand[j] >= first) & (cand[j] <= last)).tolist())
+        if (t, sel) not in joined:
+            want_pos = t in pos_terms
+            for i in sel:
+                if (t, i) not in decoded:
+                    decoded[(t, i)] = decode_block(blocks[i], want_pos, want_doclens=True)
+            joined[(t, sel)] = concat_decoded(
+                [decoded[(t, i)] for i in sel], want_pos, want_doclens=True
             )
+        return joined[(t, sel)]
 
-    # rarest term drives the candidate set (block-max skip applies to it
-    # too; the range check is a no-op for the driver — every block matches
-    # its own first_docid — so only the impact gate filters here)
-    first = terms[0]
-    firsts0 = np.sort(np.array([b[0] for b in term_lists[first]], dtype=np.int64))
-    cand, tf0, dl0, ndec0, ntot0 = _decode_blocks_overlapping(
-        term_lists[first], firsts0, min_impact=min_imp[first]
-    )
-    stats["blocks_total"] += ntot0
-    stats["blocks_decoded"] += ndec0
-    per_term = {first: (cand, tf0, dl0)}
-    for t in terms[1:]:
+    out_q, out_d, out_s = [], [], []
+    for qid, qweights, phrases in query_specs:
+        if any(t not in term_lists for t in qweights):
+            continue
+        # rarest term drives the candidate set
+        terms = sorted(qweights, key=lambda t: (size[t], t))
+        per_term: dict[str, tuple] = {}
+        cand = None
+        for t in terms:
+            per_term[t] = postings(t, cand)
+            d = per_term[t][0]
+            cand = d if cand is None else cand[np.isin(cand, d, assume_unique=True)]
+            if cand.size == 0:
+                break
+        for ph in phrases:
+            if cand.size == 0:
+                break
+            cand = _phrase_docs(ph, cand, per_term)
+        if exclude is not None and exclude.size and cand.size:
+            cand = cand[~np.isin(cand, exclude)]
         if cand.size == 0:
-            stats["blocks_total"] += len(term_lists[t])
-            return np.empty(0, np.int64), np.empty(0, np.float64), stats
-        d, tf, dl, ndec, ntot = _decode_blocks_overlapping(
-            term_lists[t], cand, min_impact=min_imp[t]
-        )
-        stats["blocks_decoded"] += ndec
-        stats["blocks_total"] += ntot
-        per_term[t] = (d, tf, dl)
-        cand = cand[np.isin(cand, d, assume_unique=True)]
-    if exclude is not None and exclude.size and cand.size:
-        cand = cand[~np.isin(cand, exclude)]
-    stats["candidates"] = int(cand.size)
-    if cand.size == 0:
-        return np.empty(0, np.int64), np.empty(0, np.float64), stats
+            continue
 
-    # exact vectorized BM25 over surviving candidates
-    scores = np.zeros(cand.size, dtype=np.float64)
-    dl_cand = None
-    for t in terms:
-        d, tf, dl = per_term[t]
-        ix = np.searchsorted(d, cand)
-        tf_c = tf[ix].astype(np.float64)
-        if dl_cand is None:
-            dl_cand = dl[ix].astype(np.float64)
-        scores += (
-            qweights[t]
-            * idf[t]
-            * ((BM25_K1 + 1.0) * tf_c)
-            / (tf_c + BM25_K1 * (1.0 - BM25_B + BM25_B * dl_cand / avg_dl))
-        )
+        # exact vectorized BM25 over surviving candidates
+        scores = np.zeros(cand.size, dtype=np.float64)
+        dl_cand = None
+        for t in terms:
+            d, tf, dl, _pos = per_term[t]
+            ix = np.searchsorted(d, cand)
+            tf_c = tf[ix].astype(np.float64)
+            if dl_cand is None:
+                dl_cand = dl[ix].astype(np.float64)
+            scores += (
+                qweights[t]
+                * idf[t]
+                * ((BM25_K1 + 1.0) * tf_c)
+                / (tf_c + BM25_K1 * (1.0 - BM25_B + BM25_B * dl_cand / avg_dl))
+            )
+        # per-shard top-k with the pinned tie-break (score desc, doc_id asc)
+        if cand.size > k:
+            # keep every doc scoring >= the k-th best (ties resolved below)
+            kth = np.partition(-scores, k - 1)[k - 1]
+            keep = np.flatnonzero(-scores <= kth)
+            cand, scores = cand[keep], scores[keep]
+        order = np.lexsort((cand, -scores))[:k]
+        out_q.append(np.full(order.size, qid, dtype=np.int64))
+        out_d.append(cand[order])
+        out_s.append(scores[order])
 
-    # threshold filter on the EXACT scores (replaces the old per-candidate
-    # block-UB lookup, which assumed non-overlapping block ranges — false
-    # for the hybrid head+tail layout; exact filtering is both correct for
-    # any layout and strictly tighter): docs <= threshold are provably
-    # outside the global top-k (threshold = phase-1 k-th score - eps).
-    if threshold > -math.inf:
-        keep = scores > threshold
-        stats["pruned_by_ub"] = int((~keep).sum())
-        cand, scores = cand[keep], scores[keep]
-        if cand.size == 0:
-            return np.empty(0, np.int64), np.empty(0, np.float64), stats
-    # per-shard top-k with the pinned tie-break (score desc, doc_id asc)
-    if cand.size > k:
-        # keep every doc scoring >= the k-th best (ties resolved below)
-        kth = np.partition(-scores, k - 1)[k - 1]
-        keep = np.flatnonzero(-scores <= kth)
-        cand, scores = cand[keep], scores[keep]
-    order = np.lexsort((cand, -scores))[:k]
-    return cand[order], scores[order], stats
+    stats = {
+        "blocks_total": sum(len(b) for b in term_lists.values()),
+        "blocks_decoded": len(decoded),
+    }
+    if not out_q:
+        e = np.empty(0, np.int64)
+        return e, e, np.empty(0, np.float64), stats
+    return np.concatenate(out_q), np.concatenate(out_d), np.concatenate(out_s), stats
 
 
 def _corpus_stats(spark, store: IndexStorage) -> tuple[int, int, float]:
@@ -208,17 +197,9 @@ def _corpus_stats(spark, store: IndexStorage) -> tuple[int, int, float]:
     return nd, tt, tt / max(1, nd)
 
 
-def _head_of(b) -> bool:
-    """head flag from a Row (DataFrame path) or dict (Arrow/pandas path);
-    indexes built before the hybrid layout have no field -> False."""
-    try:
-        v = b["head"]
-    except (KeyError, ValueError, IndexError):
-        return False
-    return bool(v) if v is not None else False
-
-
 def _rows_to_blocks(blocks) -> list:
+    """Stored block structs -> codec block tuples (the kernel reads only
+    the docid range, n and data; the stored ``head`` flag is ignored)."""
     return [
         (
             b["first_docid"],
@@ -227,22 +208,9 @@ def _rows_to_blocks(blocks) -> list:
             b["max_tf"],
             b["max_impact"],
             b["data"],
-            _head_of(b),
         )
         for b in blocks
     ]
-
-
-def _combine_excl(base, excl_ids):
-    """Union a closure-side exclude array with this shard's cogrouped
-    (executor-resident) tombstone doc_ids (any int array-like).  Returns
-    a sorted unique int64 array or None."""
-    if excl_ids is None or len(excl_ids) == 0:
-        return base
-    ids = np.unique(np.asarray(excl_ids, dtype=np.int64))
-    if base is None or base.size == 0:
-        return ids
-    return np.union1d(base, ids)
 
 
 def _exclude_by_shard(exclude_df: DataFrame) -> "object":
@@ -308,481 +276,31 @@ def _df_lookup(
     return {t: known[t] for t in terms if known[t] is not None}
 
 
-# Safety margin subtracted from the phase-1 threshold: the per-doc UB is a
-# float sum of per-term maxima, so without a margin a doc whose exact score
-# TIES the threshold could be pruned by last-ulp noise and break the pinned
-# (score desc, doc_id asc) tie-break.  Dropped docs then satisfy
-# score <= ub <= t0 - eps < t0 <= global k-th score: provably outside top-k.
-WAND_PRUNE_EPS = 1e-9
-
-# Executor-side pruning evidence for the LAST wand_topk action: accumulators
-# populated by the shard kernel (read .value after the query ran).
-LAST_WAND_STATS: dict = {}
-
-# two_phase=None auto-enables the threshold phase only when the query's
-# total posting volume makes exact-scoring the dominant cost; below this
-# the extra phase-1 job costs more wall-clock than pruning saves.
-WAND_TWO_PHASE_MIN_POSTINGS = 200_000
-# ...and only when each SHARD carries enough postings to amortize it:
-# phase 1 is one extra pass (fixed scheduling cost plus a one-shard
-# scoring pass that is SERIAL driver work), while its benefit is kernel
-# decode/score work avoided in phase 2 — proportional to PER-SHARD
-# volume, not the total.  The r5 sf1 session measured the gate firing at
-# ~7.3k postings/shard and LOSING 13%; bench/wand_pruning.py put the
-# KERNEL's win regime at >= ~1e5 postings/shard, but the r6 end-to-end
-# probe (bench/wand_live_win.py, zipf corpus, identical top-k) measured
-# the full path LOSING ~40% at BOTH 117k/shard (100k docs x 4 shards)
-# and 51k/shard (350k docs x 32 shards): the kernel stage is
-# Arrow-transfer-dominated and the threshold only skips ~16% of blocks
-# pre-decode, so the phase-1 pass cannot repay itself at any volume this
-# sandbox reaches (BENCH/BASELINE.md §BENCH_SF1, WAND_LIVE_WIN_r06).
-# The floor is set an order of magnitude beyond the largest measured
-# losing point; explicit two_phase=True remains available and
-# result-identical.
-WAND_TWO_PHASE_MIN_SHARD_POSTINGS = 500_000
-# ... and only when ONE shard's share of the query's postings fits the
-# driver comfortably (phase 1 collects that shard's blocks).  At cluster
-# scale (thousands of shards) this is never binding; it guards the
-# few-shard/low-core configurations.
-WAND_PHASE1_MAX_POSTINGS = 20_000_000
-
-
-def wand_topk(
+def _shard_topk(
     spark: SparkSession,
-    index_root: str,
-    query: str,
-    k: int = 10,
-    two_phase: bool | None = None,
-    corpus_stats: tuple[int, int] | None = None,
-    df_override: dict[str, int] | None = None,
-    docs_join: bool = True,
-    exclude_doc_ids=None,
-    local_df: dict[str, int] | None = None,
-    exclude_df: DataFrame | None = None,
-    stats_cache: dict | None = None,
-) -> DataFrame:
-    """BM25 top-k over the sharded index via the block-max kernel.
-
-    Two-phase block-max pruning (``two_phase=True``): phase 1 scores ONE
-    shard's postings driver-side (shards are doc_id % n_shards, so any
-    shard is a uniform sample; its blocks for the query terms are a few
-    MB even at 10^10 docs / 4096 shards) and takes its k-th score as a
-    global threshold; phase 2 broadcasts that threshold into every other
-    shard's kernel, where candidates whose block-max upper bound cannot
-    reach it are dropped BEFORE exact scoring.  The final top-k is
-    provably identical to the exhaustive run (see WAND_PRUNE_EPS).
-    ``two_phase=None`` (default) auto-enables it when the query's total
-    posting count exceeds WAND_TWO_PHASE_MIN_POSTINGS AND the per-shard
-    share exceeds WAND_TWO_PHASE_MIN_SHARD_POSTINGS (r5: phase 1 is a
-    fixed-cost extra job; its benefit scales with per-shard volume) AND
-    the phase-1 shard fits the driver — at small volumes the extra job
-    dominates; at cluster scale any real query crosses both floors.
-
-    ``corpus_stats=(num_docs, total_tf)`` and ``df_override={term: df}``
-    replace this index's OWN statistics with caller-supplied (e.g.
-    GLOBAL, multi-index) ones — the streaming live-search path
-    (streaming/ingest.py::search_live) scores every live index segment
-    with union statistics so that base+delta search is score-identical
-    to the compacted index.  Term PRESENCE is still checked against this
-    index (a doc here can only match if its terms are here).
-    ``docs_join=False`` returns bare (doc_id, score) without the
-    url/title metadata join — for callers that merge several indexes and
-    join metadata once at the end.  ``exclude_doc_ids`` (any int
-    iterable) masks tombstoned docs out of every candidate set before
-    scoring — live-index deletes are invisible at query time and
-    physically removed at compaction (Lucene-style visibility).
-    ``local_df`` pre-supplies THIS index's {term: df} for the query's
-    terms (what the term_stats lookup would return), letting a
-    multi-index caller that already read every segment's term_stats in
-    one job skip the per-segment driver round-trip.
-
-    ``stats_cache``: a CALLER-OWNED dict memoizing the per-term df
-    lookups across calls (``{"df": {term: df-or-None}}``; None records
-    a term absent from the index).  A warm serve loop then runs zero
-    term_stats jobs per request — only terms never seen before cost one
-    lookup.  The caller is responsible for invalidation (the HTTP server
-    drops it when the index generation changes); ignored when
-    ``local_df`` is given.
-
-    ``exclude_df`` is the EXECUTOR-RESIDENT form of the tombstone mask:
-    a (shard, doc_id) DataFrame cogrouped with the postings by shard, so
-    the exclusion set reaches each shard's kernel through the shuffle —
-    never collected to the driver, never serialized into task closures
-    (10^8 pending tombstones cost one small parquet-scan+shuffle, not
-    driver memory).  This is the scale path live-index search uses
-    (streaming/ingest.py); ``exclude_doc_ids`` remains for small
-    driver-known sets.  Both may be combined (ids are unioned).  With
-    two-phase pruning only the phase-1 shard's slice (1/n_shards of the
-    rows) is collected for the driver-side threshold pass.
-
-    Returns the same columns as query.run_query, ordered by
-    (score desc, doc_id asc)."""
-    store = IndexStorage(index_root)
-    token_words = analyze_tokens(parse_query(query), index_analyzer(store))
-    docs = store.read_table(spark, "docs")
-
-    def empty():
-        if docs_join:
-            return docs.limit(0).withColumn("score", F.lit(0.0)).select(*RESULT_COLS)
-        return spark.createDataFrame([], "doc_id long, score double")
-
-    if not token_words:
-        return empty()
-    if any(len(ws) > 1 for ws in token_words):
-        # phrase queries need positions -> single-query BATCH kernel:
-        # one postings scan + one shard pass (positions decoded for the
-        # phrase terms only), vs the DataFrame path's candidate/phrase/
-        # scoring join chain.  Rank-identical to run_query's phrase path
-        # (asserted by test_batch_query and test_wand_phrase_falls_back).
-        out = wand_topk_batch(
-            spark, index_root, [query], k=k,
-            corpus_stats=corpus_stats, df_override=df_override,
-            docs_join=docs_join, exclude_doc_ids=exclude_doc_ids,
-            local_df=local_df, exclude_df=exclude_df,
-            stats_cache=stats_cache,
-        )
-        # .limit(k) is a no-op on the <=k rows but turns the global sort
-        # into TakeOrderedAndProject (bounded heap, no range-partitioner
-        # sampling job — guide §2.4: an orderBy used only to fix output
-        # order needs no full sort machinery)
-        if not docs_join:
-            return out.select("doc_id", "score").orderBy(
-                F.col("score").desc(), F.col("doc_id").asc()
-            ).limit(k)
-        return out.select(*RESULT_COLS).orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        ).limit(k)
-
-    words = [w for ws in token_words for w in ws]
-    qweights: dict[str, float] = {}
-    for w in words:
-        qweights[w] = qweights.get(w, 0.0) + 1.0
-    terms = sorted(qweights)
-    excl = (
-        np.sort(np.asarray(list(exclude_doc_ids), dtype=np.int64))
-        if exclude_doc_ids is not None and len(exclude_doc_ids)
-        else None
-    )
-
-    num_docs, total_tf, avg_dl = _corpus_stats(spark, store)
-    bound_scale = 1.0
-    if corpus_stats is not None:
-        # stored per-block max_impact bounds were encoded with THIS
-        # index's avg_dl; scoring with the override's avg_dl needs them
-        # re-validated by max(1, avg_q/avg_enc) (see shard_bm25_topk)
-        enc_avg_dl = avg_dl
-        num_docs, total_tf = corpus_stats
-        avg_dl = total_tf / max(1, num_docs)
-        bound_scale = max(1.0, avg_dl / max(enc_avg_dl, 1e-12))
-    if local_df is not None:
-        df_by_term = {t: local_df[t] for t in terms if t in local_df}
-    else:
-        df_by_term = _df_lookup(spark, store, terms, stats_cache)
-    if len(df_by_term) < len(terms):
-        return empty()
-    idf = _idf_table(num_docs, df_by_term, df_override)
-
-    postings = store.read_partitioned(spark, "postings").filter(
-        F.col("term").isin(terms)
-    )
-
-    sc = spark.sparkContext
-    acc = {
-        "pruned_by_ub": sc.accumulator(0),
-        "blocks_decoded": sc.accumulator(0),
-        "blocks_total": sc.accumulator(0),
-        "candidates": sc.accumulator(0),
-    }
-    LAST_WAND_STATS.clear()
-    LAST_WAND_STATS.update(acc)
-
-    total_postings = sum(df_by_term.values())
-    n_shards = int(
-        store.read_manifest().get("config", {}).get("n_shards", 1) or 1
-    )
-    phase1_fits = (
-        total_postings / max(1, n_shards) <= WAND_PHASE1_MAX_POSTINGS
-    )
-    if two_phase is None:
-        two_phase = (
-            total_postings >= WAND_TWO_PHASE_MIN_POSTINGS
-            and total_postings / max(1, n_shards)
-            >= WAND_TWO_PHASE_MIN_SHARD_POSTINGS
-            and phase1_fits
-        )
-    elif two_phase and not phase1_fits:
-        # The driver-side collect() cap applies on the EXPLICIT path too —
-        # a forced two_phase=True on a few-shard high-df index would
-        # otherwise OOM the driver.  Fall back to exhaustive (identical
-        # results, no phase-1 job) and say so.
-        import warnings
-
-        warnings.warn(
-            f"wand_topk: two_phase=True requested but one shard's posting "
-            f"share (~{total_postings // max(1, n_shards)}) exceeds "
-            f"WAND_PHASE1_MAX_POSTINGS={WAND_PHASE1_MAX_POSTINGS}; "
-            "running exhaustive instead",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        two_phase = False
-
-    # ---- phase 1: one shard scored driver-side -> running threshold ----
-    threshold = -math.inf
-    phase1_out: list[tuple[int, float]] = []
-    phase1_shard = None
-    if two_phase:
-        phase1_shard = 0
-        p0 = postings.filter(F.col("shard") == phase1_shard).select(
-            "term", "blocks"
-        )
-        try:
-            # Arrow collect (r6): the shard's blocks arrive as one IPC
-            # batch instead of py4j Row objects — phase 1's fixed cost
-            # is the gate's break-even term, so keep it cheap
-            tbl0 = p0.toArrow()
-            rows0 = [
-                {"term": t, "blocks": b}
-                for t, b in zip(
-                    tbl0.column("term").to_pylist(),
-                    tbl0.column("blocks").to_pylist(),
-                )
-            ]
-        except AttributeError:  # pragma: no cover - pre-4.0 fallback
-            rows0 = p0.collect()
-        if rows0:
-            excl0 = excl
-            if exclude_df is not None:
-                # only the phase-1 shard's slice of the exclusion set is
-                # driver-collected (1/n_shards of the rows; the rest stay
-                # executor-resident via the cogroup below)
-                excl0 = _combine_excl(
-                    excl0,
-                    exclude_df.filter(F.col("shard") == phase1_shard)
-                    .select("doc_id")
-                    .toPandas()["doc_id"].to_numpy(),
-                )
-            term_lists0 = {r["term"]: _rows_to_blocks(r["blocks"]) for r in rows0}
-            d0, s0, _st0 = shard_bm25_topk(
-                term_lists0, qweights, idf, avg_dl, k, exclude=excl0,
-                bound_scale=bound_scale,
-            )
-            phase1_out = [(int(d), float(s)) for d, s in zip(d0, s0)]
-            if d0.size >= k:
-                threshold = float(s0[k - 1]) - WAND_PRUNE_EPS
-
-    thr = threshold  # captured by value in the kernel closure
-
-    # kernels run as GROUPED ARROW udfs (r6): the blocks column is a
-    # list<struct<..., binary>>; the pandas path materialized it as an
-    # object Series per group, while Arrow hands the record batch over
-    # directly (~20% off the kernel stage wall at bench; same numbers)
-    def score_shard(tbl, shard_excl):
-        import pyarrow as pa
-
-        term_lists = {
-            t: _rows_to_blocks(b)
-            for t, b in zip(
-                tbl.column("term").to_pylist(), tbl.column("blocks").to_pylist()
-            )
-        }
-        d, s, stats = shard_bm25_topk(
-            term_lists, qweights, idf, avg_dl, k, threshold=thr,
-            exclude=shard_excl, bound_scale=bound_scale,
-        )
-        for key in ("pruned_by_ub", "blocks_decoded", "blocks_total", "candidates"):
-            acc[key].add(stats[key])
-        return pa.table(
-            {"doc_id": pa.array(d, pa.int64()), "score": pa.array(s, pa.float64())}
-        )
-
-    def kernel(tbl):
-        return score_shard(tbl, excl)
-
-    def kernel_cogroup(tbl, extbl):
-        # a shard with tombstones but no postings yields an empty left
-        # side; score_shard handles it (no terms -> empty result)
-        return score_shard(
-            tbl, _combine_excl(excl, extbl.column("doc_id").to_numpy())
-        )
-
-    rest = postings
-    if phase1_shard is not None:
-        rest = rest.filter(F.col("shard") != phase1_shard)
-    rest_g = rest.select("shard", "term", "blocks").groupBy("shard")
-    if exclude_df is not None:
-        ex = exclude_df
-        if phase1_shard is not None:
-            ex = ex.filter(F.col("shard") != phase1_shard)
-        per_shard = rest_g.cogroup(_exclude_by_shard(ex)).applyInArrow(
-            kernel_cogroup, schema="doc_id long, score double"
-        )
-    else:
-        per_shard = rest_g.applyInArrow(
-            kernel, schema="doc_id long, score double"
-        )
-    # (when phase-1 found no candidates in its shard there is nothing to union)
-    if phase1_out:
-        p1 = spark.createDataFrame(phase1_out, "doc_id long, score double")
-        per_shard = per_shard.unionByName(p1)
-    topk = per_shard.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-    if not docs_join:
-        return topk
-    # metadata join: broadcast the K-ROW result side explicitly.  Catalyst
-    # can't size the kernel's UDF output, so past ~10 MB of docs it would
-    # fall back to a sort-merge join that SHUFFLES THE WHOLE DOCS TABLE
-    # for k rows (caught by the sf1 plan audit — fine at 500 docs, wrong
-    # at 50k, catastrophic at 10^9)
-    out = (
-        F.broadcast(topk).join(docs, "doc_id")
-        .select(*RESULT_COLS)
-        # re-established order over the <=k joined rows: .limit(k) is a
-        # no-op on the rows but makes it a TakeOrderedAndProject instead
-        # of a range-sampled global sort (one job fewer per query)
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
-    return out
-
-
-def shard_bm25_topk_batch(
-    term_lists: dict[str, list],
-    query_specs: list[tuple[int, dict[str, float], list[tuple[str, ...]]]],
-    idf: dict[str, float],
-    avg_dl: float,
-    k: int,
-    exclude: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batch kernel for ONE shard: score MANY queries against the shard's
-    posting blocks, decoding each term exactly once (throughput mode —
-    decode amortization replaces per-query block skipping).
-
-    ``query_specs``: [(query_id, {term: weight}, phrases)...] where
-    ``phrases`` is a (possibly empty) list of word tuples that must occur
-    ADJACENTLY (positions p, p+1, ...).  Positions are decoded only for
-    terms that participate in some phrase.  Returns parallel arrays
-    (query_ids, doc_ids, scores) of per-query top-k."""
-    pos_terms = {w for _, _, phrases in query_specs for ph in phrases for w in ph}
-    decoded: dict[str, tuple] = {}
-
-    def get(t: str):
-        """(docs, tfs, dls, rep_docs-or-None, positions-or-None)."""
-        if t not in decoded:
-            want_pos = t in pos_terms
-            d, tf, dl, pos = decode_posting_blocks(
-                term_lists[t], want_positions=want_pos, want_doclens=True
-            )
-            rep = np.repeat(d, tf) if want_pos else None
-            decoded[t] = (d, tf, dl, rep, pos)
-        return decoded[t]
-
-    def phrase_docs(phrase: tuple[str, ...], cand: np.ndarray) -> np.ndarray:
-        """Docs in ``cand`` containing the words adjacently: intersect the
-        per-word sets {doc<<32 | (pos - i)} — fully vectorized across all
-        candidate docs at once."""
-        keys = None
-        for i, w in enumerate(phrase):
-            _d, _tf, _dl, rep, pos = get(w)
-            m = np.isin(rep, cand)
-            # arithmetic add, not OR: (pos - i) can be negative for later
-            # words at small positions (such keys match nothing — a doc's
-            # valid offsets are far from 2^32, so no cross-doc collision)
-            kw = (rep[m].astype(np.int64) << 32) + (pos[m].astype(np.int64) - i)
-            keys = kw if keys is None else np.intersect1d(keys, kw, assume_unique=False)
-            if keys.size == 0:
-                return np.empty(0, np.int64)
-        return np.unique(keys >> 32)
-
-    out_q, out_d, out_s = [], [], []
-    for qid, qweights, phrases in query_specs:
-        terms = [t for t in sorted(qweights) if t in term_lists]
-        if len(terms) < len(qweights):
-            continue
-        terms.sort(key=lambda t: get(t)[0].size)
-        cand = get(terms[0])[0]
-        for t in terms[1:]:
-            if cand.size == 0:
-                break
-            cand = cand[np.isin(cand, get(t)[0], assume_unique=True)]
-        for ph in phrases:
-            if cand.size == 0:
-                break
-            cand = phrase_docs(ph, cand)
-        if exclude is not None and exclude.size and cand.size:
-            cand = cand[~np.isin(cand, exclude)]
-        if cand.size == 0:
-            continue
-        scores = np.zeros(cand.size)
-        dl_cand = None
-        for t in terms:
-            d, tf, dl, _rep, _pos = get(t)
-            ix = np.searchsorted(d, cand)
-            tf_c = tf[ix].astype(np.float64)
-            if dl_cand is None:
-                dl_cand = dl[ix].astype(np.float64)
-            scores += (
-                qweights[t]
-                * idf[t]
-                * ((BM25_K1 + 1.0) * tf_c)
-                / (tf_c + BM25_K1 * (1.0 - BM25_B + BM25_B * dl_cand / avg_dl))
-            )
-        if cand.size > k:
-            kth = np.partition(-scores, k - 1)[k - 1]
-            keep = np.flatnonzero(-scores <= kth)
-            cand_k, scores_k = cand[keep], scores[keep]
-        else:
-            cand_k, scores_k = cand, scores
-        order = np.lexsort((cand_k, -scores_k))[:k]
-        out_q.append(np.full(order.size, qid, dtype=np.int64))
-        out_d.append(cand_k[order])
-        out_s.append(scores_k[order])
-    if not out_q:
-        e = np.empty(0, np.int64)
-        return e, e, np.empty(0, np.float64)
-    return np.concatenate(out_q), np.concatenate(out_d), np.concatenate(out_s)
-
-
-def wand_topk_batch(
-    spark: SparkSession,
-    index_root: str,
+    store: IndexStorage,
     queries: list[str],
-    k: int = 10,
-    corpus_stats: tuple[int, int] | None = None,
-    df_override: dict[str, int] | None = None,
-    docs_join: bool = True,
-    exclude_doc_ids=None,
-    local_df: dict[str, int] | None = None,
-    exclude_df: DataFrame | None = None,
-    stats_cache: dict | None = None,
-) -> DataFrame:
-    """BM25 top-k for MANY queries in one job: postings for the union of
-    all query terms are scanned once; each shard task scores every query
-    (decode shared across queries); per-query global merge via a ranking
-    window.  Returns (query, doc_id, url, title, score, pagerank,
-    numviews, rank) ordered by (query, rank).
-
-    Phrase tokens ARE supported: positions are decoded in the kernel for
-    the phrase terms only, and candidates are filtered to docs where the
-    words occur adjacently — same semantics as run_query's phrase path,
-    rank-identical.
-
-    ``corpus_stats`` / ``df_override`` / ``docs_join``: see wand_topk —
-    the live multi-index search path supplies union statistics here and
-    joins metadata once after the cross-index merge (``docs_join=False``
-    returns (query, doc_id, score, rank) without the docs join).
-    ``exclude_df``: executor-resident (shard, doc_id) exclusion rows
-    cogrouped with the postings — see wand_topk."""
-    store = IndexStorage(index_root)
+    k: int,
+    corpus_stats: tuple[int, int] | None,
+    df_override: dict[str, int] | None,
+    local_df: dict[str, int] | None,
+    exclude_df: DataFrame | None,
+    stats_cache: dict | None,
+) -> DataFrame | None:
+    """The Spark shell shared by wand_topk and wand_topk_batch: analyze
+    ``queries``, resolve df/idf, scan the postings of every query term
+    once and run shard_bm25_topk in one task per shard.  Returns the
+    per-shard top-k as (qid, doc_id, score) rows, qid indexing
+    ``queries`` — or None, with no Spark job, when no query can match.
+    The parameters are documented on wand_topk."""
     analyzer = index_analyzer(store)
-    docs = store.read_table(spark, "docs")
-
     specs: list[tuple[int, dict[str, float], list[tuple[str, ...]]]] = []
     for qid, q in enumerate(queries):
         token_words = analyze_tokens(parse_query(q), analyzer)
-        words = [w for ws in token_words for w in ws]
         qw: dict[str, float] = {}
-        for w in words:
-            qw[w] = qw.get(w, 0.0) + 1.0
+        for ws in token_words:
+            for w in ws:
+                qw[w] = qw.get(w, 0.0) + 1.0
         phrases = [tuple(ws) for ws in token_words if len(ws) > 1]
         if qw:
             specs.append((qid, qw, phrases))
@@ -791,21 +309,11 @@ def wand_topk_batch(
     ).get("positions", True):
         raise ValueError(
             "this index was built positionless (positions=False, doconly-"
-            "style); phrase queries in the batch need a positional build"
+            "style); phrase queries need a positional build"
         )
-    def empty_batch():
-        if docs_join:
-            return spark.createDataFrame(
-                [], "query string, doc_id long, url string, title string, "
-                "score double, pagerank double, numviews long, rank int"
-            )
-        return spark.createDataFrame(
-            [], "query string, doc_id long, score double, rank int"
-        )
-
     all_terms = sorted({t for _, qw, _ in specs for t in qw})
     if not all_terms:
-        return empty_batch()
+        return None
 
     num_docs, total_tf, avg_dl = _corpus_stats(spark, store)
     if corpus_stats is not None:
@@ -814,27 +322,19 @@ def wand_topk_batch(
     if local_df is not None:
         df_by_term = {t: local_df[t] for t in all_terms if t in local_df}
     else:
-        # same memo contract as wand_topk(stats_cache=): absence pinned
         df_by_term = _df_lookup(spark, store, all_terms, stats_cache)
-    idf = _idf_table(num_docs, df_by_term, df_override)
-    # queries with a term absent from the corpus can never match
-    specs = [
-        (qid, qw, ph) for qid, qw, ph in specs if all(t in df_by_term for t in qw)
-    ]
+    # a query with a term absent from this index can never match
+    specs = [s for s in specs if all(t in df_by_term for t in s[1])]
     if not specs:
-        return empty_batch()
+        return None
+    idf = _idf_table(num_docs, df_by_term, df_override)
+    terms = sorted({t for _, qw, _ in specs for t in qw})
 
-    postings = store.read_partitioned(spark, "postings").filter(
-        F.col("term").isin(all_terms)
-    )
-
-    excl = (
-        np.sort(np.asarray(list(exclude_doc_ids), dtype=np.int64))
-        if exclude_doc_ids is not None and len(exclude_doc_ids)
-        else None
-    )
-
-    def score_shard(tbl, shard_excl):
+    # kernels run as GROUPED ARROW udfs (r6): the blocks column is a
+    # list<struct<..., binary>>; the pandas path materialized it as an
+    # object Series per group, while Arrow hands the record batch over
+    # directly (~20% off the kernel stage wall at bench; same numbers)
+    def score_shard(tbl, exclude):
         import pyarrow as pa
 
         term_lists = {
@@ -843,8 +343,8 @@ def wand_topk_batch(
                 tbl.column("term").to_pylist(), tbl.column("blocks").to_pylist()
             )
         }
-        q, d, s = shard_bm25_topk_batch(
-            term_lists, specs, idf, avg_dl, k, exclude=shard_excl
+        q, d, s, _stats = shard_bm25_topk(
+            term_lists, specs, idf, avg_dl, k, exclude=exclude
         )
         return pa.table(
             {
@@ -855,23 +355,150 @@ def wand_topk_batch(
         )
 
     def kernel(tbl):
-        return score_shard(tbl, excl)
+        return score_shard(tbl, None)
 
     def kernel_cogroup(tbl, extbl):
-        return score_shard(
-            tbl, _combine_excl(excl, extbl.column("doc_id").to_numpy())
-        )
+        # a shard with tombstones but no postings yields an empty left
+        # side; score_shard handles it (no terms -> empty result)
+        return score_shard(tbl, extbl.column("doc_id").to_numpy())
 
-    postings_g = postings.select("shard", "term", "blocks").groupBy("shard")
-    if exclude_df is not None:
-        per_shard = postings_g.cogroup(_exclude_by_shard(exclude_df)).applyInArrow(
-            kernel_cogroup, schema="qid long, doc_id long, score double"
-        )
-    else:
-        per_shard = postings_g.applyInArrow(
-            kernel, schema="qid long, doc_id long, score double"
-        )
+    postings = (
+        store.read_partitioned(spark, "postings")
+        .filter(F.col("term").isin(terms))
+        .select("shard", "term", "blocks")
+        .groupBy("shard")
+    )
+    schema = "qid long, doc_id long, score double"
+    if exclude_df is None:
+        return postings.applyInArrow(kernel, schema=schema)
+    return postings.cogroup(_exclude_by_shard(exclude_df)).applyInArrow(
+        kernel_cogroup, schema=schema
+    )
+
+
+def wand_topk(
+    spark: SparkSession,
+    index_root: str,
+    query: str,
+    k: int = 10,
+    corpus_stats: tuple[int, int] | None = None,
+    df_override: dict[str, int] | None = None,
+    docs_join: bool = True,
+    local_df: dict[str, int] | None = None,
+    exclude_df: DataFrame | None = None,
+    stats_cache: dict | None = None,
+) -> DataFrame:
+    """BM25 top-k over the sharded index via the block-max kernel.
+
+    Phrase tokens are supported: positions are decoded in the kernel for
+    the phrase terms only, and candidates are filtered to docs where the
+    words occur adjacently — same semantics as run_query's phrase path,
+    rank-identical.  A positionless index raises ValueError on them.
+
+    ``corpus_stats=(num_docs, total_tf)`` and ``df_override={term: df}``
+    replace this index's OWN statistics with caller-supplied (e.g.
+    GLOBAL, multi-index) ones — the streaming live-search path
+    (streaming/ingest.py::search_live) scores every live index segment
+    with union statistics so that base+delta search is score-identical
+    to the compacted index.  Term PRESENCE is still checked against this
+    index (a doc here can only match if its terms are here).
+    ``docs_join=False`` returns bare (doc_id, score) without the
+    url/title metadata join — for callers that merge several indexes and
+    join metadata once at the end.
+    ``local_df`` pre-supplies THIS index's {term: df} for the query's
+    terms (what the term_stats lookup would return), letting a
+    multi-index caller that already looked every segment up skip the
+    per-segment lookup.
+
+    ``stats_cache``: a CALLER-OWNED dict memoizing the per-term df
+    lookups across calls (``{"df": {term: df-or-None}}``; None records
+    a term absent from the index).  A warm serve loop then runs zero
+    term_stats jobs per request — only terms never seen before cost one
+    lookup.  The caller is responsible for invalidation (the HTTP server
+    drops it when the index generation changes); ignored when
+    ``local_df`` is given.
+
+    ``exclude_df`` is the EXECUTOR-RESIDENT tombstone mask: a
+    (shard, doc_id) DataFrame cogrouped with the postings by shard, so
+    the exclusion set reaches each shard's kernel through the shuffle —
+    never collected to the driver, never serialized into task closures
+    (10^8 pending tombstones cost one small parquet-scan+shuffle, not
+    driver memory).  Live-index search (streaming/ingest.py) uses it:
+    deletes are invisible at query time and physically removed at
+    compaction (Lucene-style visibility).
+
+    Returns the same columns as query.run_query, ordered by
+    (score desc, doc_id asc)."""
+    store = IndexStorage(index_root)
+    docs = store.read_table(spark, "docs")
+    per_shard = _shard_topk(
+        spark, store, [query], k, corpus_stats, df_override, local_df,
+        exclude_df, stats_cache,
+    )
+    if per_shard is None:
+        if docs_join:
+            return docs.limit(0).withColumn("score", F.lit(0.0)).select(*RESULT_COLS)
+        return spark.createDataFrame([], "doc_id long, score double")
+    topk = per_shard.select("doc_id", "score").orderBy(
+        F.col("score").desc(), F.col("doc_id").asc()
+    ).limit(k)
+    if not docs_join:
+        return topk
+    # metadata join: broadcast the K-ROW result side explicitly.  Catalyst
+    # can't size the kernel's UDF output, so past ~10 MB of docs it would
+    # fall back to a sort-merge join that SHUFFLES THE WHOLE DOCS TABLE
+    # for k rows (caught by the sf1 plan audit — fine at 500 docs, wrong
+    # at 50k, catastrophic at 10^9)
+    return (
+        F.broadcast(topk).join(docs, "doc_id")
+        .select(*RESULT_COLS)
+        # re-established order over the <=k joined rows: .limit(k) is a
+        # no-op on the rows but makes it a TakeOrderedAndProject instead
+        # of a range-sampled global sort (one job fewer per query)
+        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        .limit(k)
+    )
+
+
+def wand_topk_batch(
+    spark: SparkSession,
+    index_root: str,
+    queries: list[str],
+    k: int = 10,
+    corpus_stats: tuple[int, int] | None = None,
+    df_override: dict[str, int] | None = None,
+    docs_join: bool = True,
+    local_df: dict[str, int] | None = None,
+    exclude_df: DataFrame | None = None,
+    stats_cache: dict | None = None,
+) -> DataFrame:
+    """BM25 top-k for MANY queries in one job: postings for the union of
+    all query terms are scanned once; each shard task scores every query
+    (decode shared across queries); per-query global merge via a ranking
+    window.  Returns (query, doc_id, url, title, score, pagerank,
+    numviews, rank) ordered by (query, rank).
+
+    Phrase tokens, ``corpus_stats`` / ``df_override`` / ``local_df`` /
+    ``exclude_df`` / ``stats_cache``: see wand_topk — the live
+    multi-index search path supplies union statistics here and joins
+    metadata once after the cross-index merge (``docs_join=False``
+    returns (query, doc_id, score, rank) without the docs join)."""
     from pyspark.sql import Window
+
+    store = IndexStorage(index_root)
+    per_shard = _shard_topk(
+        spark, store, queries, k, corpus_stats, df_override, local_df,
+        exclude_df, stats_cache,
+    )
+    if per_shard is None:
+        if docs_join:
+            return spark.createDataFrame(
+                [], "query string, doc_id long, url string, title string, "
+                "score double, pagerank double, numviews long, rank int"
+            )
+        return spark.createDataFrame(
+            [], "query string, doc_id long, score double, rank int"
+        )
 
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     qnames = spark.createDataFrame(
@@ -898,6 +525,7 @@ def wand_topk_batch(
         return _ordered(ranked.select("query", "doc_id", "score", "rank"))
     # n_queries x k rows vs the full docs table: broadcast the ranked
     # side (same sf1 plan-audit rationale as wand_topk's metadata join)
+    docs = store.read_table(spark, "docs")
     return _ordered(
         F.broadcast(ranked).join(docs, "doc_id").select(
             "query", "doc_id", "url", "title", "score", "pagerank", "numviews", "rank"

@@ -9,6 +9,7 @@ to regenerate PLANS.md.
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
 from pyspark.sql import DataFrame, functions as F
@@ -72,6 +73,19 @@ def audit_plans(spark, index_root: str) -> dict[str, tuple[bool, str]]:
     wp = plan_of(wand_topk(spark, index_root, audit_q, k=10))
     ok = "TakeOrderedAndProject" in wp and "BroadcastHashJoin" in wp
     out["wand_topk_merge_and_broadcast"] = (ok, _grep(wp, ["TakeOrderedAndProject", "BroadcastHashJoin"]))
+
+    # 2b. one WAND query path: plain and phrase queries both merge with a
+    #     bounded TakeOrderedAndProject (no rank Window), and the shard
+    #     grouping is the plan's only shuffle
+    shapes = []
+    for q in (audit_q, f'"{audit_q}"'):
+        qp = wp if q == audit_q else plan_of(wand_topk(spark, index_root, q, k=10))
+        n_exchange = len(re.findall(r"\(\d+\) Exchange", qp))
+        ok = "TakeOrderedAndProject" in qp and "Window" not in qp and n_exchange == 1
+        shapes.append((ok, f"{q}: {n_exchange} Exchange, Window={'Window' in qp}"))
+    out["wand_topk_one_shell"] = (
+        all(ok for ok, _ in shapes), "\n".join(ev for _, ev in shapes)
+    )
 
     # 3. DataFrame scorer path: same properties
     rp = plan_of(run_query(spark, index_root, audit_q, ranker="bm25", k=10))

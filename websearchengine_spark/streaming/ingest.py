@@ -28,15 +28,15 @@ of ordinary index segments:
     atomic catalog write publishes it).
   * SEARCH (search_live): BM25 WAND over ALL live segments, each scored
     with the UNION corpus statistics (num_docs/total_tf summed from
-    segment manifests — zero Spark jobs; per-term global df summed from
-    the tiny term_stats lookups), per-segment top-k, then a global
-    (score desc, doc_id asc) merge.  Segment doc_ids map into the global
-    id space by the SAME cumulative shard-preserving offsets compaction
-    uses (merge.doc_id_offsets), so live search is doc_id- AND
-    score-IDENTICAL to searching the fully-compacted index — proven by
-    tests/test_streaming_ingest.py.  Per-segment top-k is sufficient:
-    segments partition the corpus, so the global top-k is a subset of
-    the union of per-segment top-ks.
+    segment manifests, per-term global df summed from each segment's
+    driver-side term-dictionary probe — zero Spark jobs), per-segment
+    top-k, then a global (score desc, doc_id asc) merge.  Segment
+    doc_ids map into the global id space by the SAME cumulative
+    shard-preserving offsets compaction uses (merge.doc_id_offsets),
+    so live search is doc_id- AND score-IDENTICAL to searching the
+    fully-compacted index — proven by tests/test_streaming_ingest.py.
+    Per-segment top-k is sufficient: segments partition the corpus, so
+    the global top-k is a subset of the union of per-segment top-ks.
   * COMPACT (compact_live): merge_many_indexes folds every live segment
     into a new base generation in ONE shuffle of the compressed postings
     (no re-tokenization, K-way, see operators/merge.py), then atomically
@@ -696,67 +696,37 @@ def live_stats(spark: SparkSession, root: str) -> tuple[int, int, int]:
     return num_docs, total_tf, n_shards
 
 
-def _segment_term_dfs(
-    spark: SparkSession, stores: list, terms: list
-) -> list[dict[str, int]]:
-    """Per-segment {term: df} for the query's terms in ONE Spark action
-    (a union over the tiny term_stats tables) — K driver round-trips
-    per query would otherwise dominate multi-segment query latency."""
-    if not terms:
-        return [{} for _ in stores]
-    u = None
-    for i, s in enumerate(stores):
-        d = (
-            s.read_table(spark, "term_stats")
-            .filter(F.col("term").isin(list(terms)))
-            .select(F.lit(i).alias("seg_ix"), "term", "df")
-        )
-        u = d if u is None else u.unionByName(d)
-    out: list[dict[str, int]] = [{} for _ in stores]
-    for r in u.collect():
-        out[r["seg_ix"]][r["term"]] = int(r["df"])
-    return out
+def _search_segments(
+    spark: SparkSession, root: str, queries: list[str], score_segment
+) -> tuple[DataFrame, DataFrame]:
+    """The segment side of search_live/search_live_batch: every live
+    segment scored by ``score_segment(seg_root, **kw)`` (a docs_join=
+    False call of wand_topk or wand_topk_batch) with the UNION
+    statistics, its local doc_ids shifted by the cumulative shard-
+    preserving offsets (merge.doc_id_offsets — the SAME rule compaction
+    applies) and its pending tombstones masked.  Returns (union of the
+    per-segment results, union of the segments' docs tables in the same
+    global id space).
 
-
-def search_live(
-    spark: SparkSession,
-    root: str,
-    query: str,
-    k: int = 10,
-) -> DataFrame:
-    """BM25 WAND top-k over ALL live segments with UNION statistics.
-
-    Each segment is scored by wand_topk with the summed
-    (num_docs, total_tf) and per-term global df, its local doc_ids are
-    shifted by the cumulative shard-preserving offsets (merge.
-    doc_id_offsets — the SAME rule compaction applies), and the
-    per-segment top-ks merge on (score desc, doc_id asc).  The result is
-    doc_id- and score-identical to wand_topk over the compacted index:
-    compaction never changes what search returns, it only changes what
-    search costs.  (With PENDING tombstones the superseded docs are
-    already invisible but still count in df/num_docs until compaction —
-    the standard Lucene visibility contract; after compaction the
-    statistics equal a from-scratch build of the latest-version corpus.)
-    Returns query.RESULT_COLS ordered like run_query."""
-    from websearchengine_spark.operators.query import RESULT_COLS
-    from websearchengine_spark.operators.topk import wand_topk
+    Union statistics: (num_docs, total_tf) summed from the manifests and
+    per-term global df summed from each segment's driver-side
+    term-dictionary probe (topk._df_lookup) — zero Spark jobs.  The
+    tombstone mask stays EXECUTOR-RESIDENT: (shard, doc_id) rows
+    cogrouped with each segment's postings (wand_topk(exclude_df=)) —
+    never collected to the driver, never shipped in a task closure; each
+    segment reads only ITS OWN seg= partition subdirs.  Tombstoned docs
+    still count in df/num_docs until compaction corrects the statistics
+    (Lucene-style visibility)."""
+    from websearchengine_spark.operators.query import (
+        analyze_tokens,
+        index_analyzer,
+        parse_query,
+    )
+    from websearchengine_spark.operators.topk import _df_lookup
 
     segs = live_segment_roots(root)
     if not segs:
         raise ValueError(f"live index at {root} has no segments")
-    stores = [IndexStorage(s) for s in segs]
-    cfgs = [s.read_manifest()["config"] for s in stores]
-    n_shards = int(cfgs[0]["n_shards"])
-    offsets = doc_id_offsets([segment_id_span(c) for c in cfgs], n_shards)
-    num_docs = sum(int(c["num_docs"]) for c in cfgs)
-    total_tf = sum(int(c["total_tf"]) for c in cfgs)
-    # tombstoned (superseded-by-re-crawl) docs are masked out of every
-    # segment's candidate sets; their df/num_docs contributions remain
-    # until compaction corrects the statistics (Lucene-style visibility).
-    # The mask stays EXECUTOR-RESIDENT: (shard, doc_id) rows cogrouped
-    # with each segment's postings (wand_topk(exclude_df=)) — never
-    # collected to the driver, never shipped in a task closure; each
-    # segment reads only ITS OWN seg= partition subdirs.
     if compaction_overdue(root):
         import warnings
 
@@ -765,93 +735,8 @@ def search_live(
             "tombstones (> COMPACTION_OVERDUE_TOMBSTONES): statistics "
             "drift and per-query masking grow until compact_live runs",
             RuntimeWarning,
-            stacklevel=2,
+            stacklevel=3,
         )
-
-    # global df for the query's terms: K tiny term_stats lookups
-    from websearchengine_spark.operators.query import (
-        analyze_tokens,
-        index_analyzer,
-        parse_query,
-    )
-
-    token_words = analyze_tokens(parse_query(query), index_analyzer(stores[0]))
-    terms = sorted({w for ws in token_words for w in ws})
-    seg_dfs = _segment_term_dfs(spark, stores, terms)
-    gdf: dict[str, int] = {}
-    for d in seg_dfs:
-        for t, df in d.items():
-            gdf[t] = gdf.get(t, 0) + df
-
-    seg_tombs = tombstones_for_segments(
-        spark, root, n_shards, [os.path.basename(s) for s in segs]
-    )
-    parts = []
-    for i, (seg, off) in enumerate(zip(segs, offsets)):
-        p = wand_topk(
-            spark, seg, query, k=k,
-            corpus_stats=(num_docs, total_tf), df_override=gdf,
-            docs_join=False,
-            exclude_df=seg_tombs[os.path.basename(seg)],
-            local_df=seg_dfs[i],
-        )
-        if off:
-            p = p.withColumn("doc_id", (F.col("doc_id") + F.lit(off)).cast("long"))
-        parts.append(p)
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    topk = merged.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-
-    docs = _docs_union(spark, stores, offsets)
-    return (
-        F.broadcast(topk)
-        .join(docs, "doc_id")
-        .select(*RESULT_COLS)
-        # limit is a no-op on the <=k joined rows but compiles the final
-        # sort to TakeOrderedAndProject (no range-sampling job — r6,
-        # same as wand_topk's metadata join)
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
-
-
-def _docs_union(spark, stores, offsets):
-    docs = None
-    for s, off in zip(stores, offsets):
-        d = s.read_table(spark, "docs")
-        if off:
-            d = d.withColumn("doc_id", (F.col("doc_id") + F.lit(off)).cast("long"))
-        docs = d if docs is None else docs.unionByName(d)
-    return docs
-
-
-def search_live_batch(
-    spark: SparkSession,
-    root: str,
-    queries: list[str],
-    k: int = 10,
-) -> DataFrame:
-    """Throughput mode over a live index: MANY queries against every
-    live segment via the batch WAND kernel (one postings scan per
-    segment for the union of all query terms, decode shared across
-    queries), scored with the same union statistics as search_live,
-    then a per-query rank window over the cross-segment union.  Same
-    output schema/order as topk.wand_topk_batch; per-query results
-    equal search_live's (and the compacted index's batch results).
-    Phrase tokens are supported; tombstoned docs are excluded."""
-    from pyspark.sql import Window
-
-    from websearchengine_spark.operators.query import (
-        analyze_tokens,
-        index_analyzer,
-        parse_query,
-    )
-    from websearchengine_spark.operators.topk import wand_topk_batch
-
-    segs = live_segment_roots(root)
-    if not segs:
-        raise ValueError(f"live index at {root} has no segments")
     stores = [IndexStorage(s) for s in segs]
     cfgs = [s.read_manifest()["config"] for s in stores]
     n_shards = int(cfgs[0]["n_shards"])
@@ -868,7 +753,7 @@ def search_live_batch(
             for w in ws
         }
     )
-    seg_dfs = _segment_term_dfs(spark, stores, terms)
+    seg_dfs = [_df_lookup(spark, s, terms, None) for s in stores]
     gdf: dict[str, int] = {}
     for d in seg_dfs:
         for t, df in d.items():
@@ -877,29 +762,95 @@ def search_live_batch(
     seg_tombs = tombstones_for_segments(
         spark, root, n_shards, [os.path.basename(s) for s in segs]
     )
-    parts = []
-    for i, (seg, off) in enumerate(zip(segs, offsets)):
-        p = wand_topk_batch(
-            spark, seg, queries, k=k,
+    merged = docs = None
+    for seg, store, off, local_df in zip(segs, stores, offsets, seg_dfs):
+        p = score_segment(
+            seg,
             corpus_stats=(num_docs, total_tf), df_override=gdf,
             docs_join=False,
             exclude_df=seg_tombs[os.path.basename(seg)],
-            local_df=seg_dfs[i],
-        ).select("query", "doc_id", "score")
+            local_df=local_df,
+        )
+        d = store.read_table(spark, "docs")
         if off:
             p = p.withColumn("doc_id", (F.col("doc_id") + F.lit(off)).cast("long"))
-        parts.append(p)
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
+            d = d.withColumn("doc_id", (F.col("doc_id") + F.lit(off)).cast("long"))
+        merged = p if merged is None else merged.unionByName(p)
+        docs = d if docs is None else docs.unionByName(d)
+    return merged, docs
+
+
+def search_live(
+    spark: SparkSession,
+    root: str,
+    query: str,
+    k: int = 10,
+) -> DataFrame:
+    """BM25 WAND top-k over ALL live segments with UNION statistics.
+
+    Each segment is scored by wand_topk with the summed
+    (num_docs, total_tf) and per-term global df, its local doc_ids are
+    shifted into the global id space (see _search_segments), and the
+    per-segment top-ks merge on (score desc, doc_id asc).  The result is
+    doc_id- and score-identical to wand_topk over the compacted index:
+    compaction never changes what search returns, it only changes what
+    search costs.  (With PENDING tombstones the superseded docs are
+    already invisible but still count in df/num_docs until compaction —
+    the standard Lucene visibility contract; after compaction the
+    statistics equal a from-scratch build of the latest-version corpus.)
+    Warns (RuntimeWarning) when compaction is overdue.  Returns
+    query.RESULT_COLS ordered like run_query."""
+    from websearchengine_spark.operators.query import RESULT_COLS
+    from websearchengine_spark.operators.topk import wand_topk
+
+    merged, docs = _search_segments(
+        spark, root, [query],
+        lambda seg, **kw: wand_topk(spark, seg, query, k=k, **kw),
+    )
+    topk = merged.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    return (
+        F.broadcast(topk)
+        .join(docs, "doc_id")
+        .select(*RESULT_COLS)
+        # limit is a no-op on the <=k joined rows but compiles the final
+        # sort to TakeOrderedAndProject (no range-sampling job — r6,
+        # same as wand_topk's metadata join)
+        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        .limit(k)
+    )
+
+
+def search_live_batch(
+    spark: SparkSession,
+    root: str,
+    queries: list[str],
+    k: int = 10,
+) -> DataFrame:
+    """Throughput mode over a live index: MANY queries against every
+    live segment via wand_topk_batch (one postings scan per segment for
+    the union of all query terms, decode shared across queries), scored
+    with the same union statistics as search_live, then a per-query rank
+    window over the cross-segment union.  Same output schema/order as
+    topk.wand_topk_batch; per-query results equal search_live's (and the
+    compacted index's batch results).  Phrase tokens are supported;
+    tombstoned docs are excluded; warns like search_live when
+    compaction is overdue."""
+    from pyspark.sql import Window
+
+    from websearchengine_spark.operators.topk import wand_topk_batch
+
+    merged, docs = _search_segments(
+        spark, root, queries,
+        lambda seg, **kw: wand_topk_batch(spark, seg, queries, k=k, **kw).select(
+            "query", "doc_id", "score"
+        ),
+    )
     w = Window.partitionBy("query").orderBy(F.desc("score"), F.asc("doc_id"))
     topk = merged.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
-    docs = _docs_union(spark, stores, offsets)
     # n_queries x k rows vs the union of all segments' docs tables:
-    # broadcast the small side (sf1 plan-audit finding — the single-query
-    # path at :808 already did)
+    # broadcast the small side (sf1 plan-audit finding, as in search_live)
     out = (
         F.broadcast(topk).join(docs, "doc_id")
         .select(
