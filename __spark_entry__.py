@@ -10,11 +10,13 @@ family from SURVEY.md §2 plus the training-data-pipeline operators
 column is aliased identically on both sides; floats are rounded on both
 sides so value-hashes compare stably.
 
-All Spark implementations here are pure ``pyspark.sql`` column
-expressions (no Python UDFs), so they run under the driver's own
-SparkSession with no package shipping concerns; the UDF-based engine
-paths (index build + WAND) are exercised by ``entry`` and the
-``bm25_index_path`` query, which ship the package zip explicitly.
+An entry is a thin call into the package operator it checks (the
+rankers and suggestion features read one shared whitespace-analyzer
+index, ``_index_for``), so the DuckDB oracle verifies the code users
+call.  Entries with no package operator, or whose oracle semantics
+legitimately differ from it, stay inline and are listed with their
+reason in ``INLINE_ENTRIES``.  Entries that run Python UDFs (index
+build, WAND, the Arrow kernels) ship the package zip explicitly.
 """
 
 from __future__ import annotations
@@ -22,35 +24,56 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from websearchengine_spark.operators.prf import STOPWORDS as _PRF_STOPWORDS
+from websearchengine_spark.operators.util import widen_for_explode
+from websearchengine_spark.sources.storage import read_parquet_cached
+
 QUERY_TERMS = ["data", "stream", "join"]  # present in the documents vocab
 QL_TERMS = ["data", "stream"]
 PHRASE = "data stream"
 
-# (path -> StructType) schema memo: a bare spark.read.parquet runs a
-# footer-reading JOB per call; the testdata tables are immutable inside a
-# process, so infer once and pass the schema explicitly afterwards.
-# (Schema metadata only — results are computed from the parquet files on
-# every call.)
-_PQ_SCHEMAS: dict[str, object] = {}
+# Entries that do NOT call a package operator, each with its reason.
+# tests/test_entry_contract.py::test_entries_call_the_package holds every
+# other registered entry to reaching an operators/streaming import.
+INLINE_ENTRIES: dict[str, str] = {
+    "term_df_top100": "no package operator; bench.py term_stats_agg times this plan",
+    "term_ctf_top100": "no package operator: corpus ctf scan scenario",
+    "doc_len": "no package operator: per-doc token count scenario",
+    "corpus_stats": "no package operator: corpus statistics scenario",
+    "conjunctive_count": "no package operator: token-table conjunctive count scenario",
+    "phrase_count": "no package operator: string-form phrase count scenario",
+    "cosine_tfidf_top20": "standard tf-idf cosine, not fullscan's R5 query-as-document variant",
+    "dedup_exact": "exact_duplicates keeps only groups of >1 and returns doc_ids lists",
+    "minhash_signatures": "4-lane single-md5 layout; bench.py minhash_dedup times this plan",
+    "doc_fingerprint": "doc_fingerprints salts its hash; the oracle hashes unsalted",
+    "lang_id_heuristic": "lang_id scores 4 language profiles; the oracle is English-only",
+    "mm_binary_meta": "no package operator: binary payload metadata scenario",
+    "ann_cosine_top20": "bench.py ann_cosine times this exact plan",
+    "tpch_q1": "relational scenario; bench.py tpch_q1 times this plan",
+    "tpch_q3ish": "relational scenario, no package operator",
+    "tpch_q14ish": "relational scenario, no package operator",
+    "top_order_per_customer": "relational scenario, no package operator",
+    "supplier_nation_rollup": "relational scenario, no package operator",
+    "region_rollup": "relational scenario, no package operator",
+    "events_agg": "events-log scenario, no package operator",
+    "events_hourly": "events-log scenario, no package operator",
+    "events_sessionize": "events-log scenario; the package sessionizer is a streaming one",
+}
 
 
-def _read_pq(spark: SparkSession, path: str) -> DataFrame:
-    sch = _PQ_SCHEMAS.get(path)
-    if sch is None:
-        df = spark.read.parquet(path)
-        _PQ_SCHEMAS[path] = df.schema
-        return df
-    return spark.read.schema(sch).parquet(path)
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return read_parquet_cached(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _read_pq(spark, f"{sf_dir}/documents.parquet")
+    return _t(spark, sf_dir, "documents")
 
 
 def _pq_nrows(path: str) -> int | None:
@@ -64,14 +87,6 @@ def _pq_nrows(path: str) -> int | None:
         return None
 
 
-def _widen(df: DataFrame) -> DataFrame:
-    """Parallelism guard for explode-amplifying scans (the shared
-    operators/util.py helper; see its docstring)."""
-    from websearchengine_spark.operators.util import widen_for_explode
-
-    return widen_for_explode(df)
-
-
 def _tok_expr():
     """Filtered lowercase whitespace tokens (matches the SQL oracle)."""
     return F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
@@ -79,7 +94,7 @@ def _tok_expr():
 
 def _toks(spark, sf_dir) -> DataFrame:
     """(doc_id, term) one row per occurrence."""
-    return _widen(_docs(spark, sf_dir)).select(
+    return widen_for_explode(_docs(spark, sf_dir)).select(
         "doc_id", F.explode(_tok_expr()).alias("term")
     )
 
@@ -105,7 +120,7 @@ def q_term_df(spark, sf_dir):
     carries (term, partial_count) rows instead of every (term, doc_id)
     pair (r6; value- and schema-identical at all SFs)."""
     return (
-        _widen(_docs(spark, sf_dir))
+        widen_for_explode(_docs(spark, sf_dir))
         .select(F.explode(F.array_distinct(_tok_expr())).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("df"))
@@ -170,17 +185,6 @@ SQL_CORPUS_STATS = (
 )
 
 
-def _conjunctive(spark, sf_dir, terms) -> DataFrame:
-    """J1: docs containing ALL terms -> (doc_id)."""
-    t = _toks(spark, sf_dir).filter(F.col("term").isin(terms))
-    return (
-        t.groupBy("doc_id")
-        .agg(F.countDistinct("term").alias("nt"))
-        .filter(F.col("nt") == len(terms))
-        .select("doc_id")
-    )
-
-
 def _sql_conjunctive(terms) -> str:
     tl = ", ".join(f"'{t}'" for t in terms)
     return (
@@ -190,8 +194,14 @@ def _sql_conjunctive(terms) -> str:
 
 
 def q_conjunctive_count(spark, sf_dir):
-    return _conjunctive(spark, sf_dir, QUERY_TERMS).agg(
-        F.count("*").alias("n_docs_all_terms")
+    """J1: how many docs contain ALL query terms."""
+    return (
+        _toks(spark, sf_dir)
+        .filter(F.col("term").isin(QUERY_TERMS))
+        .groupBy("doc_id")
+        .agg(F.countDistinct("term").alias("nt"))
+        .filter(F.col("nt") == len(QUERY_TERMS))
+        .agg(F.count("*").alias("n_docs_all_terms"))
     )
 
 
@@ -203,34 +213,13 @@ SQL_CONJUNCTIVE_COUNT = (
 
 
 def q_bm25_topk(spark, sf_dir):
-    """R-BM25 over conjunctive candidates, k1=1.2 b=0.75, top 20."""
-    toks = _toks(spark, sf_dir).filter(F.col("term").isin(QUERY_TERMS))
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    dl = q_doc_len(spark, sf_dir)
-    stats = q_corpus_stats(spark, sf_dir).collect()[0]
-    n, avg_dl = stats["num_docs"], stats["total_tf"] / stats["num_docs"]
-    dfs = (
-        _toks(spark, sf_dir)
-        .filter(F.col("term").isin(QUERY_TERMS))
-        .groupBy("term")
-        .agg(F.countDistinct("doc_id").alias("df"))
-    )
-    cand = _conjunctive(spark, sf_dir, QUERY_TERMS)
-    idf = F.log((F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    scored = (
-        tf.join(cand, "doc_id")
-        .join(F.broadcast(dfs), "term")
-        .join(dl, "doc_id")
-        .withColumn(
-            "_s",
-            idf
-            * (F.col("tf") * 2.2)
-            / (F.col("tf") + 1.2 * (0.25 + 0.75 * F.col("doc_len") / F.lit(avg_dl))),
-        )
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("_s"), 6).alias("score"))
-    )
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
+    """R-BM25 over conjunctive candidates, k1=1.2 b=0.75, top 20, via
+    the DataFrame BM25 path (query.run_query(ranker="bm25"))."""
+    from websearchengine_spark.operators.query import run_query
+
+    root = _index_for(spark, sf_dir)
+    q = " ".join(QUERY_TERMS)
+    return _rounded_top20(spark, lambda k: run_query(spark, root, q, ranker="bm25", k=k))
 
 
 SQL_BM25_TOPK = (
@@ -256,40 +245,16 @@ SQL_BM25_TOPK = (
 
 
 def q_ql_topk(spark, sf_dir):
-    """R1-style: 1.4*QL_JM(0.5) + 0.3*log(nv+1), nv := doc_id % 100."""
-    toks = _toks(spark, sf_dir).filter(F.col("term").isin(QL_TERMS))
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    dl = q_doc_len(spark, sf_dir)
-    stats = q_corpus_stats(spark, sf_dir).collect()[0]
-    total_tf = float(stats["total_tf"])
-    ctfs = (
-        _toks(spark, sf_dir)
-        .filter(F.col("term").isin(QL_TERMS))
-        .groupBy("term")
-        .agg(F.count("*").alias("ctf"))
+    """R1 comprehensive (query.run_query(ranker="comprehensive")):
+    1.4*QL_JM(0.5) + 0.3*log(pr+1) + 0.3*log(nv+1) with the entry
+    index's signals pr := 0.0, nv := doc_id % 100."""
+    from websearchengine_spark.operators.query import run_query
+
+    root = _index_for(spark, sf_dir)
+    q = " ".join(QL_TERMS)
+    return _rounded_top20(
+        spark, lambda k: run_query(spark, root, q, ranker="comprehensive", k=k)
     )
-    cand = _conjunctive(spark, sf_dir, QL_TERMS)
-    scored = (
-        tf.join(cand, "doc_id")
-        .join(F.broadcast(ctfs), "term")
-        .join(dl, "doc_id")
-        .withColumn(
-            "_lp",
-            F.log(0.5 * F.col("tf") / F.col("doc_len") + 0.5 * F.col("ctf") / F.lit(total_tf)),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("_lp").alias("ql"))
-        .withColumn(
-            "score",
-            F.round(
-                1.4 * F.col("ql")
-                + 0.3 * F.log(F.col("doc_id") % 100 + 1.0),
-                6,
-            ),
-        )
-        .select("doc_id", "score")
-    )
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
 
 
 SQL_QL_TOPK = (
@@ -346,7 +311,6 @@ def q_cosine_topk(spark, sf_dir):
     norms = weighted.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("dnorm")
     )
-    qn = len(QUERY_TERMS) ** 0.5  # query tf=1 each, norm over idf? see SQL
     dot = (
         weighted.filter(F.col("term").isin(QUERY_TERMS))
         .groupBy("doc_id")
@@ -358,7 +322,6 @@ def q_cosine_topk(spark, sf_dir):
         .agg(F.sqrt(F.sum(idf * idf)).alias("qn"))
         .collect()[0]["qn"]
     )
-    del qn
     return (
         dot.join(norms, "doc_id")
         .select(
@@ -413,7 +376,9 @@ def _synthetic_graph(spark, sf_dir):
         # window needs them — one exchange total instead of two
         .repartition("src")
         .dropDuplicates(["src", "dst"])
-    ).persist()
+    )
+    # not persisted here: pagerank_iterate caches the topology it derives
+    # from these edges, and nothing else reads them
     return docs.select(F.col("doc_id").alias("node")), edges, n
 
 
@@ -479,22 +444,19 @@ SQL_PAGERANK_10ITER = _pagerank_sql(10)
 
 
 def q_spearman(spark, sf_dir):
-    """G4: rho between ranking by n_chars and by token count."""
-    dl = q_doc_len(spark, sf_dir)
-    d = _docs(spark, sf_dir).select("doc_id", "n_chars").join(dl, "doc_id")
-    rx = F.row_number().over(W.orderBy(F.desc("n_chars"), F.asc("doc_id")))
-    ry = F.row_number().over(W.orderBy(F.desc("doc_len"), F.asc("doc_id")))
-    ranked = d.select(rx.alias("rx"), ry.alias("ry"))
-    n = d.count()
-    z = (n + 1) / 2.0
-    return ranked.agg(
-        F.round(
-            F.sum((F.col("rx") - z) * (F.col("ry") - z))
-            / F.sqrt(
-                F.sum(F.pow(F.col("rx") - z, 2)) * F.sum(F.pow(F.col("ry") - z, 2))
-            ),
-            9,
-        ).alias("spearman_rho")
+    """G4: rho between ranking by n_chars and by token count
+    (graph.spearman)."""
+    from websearchengine_spark.operators.graph import spearman
+
+    by_chars = _docs(spark, sf_dir).select(
+        F.col("doc_id").alias("name"), F.col("n_chars").alias("value")
+    )
+    by_len = q_doc_len(spark, sf_dir).select(
+        F.col("doc_id").alias("name"), F.col("doc_len").alias("value")
+    )
+    rho = spearman(by_chars, by_len)
+    return spark.createDataFrame([(rho,)], "rho double").select(
+        F.round("rho", 9).alias("spearman_rho")
     )
 
 
@@ -542,7 +504,7 @@ def _spark_norm():
 def _shingles_spark(spark, sf_dir):
     """(doc_id, shingle): char-8-grams of normalized text."""
     return (
-        _widen(_docs(spark, sf_dir))
+        widen_for_explode(_docs(spark, sf_dir))
         .select("doc_id", _spark_norm().alias("norm"))
         .select(
             "doc_id",
@@ -638,10 +600,12 @@ SQL_SIMHASH = (
 
 
 def q_ngram_jaccard(spark, sf_dir):
-    """Near-dup: token-set Jaccard for consecutive same-source doc pairs."""
-    d = _toks(spark, sf_dir).distinct()
-    sizes = d.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    src = _docs(spark, sf_dir).select("doc_id", "source")
+    """Near-dup: token-set Jaccard (dedup.token_jaccard_pairs) for
+    consecutive same-source doc pairs."""
+    from websearchengine_spark.operators.dedup import token_jaccard_pairs
+
+    docs = _docs(spark, sf_dir)
+    src = docs.select("doc_id", "source")
     pairs = (
         src.alias("a")
         .join(
@@ -649,23 +613,14 @@ def q_ngram_jaccard(spark, sf_dir):
             (F.col("a.source") == F.col("b.source"))
             & (F.col("b.doc_id") == F.col("a.doc_id") + 20),
         )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-    )
-    da_terms = d.withColumnRenamed("doc_id", "da")
-    db_terms = d.withColumnRenamed("doc_id", "db")
-    inter = (
-        pairs.join(da_terms, "da")
-        .join(db_terms, ["db", "term"])
-        .groupBy("da", "db")
-        .agg(F.count("*").alias("c"))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
     )
     return (
-        inter.join(sizes.withColumnRenamed("doc_id", "da").withColumnRenamed("sz", "sa"), "da")
-        .join(sizes.withColumnRenamed("doc_id", "db").withColumnRenamed("sz", "sb"), "db")
+        token_jaccard_pairs(docs, pairs)
         .select(
-            "da",
-            "db",
-            F.round(F.col("c") / (F.col("sa") + F.col("sb") - F.col("c")), 6).alias("jaccard"),
+            F.col("doc_a").alias("da"),
+            F.col("doc_b").alias("db"),
+            F.round("jaccard", 6).alias("jaccard"),
         )
         .orderBy("da")
     )
@@ -741,15 +696,13 @@ SQL_LANG_ID = (
 
 
 def q_quality(spark, sf_dir):
-    """Quality scoring: token count, type-token ratio, mean token length."""
-    toks = _toks(spark, sf_dir)
+    """Quality scoring (textstats.quality_scores): token count,
+    type-token ratio, mean token length."""
+    from websearchengine_spark.operators.textstats import quality_scores
+
     return (
-        toks.groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_tokens"),
-            F.round(F.countDistinct("term") / F.count("*"), 6).alias("ttr"),
-            F.round(F.avg(F.length("term")), 6).alias("mean_tok_len"),
-        )
+        quality_scores(_docs(spark, sf_dir))
+        .select("doc_id", "n_tokens", "ttr", "mean_tok_len")
         .orderBy("doc_id")
     )
 
@@ -765,13 +718,10 @@ SQL_QUALITY = (
 
 
 def q_token_counts(spark, sf_dir):
-    """Whitespace vs BPE-ish regex token counting."""
-    pat = "[a-z]+|[0-9]+|[^a-z0-9 ]"
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        F.size(_tok_expr()).cast("long").alias("ws_tokens"),
-        F.size(F.expr(f"regexp_extract_all(regexp_replace(lower(text), '\\\\s+', ' '), '{pat}', 0)")).cast("long").alias("bpeish_tokens"),
-    ).orderBy("doc_id")
+    """Whitespace vs BPE-ish regex token counting (textstats.token_counts)."""
+    from websearchengine_spark.operators.textstats import token_counts
+
+    return token_counts(_docs(spark, sf_dir)).orderBy("doc_id")
 
 
 SQL_TOKEN_COUNTS = (
@@ -812,13 +762,9 @@ GROUP BY doc_id ORDER BY doc_id"""
 # Similarity search over embeddings
 # --------------------------------------------------------------------------
 
-def _emb(spark, sf_dir):
-    return _read_pq(spark, f"{sf_dir}/embeddings.parquet")
-
-
 def q_ann_cosine(spark, sf_dir):
     """Brute-force cosine top-20 vs the vec_id=0 query vector."""
-    emb = _emb(spark, sf_dir)
+    emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv")
     ).collect()[0]["qv"]
@@ -890,6 +836,25 @@ def _rounded_topk_rows(fetch, n: int, start_k: int = 40) -> list[tuple]:
         k *= 4
 
 
+def _rounded_top20(spark, topk, col="score", digits=6, scale=1.0):
+    """Top-20 (doc_id, ``col``) on the oracle's key round(score * scale,
+    digits), with the k-boundary rounded-tie cluster fully fetched.
+    ``topk(k)`` is the operator's own top-k (doc_id, score) DataFrame."""
+
+    def fetch(k):
+        return [
+            (r["doc_id"], float(r["s"]))
+            for r in topk(k)
+            .select("doc_id", F.round(F.col("score") * scale, digits).alias("s"))
+            .orderBy(F.desc("s"), F.asc("doc_id"))
+            .collect()
+        ]
+
+    return spark.createDataFrame(
+        _rounded_topk_rows(fetch, 20), f"doc_id long, {col} double"
+    )
+
+
 def _ivf_index_for(spark, sf_dir):
     import tempfile
 
@@ -903,7 +868,7 @@ def _ivf_index_for(spark, sf_dir):
 
     # the query vector (vec_id 0) is EXCLUDED from the index — matching
     # SQL_ANN_COSINE's semantics and removing the degenerate self-match
-    emb = _emb(spark, sf_dir).filter(F.col("vec_id") != 0)
+    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
     cents = ivf_build_centroids(emb, nlist=_IVF_NLIST)
     cents = [[round(float(x), 6) for x in c] for c in cents]
     path = tempfile.mkdtemp(prefix="wse_entry_ivf_")
@@ -926,7 +891,7 @@ def q_ivf_ann_top10(spark, sf_dir):
     path, cents = _ivf_index_for(spark, sf_dir)
     qv = [
         float(x)
-        for x in _emb(spark, sf_dir)
+        for x in _t(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") == 0)
         .collect()[0]["embedding"]
     ]
@@ -989,7 +954,7 @@ def q_lsh_buckets(spark, sf_dir):
     oracle SQL mirrors the same (i, p) weight hash."""
     from websearchengine_spark.operators.similarity import lsh_bucket
 
-    emb = _emb(spark, sf_dir)
+    emb = _t(spark, sf_dir, "embeddings")
     buckets = lsh_bucket(emb, n_planes=8)
     return buckets.groupBy("bucket").agg(F.count("*").alias("n_vecs")).orderBy("bucket")
 
@@ -1010,25 +975,12 @@ SELECT bucket, count(*) AS n_vecs FROM buckets GROUP BY bucket ORDER BY bucket""
 
 def q_next_word(spark, sf_dir):
     """Q6 next-word suggestion (nextFollowing,
-    IndexerInvertedOccurrence.java:913-957): count the tokens that
-    FOLLOW occurrences of the phrase 'data stream', top-5 by
-    (n desc, word asc)."""
-    base = _docs(spark, sf_dir).select("doc_id", _tok_expr().alias("toks"))
-    tri = base.select(
-        F.explode(
-            F.expr(
-                "transform(slice(toks, 1, greatest(size(toks)-2, 0)),"
-                " (t, i) -> struct(t AS w0, toks[i+1] AS w1, toks[i+2] AS w2))"
-            )
-        ).alias("g")
-    ).select("g.w0", "g.w1", "g.w2")
-    return (
-        tri.filter((F.col("w0") == "data") & (F.col("w1") == "stream"))
-        .groupBy(F.col("w2").alias("next_word"))
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), F.asc("next_word"))
-        .limit(5)
-    )
+    IndexerInvertedOccurrence.java:913-957) via
+    spell.next_word_suggestions: count the tokens that FOLLOW
+    occurrences of the phrase 'data stream', top-5 by (n desc, word asc)."""
+    from websearchengine_spark.operators.spell import next_word_suggestions
+
+    return next_word_suggestions(spark, _index_for(spark, sf_dir), PHRASE, top_n=5)
 
 
 SQL_NEXT_WORD = """
@@ -1055,7 +1007,7 @@ def q_emb_near_dup(spark, sf_dir):
     and hash-stable on both sides)."""
     from websearchengine_spark.operators.similarity import cosine_near_dup_pairs
 
-    emb = _emb(spark, sf_dir).select(
+    emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     pairs = cosine_near_dup_pairs(emb, threshold=-2.0, n_planes=8)
@@ -1097,22 +1049,25 @@ ORDER BY id_a, id_b"""
 # Relational breadth (Catalyst-native: joins/aggs/windows)
 # --------------------------------------------------------------------------
 
-def _t(spark, sf_dir, name):
-    return _read_pq(spark, f"{sf_dir}/{name}.parquet")
+def _clicks(spark, sf_dir) -> DataFrame:
+    """The events log in the clicklog shape: session = user_id, query =
+    event_type; event_id rides along as the same-timestamp tie-break."""
+    return _t(spark, sf_dir, "events").select(
+        F.col("user_id").alias("session_id"),
+        F.col("event_type").alias("query"),
+        "ts",
+        "event_id",
+    )
 
 
 def q_history_suggestions(spark, sf_dir):
     """querySearch 'history' branch (IndexerInvertedOccurrence.java:
-    830-840) over the events log: past 'queries' (event_types)
-    case-insensitively containing a substring, most frequent first."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.filter(F.lower(F.col("event_type")).contains("e"))
-        .groupBy(F.col("event_type").alias("query"))
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), F.asc("query"))
-        .limit(10)
-    )
+    830-840) via clicklog.history_suggestions over the events log: past
+    'queries' (event_types) case-insensitively containing a substring,
+    most frequent first."""
+    from websearchengine_spark.streaming.clicklog import history_suggestions
+
+    return history_suggestions(_clicks(spark, sf_dir), "e", top_n=10)
 
 
 SQL_HISTORY_SUGGESTIONS = """
@@ -1122,20 +1077,20 @@ GROUP BY event_type ORDER BY n DESC, query LIMIT 10"""
 
 
 def q_title_hit_count(spark, sf_dir):
-    """R8 fullscan title-hit (RankerFullScan.java:38-61) with title :=
-    the doc's first 3 raw tokens: how many docs score 1.0 for the query
-    (any query token among the title tokens)."""
-    base = _docs(spark, sf_dir).select(
-        F.slice(
-            F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != ""), 1, 3
-        ).alias("title_toks")
-    )
-    qtoks = F.array(*[F.lit(t) for t in _FS_TERMS])
-    return base.agg(
-        F.sum(F.when(F.arrays_overlap("title_toks", qtoks), 1).otherwise(0))
-        .cast("long")
-        .alias("n_title_hits")
-    )
+    """R8 fullscan title-hit (RankerFullScan.java:38-61,
+    fullscan.score_fullscan_title) with title := the doc's first 3 raw
+    tokens: how many docs score 1.0 for the query (any query token among
+    the title tokens)."""
+    from websearchengine_spark.operators.fullscan import score_fullscan_title
+
+    raw = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
+    with _fullscan_prep(spark, sf_dir, F.concat_ws(" ", F.slice(raw, 1, 3))) as prep:
+        n = (
+            score_fullscan_title(spark, prep, " ".join(_FS_TERMS))
+            .agg(F.sum("score").cast("long"))
+            .collect()[0][0]
+        )
+    return spark.createDataFrame([(n,)], "n_title_hits long")
 
 
 SQL_TITLE_HIT_COUNT = """
@@ -1382,69 +1337,28 @@ FROM g GROUP BY user_id ORDER BY user_id"""
 # over the pre-tokenized documents/events tables
 # --------------------------------------------------------------------------
 
-# the reference's PRF stop list (QueryHandler.java:51-77) — shared with
-# operators/prf.py; inlined into the oracle SQL below
-from websearchengine_spark.operators.prf import STOPWORDS as _PRF_STOPWORDS
-
+# the reference's PRF stop list (QueryHandler.java:51-77), inlined into
+# the oracle SQL below
 _SQL_STOPLIST = ", ".join(
     "'" + w.replace("'", "''") + "'" for w in sorted(_PRF_STOPWORDS)
 )
 
 
-def _bm25_topk_for_terms(spark, sf_dir, terms, k):
-    """Top-k doc_ids by conjunctive BM25 over ``terms`` (rounded-score
-    ordering, doc_id tie-break) — the candidate feeder for PRF."""
-    toks = _toks(spark, sf_dir).filter(F.col("term").isin(terms))
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    dl = q_doc_len(spark, sf_dir)
-    stats = q_corpus_stats(spark, sf_dir).collect()[0]
-    n, avg_dl = stats["num_docs"], stats["total_tf"] / stats["num_docs"]
-    dfs = toks.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    cand = _conjunctive(spark, sf_dir, terms)
-    idf = F.log((F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    return (
-        tf.join(cand, "doc_id")
-        .join(F.broadcast(dfs), "term")
-        .join(dl, "doc_id")
-        .withColumn(
-            "_s",
-            idf
-            * (F.col("tf") * 2.2)
-            / (F.col("tf") + 1.2 * (0.25 + 0.75 * F.col("doc_len") / F.lit(avg_dl))),
-        )
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("_s"), 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id")
-    )
+def _prf(spark, sf_dir, terms) -> DataFrame:
+    """(term, prob) PRF expansion (prf.prf_expand over BM25) for the
+    query given by ``terms``, prob rounded as the oracle rounds it."""
+    from websearchengine_spark.operators.prf import prf_expand
 
-
-def _prf_df(spark, sf_dir, terms):
-    """(term, prob) PRF expansion for a query given by ``terms``."""
-    top10 = _bm25_topk_for_terms(spark, sf_dir, terms, 10)
-    toks = _toks(spark, sf_dir).join(F.broadcast(top10), "doc_id")
-    mass = toks.groupBy("term").agg(F.count("*").alias("mass"))
-    top_terms = (
-        mass.filter(~F.col("term").isin(list(_PRF_STOPWORDS)))
-        .orderBy(F.desc("mass"), F.asc("term"))
-        .limit(5)
-    )
-    total = top_terms.agg(F.sum("mass").alias("t"))
-    return (
-        top_terms.crossJoin(total)
-        .select(
-            "term",
-            F.round(F.col("mass") / F.col("t"), 6).alias("prob"),
-        )
-        .orderBy(F.desc("prob"), F.asc("term"))
-    )
+    return prf_expand(
+        spark, _index_for(spark, sf_dir), " ".join(terms), ranker="bm25"
+    ).select("term", F.round("prob", 6).alias("prob"))
 
 
 def q_prf_expansion(spark, sf_dir):
-    """A7/Q1 (QueryHandler.java:397-497): top-10 BM25 docs -> term mass
-    over those docs -> top-5 non-stopword terms, prob renormalized."""
-    return _prf_df(spark, sf_dir, QUERY_TERMS)
+    """A7/Q1 (QueryHandler.java:397-497) via prf.prf_expand over BM25:
+    top-10 docs -> term mass over those docs -> top-5 non-stopword
+    terms, prob renormalized."""
+    return _prf(spark, sf_dir, QUERY_TERMS)
 
 
 def _sql_prf(terms) -> str:
@@ -1483,14 +1397,17 @@ SQL_PRF_EXPANSION = _sql_prf(QUERY_TERMS)
 
 
 def q_bhattacharyya(spark, sf_dir):
-    """Q2 (Bhattacharyya.java:118-148): beta(q1, q2) = sum over shared
-    expansion terms of sqrt(p1 * p2) — expansions are the PRF
-    distributions for 'data stream join' and 'data stream'."""
-    a = _prf_df(spark, sf_dir, QUERY_TERMS).select("term", F.col("prob").alias("pa"))
-    b = _prf_df(spark, sf_dir, QL_TERMS).select("term", F.col("prob").alias("pb"))
-    return a.join(b, "term").agg(
-        F.round(F.coalesce(F.sum(F.sqrt(F.col("pa") * F.col("pb"))), F.lit(0.0)), 6)
-        .alias("beta")
+    """Q2 (Bhattacharyya.java:118-148, prf.bhattacharyya): beta(q1, q2)
+    = sum over shared expansion terms of sqrt(p1 * p2) — expansions are
+    the PRF distributions for 'data stream join' and 'data stream',
+    probabilities rounded as the oracle's expansions are."""
+    from websearchengine_spark.operators.prf import bhattacharyya
+
+    beta = bhattacharyya(
+        _prf(spark, sf_dir, QUERY_TERMS), _prf(spark, sf_dir, QL_TERMS)
+    )
+    return spark.createDataFrame([(beta,)], "beta double").select(
+        F.round("beta", 6).alias("beta")
     )
 
 
@@ -1502,55 +1419,12 @@ SQL_BHATTACHARYYA = (
 
 
 def q_ql_fullscan(spark, sf_dir):
-    """R4 ql fullscan (SignalFactory.java:14-88): score EVERY doc with
+    """R4 ql fullscan (SignalFactory.java:14-88,
+    fullscan.score_ql_fullscan): score EVERY doc with
     exp(sum_q ln(0.5*tf/len + 0.5*ctf/total)); docs missing a query term
-    use the collection term (tf=0).  Top-20, RAW whitespace tokens (the
-    fullscan indexer does not lowercase)."""
-    docs = _docs(spark, sf_dir)
-    toks_arr = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
-    base = docs.select("doc_id", toks_arr.alias("toks"))
-    bt = base.select("doc_id", F.explode("toks").alias("term"))
-    srow = base.agg(F.sum(F.size("toks")).alias("total")).collect()[0]
-    total = float(srow["total"])
-    import math as _m
-
-    ctfs = {
-        r["term"]: r["ctf"]
-        for r in bt.filter(F.col("term").isin(_FS_TERMS))
-        .groupBy("term")
-        .agg(F.count("*").alias("ctf"))
-        .collect()
-    }
-    ql_base = sum(_m.log(0.5 * ctfs[t] / total) for t in _FS_TERMS)
-    qd = spark.createDataFrame(
-        [(t, float(ctfs[t])) for t in _FS_TERMS], "term string, ctf double"
-    )
-    dl = base.select("doc_id", F.size("toks").alias("body_len"))
-    adj = (
-        bt.filter(F.col("term").isin(_FS_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-        .join(F.broadcast(qd), "term")
-        .join(dl, "doc_id")
-        .groupBy("doc_id")
-        .agg(
-            F.sum(
-                F.log(0.5 * F.col("tf") / F.col("body_len") + 0.5 * F.col("ctf") / F.lit(total))
-                - F.log(0.5 * F.col("ctf") / F.lit(total))
-            ).alias("ql_adj")
-        )
-    )
-    return (
-        dl.join(adj, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.round(
-                F.exp(F.lit(ql_base) + F.coalesce("ql_adj", F.lit(0.0))) * 1e9, 6
-            ).alias("score_e9"),
-        )
-        .orderBy(F.desc("score_e9"), F.asc("doc_id"))
-        .limit(20)
-    )
+    use the collection term (tf=0).  Top-20 on score * 1e9, RAW
+    whitespace tokens (the fullscan indexer does not lowercase)."""
+    return _fullscan_top20(spark, sf_dir, "ql", "score_e9", scale=1e9)
 
 
 SQL_QL_FULLSCAN = """
@@ -1579,42 +1453,15 @@ ORDER BY score_e9 DESC, doc_id LIMIT 20"""
 
 
 def q_session_pmi(spark, sf_dir):
-    """Q4 session suggestion (SessionHandler.java:237-292) over events:
-    session=user_id, query=event_type; consecutive distinct queries <=60s
-    apart pair up; pmi = ln(f_pair/(f1*f2) + 1), top-3 per q1."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    e = _t(spark, sf_dir, "events").select(
-        F.col("user_id").alias("session_id"),
-        F.col("event_type").alias("query"),
-        "ts",
-        "event_id",
-    )
-    w = W.partitionBy("session_id").orderBy("ts", "event_id")
-    epoch = lambda c: F.col(c).cast("timestamp").cast("double")
-    pairs = (
-        e.withColumn("prev_q", F.lag("query").over(w))
-        .withColumn("prev_ts", F.lag("ts").over(w))
-        .filter(
-            F.col("prev_q").isNotNull()
-            & (F.col("prev_q") != F.col("query"))
-            & (epoch("ts") - F.col("prev_ts").cast("timestamp").cast("double") <= 60.0)
-        )
-        .select(F.col("prev_q").alias("q1"), F.col("query").alias("q2"))
-        .groupBy("q1", "q2")
-        .agg(F.count("*").alias("f_pair"))
-    )
-    freq = e.groupBy("query").agg(F.count("*").alias("f"))
-    j = (
-        pairs.join(freq.withColumnRenamed("query", "q1").withColumnRenamed("f", "f1"), "q1")
-        .join(freq.withColumnRenamed("query", "q2").withColumnRenamed("f", "f2"), "q2")
-        .withColumn("pmi", F.log(F.col("f_pair") / (F.col("f1") * F.col("f2")) + 1.0))
-        .filter(F.col("pmi") > 0.0)
-    )
-    w2 = W.partitionBy("q1").orderBy(F.desc("pmi"), F.asc("q2"))
+    """Q4 session suggestion (SessionHandler.java:237-292,
+    clicklog.pmi_suggestions) over events: session=user_id,
+    query=event_type; consecutive distinct queries <=60s apart pair up;
+    pmi = ln(f_pair/(f1*f2) + 1), top-3 per q1."""
+    from websearchengine_spark.streaming.clicklog import pmi_suggestions
+
     return (
-        j.withColumn("rn", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rn") <= 3)
-        .select("q1", "q2", F.round("pmi", 9).alias("pmi"), "rn")
+        pmi_suggestions(_clicks(spark, sf_dir), top_n=3)
+        .select("q1", "q2", "pmi", F.col("rn").cast("long").alias("rn"))
         .orderBy("q1", "rn")
     )
 
@@ -1663,14 +1510,7 @@ def q_session_pmi_incr(spark, sf_dir):
     )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # event_id rides along as the same-timestamp tie-break the oracle's
-    # windows use (clicklog orders by ts + any event_id/doc_id present)
-    e = _t(spark, sf_dir, "events").select(
-        F.col("user_id").alias("session_id"),
-        F.col("event_type").alias("query"),
-        "ts",
-        "event_id",
-    )
+    e = _clicks(spark, sf_dir)
     lo, hi = e.agg(
         F.min(F.unix_timestamp("ts")), F.max(F.unix_timestamp("ts"))
     ).collect()[0]
@@ -1773,44 +1613,26 @@ _SPELL_FREQ_GATE = 100
 
 
 def q_spell_candidates(spark, sf_dir):
-    """Q3/F2-F4 (IndexerInvertedOccurrence.java:660-911): candidates for
-    one misspelled token through ALL the reference gates — shared
-    char-bigram positions, |len diff|<3, all-alphabetic, edit distance
-    <=1, frequency gate (posting-list length = 2*ctf), top-2 by freq."""
-    target = SPELL_TARGET
-    vocab = (
-        _toks(spark, sf_dir)
-        .groupBy("term")
-        .agg((2 * F.count("*")).cast("long").alias("freq"))
-    )
-    bgs = [(i, target[i : i + 2]) for i in range(len(target) - 1)]
-    bdf = spark.createDataFrame(bgs, "pos int, bigram string")
-    boundary = _SPELL_MATCH_BOUNDARY  # shared with SQL_SPELL_CANDIDATES
-    vb = vocab.select(
-        "term",
-        "freq",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(1, greatest(length(term)-1, 1)),"
-                    " i -> substring(term, i, 2))"
-                )
-            )
-        ).alias("bigram"),
-    ).filter(F.length("bigram") == 2)
+    """Q3/F2-F4 (IndexerInvertedOccurrence.java:660-911) via
+    spell.token_candidates: candidates for one misspelled token through
+    ALL the reference gates — shared char-bigram positions, |len
+    diff|<3, all-alphabetic, edit distance <=1, frequency gate
+    (posting-list length = 2*ctf), top-2 by freq.  The target itself is
+    not a candidate row; freq is read back from term_stats."""
+    from websearchengine_spark.operators.spell import token_candidates
+    from websearchengine_spark.sources.storage import IndexStorage
+
+    store = IndexStorage(_index_for(spark, sf_dir))
+    alts = [
+        t
+        for t in token_candidates(spark, store, SPELL_TARGET, _SPELL_FREQ_GATE)
+        if t != SPELL_TARGET
+    ]
     return (
-        vb.join(F.broadcast(bdf), "bigram")
-        .groupBy("term", "freq")
-        .agg(F.countDistinct("pos").alias("matches"))
-        .filter(F.col("matches") >= boundary)
-        .filter(F.abs(F.length("term") - len(target)) < 3)
-        .filter(F.col("term") != target)
-        .filter(F.col("term").rlike("^[a-zA-Z]+$"))
-        .filter(F.levenshtein(F.col("term"), F.lit(target)) <= 1)
-        .filter(F.col("freq") > _SPELL_FREQ_GATE)
+        store.read_table(spark, "term_stats")
+        .filter(F.col("term").isin(alts))
+        .select("term", (2 * F.col("ctf")).cast("long").alias("freq"))
         .orderBy(F.desc("freq"), F.asc("term"))
-        .select("term", "freq")
-        .limit(2)
     )
 
 
@@ -1919,31 +1741,13 @@ SQL_EVAL_METRICS = (
 
 def q_favorite_topk(spark, sf_dir):
     """R2 (RankerFavorite.java:31-59): exp(QL_JM(0.5)) over conjunctive
-    candidates — no static signals."""
-    toks = _toks(spark, sf_dir).filter(F.col("term").isin(QL_TERMS))
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    dl = q_doc_len(spark, sf_dir)
-    stats = q_corpus_stats(spark, sf_dir).collect()[0]
-    total_tf = float(stats["total_tf"])
-    ctfs = (
-        _toks(spark, sf_dir)
-        .filter(F.col("term").isin(QL_TERMS))
-        .groupBy("term")
-        .agg(F.count("*").alias("ctf"))
-    )
-    cand = _conjunctive(spark, sf_dir, QL_TERMS)
-    return (
-        tf.join(cand, "doc_id")
-        .join(F.broadcast(ctfs), "term")
-        .join(dl, "doc_id")
-        .withColumn(
-            "_lp",
-            F.log(0.5 * F.col("tf") / F.col("doc_len") + 0.5 * F.col("ctf") / F.lit(total_tf)),
-        )
-        .groupBy("doc_id")
-        .agg(F.round(F.exp(F.sum("_lp")), 9).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(20)
+    candidates — no static signals (query.run_query(ranker="favorite"))."""
+    from websearchengine_spark.operators.query import run_query
+
+    root = _index_for(spark, sf_dir)
+    q = " ".join(QL_TERMS)
+    return _rounded_top20(
+        spark, lambda k: run_query(spark, root, q, ranker="favorite", k=k), digits=9
     )
 
 
@@ -1971,8 +1775,45 @@ SQL_FAVORITE_TOPK = (
 _FS_TERMS = ["data", "stream"]
 
 
+@contextmanager
+def _fullscan_prep(spark, sf_dir, title):
+    """prepare_fullscan over documents mapped to the fullscan corpus
+    shape: (doc_id, title, body = raw text, numviews = doc_id % 100).
+    The frames it caches are released on exit."""
+    from websearchengine_spark.operators.fullscan import prepare_fullscan
+
+    prep = prepare_fullscan(
+        _docs(spark, sf_dir).select(
+            "doc_id",
+            title.alias("title"),
+            F.col("text").alias("body"),
+            (F.col("doc_id") % 100).alias("numviews"),
+        )
+    )
+    try:
+        yield prep
+    finally:
+        for v in prep.values():
+            if isinstance(v, DataFrame):
+                v.unpersist()
+
+
+def _fullscan_top20(spark, sf_dir, ranker, col, scale=1.0):
+    """Top-20 of a fullscan ranker (fullscan.run_fullscan_query) with an
+    empty title, on the oracle's rounded ``score * scale`` key."""
+    from websearchengine_spark.operators.fullscan import run_fullscan_query
+
+    q = " ".join(_FS_TERMS)
+    with _fullscan_prep(spark, sf_dir, F.lit("")) as prep:
+        return _rounded_top20(
+            spark, lambda k: run_fullscan_query(spark, prep, q, ranker, k=k),
+            col=col, scale=scale,
+        )
+
+
 def q_linear_fullscan(spark, sf_dir):
-    """R7 linear (SignalFactory.java:182-222): 1.0*cosine + 10.0*ql +
+    """R7 linear (SignalFactory.java:182-222,
+    fullscan.score_linear_fullscan): 1.0*cosine + 10.0*ql +
     0.001*phrase + 0.01*ln(nv+1) over a fullscan corpus mapped from
     documents (body=RAW whitespace tokens — the reference does not
     lowercase in fullscan mode; nv := doc_id % 100).
@@ -1980,102 +1821,7 @@ def q_linear_fullscan(spark, sf_dir):
     cosine is the R5 query-counted-as-document variant: query
     occurrences bump df (idf_adj = ln(n/(df+qtf))+1 for shared terms),
     doc/query norms corrected by overlap deltas."""
-    import math as _m
-
-    docs = _docs(spark, sf_dir)
-    toks_arr = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
-    base = docs.select("doc_id", toks_arr.alias("toks"))
-    bt = base.select("doc_id", F.explode("toks").alias("term"))
-    tf = bt.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    srow = base.agg(
-        F.count("*").alias("nd"), F.sum(F.size("toks")).alias("total")
-    ).collect()[0]
-    n = float(srow["nd"] + 1)  # query counted as an extra document
-    total = float(srow["total"])
-    ts_ = bt.groupBy("term").agg(
-        F.countDistinct("doc_id").alias("df"), F.count("*").alias("ctf")
-    )
-    dl = base.select("doc_id", F.size("toks").alias("body_len"))
-
-    qrows = {r["term"]: r for r in ts_.filter(F.col("term").isin(_FS_TERMS)).collect()}
-    idf_qonly2 = (_m.log(n) + 1.0) ** 2
-    qnorm2_base = len(_FS_TERMS) * idf_qonly2
-    ql_base = sum(
-        _m.log(0.5 * qrows[t]["ctf"] / total) for t in _FS_TERMS
-    )
-    qd = spark.createDataFrame(
-        [
-            (
-                t,
-                float(qrows[t]["ctf"]),
-                (_m.log(n / (qrows[t]["df"] + 1.0)) + 1.0) ** 2,
-                (_m.log(n / qrows[t]["df"]) + 1.0) ** 2,
-            )
-            for t in _FS_TERMS
-        ],
-        "term string, ctf double, adj2 double, base2 double",
-    )
-
-    idf_base = F.log(F.lit(n) / F.col("df")) + 1.0
-    norm2 = (
-        tf.join(ts_, "term")
-        .withColumn("_t2", F.pow(F.col("tf") * idf_base, 2))
-        .groupBy("doc_id")
-        .agg(F.sum("_t2").alias("norm2_base"))
-    )
-    ov = (
-        tf.join(F.broadcast(qd), "term")
-        .join(dl, "doc_id")
-        .groupBy("doc_id")
-        .agg(
-            F.sum(F.col("tf") * F.col("adj2")).alias("num"),
-            F.sum(F.col("tf") * F.col("tf") * (F.col("adj2") - F.col("base2"))).alias("dnd"),
-            F.sum(F.col("adj2") - F.lit(idf_qonly2)).alias("qnd"),
-            F.sum(
-                F.log(0.5 * F.col("tf") / F.col("body_len") + 0.5 * F.col("ctf") / F.lit(total))
-                - F.log(0.5 * F.col("ctf") / F.lit(total))
-            ).alias("ql_adj"),
-        )
-    )
-    grams = base.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(slice(toks, 1, greatest(size(toks)-1, 0)),"
-                " (t, i) -> concat(t, toks[i+1]))"
-            )
-        ).alias("g"),
-    )
-    ph = (
-        grams.filter(F.col("g") == "".join(_FS_TERMS))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("phc"))
-    )
-    cos = F.when(
-        F.col("num").isNotNull(),
-        F.col("num")
-        / (
-            F.sqrt(F.lit(qnorm2_base) + F.coalesce("qnd", F.lit(0.0)))
-            * F.sqrt(F.coalesce("norm2_base", F.lit(0.0)) + F.coalesce("dnd", F.lit(0.0)))
-        ),
-    ).otherwise(0.0)
-    return (
-        dl.join(norm2, "doc_id", "left")
-        .join(ov, "doc_id", "left")
-        .join(ph, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.round(
-                cos
-                + 10.0 * F.exp(F.lit(ql_base) + F.coalesce("ql_adj", F.lit(0.0)))
-                + 0.001 * F.coalesce(F.col("phc").cast("double"), F.lit(0.0))
-                + 0.01 * F.log(F.col("doc_id") % 100 + 1.0),
-                6,
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(20)
-    )
+    return _fullscan_top20(spark, sf_dir, "linear", "score")
 
 
 SQL_LINEAR_FULLSCAN = """
@@ -2131,14 +1877,12 @@ ORDER BY score DESC, doc_id LIMIT 20"""
 
 
 def q_page_summary(spark, sf_dir):
-    """/page_summary (QueryHandler.java:365-376): first <=50
-    position-ordered terms of doc 42."""
-    return (
-        _docs(spark, sf_dir)
-        .filter(F.col("doc_id") == 42)
-        .select(F.posexplode(F.slice(_tok_expr(), 1, 50)).alias("pos", "term"))
-        .select(F.col("pos").cast("long").alias("pos"), "term")
-        .orderBy("pos")
+    """/page_summary (QueryHandler.java:365-376, query.page_summary):
+    first <=50 position-ordered terms of doc 42."""
+    from websearchengine_spark.operators.query import page_summary
+
+    return page_summary(spark, _index_for(spark, sf_dir), 42).select(
+        F.col("pos").cast("long").alias("pos"), "term"
     )
 
 
@@ -2193,60 +1937,69 @@ _INDEX_CACHE: dict[str, str] = {}
 _DOCONLY_INDEX_CACHE: dict[str, str] = {}
 
 
-def _build_entry_index(
-    spark, sf_dir: str, cache: dict, prefix: str, **build_kwargs
-) -> str:
-    """Build (once per sf_dir per cache) a whitespace-analyzer index over
-    the documents table; doc_id assignment is rank-of-url = the original
-    doc_id (urls are zero-padded), so results align with the SQL oracles
-    over documents."""
-    import tempfile
-
-    root = cache.get(sf_dir)
-    if root and os.path.exists(os.path.join(root, "_manifest.json")):
-        return root
-    from websearchengine_spark.operators.build import build_index
+def _ship_package(spark) -> None:
+    """Ship the package zip to the executors (index build and WAND run
+    Python UDFs there)."""
     from websearchengine_spark.session import make_pyfiles_zip
 
     try:
         spark.sparkContext.addPyFile(make_pyfiles_zip())
     except Exception:
         pass
+
+
+def _doc_url():
+    """doc_id -> zero-padded url, so rank-of-url doc_id assignment gives
+    back the documents table's doc_id."""
+    return F.concat(F.lit("doc"), F.lpad(F.col("doc_id").cast("string"), 9, "0"))
+
+
+def _build_entry_index(
+    spark, sf_dir: str, cache: dict, prefix: str, **build_kwargs
+) -> str:
+    """Build (once per sf_dir per cache) a whitespace-analyzer index over
+    the documents table; doc_id assignment is rank-of-url = the original
+    doc_id, so results align with the SQL oracles over documents."""
+    import tempfile
+
+    root = cache.get(sf_dir)
+    if root and os.path.exists(os.path.join(root, "_manifest.json")):
+        return root
+    from websearchengine_spark.operators.build import build_index
+
+    _ship_package(spark)
     root = tempfile.mkdtemp(prefix=prefix)
-    pages = _docs(spark, sf_dir).select(
-        F.concat(F.lit("doc"), F.lpad(F.col("doc_id").cast("string"), 9, "0")).alias("url"),
-        F.col("text"),
-    )
+    pages = _docs(spark, sf_dir).select(_doc_url().alias("url"), "text")
     build_index(
         spark, pages, root, n_shards=8, n_groups=2, analyzer="whitespace",
-        keep_doc_terms=False, **build_kwargs,
+        **build_kwargs,
     )
     cache[sf_dir] = root
     return root
 
 
 def _index_for(spark, sf_dir: str) -> str:
-    return _build_entry_index(spark, sf_dir, _INDEX_CACHE, "wse_entry_idx_")
+    """The shared entry index: forward tables for PRF (doc_terms) and
+    next-word / page summary (doc_tokens), and signals pagerank 0.0,
+    numviews doc_id % 100 (the nv rule of the SQL oracles).  BM25 reads
+    none of these."""
+    signals = _docs(spark, sf_dir).select(
+        _doc_url().alias("url"),
+        F.lit(0.0).alias("pagerank"),
+        (F.col("doc_id") % 100).alias("numviews"),
+    )
+    return _build_entry_index(
+        spark, sf_dir, _INDEX_CACHE, "wse_entry_idx_",
+        keep_doc_terms=True, keep_doc_tokens=True, signals=signals,
+    )
 
 
 def _wand_rounded_top20(spark, root: str):
-    """WAND BM25 top-20 on the ROUNDED-score key the oracle orders by,
-    with the k-boundary rounded-tie cluster fully fetched
-    (_rounded_topk_rows)."""
+    """WAND BM25 top-20 on the ROUNDED-score key the oracle orders by."""
     from websearchengine_spark.operators.topk import wand_topk
 
-    def fetch(k):
-        return [
-            (r["doc_id"], float(r["score"]))
-            for r in wand_topk(spark, root, " ".join(QUERY_TERMS), k=k)
-            .select("doc_id", F.round("score", 6).alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .collect()
-        ]
-
-    return spark.createDataFrame(
-        _rounded_topk_rows(fetch, 20), "doc_id long, score double"
-    )
+    q = " ".join(QUERY_TERMS)
+    return _rounded_top20(spark, lambda k: wand_topk(spark, root, q, k=k))
 
 
 def q_bm25_index_path(spark, sf_dir):
@@ -2264,7 +2017,7 @@ def q_bm25_doconly_path(spark, sf_dir):
     BM25 never reads positions.  Oracle = the same SQL_BM25_TOPK."""
     root = _build_entry_index(
         spark, sf_dir, _DOCONLY_INDEX_CACHE, "wse_entry_idx_doconly_",
-        positions=False,
+        keep_doc_terms=False, positions=False,
     )
     return _wand_rounded_top20(spark, root)
 
@@ -2288,21 +2041,13 @@ def _live_index_for(spark, sf_dir: str) -> str:
     root = _LIVE_INDEX_CACHE.get(sf_dir)
     if root and os.path.exists(os.path.join(root, "_live.json")):
         return root
-    from websearchengine_spark.session import make_pyfiles_zip
     from websearchengine_spark.streaming.ingest import apply_pages_batch
 
-    try:
-        spark.sparkContext.addPyFile(make_pyfiles_zip())
-    except Exception:
-        pass
+    _ship_package(spark)
     root = tempfile.mkdtemp(prefix="wse_entry_live_")
     docs = _docs(spark, sf_dir)
     cut = (docs.count() // 2) // 8 * 8
-    pages = docs.select(
-        "doc_id",
-        F.concat(F.lit("doc"), F.lpad(F.col("doc_id").cast("string"), 9, "0")).alias("url"),
-        "text",
-    )
+    pages = docs.select("doc_id", _doc_url().alias("url"), "text")
     batches = [
         pages.filter(F.col("doc_id") < cut),
         pages.filter(F.col("doc_id") >= cut),
@@ -2325,19 +2070,8 @@ def q_live_bm25_top20(spark, sf_dir):
     from websearchengine_spark.streaming.ingest import search_live
 
     root = _live_index_for(spark, sf_dir)
-
-    def fetch(k):
-        return [
-            (r["doc_id"], float(r["score"]))
-            for r in search_live(spark, root, " ".join(QUERY_TERMS), k=k)
-            .select("doc_id", F.round("score", 6).alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .collect()
-        ]
-
-    return spark.createDataFrame(
-        _rounded_topk_rows(fetch, 20), "doc_id long, score double"
-    )
+    q = " ".join(QUERY_TERMS)
+    return _rounded_top20(spark, lambda k: search_live(spark, root, q, k=k))
 
 
 SQL_LIVE_BM25_TOP20 = SQL_BM25_TOPK  # live segments reproduce the batch build
@@ -2359,22 +2093,16 @@ def _live_recrawl_root(spark, sf_dir: str) -> str:
     root = _LIVE_RECRAWL_CACHE.get(sf_dir)
     if root and os.path.exists(os.path.join(root, "_live.json")):
         return root
-    from websearchengine_spark.session import make_pyfiles_zip
     from websearchengine_spark.streaming.ingest import (
         apply_pages_batch,
         compact_live,
     )
 
-    try:
-        spark.sparkContext.addPyFile(make_pyfiles_zip())
-    except Exception:
-        pass
+    _ship_package(spark)
     root = tempfile.mkdtemp(prefix="wse_entry_recrawl_")
     docs = _docs(spark, sf_dir)
     cut = docs.count() * 3 // 4
-    url = F.concat(
-        F.lit("doc"), F.lpad(F.col("doc_id").cast("string"), 9, "0")
-    ).alias("url")
+    url = _doc_url().alias("url")
     apply_pages_batch(
         spark, docs.select(url, "text"), 0, root,
         n_shards=8, n_groups=2, analyzer="whitespace", keep_doc_terms=False,
@@ -2401,18 +2129,12 @@ def q_live_recrawl_bm25_top20(spark, sf_dir):
     from websearchengine_spark.streaming.ingest import search_live
 
     root = _live_recrawl_root(spark, sf_dir)
-
-    def fetch(k):
-        rows = [
-            (int(r["url"][3:]), float(r["score"]))
-            for r in search_live(spark, root, " ".join(QUERY_TERMS), k=k)
-            .select("url", F.round("score", 6).alias("score"))
-            .collect()
-        ]
-        return sorted(rows, key=lambda t: (-t[1], t[0]))
-
-    return spark.createDataFrame(
-        _rounded_topk_rows(fetch, 20), "doc_id long, score double"
+    q = " ".join(QUERY_TERMS)
+    return _rounded_top20(
+        spark,
+        lambda k: search_live(spark, root, q, k=k).select(
+            F.col("url").substr(4, 9).cast("long").alias("doc_id"), "score"
+        ),
     )
 
 
@@ -2426,10 +2148,6 @@ SQL_LIVE_RECRAWL_BM25_TOP20 = (
     )
 )
 
-
-# --------------------------------------------------------------------------
-# Contract functions
-# --------------------------------------------------------------------------
 
 # --------------------------------------------------------------------------
 # Round-5 training-data-pipeline entries: Gopher filters, PII, hash split
@@ -2610,7 +2328,7 @@ def q_semantic_dedup(spark, sf_dir):
         semantic_dedup,
     )
 
-    emb = _emb(spark, sf_dir).select("vec_id", "embedding")
+    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # +100000 offset mirrors the SQL literal; collision-free because the
     # driver SFs top out at 5,000 vectors (bench/llmpipe.py asserts it)
     copies = emb.filter(F.col("vec_id") % 5 == 0).select(

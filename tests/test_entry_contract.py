@@ -4,6 +4,7 @@ counts, column names, and order-insensitive values — mimicking the
 driver's CORRECTNESS check so mismatches surface before the real gate."""
 
 import math
+import re
 
 import duckdb
 import pytest
@@ -18,6 +19,21 @@ TABLES = [
     "lineitem", "events", "documents", "embeddings",
 ]
 
+_CTE_HEAD = re.compile(r"(\bWITH\s+|,\s*)(\w+)\s+AS\s+\(", re.I)
+
+
+def _materialize_ctes(sql: str) -> str:
+    """Marks every CTE of a non-recursive query AS MATERIALIZED.  DuckDB
+    1.0 inlines each CTE reference, so a chain whose every stage reads
+    its predecessor twice (the unrolled PageRank oracle: r{i-1} feeds both
+    c{i} and r{i}) runs 2^iters copies of the chain — pagerank_10iter
+    outgrows DuckDB's default memory limit on a 16 GB host.  Materialized,
+    each CTE is computed once; the relations, and so the rows, are the
+    same (DuckDB >= 1.1 materializes multiply-referenced CTEs itself)."""
+    if re.search(r"\bRECURSIVE\b", sql, re.I):
+        return sql
+    return _CTE_HEAD.sub(r"\1\2 AS MATERIALIZED (", sql)
+
 
 def _duck(sql: str, sf_dir: str = SF_DIR):
     """Returns (columns, rows), fetched through pandas — the same path the
@@ -26,7 +42,7 @@ def _duck(sql: str, sf_dir: str = SF_DIR):
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    pdf = con.sql(sql).df()
+    pdf = con.sql(_materialize_ctes(sql)).df()
     con.close()
     cols = list(pdf.columns)
     rows = [
@@ -180,3 +196,86 @@ def test_sessionize_subsecond_boundary(spark, tmp_path):
     want = {int(u): int(n) for u, n, _ in con.sql(m.SQL_EVENTS_SESSIONIZE).fetchall()}
     con.close()
     assert want == got
+
+
+_PACKAGE_OPERATOR_MODULES = (
+    "websearchengine_spark.operators.",
+    "websearchengine_spark.streaming.",
+)
+# shared plumbing, not an operator an entry can be credited with
+_NOT_OPERATORS = ("websearchengine_spark.operators.util",)
+
+
+def _is_operator_module(module: str | None) -> bool:
+    return (
+        module is not None
+        and module.startswith(_PACKAGE_OPERATOR_MODULES)
+        and module not in _NOT_OPERATORS
+    )
+
+
+def test_entries_call_the_package():
+    """Static guard for the oracle's reach: every registered entry either
+    calls a package operator (an operators/streaming import, made in the
+    entry itself or in a module helper it calls) or is listed in
+    INLINE_ENTRIES with its one-line reason — so the DuckDB gate checks
+    the code users run, not a copy of it.  INLINE_ENTRIES must list only
+    registered entries that really stay inline."""
+    import ast
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(repo, "__spark_entry__.py")) as f:
+        tree = ast.parse(f.read())
+    funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    # names bound at module level by an operator import
+    op_names = {
+        a.asname or a.name
+        for n in tree.body
+        if isinstance(n, ast.ImportFrom) and _is_operator_module(n.module)
+        for a in n.names
+    }
+    inline = next(
+        (
+            ast.literal_eval(n.value)
+            for n in tree.body
+            if isinstance(n, ast.AnnAssign)
+            and getattr(n.target, "id", None) == "INLINE_ENTRIES"
+        ),
+        None,
+    )
+    assert isinstance(inline, dict), "INLINE_ENTRIES: dict[str, str] missing"
+    assert all(isinstance(v, str) and v.strip() for v in inline.values())
+
+    registry = next(
+        s.value for s in ast.walk(funcs["queries"]) if isinstance(s, ast.Return)
+    )
+    entries = {k.value: v.id for k, v in zip(registry.keys, registry.values)}
+
+    def direct(fn: ast.FunctionDef) -> tuple[bool, set[str]]:
+        calls_op, callees = False, set()
+        for n in ast.walk(fn):
+            if isinstance(n, ast.ImportFrom) and _is_operator_module(n.module):
+                calls_op = True
+            elif isinstance(n, ast.Call) and isinstance(n.func, ast.Name):
+                calls_op |= n.func.id in op_names
+                if n.func.id in funcs:
+                    callees.add(n.func.id)
+        return calls_op, callees
+
+    def reaches(name: str, seen: set[str]) -> bool:
+        if name in seen:
+            return False
+        seen.add(name)
+        calls_op, callees = direct(funcs[name])
+        return calls_op or any(reaches(c, seen) for c in callees)
+
+    calling = {e for e, fn in entries.items() if reaches(fn, set())}
+    assert not set(inline) - set(entries), "INLINE_ENTRIES lists unregistered names"
+    assert not calling & set(inline), (
+        "listed inline but calls the package:", sorted(calling & set(inline))
+    )
+    assert not set(entries) - calling - set(inline), (
+        "entries neither calling a package operator nor in INLINE_ENTRIES:",
+        sorted(set(entries) - calling - set(inline)),
+    )

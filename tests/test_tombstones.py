@@ -298,14 +298,16 @@ def test_tombstone_files_are_seg_partitioned(spark, upserted):
     partitionBy(seg), so a segment's search reads only its own subdir
     (and a tombstone-free segment's lookup is a driver-side listdir,
     no Spark job)."""
-    from websearchengine_spark.streaming.ingest import tombstones_df
+    from websearchengine_spark.streaming.ingest import tombstones_for_segments
 
     root = upserted["root"]
     tomb_dir = os.path.join(root, "tombstones", "batch-000000001")
     assert any(e.startswith("seg=") for e in os.listdir(tomb_dir))
     # per-seg read: only the tombstoned segment yields a frame
-    assert tombstones_df(spark, root, N_SHARDS, seg="delta-000000001") is None
-    d = tombstones_df(spark, root, N_SHARDS, seg="delta-000000000")
+    clean, tombed = "delta-000000001", "delta-000000000"
+    per_seg = tombstones_for_segments(spark, root, N_SHARDS, [clean, tombed])
+    assert per_seg[clean] is None
+    d = per_seg[tombed]
     assert d is not None and d.count() == 30
 
 

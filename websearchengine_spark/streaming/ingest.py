@@ -208,28 +208,20 @@ def _union_all(dfs: list):
     return u
 
 
-def _read_tomb_file(spark: SparkSession, path: str, seg: str | None):
-    """One tombstone parquet as a (seg, doc_id) DataFrame — or None when
-    ``seg`` is given and the file holds nothing for it.
+def _read_tomb_file(spark: SparkSession, path: str):
+    """One tombstone parquet as a (seg, doc_id) DataFrame, or None when
+    the file is gone.
 
-    Two layouts: batch/op files are written ``partitionBy("seg")`` (each
-    segment its own subdir, so a per-segment read touches ONLY its
-    subdir — zero scan for segments without deletes; the full read
-    recovers seg via partition discovery), and legacy flat files carry
-    seg as a data column (read + filter)."""
+    Two layouts: batch/op files are written ``partitionBy("seg")`` (seg
+    recovered via partition discovery), and legacy flat files carry seg
+    as a data column."""
     if not os.path.isdir(path):
         return None
     if any(e.startswith("seg=") for e in os.listdir(path)):
-        if seg is None:
-            return read_parquet_cached(spark, path).select(
-                F.col("seg").cast("string").alias("seg"), "doc_id"
-            )
-        p = os.path.join(path, f"seg={seg}")
-        if not os.path.isdir(p):
-            return None
-        return read_parquet_cached(spark, p).select(F.lit(seg).alias("seg"), "doc_id")
-    df = read_parquet_cached(spark, path).select("seg", "doc_id")
-    return df.filter(F.col("seg") == seg) if seg is not None else df
+        return read_parquet_cached(spark, path).select(
+            F.col("seg").cast("string").alias("seg"), "doc_id"
+        )
+    return read_parquet_cached(spark, path).select("seg", "doc_id")
 
 
 def tombstones_for_segments(
@@ -278,42 +270,15 @@ def tombstones_for_segments(
     return out
 
 
-def tombstones_df(
-    spark: SparkSession, root: str, n_shards: int, seg: str | None = None
-):
-    """Pending tombstones as a (seg, shard, doc_id) DataFrame, or None.
-
-    This is the EXECUTOR-RESIDENT delete path: search passes each
-    segment's (shard, doc_id) rows to topk.wand_topk(exclude_df=),
-    which cogroups them with the postings by shard — the delete set
-    reaches each shard kernel through the shuffle, never the driver and
-    never a task closure.  shard is doc_id % n_shards, the index's own
-    sharding rule.  With ``seg`` set, only that segment's partition
-    subdirs are read (a segment with no pending deletes returns None
-    from a driver-side listdir — no Spark job at all)."""
-    files = tombstone_files(root)
-    parts = []
-    for f in files:
-        d = _read_tomb_file(spark, os.path.join(root, f["file"]), seg)
-        if d is not None:
-            parts.append(d)
-    if not parts:
-        return None
-    return _union_all(parts).select(
-        "seg",
-        (F.col("doc_id") % n_shards).cast("int").alias("shard"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-    )
-
-
 def read_tombstones(
     spark: SparkSession, root: str, files: list[dict] | None = None
 ) -> dict[str, "object"]:
     """{segment_dir: np.ndarray of LOCAL doc_ids superseded by later
     re-crawls} — the DRIVER-MATERIALIZED view, used only by compaction
     (merge_many_indexes takes per-segment arrays); the search path uses
-    tombstones_df and never collects these.  Visibility is catalog-gated
-    (see tombstone_files); pass ``files`` to read an exact snapshot."""
+    tombstones_for_segments and never collects these.  Visibility is
+    catalog-gated (see tombstone_files); pass ``files`` to read an exact
+    snapshot."""
     import numpy as np
 
     if files is None:
@@ -323,7 +288,7 @@ def read_tombstones(
     parts = [
         d
         for f in files
-        if (d := _read_tomb_file(spark, os.path.join(root, f["file"]), None))
+        if (d := _read_tomb_file(spark, os.path.join(root, f["file"])))
         is not None
     ]
     if not parts:
