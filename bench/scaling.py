@@ -128,11 +128,13 @@ def main() -> None:
     ap.add_argument("--docs", type=int, default=int(os.environ.get("SCALE_DOCS", 600_000)))
     ap.add_argument("--n", type=int, default=4, help="small level N (big level = 4N)")
     ap.add_argument("--repeats", type=int, default=3)
-    # n_groups=1 looked better at 150k docs (fewer barriers) but COLLAPSES
-    # at 600k/16c: one giant shuffle+encode job doubles peak task memory and
-    # the encode stage went 51s->87s (measured twice, not host noise).
+    # the build writes every group in one shuffle + one write, so
+    # n_groups only sets the postings directory layout (shard-groups
+    # committed and resumable one by one); it no longer splits the work
+    # into per-group jobs.  2 keeps the round-1 protocol's layout.
     ap.add_argument("--n-groups", type=int, default=2,
-                    help="build groups (2 = round-1 protocol; 1 thrashes at 600k)")
+                    help="postings shard-groups (directory layout only; "
+                    "all groups build in one job)")
     ap.add_argument("--workdir", default="/tmp/wse_scaling")
     args = ap.parse_args()
 

@@ -6,6 +6,8 @@ stats — with B's doc_ids shifted by a shard-preserving offset and no
 token rescan.  Mirrors the reference's per-round partial-index merge
 (IndexerInvertedCompressed.java:167-277) as a distributed compaction."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -153,3 +155,103 @@ def test_segment_id_span_handles_legacy_and_deleted_configs():
     legacy = {"num_docs": 12, "n_shards": 4, "doc_id_offset": 8}
     span = segment_id_span(legacy)
     assert span >= 15 and span % 4 == 0
+
+
+def _postings_content(spark, root):
+    rows = spark.read.parquet(f"{root}/postings").orderBy("shard", "term").collect()
+    return [
+        (r["shard"], r["term"], r["df_shard"], r["ctf_shard"],
+         [bytes(b["data"]) for b in r["blocks"]])
+        for r in rows
+    ]
+
+
+def test_torn_compaction_resumes_missing_groups(spark, merge_roots, tmp_path):
+    """Crash after group 0 of a compaction committed: the rerun writes only
+    group 1 (group 0's files are left in place) and the final postings
+    bytes equal an uninterrupted merge — the merge twin of
+    test_build.py::test_resume_skips_completed_groups."""
+    import shutil
+
+    torn = str(tmp_path / "torn")
+    store = IndexStorage(torn)
+    shutil.copytree(
+        f"{merge_roots['merged']}/postings/group=0", f"{torn}/postings/group=0"
+    )
+    full_m = IndexStorage(merge_roots["merged"]).read_manifest()
+    m = store.read_manifest()
+    m["completed_groups"] = [0]
+    m["group_metrics"] = {"0": full_m["group_metrics"]["0"]}
+    store.write_manifest(m)
+    g0_files = sorted(os.listdir(f"{torn}/postings/group=0"))
+
+    merge_indexes(spark, merge_roots["a"], merge_roots["b"], torn)
+
+    assert sorted(os.listdir(f"{torn}/postings/group=0")) == g0_files
+    assert _postings_content(spark, torn) == _postings_content(
+        spark, merge_roots["merged"]
+    )
+    got = store.read_manifest()
+    assert got["attempts"][-1]["resumed_groups"] == [0]
+    assert got["completed_groups"] == [0, 1]
+    assert got["group_metrics"]["1"]["n_terms"] == (
+        full_m["group_metrics"]["1"]["n_terms"]
+    )
+
+
+def test_merge_job_count_independent_of_n_groups(spark, merge_roots, tmp_path):
+    """One shuffle and one postings write whatever the group count: the
+    merge runs the same number of Spark jobs at n_groups=1 and 3."""
+    from websearchengine_spark.operators.merge import merge_many_indexes
+
+    sc = spark.sparkContext
+    jobs = {}
+    for n_groups in (1, 3):
+        group = f"merge-jobs-{n_groups}"
+        sc.setJobGroup(group, "merge job count")
+        try:
+            merge_many_indexes(
+                spark, [merge_roots["a"], merge_roots["b"]],
+                str(tmp_path / f"g{n_groups}"), n_groups=n_groups,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n_groups] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[1] == jobs[3], jobs
+    assert sorted(os.listdir(str(tmp_path / "g3" / "postings"))) == [
+        "group=0", "group=1", "group=2",
+    ]
+
+
+@pytest.mark.parametrize("op", ["build", "merge"])
+def test_failed_write_restores_arrow_batch_conf(spark, corpus_pdf, merge_roots, tmp_path, monkeypatch, op):
+    """A build or merge that dies mid-write leaves the session's Arrow
+    batch size as it found it (the 512-row cap is scoped to the call)."""
+    from websearchengine_spark.operators.build import build_index
+    from websearchengine_spark.operators.merge import merge_many_indexes
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "777")
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected write failure")
+
+    monkeypatch.setattr(IndexStorage, "write_partitions_atomic", boom)
+    try:
+        with pytest.raises(RuntimeError, match="injected"):
+            if op == "build":
+                build_index(
+                    spark, spark.createDataFrame(corpus_pdf.iloc[:40]),
+                    str(tmp_path / "out"), n_shards=N_SHARDS, n_groups=2,
+                )
+            else:
+                merge_many_indexes(
+                    spark, [merge_roots["a"], merge_roots["b"]], str(tmp_path / "out")
+                )
+        assert spark.conf.get(key) == "777"
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

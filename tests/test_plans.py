@@ -44,16 +44,19 @@ def test_build_has_single_wide_shuffle(spark, corpus_pdf):
     assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, p
 
 
-def test_kway_merge_plan_single_compressed_shuffle(spark, corpus_pdf, tmp_path):
+def test_kway_merge_plan_single_compressed_shuffle(
+    spark, corpus_pdf, tmp_path, monkeypatch
+):
     """K-way compaction's only wide operation is ONE Exchange over the
     already-compressed postings tables — no token rescan, no occurrence
-    shuffle, regardless of how many segments merge (the LSM scale
-    claim in operators/merge.py)."""
+    shuffle, regardless of how many segments merge or how many groups
+    the output has (the LSM scale claim in operators/merge.py).  Pinned
+    on the frame merge_many_indexes actually hands to the writer; a
+    resumed merge filters to the missing groups BELOW that Exchange."""
     import re
 
-    from pyspark.sql import functions as F
-
     from websearchengine_spark.operators.build import build_index
+    from websearchengine_spark.operators.merge import merge_many_indexes
     from websearchengine_spark.sources.storage import IndexStorage
 
     roots = []
@@ -61,26 +64,37 @@ def test_kway_merge_plan_single_compressed_shuffle(spark, corpus_pdf, tmp_path):
         lo, hi = 60 * i, min(60 * (i + 1), 200)
         pages = spark.createDataFrame(corpus_pdf.iloc[lo:hi])
         r = str(tmp_path / f"seg{i}")
-        build_index(spark, pages, r, n_shards=3, n_groups=1)
+        build_index(spark, pages, r, n_shards=3, n_groups=2)
         roots.append(r)
-    parts = [
-        IndexStorage(r).read_partitioned(spark, "postings").withColumn(
-            "side", F.lit(i)
-        )
-        for i, r in enumerate(roots)
-    ]
-    both = parts[0]
-    for q in parts[1:]:
-        both = both.unionByName(q)
-    grouped = (
-        both.select("shard", "term", "side", "blocks")
-        .groupBy("shard", "term")
-        .agg(F.collect_list(F.struct("side", "blocks")).alias("parts"))
-    )
-    p = plan_of(grouped, "formatted")
+
+    written = []
+    write = IndexStorage.write_partitions_atomic
+
+    def capture(self, df, *args, **kwargs):
+        written.append(df)
+        return write(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(IndexStorage, "write_partitions_atomic", capture)
+    out = str(tmp_path / "merged")
+    merge_many_indexes(spark, roots, out)
+    assert len(written) == 1
+    p = plan_of(written[0], "formatted")
     assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, p
     # the scan reads the compressed postings tables, not pages/tokens
     assert "postings" in p
+    assert "tokens" not in p
+
+    # torn compaction: group 0 committed, the rerun writes group 1 only
+    store = IndexStorage(out)
+    m = store.read_manifest()
+    m["completed_groups"] = [0]
+    store.write_manifest(m)
+    merge_many_indexes(spark, roots, out)
+    assert len(written) == 2
+    p = plan_of(written[1], "simple")
+    assert len(re.findall(r"Exchange hashpartitioning", p)) == 1, p
+    below = p[p.index("Exchange hashpartitioning"):]
+    assert re.search(r"Filter .*\(shard#\d+ % 2\)", below), p
 
 
 def test_lsh_bucket_plan_is_explode_free_and_shuffle_free(spark):

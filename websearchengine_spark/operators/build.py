@@ -18,8 +18,9 @@ Pipeline (all DataFrame; boundaries are Spark stages):
       buffers, run-length split per doc, delta-gap + varbyte
       block-max blocks (r6)
       ▼
-    postings(shard, term, df_shard, ctf_shard, blocks)   [one dynamic-
-      partitioned write for fresh builds; per-group commits either way]
+    postings(shard, term, df_shard, ctf_shard, blocks)   [_write_postings:
+      one dynamic-partitioned write, per-group commits; merge.py writes
+      through the same helper]
     term_stats = sum of per-shard df/ctf over postings   [tiny agg, no
       rescan; term-sorted 1 MB row groups = the query-time dictionary]
 
@@ -47,22 +48,26 @@ Scale design decisions (the 100 TB story):
   * both aggregations are native hash aggs with map-side partial
     aggregation; the only Python is the Arrow-batched extract/analyze UDF
     and the block encoder (numpy).
-  * the postings write is chunked into ``n_groups`` shard-groups; each
+  * the postings table is laid out as ``n_groups`` shard-groups; each
     group commit is recorded in the manifest -> resumable builds with
-    per-partition lineage + metrics (north_rule).
+    per-partition lineage + metrics (north_rule).  A resume runs the
+    same single write, filtered to the groups still missing.
 """
 
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from websearchengine_spark.functions.analyze import analyze_text
-from websearchengine_spark.functions.codec import encode_posting_blocks
+from websearchengine_spark.functions.codec import BLOCK_SIZE, encode_posting_blocks
 from websearchengine_spark.functions.extract import extract_text_and_title
 from websearchengine_spark.sources.storage import IndexStorage
 
@@ -109,6 +114,8 @@ POSTINGS_SCHEMA = T.StructType(
         ),
     ]
 )
+# the same blocks type on the Arrow side, for the encoder's output batches
+_BLOCKS_T = to_arrow_type(POSTINGS_SCHEMA["blocks"].dataType)
 
 
 def analyze_pages(pages: DataFrame, analyzer: str = "reference") -> DataFrame:
@@ -246,6 +253,242 @@ def assign_doc_ids(analyzed: DataFrame, n_parts: int | None = None) -> DataFrame
     return analyzed.join(ids, "url")
 
 
+@contextmanager
+def _arrow_batch_cap(spark: SparkSession):
+    """Cap Arrow rows per batch at 512 for the duration of a build or merge.
+
+    Posting rows are FAT (arrays or block lists of ~df_shard elements
+    for head terms): the default 10k-row Arrow batch balloons to
+    gigabytes per in-flight task.  The session value is restored on
+    every exit path, so a failed build leaves later queries untouched."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "512")
+    try:
+        yield
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
+        else:
+            spark.conf.unset(key)
+
+
+def _write_docs(
+    store: IndexStorage, docs: DataFrame, n_shards: int, n_groups: int
+) -> tuple[dict, list[int]]:
+    """Write ``docs`` and the one-row ``stats`` table derived from it.
+
+    The corpus stats (num_docs, total_tf, max_dl) and the docs per
+    shard-group ride the docs write as an Observation — zero extra jobs
+    and zero re-reads; ``stats`` is then written driver-side like the
+    manifest.  Returns (stats, docs per group)."""
+    obs = Observation("corpus_stats")
+    grp = (F.col("doc_id") % n_shards) % n_groups
+    out = docs.observe(
+        obs,
+        F.count(F.lit(1)).cast("long").alias("num_docs"),
+        F.sum("doc_len").cast("long").alias("total_tf"),
+        F.max("doc_len").cast("long").alias("max_dl"),
+        *[F.count(F.when(grp == g, 1)).alias(f"nd_{g}") for g in range(n_groups)],
+    )
+    store.write_table(out, "docs")
+    v = obs.get
+    stats = {k: int(v[k] or 0) for k in ("num_docs", "total_tf", "max_dl")}
+    store.write_small_table(
+        {k: [x] for k, x in stats.items()},
+        "stats",
+        pa.schema([(k, pa.int64()) for k in stats]),
+    )
+    return stats, [int(v[f"nd_{g}"]) for g in range(n_groups)]
+
+
+def _postings_batch(rows: list[tuple]) -> pa.RecordBatch:
+    """Postings rows (shard, term, df_shard, ctf_shard, blocks), each
+    block's data slot still holding its value array, as one Arrow batch:
+    ONE vectorized varbyte pass over every block of the batch
+    (byte-identical to per-block encoding; the per-call numpy overhead
+    dominates on block-sized arrays), and the blocks column assembled
+    column-wise instead of from a list of dicts (~20x cheaper)."""
+    import numpy as np
+
+    from websearchengine_spark.functions.codec import varbyte_encode_many
+
+    shards, terms, dfs, ctfs, block_lists = zip(*rows)
+    flat = [blk for bl in block_lists for blk in bl]
+    datas = varbyte_encode_many([blk[5] for blk in flat])
+    offs = np.zeros(len(block_lists) + 1, dtype=np.int32)
+    np.cumsum([len(bl) for bl in block_lists], out=offs[1:])
+    struct = pa.StructArray.from_arrays(
+        [
+            pa.array(datas if i == 5 else [blk[i] for blk in flat], f.type)
+            for i, f in enumerate(_BLOCKS_T.value_type)
+        ],
+        fields=list(_BLOCKS_T.value_type),
+    )
+    blocks = pa.ListArray.from_arrays(pa.array(offs), struct)
+    return pa.record_batch(
+        {
+            "shard": pa.array(shards, pa.int32()),
+            "term": pa.array(terms, pa.string()),
+            "df_shard": pa.array(dfs, pa.int64()),
+            "ctf_shard": pa.array(ctfs, pa.int64()),
+            "blocks": blocks,
+        }
+    )
+
+
+def _write_postings(
+    store: IndexStorage,
+    rows: DataFrame,
+    encode_rows,
+    n_shards: int,
+    n_groups: int,
+    groups: list[int],
+    build_id: str,
+    docs_per_group: list[int],
+) -> None:
+    """The ONE postings writer — fresh builds, resumed builds and
+    compaction all end here.
+
+    ``rows`` holds one row per (shard, term) straight out of the
+    caller's single shuffle; ``encode_rows`` turns an Arrow batch of
+    them into (shard, term, df_shard, ctf_shard, blocks) rows with
+    deferred block bytes (``encode_posting_blocks(_defer_bytes=True)``).
+    Only ``groups`` (the shard-groups not yet committed) are written:
+    the group filter references the grouping key alone, so Catalyst
+    pushes it below the aggregation and a resume shuffles only what it
+    writes.  All groups leave in ONE dynamic-partitioned write, with
+    their metrics (n_postings / n_terms / max_term_postings) observed on
+    that write, then each group dir is moved into place and committed
+    to the manifest individually — a crash mid-write leaves both the
+    live table and the manifest untouched."""
+    if not groups:
+        return
+
+    def encode(batches):
+        for b in batches:
+            out = list(encode_rows(b))
+            if out:
+                yield _postings_batch(out)
+
+    t0 = time.time()
+    group = (F.col("shard") % F.lit(n_groups)).cast("int")
+    if len(groups) < n_groups:
+        rows = rows.filter(group.isin(groups))
+    obs = Observation("group_metrics")
+    exprs = []
+    for g in groups:
+        in_g = F.col("group") == g
+        exprs += [
+            F.sum(F.when(in_g, F.col("df_shard"))).alias(f"np_{g}"),
+            F.count(F.when(in_g, F.lit(1))).alias(f"nt_{g}"),
+            F.max(F.when(in_g, F.col("ctf_shard"))).alias(f"mx_{g}"),
+        ]
+    postings = (
+        rows.mapInArrow(encode, schema=POSTINGS_SCHEMA)
+        .withColumn("group", group)
+        .observe(obs, *exprs)
+        # (group, term): the partition-column prefix satisfies the
+        # dynamic-partition writer's required ordering (no extra sort
+        # gets inserted) and keeps term-sorted row groups so the
+        # `term IN (...)` query filter prunes on parquet min/max stats
+        .sortWithinPartitions("group", "term")
+    )
+    store.write_partitions_atomic(postings, "postings", "group", groups)
+    gm = obs.get
+    # one job wrote every group; per-group walls are not separable
+    elapsed = round(time.time() - t0, 3)
+    for g in groups:
+        store.mark_group_complete(
+            g,
+            {
+                "build_id": build_id,
+                "n_postings": int(gm[f"np_{g}"] or 0),
+                "n_terms": int(gm[f"nt_{g}"] or 0),
+                "n_docs": docs_per_group[g],
+                "max_term_postings": int(gm[f"mx_{g}"] or 0),
+                "n_shards_in_group": len(range(g, n_shards, n_groups)),
+                "elapsed_sec": elapsed,
+            },
+        )
+
+
+def _write_term_stats(spark: SparkSession, store: IndexStorage) -> None:
+    """Global term stats (A3/A4) from the per-shard postings.
+
+    df/ctf are additive across doc-shards, so this is a tiny aggregation
+    over the (vocab x shards)-row postings table — no token rescan.
+    Term-sorted SMALL row groups on disk: the table is the term
+    DICTIONARY; with rows sorted by term inside each file and ~1 MB row
+    groups, a k-term lookup (storage.lookup_rows / the Spark fallback's
+    `term IN` filter) prunes on parquet min/max stats to at most one row
+    group per file — bounded work at any vocabulary size, without paying
+    a range-repartition (sampling + exchange) job."""
+    term_stats = (
+        store.read_partitioned(spark, "postings")
+        .groupBy("term")
+        .agg(
+            F.sum("df_shard").cast("long").alias("df"),
+            F.sum("ctf_shard").cast("long").alias("ctf"),
+        )
+        .sortWithinPartitions("term")
+    )
+    store.write_table(
+        term_stats, "term_stats", options={"parquet.block.size": str(1 << 20)}
+    )
+
+
+def _encode_occurrences(b, positions: bool, avg_dl: float, block_size: int):
+    """Build encoder: grouped rows (shard, term, occs[], dls[]) -> postings
+    rows.  ``occs`` is the sorted packed-long occurrence list; ``dls``
+    the sorted packed-long (doc_id, doc_len) set (positional builds) or
+    empty (positionless builds pack doc_len directly into each
+    occurrence).  Arrow-native (r6): each batch's list columns are ONE
+    contiguous int64 buffer + offsets, so per-row arrays are zero-copy
+    numpy slices instead of pandas object cells (guide §4.2); per-doc
+    tf/positions come back by run-length splitting the doc_id high
+    bits."""
+    import numpy as np
+
+    shards = b.column("shard").to_pylist()
+    terms = b.column("term").to_pylist()
+    occ_col, dl_col = b.column("occs"), b.column("dls")
+    occ_off = occ_col.offsets.to_numpy()
+    occ_val = occ_col.values.to_numpy(zero_copy_only=True)
+    dl_off = dl_col.offsets.to_numpy()
+    dl_val = (
+        dl_col.values.to_numpy(zero_copy_only=True)
+        if len(dl_col.values)
+        else np.empty(0, np.int64)
+    )
+    for i, (shard, term) in enumerate(zip(shards, terms)):
+        occ = occ_val[occ_off[i] : occ_off[i + 1]]
+        d_all = occ >> PACK_BITS
+        change = np.empty(d_all.size, dtype=bool)
+        change[0] = True
+        np.not_equal(d_all[1:], d_all[:-1], out=change[1:])
+        starts = np.flatnonzero(change)
+        uniq = d_all[starts]
+        counts = np.diff(np.append(starts, d_all.size))
+        if positions:
+            dlp = dl_val[dl_off[i] : dl_off[i + 1]]
+            if dlp.size != uniq.size or not np.array_equal(dlp >> PACK_BITS, uniq):
+                raise ValueError(
+                    "packed doc_len set misaligned with occurrence "
+                    "docs (PACK_BITS overflow?)"
+                )
+            dls = dlp & PACK_MASK
+            p = occ & PACK_MASK
+        else:
+            dls = (occ & PACK_MASK)[starts]
+            p = None
+        blocks = encode_posting_blocks(
+            uniq, counts, dls, p, avg_dl, block_size=block_size,
+            _defer_bytes=True,
+        )
+        yield shard, term, int(uniq.size), int(d_all.size), blocks
+
+
 def build_index(
     spark: SparkSession,
     pages: DataFrame,
@@ -282,270 +525,112 @@ def build_index(
         phase_t[name] = round(now - _t[0], 2)
         _t[0] = now
 
-    # encode-stage rows are FAT (three parallel arrays, ~df_shard elements
-    # each for head terms) — the default 10k-row Arrow batch balloons to
-    # gigabytes per in-flight task.  Cap rows per batch for the build.
-    _prev_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-
-    store = IndexStorage(index_root)
-    manifest = store.read_manifest()
-    build_id = store.new_build_id()
-    done = store.completed_groups() if resume else set()
-    if not resume:
-        manifest["completed_groups"] = []
-        manifest.setdefault("attempts", [])
-    manifest.setdefault("attempts", []).append(
-        {"build_id": build_id, "ts": time.time(), "resumed_groups": sorted(done)}
-    )
-    store.write_manifest(manifest)
-
-    # the Arrow extract/analyze UDF is the dominant CPU cost; if the input
-    # has fewer splits than cores (e.g. a few large parquet files), the
-    # whole stage serializes on those splits — widen it first.  On a real
-    # cluster the input normally has plenty of splits and this is a no-op.
-    cores = spark.sparkContext.defaultParallelism
-    if pages.rdd.getNumPartitions() < cores:
-        pages = pages.repartition(cores * 2)
-    # url rank from the RAW input (parquet column-prunes to a url-only
-    # scan); joining it to the UDF output avoids both a second UDF
-    # evaluation (range-partitioner sampling) and a heavy-side shuffle
-    # (the id side broadcasts)
-    ids, ids_parted = _rank_urls_handle(pages.select("url"))
-    analyzed = analyze_pages(pages, analyzer=analyzer).join(ids, "url")
-    analyzed = analyzed.persist()
-    _mark("setup")
-
-    # ---- docs ----------------------------------------------------------
-    docs = analyzed.select(
-        "doc_id", "url", "title", F.size("tokens").cast("long").alias("doc_len")
-    )
-    if signals is not None:
-        docs = (
-            docs.join(signals, "url", "left")
-            .withColumn("pagerank", F.coalesce(F.col("pagerank"), F.lit(0.0)).cast("double"))
-            .withColumn("numviews", F.coalesce(F.col("numviews"), F.lit(0)).cast("long"))
+    with _arrow_batch_cap(spark):
+        store = IndexStorage(index_root)
+        manifest = store.read_manifest()
+        build_id = store.new_build_id()
+        done = store.completed_groups() if resume else set()
+        if not resume:
+            manifest["completed_groups"] = []
+        manifest.setdefault("attempts", []).append(
+            {"build_id": build_id, "ts": time.time(), "resumed_groups": sorted(done)}
         )
-    else:
-        docs = docs.withColumn("pagerank", F.lit(0.0)).withColumn("numviews", F.lit(0).cast("long"))
-    # piggy-back the corpus stats (A5) on the docs-write action itself:
-    # an Observation evaluates aggregates inside the write job, so
-    # num_docs/total_tf/max_dl cost zero extra jobs and zero re-reads
-    from pyspark.sql import Observation
+        store.write_manifest(manifest)
 
-    _stats_obs = Observation("corpus_stats")
-    docs_out = docs.select(
-        "doc_id", "url", "title", "doc_len", "pagerank", "numviews"
-    ).observe(
-        _stats_obs,
-        F.count(F.lit(1)).cast("long").alias("num_docs"),
-        F.sum("doc_len").cast("long").alias("total_tf"),
-        F.max("doc_len").cast("long").alias("max_dl"),
-    )
-    # rebalance on write (guide §6): the docs table inherits the
-    # parallelism-widened partitioning (cores x2 tiny files at bench,
-    # unsized shards at scale); an AQE rebalance sizes output files by
-    # bytes, and EVERY query's metadata join re-lists this table
-    store.write_table(docs_out.hint("rebalance"), "docs")
-    ids_parted.unpersist(blocking=False)
-    _mark("analyze_and_docs")
+        # the Arrow extract/analyze UDF is the dominant CPU cost; if the
+        # input has fewer splits than cores (e.g. a few large parquet
+        # files), the whole stage serializes on those splits — widen it
+        # first.  On a real cluster the input normally has plenty of
+        # splits and this is a no-op.
+        cores = spark.sparkContext.defaultParallelism
+        if pages.rdd.getNumPartitions() < cores:
+            pages = pages.repartition(cores * 2)
+        # url rank from the RAW input (parquet column-prunes to a url-only
+        # scan); joining it to the UDF output avoids both a second UDF
+        # evaluation (range-partitioner sampling) and a heavy-side shuffle
+        # (the id side broadcasts)
+        ids, ids_parted = _rank_urls_handle(pages.select("url"))
+        analyzed = analyze_pages(pages, analyzer=analyzer).join(ids, "url")
+        analyzed = analyzed.persist()
+        _mark("setup")
 
-    # ---- optional forward-index tables (A1 / S7) ------------------------
-    if keep_doc_terms:
-        exploded = analyzed.select(
-            "doc_id", F.posexplode("tokens").alias("pos", "term")
+        # ---- docs + corpus stats (A5) ------------------------------------
+        docs = analyzed.select(
+            "doc_id", "url", "title", F.size("tokens").cast("long").alias("doc_len")
         )
-        doc_terms = exploded.groupBy("doc_id", "term").agg(
-            F.count("*").cast("int").alias("tf")
-        )
-        store.write_table(doc_terms, "doc_terms")
-    if keep_doc_tokens:
-        # positional forward index (S7 analog): doc_id -> kept tokens in
-        # position order; powers next-word suggestion (Q6)
-        store.write_table(analyzed.select("doc_id", "tokens"), "doc_tokens")
-    _mark("doc_terms_tables")
-
-    # corpus stats arrive via the docs-write Observation (zero extra
-    # jobs; they used to cost a docs re-read + agg + stats write + stats
-    # re-read — 3 jobs for three scalars); the stats table itself is a
-    # single row, written driver-side like the manifest.
-    srow = {
-        "num_docs": int(_stats_obs.get["num_docs"]),
-        "total_tf": _stats_obs.get["total_tf"],
-        "max_dl": _stats_obs.get["max_dl"],
-    }
-    import pyarrow as pa
-
-    store.write_small_table(
-        {
-            "num_docs": [srow["num_docs"]],
-            "total_tf": [srow["total_tf"]],
-            "max_dl": [srow["max_dl"]],
-        },
-        "stats",
-        pa.schema(
-            [("num_docs", pa.int64()), ("total_tf", pa.int64()), ("max_dl", pa.int64())]
-        ),
-    )
-    avg_dl = (srow["total_tf"] or 0) / max(1, srow["num_docs"])
-    # packed-long layout guards (see PACK_BITS): pos < doc_len always, so
-    # one corpus-max check covers both the position and doc_len fields
-    if int(srow["max_dl"] or 0) >= (1 << PACK_BITS):
-        raise ValueError(
-            f"doc with {srow['max_dl']} tokens exceeds the 2^{PACK_BITS} "
-            "packed-occurrence limit; raise PACK_BITS"
-        )
-    if int(srow["num_docs"]) >= MAX_DOC_ID:
-        raise ValueError("corpus exceeds the 2^41 packed doc_id limit")
-    _mark("stats")
-
-    # ---- postings: doc-sharded, blocked, per-group resumable commits ---
-    # SINGLE-SHUFFLE design with PACKED rows: the pipeline is explode ->
-    # pack each occurrence into ONE int64 -> one groupBy(shard, term) ->
-    # encode.  No intermediate (doc_id, term) aggregation, no cache of
-    # 10^1x-row position arrays, no doc_len join — the occurrence stream
-    # is shuffled exactly once, and what crosses the wire per occurrence
-    # is 8 bytes (``doc_id << 22 | pos``) instead of a 3-field struct
-    # (~40 B serialized).  doc_len ships once per (doc, term) as a
-    # second packed long via collect_set, whose map-side partial
-    # aggregation dedups the tf>1 repeats before the exchange.  Per-doc
-    # tf/positions are reconstructed by numpy run-length splitting of the
-    # sorted packed longs inside the Arrow encoder.
-    occs = analyzed.select(
-        "doc_id",
-        F.size("tokens").alias("doc_len"),
-        F.posexplode("tokens").alias("pos", "term"),
-    )
-
-    def group_slice(g: int):
-        return occs.filter(
-            (F.col("doc_id") % n_shards) % n_groups == g
-        ).withColumn("shard", (F.col("doc_id") % F.lit(n_shards)).cast("int"))
-
-    from websearchengine_spark.functions.codec import BLOCK_SIZE as _DEFAULT_BSZ
-
-    _bsz = block_size if block_size is not None else _DEFAULT_BSZ
-
-    # Arrow type of the blocks column (mirrors POSTINGS_SCHEMA)
-    import pyarrow as pa
-
-    _BLOCKS_T = pa.list_(
-        pa.struct(
-            [
-                ("first_docid", pa.int64()),
-                ("last_docid", pa.int64()),
-                ("n", pa.int32()),
-                ("max_tf", pa.int32()),
-                ("max_impact", pa.float64()),
-                ("data", pa.binary()),
-                ("head", pa.bool_()),
-            ]
-        )
-    )
-
-    def encode_batches(batches):
-        # rows: (shard, term, occs[], dls[]) — ``occs`` is the sorted
-        # packed-long occurrence list; ``dls`` the sorted packed-long
-        # (doc_id, doc_len) set (positional builds) or empty (positionless
-        # builds pack doc_len directly into each occurrence).  Arrow-
-        # native (r6): each batch's list columns are ONE contiguous int64
-        # buffer + offsets, so per-row arrays are zero-copy numpy slices
-        # instead of pandas object cells (guide §4.2).  Varbyte bytes are
-        # DEFERRED per block and encoded in ONE vectorized pass per batch
-        # (varbyte_encode_many — byte-identical; the per-call numpy
-        # overhead on block-sized arrays dominated the stage), and the
-        # blocks column is built column-wise instead of list-of-dicts
-        # (~20x cheaper conversion).
-        import numpy as np
-        import pyarrow as pa
-
-        from websearchengine_spark.functions.codec import varbyte_encode_many
-
-        for b in batches:
-            shards = b.column(0).to_numpy()
-            terms = b.column(1).to_pylist()
-            occ_col, dl_col = b.column(2), b.column(3)
-            occ_off = occ_col.offsets.to_numpy()
-            occ_val = occ_col.values.to_numpy(zero_copy_only=True)
-            dl_off = dl_col.offsets.to_numpy()
-            dl_val = (
-                dl_col.values.to_numpy(zero_copy_only=True)
-                if len(dl_col.values)
-                else np.empty(0, np.int64)
+        if signals is not None:
+            docs = (
+                docs.join(signals, "url", "left")
+                .withColumn("pagerank", F.coalesce(F.col("pagerank"), F.lit(0.0)).cast("double"))
+                .withColumn("numviews", F.coalesce(F.col("numviews"), F.lit(0)).cast("long"))
             )
-            flat_blocks, n_blocks, dfs, ctfs = [], [], [], []
-            for i in range(len(terms)):
-                occ = occ_val[occ_off[i] : occ_off[i + 1]]
-                d_all = occ >> PACK_BITS
-                # run-length split of the (sorted) doc_id high bits
-                change = np.empty(d_all.size, dtype=bool)
-                change[0] = True
-                np.not_equal(d_all[1:], d_all[:-1], out=change[1:])
-                starts = np.flatnonzero(change)
-                uniq = d_all[starts]
-                counts = np.diff(np.append(starts, d_all.size))
-                if positions:
-                    dlp = dl_val[dl_off[i] : dl_off[i + 1]]
-                    if dlp.size != uniq.size or not np.array_equal(
-                        dlp >> PACK_BITS, uniq
-                    ):
-                        raise ValueError(
-                            "packed doc_len set misaligned with occurrence "
-                            "docs (PACK_BITS overflow?)"
-                        )
-                    dls = dlp & PACK_MASK
-                    p = occ & PACK_MASK
-                else:
-                    dls = (occ & PACK_MASK)[starts]
-                    p = None
-                blocks = encode_posting_blocks(
-                    uniq, counts, dls, p, avg_dl, block_size=_bsz,
-                    _defer_bytes=True,
-                )
-                flat_blocks.extend(blocks)
-                n_blocks.append(len(blocks))
-                dfs.append(int(uniq.size))
-                ctfs.append(int(d_all.size))
-            datas = varbyte_encode_many([blk[5] for blk in flat_blocks])
-            offs = np.zeros(len(n_blocks) + 1, dtype=np.int32)
-            np.cumsum(n_blocks, out=offs[1:])
-            struct = pa.StructArray.from_arrays(
-                [
-                    pa.array([blk[0] for blk in flat_blocks], pa.int64()),
-                    pa.array([blk[1] for blk in flat_blocks], pa.int64()),
-                    pa.array([blk[2] for blk in flat_blocks], pa.int32()),
-                    pa.array([blk[3] for blk in flat_blocks], pa.int32()),
-                    pa.array([blk[4] for blk in flat_blocks], pa.float64()),
-                    pa.array(datas, pa.binary()),
-                    pa.array([blk[6] for blk in flat_blocks], pa.bool_()),
-                ],
-                names=[
-                    "first_docid", "last_docid", "n", "max_tf",
-                    "max_impact", "data", "head",
-                ],
-            )
-            blocks_arr = pa.ListArray.from_arrays(pa.array(offs), struct)
-            if blocks_arr.type != _BLOCKS_T:
-                blocks_arr = blocks_arr.cast(_BLOCKS_T)
-            yield pa.record_batch(
-                {
-                    "shard": pa.array(shards, pa.int32()),
-                    "term": pa.array(terms, pa.string()),
-                    "df_shard": pa.array(dfs, pa.int64()),
-                    "ctf_shard": pa.array(ctfs, pa.int64()),
-                    "blocks": blocks_arr,
-                }
-            )
+        else:
+            docs = docs.withColumn("pagerank", F.lit(0.0)).withColumn("numviews", F.lit(0).cast("long"))
+        # rebalance on write (guide §6): the docs table inherits the
+        # parallelism-widened partitioning (cores x2 tiny files at bench,
+        # unsized shards at scale); an AQE rebalance sizes output files by
+        # bytes, and EVERY query's metadata join re-lists this table
+        srow, docs_per_group = _write_docs(
+            store,
+            docs.select(
+                "doc_id", "url", "title", "doc_len", "pagerank", "numviews"
+            ).hint("rebalance"),
+            n_shards, n_groups,
+        )
+        ids_parted.unpersist(blocking=False)
+        _mark("analyze_and_docs")
 
-    def plists_for(part):
-        pk = F.shiftleft(F.col("doc_id"), PACK_BITS)
+        # ---- optional forward-index tables (A1 / S7) ----------------------
+        if keep_doc_terms:
+            exploded = analyzed.select(
+                "doc_id", F.posexplode("tokens").alias("pos", "term")
+            )
+            doc_terms = exploded.groupBy("doc_id", "term").agg(
+                F.count("*").cast("int").alias("tf")
+            )
+            store.write_table(doc_terms, "doc_terms")
+        if keep_doc_tokens:
+            # positional forward index (S7 analog): doc_id -> kept tokens in
+            # position order; powers next-word suggestion (Q6)
+            store.write_table(analyzed.select("doc_id", "tokens"), "doc_tokens")
+        _mark("doc_terms_tables")
+
+        avg_dl = srow["total_tf"] / max(1, srow["num_docs"])
+        # packed-long layout guards (see PACK_BITS): pos < doc_len always,
+        # so one corpus-max check covers both the position and doc_len fields
+        if srow["max_dl"] >= (1 << PACK_BITS):
+            raise ValueError(
+                f"doc with {srow['max_dl']} tokens exceeds the 2^{PACK_BITS} "
+                "packed-occurrence limit; raise PACK_BITS"
+            )
+        if srow["num_docs"] >= MAX_DOC_ID:
+            raise ValueError("corpus exceeds the 2^41 packed doc_id limit")
+        _mark("stats")
+
+        # ---- postings: doc-sharded, blocked, per-group commits ------------
+        # SINGLE-SHUFFLE design with PACKED rows: explode -> pack each
+        # occurrence into ONE int64 -> one groupBy(shard, term) -> encode.
+        # No intermediate (doc_id, term) aggregation, no cache of
+        # 10^1x-row position arrays, no doc_len join — the occurrence
+        # stream is shuffled exactly once, and what crosses the wire per
+        # occurrence is 8 bytes (``doc_id << 22 | pos``) instead of a
+        # 3-field struct (~40 B serialized).  doc_len ships once per
+        # (doc, term) as a second packed long via collect_set, whose
+        # map-side partial aggregation dedups the tf>1 repeats before the
+        # exchange.
+        occs = analyzed.select(
+            (F.col("doc_id") % F.lit(n_shards)).cast("int").alias("shard"),
+            F.shiftleft(F.col("doc_id"), PACK_BITS).alias("pk"),
+            F.size("tokens").alias("doc_len"),
+            F.posexplode("tokens").alias("pos", "term"),
+        )
         if positions:
-            return (
-                part.select(
+            plists = (
+                occs.select(
                     "shard",
                     "term",
-                    (pk + F.col("pos")).alias("occ_p"),
-                    (pk + F.col("doc_len")).alias("dl_p"),
+                    (F.col("pk") + F.col("pos")).alias("occ_p"),
+                    (F.col("pk") + F.col("doc_len")).alias("dl_p"),
                 )
                 .groupBy("shard", "term")
                 .agg(
@@ -556,196 +641,84 @@ def build_index(
                     F.sort_array(F.collect_set("dl_p")).alias("dls"),
                 )
             )
-        # positionless: doc_len packs directly into each occurrence
-        # (the pos field is dropped before the shuffle entirely)
-        return (
-            part.select("shard", "term", (pk + F.col("doc_len")).alias("occ_p"))
-            .groupBy("shard", "term")
-            .agg(F.sort_array(F.collect_list("occ_p")).alias("occs"))
-            .withColumn("dls", F.array().cast("array<long>"))
-        )
-
-    num_docs = int(srow["num_docs"])
-
-    def n_docs_in_group(g: int) -> int:
-        # analytic: doc_ids are dense, shard = doc_id % n_shards
-        return sum(
-            (num_docs - s + n_shards - 1) // n_shards
-            for s in range(g, n_shards, n_groups)
-        )
-
-    remaining = [g for g in range(n_groups) if g not in done]
-    t_group_start = time.time()
-    # Group metrics (n_postings/n_terms/max_term_postings) ride the
-    # write actions as Observations — they used to cost a read-back +
-    # agg + collect job per group (r6: zero extra jobs, same numbers,
-    # recorded at commit time exactly as before).
-    from pyspark.sql import Observation
-
-    if remaining and not done:
-        # FRESH build: all groups from ONE explode + ONE (shard, term)
-        # shuffle + ONE dynamic-partitioned write, instead of n_groups
-        # sequential jobs that each rescan the token stream (r6: at
-        # n_groups=2 this halves the wide work; the shuffle key and the
-        # per-group bytes are unchanged — group = shard % n_groups is
-        # attached after encoding).  Group dirs are still moved into
-        # place and committed individually; a crash mid-write leaves the
-        # manifest untouched.  Interrupted builds resume below on the
-        # per-group path, whose bytes are identical (resume test).
-        part = occs.withColumn(
-            "shard", (F.col("doc_id") % F.lit(n_shards)).cast("int")
-        )
-        postings = plists_for(part).mapInArrow(
-            encode_batches, schema=POSTINGS_SCHEMA
-        ).withColumn("group", (F.col("shard") % F.lit(n_groups)).cast("int"))
-        gm_obs = Observation("group_metrics")
-        obs_exprs = []
-        for g in range(n_groups):
-            in_g = F.col("group") == g
-            obs_exprs += [
-                F.sum(F.when(in_g, F.col("df_shard"))).alias(f"np_{g}"),
-                F.count(F.when(in_g, F.lit(1))).alias(f"nt_{g}"),
-                F.max(F.when(in_g, F.col("ctf_shard"))).alias(f"mx_{g}"),
-            ]
-        postings = postings.observe(gm_obs, *obs_exprs)
-        # sort by (group, term): the partition-column prefix satisfies
-        # the dynamic-partition writer's required ordering (no extra
-        # sort gets inserted) and keeps term-sorted row groups so the
-        # `term IN (...)` query filter prunes on parquet min/max stats
-        postings = postings.sortWithinPartitions("group", "term")
-        store.write_partitions_atomic(postings, "postings", "group", range(n_groups))
-        gmv = gm_obs.get
-        elapsed_all = round(time.time() - t_group_start, 3)
-        for g in range(n_groups):
-            store.mark_group_complete(
-                g,
-                {
-                    "build_id": build_id,
-                    "n_postings": int(gmv[f"np_{g}"] or 0),
-                    "n_terms": int(gmv[f"nt_{g}"] or 0),
-                    "n_docs": n_docs_in_group(g),
-                    "max_term_postings": int(gmv[f"mx_{g}"] or 0),
-                    "n_shards_in_group": len(range(g, n_shards, n_groups)),
-                    # one combined job built every group; per-group walls
-                    # are not separable on this path
-                    "elapsed_sec": elapsed_all,
-                },
+        else:
+            # positionless: doc_len packs directly into each occurrence
+            # (the pos field is dropped before the shuffle entirely)
+            plists = (
+                occs.select(
+                    "shard", "term", (F.col("pk") + F.col("doc_len")).alias("occ_p")
+                )
+                .groupBy("shard", "term")
+                .agg(F.sort_array(F.collect_list("occ_p")).alias("occs"))
+                .withColumn("dls", F.array().cast("array<long>"))
             )
-    else:
-        for g in remaining:
-            postings = plists_for(group_slice(g)).mapInArrow(
-                encode_batches, schema=POSTINGS_SCHEMA
-            )
-            obs = Observation(f"group_metrics_{g}_{build_id}")
-            postings = postings.observe(
-                obs,
-                F.sum("df_shard").alias("np"),
-                F.count(F.lit(1)).alias("nt"),
-                F.max("ctf_shard").alias("mx"),
-            )
-            # term-sorted row groups => parquet min/max stats prune
-            # query-term scans (`term IN (...)` skips whole row groups)
-            postings = postings.sortWithinPartitions("term")
-            store.write_partition(postings, "postings", "group", g)
-            gmv = obs.get
-            store.mark_group_complete(
-                g,
-                {
-                    "build_id": build_id,
-                    "n_postings": int(gmv["np"] or 0),
-                    "n_terms": int(gmv["nt"] or 0),
-                    "n_docs": n_docs_in_group(g),
-                    "max_term_postings": int(gmv["mx"] or 0),
-                    "n_shards_in_group": len(range(g, n_shards, n_groups)),
-                    "elapsed_sec": time.time() - t_group_start,
-                },
-            )
-            t_group_start = time.time()
-
-    _mark("postings_groups")
-    postings_all = store.read_partitioned(spark, "postings")
-
-    # ---- global term stats (A3/A4) from the per-shard postings ---------
-    # df/ctf are additive across doc-shards, so this is a tiny aggregation
-    # over the (vocab x shards)-row postings table — no token rescan.
-    # Term-sorted SMALL row groups on disk: the table is the term
-    # DICTIONARY; with rows sorted by term inside each file and ~1 MB
-    # row groups, a k-term lookup (storage.lookup_rows / the Spark
-    # fallback's `term IN` filter) prunes on parquet min/max stats to
-    # at most one row group per file — bounded work at any vocabulary
-    # size, without paying a range-repartition (sampling + exchange)
-    # job at build time.
-    term_stats = (
-        postings_all.groupBy("term")
-        .agg(
-            F.sum("df_shard").cast("long").alias("df"),
-            F.sum("ctf_shard").cast("long").alias("ctf"),
+        bsz = block_size if block_size is not None else BLOCK_SIZE
+        _write_postings(
+            store,
+            plists,
+            lambda b: _encode_occurrences(b, positions, avg_dl, bsz),
+            n_shards,
+            n_groups,
+            [g for g in range(n_groups) if g not in done],
+            build_id,
+            docs_per_group,
         )
-        .sortWithinPartitions("term")
-    )
-    store.write_table(
-        term_stats, "term_stats", options={"parquet.block.size": str(1 << 20)}
-    )
-    _mark("term_stats")
+        _mark("postings_groups")
 
-    if spell_assist:
-        # persisted bigram->terms assist table (reference utils/
-        # AssistantIndexBuilder.java:117-161): /prediction then scans
-        # the target's bigram row groups, not the whole vocabulary
-        from websearchengine_spark.operators.spell import build_spell_assist
+        _write_term_stats(spark, store)
+        _mark("term_stats")
 
-        build_spell_assist(spark, store)
-        _mark("spell_assist")
+        if spell_assist:
+            # persisted bigram->terms assist table (reference utils/
+            # AssistantIndexBuilder.java:117-161): /prediction then scans
+            # the target's bigram row groups, not the whole vocabulary
+            from websearchengine_spark.operators.spell import build_spell_assist
 
-    # ---- build_meta table + snapshot -----------------------------------
-    m = store.read_manifest()
-    meta_rows = [
-        {
-            "grp": int(k),
-            "build_id": v.get("build_id", ""),
-            "n_postings": int(v.get("n_postings", 0)),
-            "n_terms": int(v.get("n_terms", 0)),
-            "n_docs": int(v.get("n_docs", 0)),
-            "elapsed_sec": float(v.get("elapsed_sec", 0.0)),
-        }
-        for k, v in m.get("group_metrics", {}).items()
-    ]
-    if meta_rows:
-        # n_groups rows of driver-known scalars: write driver-side (a
-        # Spark job per build for a few hundred bytes is pure overhead)
-        import pyarrow as pa
+            build_spell_assist(spark, store)
+            _mark("spell_assist")
 
-        store.write_small_table(
-            {k: [row[k] for row in meta_rows] for k in meta_rows[0]},
-            "build_meta",
-            pa.schema(
-                [
-                    ("grp", pa.int64()),
-                    ("build_id", pa.string()),
-                    ("n_postings", pa.int64()),
-                    ("n_terms", pa.int64()),
-                    ("n_docs", pa.int64()),
-                    ("elapsed_sec", pa.float64()),
-                ]
-            ),
+        # ---- build_meta table + snapshot ----------------------------------
+        meta_rows = [
+            {
+                "grp": int(k),
+                "build_id": v.get("build_id", ""),
+                "n_postings": int(v.get("n_postings", 0)),
+                "n_terms": int(v.get("n_terms", 0)),
+                "n_docs": int(v.get("n_docs", 0)),
+                "elapsed_sec": float(v.get("elapsed_sec", 0.0)),
+            }
+            for k, v in store.read_manifest().get("group_metrics", {}).items()
+        ]
+        if meta_rows:
+            # n_groups rows of driver-known scalars: write driver-side (a
+            # Spark job per build for a few hundred bytes is pure overhead)
+            store.write_small_table(
+                {k: [row[k] for row in meta_rows] for k in meta_rows[0]},
+                "build_meta",
+                pa.schema(
+                    [
+                        ("grp", pa.int64()),
+                        ("build_id", pa.string()),
+                        ("n_postings", pa.int64()),
+                        ("n_terms", pa.int64()),
+                        ("n_docs", pa.int64()),
+                        ("elapsed_sec", pa.float64()),
+                    ]
+                ),
+            )
+        store.finalize_snapshot(
+            {
+                "n_shards": n_shards,
+                "n_groups": n_groups,
+                "build_id": build_id,
+                "analyzer": analyzer,
+                "avg_dl": avg_dl,
+                "num_docs": srow["num_docs"],
+                "total_tf": srow["total_tf"],
+                "positions": positions,
+                "spell_assist": bool(spell_assist),
+                "phase_timings_sec": phase_t,
+            }
         )
-    store.finalize_snapshot(
-        {
-            "n_shards": n_shards,
-            "n_groups": n_groups,
-            "build_id": build_id,
-            "analyzer": analyzer,
-            "avg_dl": avg_dl,
-            "num_docs": int(srow["num_docs"]),
-            "total_tf": int(srow["total_tf"]),
-            "positions": positions,
-            "spell_assist": bool(spell_assist),
-            "phase_timings_sec": phase_t,
-        }
-    )
-    analyzed.unpersist()
-    if _prev_batch is not None:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", _prev_batch)
-    else:
-        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+        analyzed.unpersist()
     return store

@@ -13,11 +13,13 @@ merges two built index roots into a third:
 Scale design (the 100 TB story):
 
   * NO token rescan and NO occurrence shuffle.  The only wide operation
-    is a groupBy(shard, term) over the two *compressed postings tables*
+    is ONE groupBy(shard, term) over the K *compressed postings tables*
     — rows are already per-(shard, term) blocks, i.e. orders of
     magnitude smaller than the occurrence stream the original builds
     shuffled.  Decode → concat → re-encode runs embarrassingly parallel
-    in an Arrow-batched numpy pass.
+    in an Arrow-batched numpy pass (``merge_rows``), whose output goes
+    through the build's own postings writer (build._write_postings):
+    one shuffle and one write regardless of K and of n_groups.
   * the doc_id offset is the smallest multiple of n_shards that clears
     A's doc_id space, so ``(doc_id + offset) % n_shards == doc_id %
     n_shards`` — B's rows KEEP their shard, no re-sharding shuffle of
@@ -29,8 +31,11 @@ Scale design (the 100 TB story):
     (codec.bm25_impact), so they must be recomputed to stay *valid*
     bounds over the merged corpus.
   * per shard-group resumable commits + lineage in the manifest, same
-    contract as build_index (north_rule: checkpoint resume, per-
-    partition metrics).
+    writer and contract as build_index (north_rule: checkpoint resume,
+    per-partition metrics): a rerun after a torn compaction writes only
+    the groups the manifest does not list as complete.  Corpus stats
+    (over the survivors when deleting) ride the docs write as an
+    Observation, as in build_index.
 
 Constraints: both inputs must share n_shards, analyzer, and the
 positions flag (ValueError otherwise) — these are index-format
@@ -42,7 +47,6 @@ from __future__ import annotations
 import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -50,9 +54,13 @@ from websearchengine_spark.functions.codec import (
     BLOCK_SIZE,
     decode_posting_blocks,
     encode_posting_blocks,
-    varbyte_encode_many,
 )
-from websearchengine_spark.operators.build import POSTINGS_SCHEMA
+from websearchengine_spark.operators.build import (
+    _arrow_batch_cap,
+    _write_docs,
+    _write_postings,
+    _write_term_stats,
+)
 from websearchengine_spark.sources.storage import IndexStorage
 
 
@@ -152,8 +160,9 @@ def merge_many_indexes(
     and each group decodes its parts in segment order, concatenates
     (offsets ascending => doc order preserved) and re-encodes against
     the merged avg_dl.  Merging K segments therefore costs ONE shuffle
-    of the compressed postings regardless of K — a fold of binary merges
-    would rewrite the whole index K-1 times.
+    of the compressed postings and ONE write regardless of K and of
+    n_groups — a fold of binary merges would rewrite the whole index
+    K-1 times.
 
     ``deleted_doc_ids`` maps segment INDEX -> LOCAL doc_ids to drop
     physically (live-index tombstones from superseding re-crawls): the
@@ -186,13 +195,10 @@ def merge_many_indexes(
     # Built segments have dense ids (span == num_docs); compacted bases
     # record their span explicitly; legacy merges derive a safe bound.
     nd_list = [segment_id_span(c) for c in cfgs]
-    total_tf = sum(int(c["total_tf"]) for c in cfgs)
-    num_docs = sum(int(c["num_docs"]) for c in cfgs)
     offsets = doc_id_offsets(nd_list, n_shards)
     id_span = offsets[-1] + (
         (nd_list[-1] + n_shards - 1) // n_shards
     ) * n_shards
-    avg_dl = total_tf / max(1, num_docs)
 
     dels: dict[int, np.ndarray] = {
         int(i): np.sort(np.asarray(list(ids), dtype=np.int64))
@@ -205,12 +211,6 @@ def merge_many_indexes(
         )
         for i, ids in dels.items()
     }
-    # the postings kernel gets the deletion arrays as a BROADCAST
-    # VARIABLE (one torrent distribution per executor), not a closure
-    # capture (re-serialized into every task) — with heavy re-crawl
-    # churn the pending delete set can be large, and compaction runs
-    # n_groups x shards tasks over it
-    dels_bc = spark.sparkContext.broadcast(dels) if dels else None
 
     out = IndexStorage(out_root)
     manifest = out.read_manifest()
@@ -251,185 +251,103 @@ def merge_many_indexes(
             u = u.unionByName(d)
         return u
 
-    out.write_table(union_shifted("docs"), "docs")
+    # corpus statistics over the SURVIVORS, observed on the docs write
+    # exactly as build_index does: the re-encoded impact bounds and BM25
+    # stats match a from-scratch build of the post-delete corpus
+    srow, docs_per_group = _write_docs(out, union_shifted("docs"), n_shards, n_groups)
     for opt_table in ("doc_terms", "doc_tokens"):
         if all(s.exists(opt_table) for s in stores):
             out.write_table(union_shifted(opt_table), opt_table)
-
-    if dels:
-        # corpus statistics over the SURVIVORS: one scan of the (small,
-        # columnar) merged docs table replaces the manifest sums, so the
-        # re-encoded impact bounds and BM25 stats match a from-scratch
-        # build of the post-delete corpus exactly
-        srow = out.read_table(spark, "docs").agg(
-            F.count("*").cast("long").alias("num_docs"),
-            F.sum("doc_len").cast("long").alias("total_tf"),
-            F.max("doc_len").cast("long").alias("max_dl"),
-        ).collect()[0]
-        num_docs, total_tf = int(srow["num_docs"]), int(srow["total_tf"] or 0)
-        max_dl = int(srow["max_dl"] or 0)
-        avg_dl = total_tf / max(1, num_docs)
-    else:
-        # .get: stats tables written before max_dl was recorded lack the
-        # column — degrade to 0 (same legacy tolerance as segment_id_span)
-        max_dl = max(
-            int(
-                s.read_table(spark, "stats").collect()[0].asDict().get("max_dl")
-                or 0
-            )
-            for s in stores
-        )
-    stats = spark.createDataFrame(
-        pd.DataFrame(
-            {"num_docs": [num_docs], "total_tf": [total_tf], "max_dl": [max_dl]}
-        ).astype("int64")
-    )
-    out.write_table(stats, "stats")
+    avg_dl = srow["total_tf"] / max(1, srow["num_docs"])
 
     # ---- postings: decode + shift + concat + re-encode per (shard, term)
-    parts = [
+    tables = [
         s.read_partitioned(spark, "postings").withColumn("side", F.lit(i))
         for i, s in enumerate(stores)
     ]
-    both = parts[0]
-    for p in parts[1:]:
-        both = both.unionByName(p)
-    both = both.select("shard", "term", "side", "df_shard", "ctf_shard", "blocks")
-
-    def merge_batches(batches):
-        import numpy as np
-
-        dels_x = dels_bc.value if dels_bc is not None else {}
-        for pdf in batches:
-            out_rows = {
-                "shard": [], "term": [], "df_shard": [], "ctf_shard": [], "blocks": [],
-            }
-            for shard, term, parts in zip(pdf["shard"], pdf["term"], pdf["parts"]):
-                docs_l, tfs_l, dls_l, pos_l = [], [], [], []
-                # parts arrive unordered; segment order = doc_id order
-                # (offsets ascending, ranges disjoint)
-                for part in sorted(parts, key=lambda s: s["side"]):
-                    d, t, dl, p = decode_posting_blocks(
-                        [
-                            (
-                                b["first_docid"], b["last_docid"], b["n"],
-                                b["max_tf"], b["max_impact"], b["data"],
-                            )
-                            for b in part["blocks"]
-                        ],
-                        want_positions=positions,
-                        want_doclens=True,
-                    )
-                    da = dels_x.get(int(part["side"]))
-                    if da is not None and d.size:
-                        keep = ~np.isin(d, da)
-                        if not keep.all():
-                            if positions and p is not None:
-                                # flat positions align per-occurrence
-                                p = p[np.repeat(keep, t)]
-                            d, t, dl = d[keep], t[keep], dl[keep]
-                    off = offsets[part["side"]]
-                    if off:
-                        d = d + off
-                    docs_l.append(d)
-                    tfs_l.append(t)
-                    dls_l.append(dl)
-                    if positions:
-                        pos_l.append(p)
-                d = np.concatenate(docs_l)
-                if d.size == 0:
-                    continue  # every posting of this term was deleted
-                t = np.concatenate(tfs_l)
-                dl = np.concatenate(dls_l)
-                p = np.concatenate(pos_l) if positions else None
-                blocks = encode_posting_blocks(
-                    d, t, dl, p, avg_dl, block_size=block_size,
-                    _defer_bytes=True,
-                )
-                out_rows["shard"].append(int(shard))
-                out_rows["term"].append(term)
-                out_rows["df_shard"].append(int(d.size))
-                out_rows["ctf_shard"].append(int(t.sum()))
-                out_rows["blocks"].append(blocks)
-            # one vectorized varbyte pass over every block in the batch
-            # (byte-identical to per-block encoding; same win as the
-            # build encoder — the per-call numpy overhead dominates on
-            # block-sized arrays)
-            flat = [blk for bl in out_rows["blocks"] for blk in bl]
-            datas = iter(varbyte_encode_many([blk[5] for blk in flat]))
-            out_rows["blocks"] = [
-                [blk[:5] + (next(datas),) + blk[6:] for blk in bl]
-                for bl in out_rows["blocks"]
-            ]
-            yield pd.DataFrame(out_rows)
-
-    # grouped rows are FAT (full block lists) — cap Arrow batch rows,
-    # same guard as build_index
-    _prev_batch = spark.conf.get(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", None
+    both = tables[0]
+    for t in tables[1:]:
+        both = both.unionByName(t)
+    grouped = (
+        both.select("shard", "term", "side", "blocks")
+        .groupBy("shard", "term")
+        .agg(F.collect_list(F.struct("side", "blocks")).alias("parts"))
     )
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-    try:
-        t_group = time.time()
-        for g in range(n_groups):
-            if g in done:
-                continue
-            grouped = (
-                both.filter(F.col("shard") % n_groups == g)
-                .groupBy("shard", "term")
-                .agg(
-                    F.collect_list(F.struct("side", "blocks")).alias("parts")
+
+    # the postings kernel gets the deletion arrays as a BROADCAST
+    # VARIABLE (one torrent distribution per executor), not a closure
+    # capture (re-serialized into every task) — with heavy re-crawl
+    # churn the pending delete set can be large
+    dels_bc = spark.sparkContext.broadcast(dels) if dels else None
+
+    def merge_rows(batch):
+        dels_x = dels_bc.value if dels_bc is not None else {}
+        for shard, term, parts in zip(
+            *(batch.column(c).to_pylist() for c in ("shard", "term", "parts"))
+        ):
+            docs_l, tfs_l, dls_l, pos_l = [], [], [], []
+            # parts arrive unordered; segment order = doc_id order
+            # (offsets ascending, ranges disjoint)
+            for part in sorted(parts, key=lambda s: s["side"]):
+                d, t, dl, p = decode_posting_blocks(
+                    [
+                        (
+                            b["first_docid"], b["last_docid"], b["n"],
+                            b["max_tf"], b["max_impact"], b["data"],
+                        )
+                        for b in part["blocks"]
+                    ],
+                    want_positions=positions,
+                    want_doclens=True,
                 )
+                da = dels_x.get(int(part["side"]))
+                if da is not None and d.size:
+                    keep = ~np.isin(d, da)
+                    if not keep.all():
+                        if positions and p is not None:
+                            # flat positions align per-occurrence
+                            p = p[np.repeat(keep, t)]
+                        d, t, dl = d[keep], t[keep], dl[keep]
+                off = offsets[part["side"]]
+                if off:
+                    d = d + off
+                docs_l.append(d)
+                tfs_l.append(t)
+                dls_l.append(dl)
+                if positions:
+                    pos_l.append(p)
+            d = np.concatenate(docs_l)
+            if d.size == 0:
+                continue  # every posting of this term was deleted
+            t = np.concatenate(tfs_l)
+            blocks = encode_posting_blocks(
+                d, t, np.concatenate(dls_l),
+                np.concatenate(pos_l) if positions else None,
+                avg_dl, block_size=block_size, _defer_bytes=True,
             )
-            merged = grouped.mapInPandas(merge_batches, schema=POSTINGS_SCHEMA)
-            merged = merged.sortWithinPartitions("term")
-            out.write_partition(merged, "postings", "group", g)
-            written = out.read_table(spark, f"postings/group={g}")
-            gm = written.agg(
-                F.sum("df_shard").alias("n_postings"),
-                F.count("*").alias("n_terms"),
-                F.max("ctf_shard").alias("max_term_postings"),
-            ).collect()[0]
-            out.mark_group_complete(
-                g,
-                {
-                    "build_id": build_id,
-                    "n_postings": int(gm["n_postings"] or 0),
-                    "n_terms": int(gm["n_terms"] or 0),
-                    "max_term_postings": int(gm["max_term_postings"] or 0),
-                    "elapsed_sec": time.time() - t_group,
-                },
+            yield shard, term, int(d.size), int(t.sum()), blocks
+
+    try:
+        with _arrow_batch_cap(spark):
+            _write_postings(
+                out,
+                grouped,
+                merge_rows,
+                n_shards,
+                n_groups,
+                [g for g in range(n_groups) if g not in done],
+                build_id,
+                docs_per_group,
             )
-            t_group = time.time()
     finally:
-        if _prev_batch is not None:
-            spark.conf.set(
-                "spark.sql.execution.arrow.maxRecordsPerBatch", _prev_batch
-            )
-        else:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        # the deletion arrays are only read inside merge_batches, which has
+        # the deletion arrays are only read inside merge_rows, which has
         # fully executed (or failed) by now — release the broadcast payload
         # so a long-lived driver doing repeated compactions with large
         # pending-delete sets doesn't accumulate them until GC
         if dels_bc is not None:
             dels_bc.destroy()
 
-    # ---- global term stats from the merged per-shard postings -----------
-    term_stats = (
-        out.read_partitioned(spark, "postings")
-        .groupBy("term")
-        .agg(
-            F.sum("df_shard").cast("long").alias("df"),
-            F.sum("ctf_shard").cast("long").alias("ctf"),
-        )
-        # same dictionary layout as build_index (r6): term-sorted small
-        # row groups so per-query df lookups prune on min/max stats
-        .sortWithinPartitions("term")
-    )
-    out.write_table(
-        term_stats, "term_stats", options={"parquet.block.size": str(1 << 20)}
-    )
+    _write_term_stats(spark, out)
 
     # compaction preserves index features: inputs carrying a spell-assist
     # table get one rebuilt over the merged vocabulary
@@ -447,8 +365,8 @@ def merge_many_indexes(
         "build_id": build_id,
         "analyzer": analyzer,
         "avg_dl": avg_dl,
-        "num_docs": num_docs,
-        "total_tf": total_tf,
+        "num_docs": srow["num_docs"],
+        "total_tf": srow["total_tf"],
         "positions": positions,
         "merged_from": list(roots),
         "doc_id_offsets": offsets,

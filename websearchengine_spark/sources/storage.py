@@ -20,7 +20,7 @@ Tables of an index root:
     doc_terms    doc_id, term, tf
     postings     shard, term, df_shard, ctf_shard, blocks[...]   (partitioned by shard_group)
     term_stats   term, df, ctf
-    stats        num_docs, total_tf
+    stats        num_docs, total_tf, max_dl
     build_meta   per-shard-group build metrics + attempt lineage
 """
 
@@ -185,26 +185,16 @@ class IndexStorage:
         if os.path.exists(p):
             shutil.rmtree(p)
 
-    # partitioned-append used by the resumable postings build
-    def write_partition(self, df, name: str, partition_col: str, partition_val) -> None:
-        out = os.path.join(self.table_path(name), f"{partition_col}={partition_val}")
-        tmp = out + "_tmp"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(out):
-            shutil.rmtree(out)
-        os.replace(tmp, out)
-        self._seed_partitioned_schema(df.schema, name, partition_col)
-
     def write_partitions_atomic(self, df, name: str, partition_col: str, vals) -> None:
         """ONE dynamic-partitioned write committed per partition dir:
         the whole frame is written to a ``__build_tmp`` sibling, then
-        each ``col=val`` dir is moved into place (same commit unit as
-        :meth:`write_partition`, so a crash before the moves leaves the
-        live table untouched).  ``vals`` lists every expected partition
-        value; values the data did not produce get an empty dir so the
-        layout is identical to the per-partition path."""
+        each ``col=val`` dir is moved into place, so a crash before the
+        moves leaves the live table untouched and dirs outside ``vals``
+        (groups committed by an earlier attempt) are never touched.
+        ``vals`` lists every partition value being written; values the
+        data did not produce get an empty dir so every expected
+        partition exists.  The postings table's only writer
+        (build._write_postings) commits through here."""
         base = self.table_path(name)
         tmp = base + "__build_tmp"
         if os.path.exists(tmp):

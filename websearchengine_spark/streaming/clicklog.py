@@ -231,26 +231,14 @@ def pmi_suggestions(clicks: DataFrame, top_n: int = 3) -> DataFrame:
     """Q4: for each query q1, the top-N q2 by
     pmi = log(f_pair/(f_q1*f_q2) + 1), pmi > 0 (SessionHandler.java:237-292).
 
-    Pure aggregations + a ranking window; usable as-is inside
+    Aggregates the raw log into the query / pair counts and scores them
+    with pmi_suggestions_from_counts; usable as-is inside
     ``foreachBatch`` for continuous refresh.
     """
-    freq = clicks.groupBy("query").agg(F.count("*").alias("f"))
-    pairs = session_query_pairs(clicks).groupBy("q1", "q2").agg(
-        F.count("*").alias("f_pair")
-    )
-    j = (
-        pairs.join(freq.withColumnRenamed("query", "q1").withColumnRenamed("f", "f1"), "q1")
-        .join(freq.withColumnRenamed("query", "q2").withColumnRenamed("f", "f2"), "q2")
-        .withColumn(
-            "pmi", F.log(F.col("f_pair") / (F.col("f1") * F.col("f2")) + 1.0)
-        )
-        .filter(F.col("pmi") > 0.0)
-    )
-    w = Window.partitionBy("q1").orderBy(F.desc("pmi"), F.asc("q2"))
-    return (
-        j.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_n)
-        .select("q1", "q2", F.round("pmi", 9).alias("pmi"), "rn")
+    return pmi_suggestions_from_counts(
+        clicks.groupBy("query").agg(F.count("*").alias("n")),
+        session_query_pairs(clicks).groupBy("q1", "q2").agg(F.count("*").alias("n")),
+        top_n,
     )
 
 
@@ -258,14 +246,10 @@ def history_suggestions(clicks: DataFrame, query: str, top_n: int = 10) -> DataF
     """Serve-time history match (querySearch 'history' branch,
     IndexerInvertedOccurrence.java:830-840): distinct past queries whose
     text case-insensitively CONTAINS the current query, most frequent
-    first."""
-    q = query.lower()
-    return (
-        clicks.filter(F.lower(F.col("query")).contains(q))
-        .groupBy("query")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), F.asc("query"))
-        .limit(top_n)
+    first — history_suggestions_from_counts over the raw log's counts
+    (the contains filter reaches below the count aggregation)."""
+    return history_suggestions_from_counts(
+        clicks.groupBy("query").agg(F.count("*").alias("n")), query, top_n
     )
 
 
@@ -273,9 +257,9 @@ def history_suggestions(clicks: DataFrame, query: str, top_n: int = 10) -> DataF
 # Incremental suggestion count tables (round-4): the reference maintains
 # sqljet ``querycount``/``paircount`` tables updated per click
 # (LogDBManager.java:18-48), so suggestion serving reads pre-aggregated
-# counts.  pmi_suggestions/history_suggestions above recompute from the
-# raw log per call — correct, but at a 10^10-click log every suggestion
-# re-scans history.  This sink maintains the same two tables as
+# counts.  pmi_suggestions/history_suggestions above recompute the counts
+# from the raw log per call — correct, but at a 10^10-click log every
+# suggestion re-scans history.  This sink maintains the same two tables as
 # LSM-style count deltas:
 #
 #     root/
@@ -537,9 +521,9 @@ def compact_suggestion_counts(spark: SparkSession, root: str) -> None:
 def pmi_suggestions_from_counts(
     query_counts: DataFrame, pair_counts: DataFrame, top_n: int = 3
 ) -> DataFrame:
-    """pmi_suggestions computed from the PRE-AGGREGATED tables — same
-    formula and output as pmi_suggestions(raw_clicks), but the inputs
-    are O(vocabulary of queries) rows instead of O(clicks)."""
+    """The PMI scorer, over PRE-AGGREGATED (query, n) and (q1, q2, n)
+    tables: O(vocabulary of queries) rows instead of O(clicks).
+    pmi_suggestions(raw_clicks) aggregates and calls this."""
     freq = query_counts.select("query", F.col("n").alias("f"))
     pairs = pair_counts.select("q1", "q2", F.col("n").alias("f_pair"))
     j = (
@@ -567,8 +551,9 @@ def pmi_suggestions_from_counts(
 def history_suggestions_from_counts(
     query_counts: DataFrame, query: str, top_n: int = 10
 ) -> DataFrame:
-    """history_suggestions served from ``querycount`` — the reference's
-    LogDBManager read path (counts, not raw log)."""
+    """The history scorer, served from ``querycount`` — the reference's
+    LogDBManager read path (counts, not raw log).
+    history_suggestions(raw_clicks) aggregates and calls this."""
     q = query.lower()
     return (
         query_counts.filter(F.lower(F.col("query")).contains(q))

@@ -302,6 +302,52 @@ def read_tombstones(
     }
 
 
+def _write_tombstones(
+    spark: SparkSession, root: str, segments: list[dict], urls: DataFrame,
+    tomb_rel: str,
+) -> tuple[dict, int]:
+    """Tombstone the ``segments``' versions of ``urls`` (a broadcast
+    one-column frame) under ``tomb_rel``.  The one tombstone writer of
+    re-crawl upserts and explicit deletes.
+
+    One semi-join of the urls against each segment's docs table, written
+    partitioned by seg so per-segment search reads ONLY its own subdirs
+    (no whole-backlog rescan per segment).  The write overwrites
+    (idempotent under crash-and-redeliver) and is published only by the
+    caller's catalog write: readers see just the files
+    ``tombstone_files`` lists, so a crash before it leaves the old
+    versions visible (not vanished).  Returns (catalog, hit count): the
+    catalog is re-read AFTER the job, with this file's entry replacing
+    any earlier one (a legacy-root absorb of a crashed attempt's write,
+    count unknown); a file with no hits is removed instead of listed."""
+    tomb_path = os.path.join(root, tomb_rel)
+    hits = _union_all(
+        [
+            IndexStorage(os.path.join(root, seg["dir"]))
+            .read_table(spark, "docs")
+            .join(urls, "url", "semi")
+            .select(F.lit(seg["dir"]).alias("seg"), "doc_id")
+            for seg in segments
+        ]
+    ).persist()
+    try:
+        n = hits.count()
+        if n:
+            hits.write.mode("overwrite").partitionBy("seg").parquet(tomb_path)
+    finally:
+        hits.unpersist()
+    cat = read_live_catalog(root)
+    _ensure_tombstone_listing(cat, root)
+    cat["tombstone_files"] = [
+        f for f in cat["tombstone_files"] if f["file"] != tomb_rel
+    ]
+    if n:
+        cat["tombstone_files"].append({"file": tomb_rel, "n": n})
+    else:
+        shutil.rmtree(tomb_path, ignore_errors=True)
+    return cat, n
+
+
 def apply_pages_batch(
     spark: SparkSession,
     pages: DataFrame,
@@ -380,41 +426,11 @@ def apply_pages_batch(
 
     n_tombstoned = 0
     if upsert and cat["segments"]:
-        new_urls = F.broadcast(store.read_table(spark, "docs").select("url"))
-        hits = None
-        for seg in cat["segments"]:
-            seg_docs = IndexStorage(
-                os.path.join(root, seg["dir"])
-            ).read_table(spark, "docs")
-            h = seg_docs.join(new_urls, "url", "semi").select(
-                F.lit(seg["dir"]).alias("seg"), "doc_id"
-            )
-            hits = h if hits is None else hits.unionByName(h)
-        # overwrite = idempotent under crash-and-redeliver; published by
-        # the (atomic) catalog write below, same as the segment itself —
-        # readers only see tombstone files the catalog lists, so a crash
-        # here leaves the old versions visible (not vanished) until
-        # redelivery republishes file + segment together
-        tomb_rel = os.path.join(TOMBSTONES_DIR, f"batch-{batch_id:09d}")
-        tomb_path = os.path.join(root, tomb_rel)
-        hits = hits.persist()
-        n_tombstoned = hits.count()
-        # a legacy-root redelivery may have absorbed THIS batch's file
-        # (written by the crashed attempt) with an unknown count — drop
-        # that entry before appending the authoritative one
-        cat["tombstone_files"] = [
-            f for f in cat.get("tombstone_files", []) if f["file"] != tomb_rel
-        ]
-        if n_tombstoned:
-            # partitioned by seg so per-segment search reads ONLY its
-            # own subdirs (no whole-backlog rescan per segment)
-            hits.write.mode("overwrite").partitionBy("seg").parquet(tomb_path)
-            cat["tombstone_files"].append(
-                {"file": tomb_rel, "n": int(n_tombstoned)}
-            )
-        else:
-            shutil.rmtree(tomb_path, ignore_errors=True)
-        hits.unpersist()
+        cat, n_tombstoned = _write_tombstones(
+            spark, root, cat["segments"],
+            F.broadcast(store.read_table(spark, "docs").select("url")),
+            os.path.join(TOMBSTONES_DIR, f"batch-{batch_id:09d}"),
+        )
     if not cat["config"]:
         cat["config"] = dict(fmt_kwargs)
         # pin the format invariants even when left at build_index defaults
@@ -461,49 +477,23 @@ def delete_urls(
         return 0
     if not cat["segments"]:
         raise ValueError(f"live index at {root} has no segments")
-    url_df = F.broadcast(
-        spark.createDataFrame([(u,) for u in urls], "url string")
+    cat, n = _write_tombstones(
+        spark, root, cat["segments"],
+        F.broadcast(spark.createDataFrame([(u,) for u in urls], "url string")),
+        os.path.join(TOMBSTONES_DIR, f"op-{op_id:09d}"),
     )
-    hits = None
-    for seg in cat["segments"]:
-        seg_docs = IndexStorage(os.path.join(root, seg["dir"])).read_table(
-            spark, "docs"
-        )
-        h = seg_docs.join(url_df, "url", "semi").select(
-            F.lit(seg["dir"]).alias("seg"), "doc_id"
-        )
-        hits = h if hits is None else hits.unionByName(h)
-    tomb_rel = os.path.join(TOMBSTONES_DIR, f"op-{op_id:09d}")
-    tomb_path = os.path.join(root, tomb_rel)
-    hits = hits.persist()
-    n = hits.count()
-    if n:
-        hits.write.mode("overwrite").partitionBy("seg").parquet(tomb_path)
-    hits.unpersist()
-
-    cat = read_live_catalog(root)
-    _ensure_tombstone_listing(cat, root)
-    # the absorb above scans the dir AFTER this op's file landed — drop
-    # any unknown-count entry for it before appending the counted one
-    cat["tombstone_files"] = [
-        f for f in cat["tombstone_files"] if f["file"] != tomb_rel
-    ]
-    if n:
-        cat["tombstone_files"].append({"file": tomb_rel, "n": int(n)})
-    else:
-        shutil.rmtree(tomb_path, ignore_errors=True)
     cat.setdefault("applied_ops", []).append(op_id)
     cat["lineage"].append(
         {
             "event": "urls_deleted",
             "op_id": op_id,
             "n_urls": len(urls),
-            "tombstoned": int(n),
+            "tombstoned": n,
             "ts": time.time(),
         }
     )
     _write_live_catalog(root, cat)
-    return int(n)
+    return n
 
 
 def start_index_ingest(
