@@ -58,3 +58,18 @@ PHRASE_QUERIES = [
     'new "york" city',
     '"web search" google',
 ]
+
+
+def count_jobs(spark, fn):
+    """(fn(), the number of Spark jobs it started), counted by the
+    StatusTracker over a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

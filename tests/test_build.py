@@ -116,6 +116,31 @@ def test_resume_skips_completed_groups(spark, corpus_pdf, tmp_path):
     assert att[-1]["resumed_groups"] == [0]
 
 
+def test_build_leaves_session_conf_alone(spark, corpus_pdf, tmp_path, monkeypatch):
+    """build_index never toggles adaptive execution on the shared session
+    (a query planned while a build runs would see it off), and its doc
+    ids stay the dense url rank."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from websearchengine_spark.operators.build import build_index
+
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def record(self, key, value):
+        calls.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", record)
+    root = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(corpus_pdf), root, n_shards=4, n_groups=2)
+    assert not [k for k in calls if "adaptive.enabled" in k], calls
+    docs = IndexStorage(root).read_table(spark, "docs").orderBy("doc_id").collect()
+    urls = [r["url"] for r in docs]
+    assert [r["doc_id"] for r in docs] == list(range(len(corpus_pdf)))
+    assert urls == sorted(urls)
+
+
 def test_text_column_matches_pinned_extractor(corpus_pdf):
     """Byte-identity: pages.text == extractor(pages.html) per url."""
     from websearchengine_spark.functions.extract import extract_text_and_title

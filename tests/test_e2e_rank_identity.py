@@ -233,3 +233,24 @@ def test_serve_search_renders_both_formats(spark, built_index):
         spark, built_index, "query=web+search&ranker=bm25&num=3&format=html"
     )
     assert html.startswith("<!DOCTYPE html>") and "{{" not in html
+
+
+class TestSparkSide:
+    """The bm25 tests above route through wand_topk, which serves these
+    small corpora in-process; rerun them with the gate forced to the
+    Spark side so both places stay rank-identical."""
+
+    @pytest.fixture(autouse=True)
+    def _spark_side(self, monkeypatch):
+        from websearchengine_spark.operators import topk
+
+        monkeypatch.setattr(topk, "INPROC_MAX_POSTINGS", 0)
+
+    test_bm25_rank_identity = staticmethod(test_bm25_rank_identity)
+    test_search_front_door_routes_both_paths = staticmethod(
+        test_search_front_door_routes_both_paths
+    )
+    test_search_uri_dispatch = staticmethod(test_search_uri_dispatch)
+    test_serve_search_renders_both_formats = staticmethod(
+        test_serve_search_renders_both_formats
+    )

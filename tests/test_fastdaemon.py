@@ -87,3 +87,18 @@ def test_get_spark_wires_fastdaemon_for_local_master(spark):
     )
     pyzip = spark.conf.get("spark.executorEnv.PYTHONPATH")
     assert pyzip.endswith("websearchengine_spark.zip") and os.path.exists(pyzip)
+
+
+def test_pyfiles_zip_leaves_no_tmp_on_error(tmp_path, monkeypatch):
+    """A failure while zipping the package removes the half-written
+    ``<zip>.<pid>.tmp`` and re-raises; the target is never created."""
+    from websearchengine_spark.session import make_pyfiles_zip
+
+    def fail(self, *a, **k):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(zipfile.ZipFile, "write", fail)
+    out = str(tmp_path / "pkg.zip")
+    with pytest.raises(OSError, match="disk full"):
+        make_pyfiles_zip(out)
+    assert os.listdir(tmp_path) == []

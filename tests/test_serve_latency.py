@@ -66,6 +66,18 @@ def test_warm_search_is_single_action(latency_srv, monkeypatch):
     assert counter.n <= 2
 
 
+def test_warm_gated_search_runs_no_spark_job(spark, latency_srv):
+    """A warm bm25 /search under the in-process budget answers from the
+    serving process: zero Spark jobs around the whole handler."""
+    from tests.conftest import count_jobs
+
+    q = "query=web+search&ranker=bm25&num=5"
+    cold = latency_srv._handle("/search", q)
+    warm, jobs = count_jobs(spark, lambda: latency_srv._handle("/search", q))
+    assert warm == cold
+    assert jobs == 0, f"warm gated /search ran {jobs} Spark jobs"
+
+
 def test_warm_prediction_is_single_action(latency_srv, monkeypatch):
     q = "query=wes+search"
     cold = latency_srv._handle("/prediction", q)

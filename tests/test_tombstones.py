@@ -3,11 +3,14 @@ delete path).
 
 The load-bearing claims:
 
-  * search_live / search_live_batch NEVER materialize the delete set on
-    the driver: tombstones flow as (shard, doc_id) parquet rows
-    cogrouped with each segment's postings (topk.wand_topk(exclude_df=))
-    — pinned by monkeypatching the driver-collecting read_tombstones to
-    explode, and by running with a 10^5-row tombstone backlog.
+  * the Spark side of search_live / search_live_batch NEVER
+    materializes the delete set on the driver: tombstones flow as
+    (shard, doc_id) parquet rows cogrouped with each segment's postings
+    (topk.wand_topk(exclude_df=)) — pinned by monkeypatching the
+    driver-side readers to explode, and by running with a tombstone
+    backlog over the in-process budget (topk.INPROC_MAX_POSTINGS, which
+    the pending count counts toward).  Under that budget search_live
+    reads a segment's tombstones in-process, with the same results.
   * tombstone VISIBILITY is catalog-gated: a tombstone parquet whose
     writing batch crashed before the catalog publish is invisible (the
     superseded urls keep serving their old versions instead of
@@ -26,6 +29,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import count_jobs
+from websearchengine_spark.operators import topk
+from websearchengine_spark.sources.storage import IndexStorage
 from websearchengine_spark.streaming import ingest
 from websearchengine_spark.streaming.ingest import (
     COMPACTION_OVERDUE_TOMBSTONES,
@@ -75,6 +81,7 @@ def _no_driver_tombstones(monkeypatch):
         )
 
     monkeypatch.setattr(ingest, "read_tombstones", boom)
+    monkeypatch.setattr(ingest, "_tombstone_ids", boom)
 
 
 def test_search_never_driver_materializes_tombstones(
@@ -85,6 +92,7 @@ def test_search_never_driver_materializes_tombstones(
         (r["url"], round(r["score"], 9))
         for r in search_live(spark, root, "fresh recrawl", k=50).collect()
     ]
+    monkeypatch.setattr(topk, "INPROC_MAX_POSTINGS", 0)  # the Spark side
     _no_driver_tombstones(monkeypatch)
     got_rows = search_live(spark, root, "fresh recrawl", k=50).collect()
     got = [(r["url"], round(r["score"], 9)) for r in got_rows]
@@ -103,15 +111,15 @@ def test_search_never_driver_materializes_tombstones(
 def test_large_tombstone_backlog_stays_off_driver(
     spark, upserted, monkeypatch
 ):
-    """10^5 synthetic tombstones (ids beyond the corpus: exclusion
-    no-ops) ride the executor path; results are unchanged and the gauge
-    flips."""
+    """A backlog of synthetic tombstones (ids beyond the corpus:
+    exclusion no-ops) over the in-process budget rides the executor
+    path; results are unchanged and the gauge flips."""
     root = upserted["root"]
     want = [
         (r["url"], round(r["score"], 9))
         for r in search_live(spark, root, "data mining", k=20).collect()
     ]
-    n_big = 100_000
+    n_big = topk.INPROC_MAX_POSTINGS
     big = spark.range(n_big).select(
         F.lit("delta-000000000").alias("seg"),
         (F.col("id") + 10_000_000).cast("long").alias("doc_id"),
@@ -341,3 +349,44 @@ def test_legacy_crash_redelivery_does_not_duplicate_listing(
     assert len(batch_entries) == 1
     assert batch_entries[0]["n"] == 15  # the counted entry, not n=None
     assert pending_tombstones(root) == 15  # gauge not poisoned by None
+
+
+def test_live_gate_sides_identical(spark, corpus_pdf, tmp_path, monkeypatch):
+    """A tombstoned 2-segment live query returns the same doc ids and
+    scores with every segment in-process (zero Spark jobs), every
+    segment on the Spark side, and one segment on each side.  The
+    re-crawled versions repeat the query words, so both segments match
+    and the superseded versions must stay masked."""
+    by_url, re = _recrawled(corpus_pdf, 40, 70, tag="data mining recrawl")
+    root = str(tmp_path / "live")
+    apply_pages_batch(
+        spark, spark.createDataFrame(by_url), 0, root,
+        n_shards=N_SHARDS, n_groups=2,
+    )
+    apply_pages_batch(spark, spark.createDataFrame(re), 1, root)
+    assert pending_tombstones(root) == 30
+    # delta-000000001 costs its df sum alone (no tombstones of its own);
+    # delta-000000000 costs more (larger df plus the 30 pending)
+    delta1 = IndexStorage(os.path.join(root, "delta-000000001"))
+    cheap = topk._prepare(
+        spark, delta1, ["data mining"], None, None, None, None
+    ).postings
+    for query in ("data mining", '"data mining"'):
+        got = {}
+        for side, cap in (("inproc", 10**12), ("spark", 0), ("mixed", cheap)):
+            monkeypatch.setattr(topk, "INPROC_MAX_POSTINGS", cap)
+            got[side] = count_jobs(
+                spark,
+                lambda: [
+                    (r["doc_id"], r["url"], r["score"])
+                    for r in search_live(spark, root, query, k=50).collect()
+                ],
+            )
+        rows, jobs = got["inproc"]
+        assert rows and jobs == 0, query
+        assert got["spark"][0] == rows and got["spark"][1] > 0, query
+        assert got["mixed"][0] == rows and got["mixed"][1] > 0, query
+        # each re-crawled url answers once, from its new version
+        urls = [u for _, u, _ in rows]
+        assert len(urls) == len(set(urls))
+        assert {u for d, u, _ in rows if d >= 200} == set(re["url"])

@@ -5,10 +5,12 @@ exhaustive path), plus direct kernel tests proving block skipping."""
 import numpy as np
 import pytest
 
-from tests.conftest import REFERENCE_QUERIES
+from tests.conftest import REFERENCE_QUERIES, count_jobs
 from websearchengine_spark.functions.codec import encode_posting_blocks
+from websearchengine_spark.operators import topk
 from websearchengine_spark.operators.query import run_query
 from websearchengine_spark.operators.topk import shard_bm25_topk, wand_topk
+from websearchengine_spark.sources.storage import IndexStorage
 
 
 @pytest.mark.parametrize("query", REFERENCE_QUERIES)
@@ -39,6 +41,40 @@ def test_wand_phrase_falls_back(spark, built_index, oracle_index):
 def test_wand_unknown_term_empty(spark, built_index):
     assert wand_topk(spark, built_index, "zzzznope").count() == 0
     assert wand_topk(spark, built_index, "").count() == 0
+
+
+@pytest.mark.parametrize("query", ["web search", '"data mining"'])
+def test_gate_sides_identical(spark, built_index, monkeypatch, query):
+    """The same query forced to each side of the in-process gate returns
+    the same doc ids, scores and column types; the in-process side runs
+    zero Spark jobs, the Spark side runs its kernel job."""
+    got = {}
+    for side, cap in (("inproc", 10**12), ("spark", 0)):
+        monkeypatch.setattr(topk, "INPROC_MAX_POSTINGS", cap)
+
+        def run():
+            df = wand_topk(spark, built_index, query, k=10)
+            return df.schema, [(r["doc_id"], r["score"]) for r in df.collect()]
+
+        got[side] = count_jobs(spark, run)
+    (schema_in, rows_in), jobs_in = got["inproc"]
+    (schema_sp, rows_sp), jobs_sp = got["spark"]
+    assert rows_in and rows_in == rows_sp
+    assert schema_in == schema_sp
+    assert jobs_in == 0 and jobs_sp > 0
+
+
+def test_gate_boundary_is_the_df_sum(spark, built_index, monkeypatch):
+    """A query whose df sum equals the budget runs in-process; one
+    posting over it runs Spark jobs."""
+    store = IndexStorage(built_index)
+    sc = topk._prepare(spark, store, ["web search"], None, None, None, None)
+    for cap, spark_side in ((sc.postings, False), (sc.postings - 1, True)):
+        monkeypatch.setattr(topk, "INPROC_MAX_POSTINGS", cap)
+        _rows, jobs = count_jobs(
+            spark, lambda: wand_topk(spark, built_index, "web search").collect()
+        )
+        assert (jobs > 0) == spark_side, (cap, jobs)
 
 
 def _mk_lists(avg_dl=10.0):
@@ -206,3 +242,24 @@ def test_hybrid_head_blocks_exist_and_rank_identity(spark, corpus_pdf, oracle_in
     ]
     want_ph = [d for d, _ in oracle_index.query('"data mining"', "comprehensive", 10)]
     assert got_ph == want_ph
+
+
+class TestSparkSide:
+    """The oracle rank-identity tests above, rerun with the gate forced
+    to the Spark side: these corpora are far under INPROC_MAX_POSTINGS,
+    so by default they exercise only the in-process side."""
+
+    @pytest.fixture(autouse=True)
+    def _spark_side(self, monkeypatch):
+        monkeypatch.setattr(topk, "INPROC_MAX_POSTINGS", 0)
+
+    test_wand_matches_oracle_and_dataframe_path = staticmethod(
+        test_wand_matches_oracle_and_dataframe_path
+    )
+    test_wand_phrase_falls_back = staticmethod(test_wand_phrase_falls_back)
+    test_serve_path_fine_blocks_rank_identity = staticmethod(
+        test_serve_path_fine_blocks_rank_identity
+    )
+    test_hybrid_head_blocks_exist_and_rank_identity = staticmethod(
+        test_hybrid_head_blocks_exist_and_rank_identity
+    )

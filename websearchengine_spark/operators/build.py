@@ -171,24 +171,35 @@ def analyze_pages(pages: DataFrame, analyzer: str = "reference") -> DataFrame:
     return pages.select(*cols).mapInPandas(run, schema=ANALYZED_SCHEMA)
 
 
-def _rank_urls_handle(
-    urls: DataFrame, n_parts: int | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """rank_urls plus the persisted intermediate, so the caller can
-    unpersist it once the ranks have been consumed (build_index does,
-    right after the analyzed stream is materialized)."""
+def rank_urls(urls: DataFrame, n_parts: int | None = None) -> DataFrame:
+    """(url, doc_id): dense rank of url in global sort order.
+
+    Scalable two-phase: range-partition by url, local row_number, then
+    add broadcast per-partition offsets.  (A global ``row_number() over
+    (order by url)`` funnels everything through one task; never do that
+    at 10^12 rows.)  SURVEY.md §7.3.
+
+    The range-partitioned urls are LOCALLY CHECKPOINTED (lazily) rather
+    than persisted: the count pass then reads a plain RDD scan, which
+    adaptive execution leaves alone, so materializing it and counting
+    is one job after the range-bounds sample and the shuffle map stage
+    — with no session conf touched, so concurrent queries keep their
+    plans.  (A persisted frame plans its exchange adaptively and the
+    count pass adds a cache-stage job.)  The checkpoint blocks live in
+    executor storage until the frame is garbage-collected; like any
+    local checkpoint they do not survive the loss of their executor.
+    """
     if n_parts is None:
         n_parts = max(8, urls.sparkSession.sparkContext.defaultParallelism)
     parted = urls.select("url").repartitionByRange(n_parts, "url").withColumn(
         "_pid", F.spark_partition_id()
-    )
-    parted = parted.persist()
+    ).localCheckpoint(eager=False)
 
-    # per-partition counts in the SAME job that materializes the cache:
-    # mapInPandas sees one partition per task, so summing batch lengths
-    # needs no groupBy exchange (the old groupBy(_pid) agg cost two AQE
-    # stage jobs for numbers the scan already knows — r6).  Arrow-batched,
-    # no per-row Python work.
+    # per-partition counts in the SAME job that materializes the
+    # checkpoint: mapInPandas sees one partition per task, so summing
+    # batch lengths needs no groupBy exchange (the old groupBy(_pid) agg
+    # cost two AQE stage jobs for numbers the scan already knows — r6).
+    # Arrow-batched, no per-row Python work.
     def _part_counts(batches):
         n, pid = 0, None
         for pdf in batches:
@@ -199,42 +210,21 @@ def _rank_urls_handle(
         if pid is not None:
             yield pd.DataFrame({"_pid": [pid], "cnt": [n]})
 
-    # AQE adds nothing here (explicit partition count, no joins) but
-    # materializes each exchange as its own job; off for just this
-    # collect, the count pass is one job instead of three
-    spark = urls.sparkSession
-    _prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        counts = {
-            r["_pid"]: r["cnt"]
-            for r in parted.mapInPandas(_part_counts, "_pid int, cnt long").collect()
-        }
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", _prev_aqe)
+    counts = {
+        r["_pid"]: r["cnt"]
+        for r in parted.mapInPandas(_part_counts, "_pid int, cnt long").collect()
+    }
     offsets, acc = {}, 0
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
     offs = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
     w = Window.partitionBy("_pid").orderBy("url")
-    out = (
+    return (
         parted.withColumn("_rn", F.row_number().over(w))
         .withColumn("doc_id", (offs[F.col("_pid")] + F.col("_rn") - 1).cast("long"))
         .drop("_pid", "_rn")
     )
-    return out, parted
-
-
-def rank_urls(urls: DataFrame, n_parts: int | None = None) -> DataFrame:
-    """(url, doc_id): dense rank of url in global sort order.
-
-    Scalable two-phase: range-partition by url, local row_number, then
-    add broadcast per-partition offsets.  (A global ``row_number() over
-    (order by url)`` funnels everything through one task; never do that
-    at 10^12 rows.)  SURVEY.md §7.3.
-    """
-    return _rank_urls_handle(urls, n_parts)[0]
 
 
 def assign_doc_ids(analyzed: DataFrame, n_parts: int | None = None) -> DataFrame:
@@ -549,7 +539,7 @@ def build_index(
         # scan); joining it to the UDF output avoids both a second UDF
         # evaluation (range-partitioner sampling) and a heavy-side shuffle
         # (the id side broadcasts)
-        ids, ids_parted = _rank_urls_handle(pages.select("url"))
+        ids = rank_urls(pages.select("url"))
         analyzed = analyze_pages(pages, analyzer=analyzer).join(ids, "url")
         analyzed = analyzed.persist()
         _mark("setup")
@@ -577,7 +567,6 @@ def build_index(
             ).hint("rebalance"),
             n_shards, n_groups,
         )
-        ids_parted.unpersist(blocking=False)
         _mark("analyze_and_docs")
 
         # ---- optional forward-index tables (A1 / S7) ----------------------

@@ -3,17 +3,28 @@
 intersection over per-partition index shards followed by a global top-k
 merge").
 
-Physical shape (a single query is a batch of one):
+One kernel, two places.  After the dictionary probe, wand_topk weighs
+the query terms' df sum against INPROC_MAX_POSTINGS and runs ONE
+complete evaluation in exactly one place:
 
-    postings (doc-sharded) filtered to the queries' terms  [parquet pushdown]
-      -> groupBy(shard).applyInArrow(kernel)               [one task per shard]
-           kernel: per query, rarest-first block-skip intersection,
-           phrase adjacency, tombstone mask, vectorized BM25
-           -> per-shard, per-query top-k
-      -> global merge                                      [wand_topk:
-           orderBy(score desc, doc_id asc).limit(k);        wand_topk_batch:
-           rank window per query]
-      -> broadcast join docs for url/title                 [J3]
+    in process (df sum <= INPROC_MAX_POSTINGS, zero Spark jobs):
+      postings filtered to the query's terms  [pyarrow scan, row-group pruned]
+        -> kernel per shard                      [shard_bm25_topk, in the driver]
+        -> merge (score desc, doc_id asc)[:k]
+        -> docs lookup of the k winners           [storage.lookup_rows]
+        -> spark.createDataFrame(pyarrow.Table)   [a local relation]
+
+    in Spark (larger queries, exclude_df, and every wand_topk_batch;
+    a single query is a batch of one):
+      postings (doc-sharded) filtered to the queries' terms  [parquet pushdown]
+        -> groupBy(shard).applyInArrow(kernel)               [one task per shard]
+             kernel: per query, rarest-first block-skip intersection,
+             phrase adjacency, tombstone mask, vectorized BM25
+             -> per-shard, per-query top-k
+        -> global merge                                      [wand_topk:
+             orderBy(score desc, doc_id asc).limit(k);        wand_topk_batch:
+             rank window per query]
+        -> broadcast join docs for url/title                 [J3]
 
 The kernel is the doc-at-a-time galloping intersection of the reference
 (IndexerInvertedCompressed.java:438-462) re-expressed for a columnar
@@ -34,6 +45,7 @@ tests at multiple shard counts).
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -276,23 +288,48 @@ def _df_lookup(
     return {t: known[t] for t in terms if known[t] is not None}
 
 
-def _shard_topk(
+# The one gate between the two places the kernel runs.  A wand_topk
+# query whose terms' df sum (on a live segment with tombstones, plus the
+# catalog's pending tombstone count) is at most this runs in the calling
+# process: one pyarrow scan of its postings, the kernel per shard, a
+# driver-side merge and metadata lookup — zero Spark jobs.  A larger one
+# runs the kernel in one Spark task per shard.  In-process cost grows by
+# ~1 us per posting; the Spark side pays ~0.5 s of fixed job cost per
+# query however many cores run it, so below this bound the driver cannot
+# lose even to a fully parallel Spark side.  Measured on 4 cores
+# (CHANGES.md): in-process wins everywhere at sf0.1 and up to ~0.9M
+# postings at the sf1 shape.
+INPROC_MAX_POSTINGS = 500_000
+
+
+# (doc_ids, scores) of an index where the query cannot match
+NO_HITS = (np.empty(0, np.int64), np.empty(0, np.float64))
+
+
+class _Scoring(NamedTuple):
+    """A resolved query batch: the kernel's specs, idf and avg_dl, the
+    terms whose postings it reads, and their df sum in this index (the
+    work the gate weighs)."""
+
+    specs: list[tuple[int, dict[str, float], list[tuple[str, ...]]]]
+    idf: dict[str, float]
+    avg_dl: float
+    terms: list[str]
+    postings: int
+
+
+def _prepare(
     spark: SparkSession,
     store: IndexStorage,
     queries: list[str],
-    k: int,
     corpus_stats: tuple[int, int] | None,
     df_override: dict[str, int] | None,
     local_df: dict[str, int] | None,
-    exclude_df: DataFrame | None,
     stats_cache: dict | None,
-) -> DataFrame | None:
-    """The Spark shell shared by wand_topk and wand_topk_batch: analyze
-    ``queries``, resolve df/idf, scan the postings of every query term
-    once and run shard_bm25_topk in one task per shard.  Returns the
-    per-shard top-k as (qid, doc_id, score) rows, qid indexing
-    ``queries`` — or None, with no Spark job, when no query can match.
-    The parameters are documented on wand_topk."""
+) -> _Scoring | None:
+    """Analyze ``queries`` and resolve df/idf — driver-side, no Spark
+    job on a warm ``stats_cache`` or with ``local_df``.  None when no
+    query can match.  The parameters are documented on wand_topk."""
     analyzer = index_analyzer(store)
     specs: list[tuple[int, dict[str, float], list[tuple[str, ...]]]] = []
     for qid, q in enumerate(queries):
@@ -329,6 +366,21 @@ def _shard_topk(
         return None
     idf = _idf_table(num_docs, df_by_term, df_override)
     terms = sorted({t for _, qw, _ in specs for t in qw})
+    return _Scoring(specs, idf, avg_dl, terms, sum(df_by_term[t] for t in terms))
+
+
+def _shard_topk(
+    spark: SparkSession,
+    store: IndexStorage,
+    sc: _Scoring,
+    k: int,
+    exclude_df: DataFrame | None,
+) -> DataFrame:
+    """The Spark side, shared by wand_topk and wand_topk_batch: scan the
+    postings of every query term once and run shard_bm25_topk in one
+    task per shard.  Returns the per-shard top-k as (qid, doc_id, score)
+    rows, qid indexing the queries ``sc`` was prepared from."""
+    specs, idf, avg_dl = sc.specs, sc.idf, sc.avg_dl
 
     # kernels run as GROUPED ARROW udfs (r6): the blocks column is a
     # list<struct<..., binary>>; the pandas path materialized it as an
@@ -364,7 +416,7 @@ def _shard_topk(
 
     postings = (
         store.read_partitioned(spark, "postings")
-        .filter(F.col("term").isin(terms))
+        .filter(F.col("term").isin(sc.terms))
         .select("shard", "term", "blocks")
         .groupBy("shard")
     )
@@ -374,6 +426,86 @@ def _shard_topk(
     return postings.cogroup(_exclude_by_shard(exclude_df)).applyInArrow(
         kernel_cogroup, schema=schema
     )
+
+
+def _local_topk(
+    store: IndexStorage, sc: _Scoring, k: int, exclude: np.ndarray | None = None
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """The in-process side for ONE query: the same kernel per shard over
+    one pyarrow scan of the query terms' postings (storage.lookup_rows:
+    term-sorted row groups, so the scan reads about one row group per
+    term and group).  Returns every shard's top-k as (doc_ids, scores)
+    for _local_result to merge, or None when the pyarrow path is
+    unavailable (the caller runs the Spark side instead).  ``exclude``:
+    doc_ids masked before scoring, as on the Spark side."""
+    rows = store.lookup_rows(
+        "postings", "term", sc.terms, columns=["shard", "term", "blocks"]
+    )
+    if rows is None:
+        return None
+    by_shard: dict[int, dict[str, list]] = {}
+    for r in rows:
+        by_shard.setdefault(r["shard"], {})[r["term"]] = _rows_to_blocks(r["blocks"])
+    tops = [
+        shard_bm25_topk(term_lists, sc.specs, sc.idf, sc.avg_dl, k, exclude=exclude)
+        for term_lists in by_shard.values()
+    ]
+    return (
+        np.concatenate([NO_HITS[0]] + [t[1] for t in tops]),
+        np.concatenate([NO_HITS[1]] + [t[2] for t in tops]),
+    )
+
+
+def _local_result(
+    spark: SparkSession,
+    hits: list[tuple[IndexStorage, int, np.ndarray, np.ndarray]],
+    k: int,
+    docs_join: bool,
+) -> DataFrame:
+    """Merge in-process top-ks into ONE local relation — zero Spark jobs
+    to build or to collect.  ``hits``: per index, (store, doc_id offset,
+    local doc_ids, scores) as _local_topk returns them; the result keeps
+    the k best on (score desc, doc_id asc) over the offset ids.  With
+    ``docs_join`` each winner's metadata is looked up driver-side in its
+    own index and the columns are RESULT_COLS with the docs table's own
+    types, nullable as Spark reads parquet (what the Spark side's docs
+    join yields); without it, bare (doc_id, score)."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    owner = np.concatenate([np.full(h[2].size, i) for i, h in enumerate(hits)])
+    gids = np.concatenate([h[2] + h[1] for h in hits])
+    scores = np.concatenate([h[3] for h in hits])
+    order = np.lexsort((gids, -scores))[:k]
+    owner, gids, scores = owner[order], gids[order], scores[order]
+    top = list(zip(gids.tolist(), scores.tolist()))
+    if not docs_join:
+        schema = pa.schema([("doc_id", pa.int64()), ("score", pa.float64())])
+        rows = [{"doc_id": g, "score": sc} for g, sc in top]
+    else:
+        docs = hits[0][0].table_path("docs")
+        types = pads.dataset(docs, format="parquet").schema
+        schema = pa.schema(
+            [
+                (c, pa.float64() if c == "score" else types.field(c).type)
+                for c in RESULT_COLS
+            ]
+        )
+        meta: dict[int, dict] = {}
+        for i, (store, off, _d, _s) in enumerate(hits):
+            mine = gids[owner == i] - off
+            if not mine.size:
+                continue
+            found = store.lookup_rows(
+                "docs", "doc_id", mine.tolist(),
+                columns=[c for c in RESULT_COLS if c != "score"],
+            )
+            if found is None:
+                raise OSError(f"cannot read {store.table_path('docs')}")
+            meta.update({r["doc_id"] + off: r for r in found})
+        # inner-join semantics: a doc missing from docs is dropped
+        rows = [{**meta[g], "doc_id": g, "score": sc} for g, sc in top if g in meta]
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=schema))
 
 
 def wand_topk(
@@ -389,6 +521,12 @@ def wand_topk(
     stats_cache: dict | None = None,
 ) -> DataFrame:
     """BM25 top-k over the sharded index via the block-max kernel.
+
+    One complete evaluation runs in exactly one of two places, chosen
+    after the dictionary probe: in this process when the query terms'
+    df sum is at most INPROC_MAX_POSTINGS (and no ``exclude_df`` is
+    given), else in one Spark task per shard.  Both return the same
+    rows with the same column types.
 
     Phrase tokens are supported: positions are decoded in the kernel for
     the phrase terms only, and candidates are filtered to docs where the
@@ -423,27 +561,41 @@ def wand_topk(
     the exclusion set reaches each shard's kernel through the shuffle —
     never collected to the driver, never serialized into task closures
     (10^8 pending tombstones cost one small parquet-scan+shuffle, not
-    driver memory).  Live-index search (streaming/ingest.py) uses it:
-    deletes are invisible at query time and physically removed at
-    compaction (Lucene-style visibility).
+    driver memory).  It always takes the Spark side; live-index search
+    (streaming/ingest.py) reads a small tombstone set in-process itself
+    under the same gate.
 
     Returns the same columns as query.run_query, ordered by
     (score desc, doc_id asc)."""
     store = IndexStorage(index_root)
-    docs = store.read_table(spark, "docs")
-    per_shard = _shard_topk(
-        spark, store, [query], k, corpus_stats, df_override, local_df,
-        exclude_df, stats_cache,
+    sc = _prepare(
+        spark, store, [query], corpus_stats, df_override, local_df, stats_cache
     )
-    if per_shard is None:
-        if docs_join:
-            return docs.limit(0).withColumn("score", F.lit(0.0)).select(*RESULT_COLS)
-        return spark.createDataFrame([], "doc_id long, score double")
-    topk = per_shard.select("doc_id", "score").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    ).limit(k)
+    if sc is None:
+        return _local_result(spark, [(store, 0, *NO_HITS)], k, docs_join)
+    if exclude_df is None and sc.postings <= INPROC_MAX_POSTINGS:
+        hits = _local_topk(store, sc, k)
+        if hits is not None:
+            return _local_result(spark, [(store, 0, *hits)], k, docs_join)
+    return _spark_topk(spark, store, sc, k, docs_join, exclude_df)
+
+
+def _spark_topk(
+    spark: SparkSession,
+    store: IndexStorage,
+    sc: _Scoring,
+    k: int,
+    docs_join: bool,
+    exclude_df: DataFrame | None,
+) -> DataFrame:
+    """wand_topk's Spark side: the per-shard kernel tasks, a bounded
+    (score desc, doc_id asc) merge and the broadcast metadata join."""
+    topk = _shard_topk(spark, store, sc, k, exclude_df).select(
+        "doc_id", "score"
+    ).orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
     if not docs_join:
         return topk
+    docs = store.read_table(spark, "docs")
     # metadata join: broadcast the K-ROW result side explicitly.  Catalyst
     # can't size the kernel's UDF output, so past ~10 MB of docs it would
     # fall back to a sort-merge join that SHUFFLES THE WHOLE DOCS TABLE
@@ -486,11 +638,10 @@ def wand_topk_batch(
     from pyspark.sql import Window
 
     store = IndexStorage(index_root)
-    per_shard = _shard_topk(
-        spark, store, queries, k, corpus_stats, df_override, local_df,
-        exclude_df, stats_cache,
+    sc = _prepare(
+        spark, store, queries, corpus_stats, df_override, local_df, stats_cache
     )
-    if per_shard is None:
+    if sc is None:
         if docs_join:
             return spark.createDataFrame(
                 [], "query string, doc_id long, url string, title string, "
@@ -500,6 +651,7 @@ def wand_topk_batch(
             [], "query string, doc_id long, score double, rank int"
         )
 
+    per_shard = _shard_topk(spark, store, sc, k, exclude_df)
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     qnames = spark.createDataFrame(
         [(i, q) for i, q in enumerate(queries)], "qid long, query string"

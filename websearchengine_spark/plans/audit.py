@@ -24,7 +24,12 @@ def plan_of(df: DataFrame, mode: str = "formatted") -> str:
 
 def audit_plans(spark, index_root: str) -> dict[str, tuple[bool, str]]:
     from websearchengine_spark.operators.query import load_postings_for_terms, run_query
-    from websearchengine_spark.operators.topk import wand_topk
+    from websearchengine_spark.operators.topk import (
+        INPROC_MAX_POSTINGS,
+        _prepare,
+        _spark_topk,
+        wand_topk,
+    )
     from websearchengine_spark.sources.storage import IndexStorage
 
     store = IndexStorage(index_root)
@@ -68,9 +73,15 @@ def audit_plans(spark, index_root: str) -> dict[str, tuple[bool, str]]:
     ][:2]
     audit_q = " ".join(top_terms) if top_terms else "web search"
 
-    # 2. WAND path: metadata join is a broadcast, global top-k is
-    #    TakeOrderedAndProject (bounded heap merge, no full sort)
-    wp = plan_of(wand_topk(spark, index_root, audit_q, k=10))
+    # 2. WAND Spark side (forced: the in-process gate would serve a
+    #    small index without a plan): metadata join is a broadcast,
+    #    global top-k is TakeOrderedAndProject (bounded heap merge, no
+    #    full sort)
+    def spark_side(q: str) -> str:
+        sc = _prepare(spark, store, [q], None, None, None, None)
+        return plan_of(_spark_topk(spark, store, sc, 10, True, None))
+
+    wp = spark_side(audit_q)
     ok = "TakeOrderedAndProject" in wp and "BroadcastHashJoin" in wp
     out["wand_topk_merge_and_broadcast"] = (ok, _grep(wp, ["TakeOrderedAndProject", "BroadcastHashJoin"]))
 
@@ -79,12 +90,30 @@ def audit_plans(spark, index_root: str) -> dict[str, tuple[bool, str]]:
     #     grouping is the plan's only shuffle
     shapes = []
     for q in (audit_q, f'"{audit_q}"'):
-        qp = wp if q == audit_q else plan_of(wand_topk(spark, index_root, q, k=10))
+        qp = wp if q == audit_q else spark_side(q)
         n_exchange = len(re.findall(r"\(\d+\) Exchange", qp))
         ok = "TakeOrderedAndProject" in qp and "Window" not in qp and n_exchange == 1
         shapes.append((ok, f"{q}: {n_exchange} Exchange, Window={'Window' in qp}"))
     out["wand_topk_one_shell"] = (
         all(ok for ok, _ in shapes), "\n".join(ev for _, ev in shapes)
+    )
+
+    # 2c. a query under INPROC_MAX_POSTINGS is answered in-process: its
+    #     plan is a local relation, no Exchange, no job to collect
+    gated = [
+        r["term"]
+        for r in store.read_table(spark, "term_stats")
+        .filter(F.col("df") <= INPROC_MAX_POSTINGS)
+        .orderBy(F.desc("df"), F.asc("term"))
+        .limit(20)
+        .collect()
+        if analyze_tokens(parse_query(r["term"]), analyzer) == [[r["term"]]]
+    ][:1]
+    gated_q = gated[0] if gated else audit_q
+    gp = plan_of(wand_topk(spark, index_root, gated_q, k=10))
+    ok = "LocalTableScan" in gp and "Exchange" not in gp
+    out["wand_topk_gated_local"] = (
+        ok, f"{gated_q}: " + _grep(gp, ["LocalTableScan", "Exchange"])
     )
 
     # 3. DataFrame scorer path: same properties

@@ -25,16 +25,21 @@ def make_pyfiles_zip(out_path: str | None = None) -> str:
     # wiring below), so a concurrent get_spark in another process must
     # never expose a half-written archive to a launching daemon
     tmp_path = f"{out_path}.{os.getpid()}.tmp"
-    with zipfile.ZipFile(tmp_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for dirpath, _dirs, files in os.walk(pkg_dir):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    rel = os.path.join(
-                        "websearchengine_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, rel)
-    os.replace(tmp_path, out_path)
+    try:
+        with zipfile.ZipFile(tmp_path, "w", zipfile.ZIP_DEFLATED) as zf:
+            for dirpath, _dirs, files in os.walk(pkg_dir):
+                for fn in files:
+                    if fn.endswith(".py"):
+                        full = os.path.join(dirpath, fn)
+                        rel = os.path.join(
+                            "websearchengine_spark", os.path.relpath(full, pkg_dir)
+                        )
+                        zf.write(full, rel)
+        os.replace(tmp_path, out_path)
+    except BaseException:
+        if os.path.exists(tmp_path):
+            os.remove(tmp_path)
+        raise
     return out_path
 
 

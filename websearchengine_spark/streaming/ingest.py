@@ -40,7 +40,8 @@ of ordinary index segments:
   * COMPACT (compact_live): merge_many_indexes folds every live segment
     into a new base generation in ONE shuffle of the compressed postings
     (no re-tokenization, K-way, see operators/merge.py), then atomically
-    swaps the catalog.  Search cost is O(#segments) small jobs, so the
+    swaps the catalog.  Search cost is O(#segments) — small jobs, or
+    in-process kernel runs under topk.INPROC_MAX_POSTINGS — so the
     classic LSM trade applies: compact when deltas accumulate.
   * UPSERT (the re-crawl semantic, on by default): a url re-appearing in
     a later batch supersedes its earlier version — the old doc_ids are
@@ -49,10 +50,12 @@ of ordinary index segments:
     dropped — statistics corrected — at compaction.  Deleted ids vanish
     without remapping the id space; each segment records its id_span so
     later offsets clear the full occupied range.  Tombstones are
-    EXECUTOR-RESIDENT at query time (round 4): search hands them to the
-    WAND kernel as (shard, doc_id) rows cogrouped with the postings
-    (topk.wand_topk(exclude_df=)) — never collected to the driver,
-    never serialized into task closures — and their VISIBILITY is
+    EXECUTOR-RESIDENT on the Spark side of search (round 4): it hands
+    them to the WAND kernel as (shard, doc_id) rows cogrouped with the
+    postings (topk.wand_topk(exclude_df=)) — never collected to the
+    driver, never serialized into task closures; only a segment whose
+    query is under topk.INPROC_MAX_POSTINGS, the pending tombstone
+    count included, reads them in-process — and their VISIBILITY is
     catalog-gated: only files listed in _live.json count, so a crash
     between tombstone write and catalog publish leaves the old versions
     visible (not vanished) until redelivery republishes both together.
@@ -81,6 +84,7 @@ import os
 import shutil
 import time
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -224,22 +228,16 @@ def _read_tomb_file(spark: SparkSession, path: str):
     return read_parquet_cached(spark, path).select("seg", "doc_id")
 
 
-def tombstones_for_segments(
-    spark: SparkSession, root: str, n_shards: int, seg_names: list[str]
-) -> dict[str, "object"]:
-    """{segment_dir: (shard, doc_id) DataFrame or None} for ALL live
-    segments in one pass over the catalog-listed tombstone files — the
-    per-query read path of search_live/search_live_batch.
+def _tombstone_parts(root: str, seg_names: list[str]) -> dict[str, list]:
+    """{segment_dir: [(parquet dir, flat)]}: the catalog-listed tombstone
+    files holding each segment's rows, found by driver-side listdir.
 
-    Partitioned files open only the seg= subdirs that exist (a
-    tombstone-free segment costs a driver-side listdir, no Spark job,
-    None result); each LEGACY flat file is opened once and shared by
-    per-segment filters (such segments get a lazily-filtered frame even
-    when it turns out row-empty — the price of the old layout)."""
-    files = tombstone_files(root)
-    per_seg: dict[str, list] = {s: [] for s in seg_names}
-    flat: list = []
-    for f in files:
+    Two layouts: batch/op files are written ``partitionBy("seg")`` and
+    contribute only the seg= subdirs that exist (flat=False, a doc_id
+    column); legacy flat files carry seg as a data column and are
+    listed for every segment (flat=True, filter on seg when read)."""
+    out: dict[str, list] = {s: [] for s in seg_names}
+    for f in tombstone_files(root):
         path = os.path.join(root, f["file"])
         if not os.path.isdir(path):
             continue
@@ -247,27 +245,52 @@ def tombstones_for_segments(
             for s in seg_names:
                 p = os.path.join(path, f"seg={s}")
                 if os.path.isdir(p):
-                    per_seg[s].append(
-                        read_parquet_cached(spark, p).select("doc_id")
-                    )
+                    out[s].append((p, False))
         else:
-            flat.append(read_parquet_cached(spark, path).select("seg", "doc_id"))
-    flat_df = _union_all(flat) if flat else None
+            for s in seg_names:
+                out[s].append((path, True))
+    return out
+
+
+def tombstones_for_segments(
+    spark: SparkSession, root: str, n_shards: int, seg_names: list[str]
+) -> dict[str, "object"]:
+    """{segment_dir: (shard, doc_id) DataFrame or None} for the live
+    segments — the Spark side's tombstone mask in search_live/
+    search_live_batch (a tombstone-free segment costs a driver-side
+    listdir, no Spark job, None result)."""
     out: dict[str, "object"] = {}
-    for s in seg_names:
-        parts = list(per_seg[s])
-        if flat_df is not None:
-            parts.append(
-                flat_df.filter(F.col("seg") == s).select("doc_id")
-            )
+    for s, parts in _tombstone_parts(root, seg_names).items():
         if not parts:
             out[s] = None
             continue
-        out[s] = _union_all(parts).select(
+        out[s] = _union_all(
+            [
+                read_parquet_cached(spark, p).filter(F.col("seg") == s).select("doc_id")
+                if flat
+                else read_parquet_cached(spark, p).select("doc_id")
+                for p, flat in parts
+            ]
+        ).select(
             (F.col("doc_id") % n_shards).cast("int").alias("shard"),
             F.col("doc_id").cast("long").alias("doc_id"),
         )
     return out
+
+
+def _tombstone_ids(parts: list, seg: str) -> np.ndarray:
+    """The in-process side's tombstone mask: segment ``seg``'s local
+    doc_ids read with pyarrow from its ``_tombstone_parts`` files."""
+    import pyarrow.dataset as pads
+
+    ids = [
+        pads.dataset(p, format="parquet")
+        .to_table(columns=["doc_id"], filter=(pads.field("seg") == seg) if flat else None)
+        .column("doc_id")
+        .to_numpy()
+        for p, flat in parts
+    ]
+    return np.unique(np.concatenate(ids))
 
 
 def read_tombstones(
@@ -279,8 +302,6 @@ def read_tombstones(
     tombstones_for_segments and never collects these.  Visibility is
     catalog-gated (see tombstone_files); pass ``files`` to read an exact
     snapshot."""
-    import numpy as np
-
     if files is None:
         files = tombstone_files(root)
     if not files:
@@ -652,32 +673,48 @@ def live_stats(spark: SparkSession, root: str) -> tuple[int, int, int]:
 
 
 def _search_segments(
-    spark: SparkSession, root: str, queries: list[str], score_segment
-) -> tuple[DataFrame, DataFrame]:
+    spark: SparkSession,
+    root: str,
+    queries: list[str],
+    score_segment,
+    inproc_k: int | None = None,
+) -> tuple[DataFrame | None, list, list]:
     """The segment side of search_live/search_live_batch: every live
-    segment scored by ``score_segment(seg_root, **kw)`` (a docs_join=
-    False call of wand_topk or wand_topk_batch) with the UNION
-    statistics, its local doc_ids shifted by the cumulative shard-
-    preserving offsets (merge.doc_id_offsets — the SAME rule compaction
-    applies) and its pending tombstones masked.  Returns (union of the
-    per-segment results, union of the segments' docs tables in the same
-    global id space).
+    segment scored with the UNION statistics, its local doc_ids shifted
+    by the cumulative shard-preserving offsets (merge.doc_id_offsets —
+    the SAME rule compaction applies) and its pending tombstones
+    masked.  Returns (union of the Spark-side per-segment results or
+    None, in-process hits as topk._local_result takes them, every
+    segment's (store, offset) for _global_docs).
 
     Union statistics: (num_docs, total_tf) summed from the manifests and
     per-term global df summed from each segment's driver-side
-    term-dictionary probe (topk._df_lookup) — zero Spark jobs.  The
-    tombstone mask stays EXECUTOR-RESIDENT: (shard, doc_id) rows
-    cogrouped with each segment's postings (wand_topk(exclude_df=)) —
-    never collected to the driver, never shipped in a task closure; each
-    segment reads only ITS OWN seg= partition subdirs.  Tombstoned docs
-    still count in df/num_docs until compaction corrects the statistics
-    (Lucene-style visibility)."""
+    term-dictionary probe (topk._df_lookup) — zero Spark jobs.
+    Tombstoned docs still count in df/num_docs until compaction corrects
+    the statistics (Lucene-style visibility).
+
+    Each segment is scored in one of two places.  With ``inproc_k``
+    (search_live's k) a segment whose query terms' df sum — plus the
+    catalog's pending tombstone count when the segment has tombstones —
+    is at most topk.INPROC_MAX_POSTINGS runs the kernel in this process
+    (its tombstones read with pyarrow).  Every other segment runs
+    ``score_segment(seg_root, **kw)`` (a docs_join=False call of
+    wand_topk or wand_topk_batch), where the tombstone mask stays
+    EXECUTOR-RESIDENT: (shard, doc_id) rows cogrouped with the segment's
+    postings (wand_topk(exclude_df=)), reading only its own seg=
+    partition subdirs."""
     from websearchengine_spark.operators.query import (
         analyze_tokens,
         index_analyzer,
         parse_query,
     )
-    from websearchengine_spark.operators.topk import _df_lookup
+    from websearchengine_spark.operators.topk import (
+        INPROC_MAX_POSTINGS,
+        NO_HITS,
+        _df_lookup,
+        _local_topk,
+        _prepare,
+    )
 
     segs = live_segment_roots(root)
     if not segs:
@@ -714,25 +751,52 @@ def _search_segments(
         for t, df in d.items():
             gdf[t] = gdf.get(t, 0) + df
 
-    seg_tombs = tombstones_for_segments(
-        spark, root, n_shards, [os.path.basename(s) for s in segs]
-    )
-    merged = docs = None
-    for seg, store, off, local_df in zip(segs, stores, offsets, seg_dfs):
+    names = [os.path.basename(s) for s in segs]
+    tomb_parts = _tombstone_parts(root, names)
+    pending = pending_tombstones(root)
+    seg_tombs = merged = None
+    hits: list = []
+    for seg, name, store, off, local_df in zip(segs, names, stores, offsets, seg_dfs):
+        if inproc_k is not None:
+            sc = _prepare(
+                spark, store, queries, (num_docs, total_tf), gdf, local_df, None
+            )
+            if sc is None:  # a query term absent here: no match
+                hits.append((store, off, *NO_HITS))
+                continue
+            parts = tomb_parts[name]
+            # a legacy root's backlog size is unknown: Spark side
+            tombs = (pending if pending is not None else float("inf")) if parts else 0
+            if sc.postings + tombs <= INPROC_MAX_POSTINGS:
+                exclude = _tombstone_ids(parts, name) if parts else None
+                h = _local_topk(store, sc, inproc_k, exclude)
+                if h is not None:
+                    hits.append((store, off, *h))
+                    continue
+        if seg_tombs is None:
+            seg_tombs = tombstones_for_segments(spark, root, n_shards, names)
         p = score_segment(
             seg,
             corpus_stats=(num_docs, total_tf), df_override=gdf,
             docs_join=False,
-            exclude_df=seg_tombs[os.path.basename(seg)],
+            exclude_df=seg_tombs[name],
             local_df=local_df,
         )
-        d = store.read_table(spark, "docs")
         if off:
             p = p.withColumn("doc_id", (F.col("doc_id") + F.lit(off)).cast("long"))
-            d = d.withColumn("doc_id", (F.col("doc_id") + F.lit(off)).cast("long"))
         merged = p if merged is None else merged.unionByName(p)
+    return merged, hits, list(zip(stores, offsets))
+
+
+def _global_docs(spark: SparkSession, placed: list) -> DataFrame:
+    """The union of the segments' docs tables in the global id space."""
+    docs = None
+    for store, off in placed:
+        d = store.read_table(spark, "docs")
+        if off:
+            d = d.withColumn("doc_id", (F.col("doc_id") + F.lit(off)).cast("long"))
         docs = d if docs is None else docs.unionByName(d)
-    return merged, docs
+    return docs
 
 
 def search_live(
@@ -743,10 +807,12 @@ def search_live(
 ) -> DataFrame:
     """BM25 WAND top-k over ALL live segments with UNION statistics.
 
-    Each segment is scored by wand_topk with the summed
-    (num_docs, total_tf) and per-term global df, its local doc_ids are
-    shifted into the global id space (see _search_segments), and the
-    per-segment top-ks merge on (score desc, doc_id asc).  The result is
+    Each segment is scored with the summed (num_docs, total_tf) and
+    per-term global df, in this process or by wand_topk's Spark side
+    under topk.INPROC_MAX_POSTINGS (see _search_segments), its local
+    doc_ids are shifted into the global id space, and the per-segment
+    top-ks merge on (score desc, doc_id asc) — in this process, with
+    zero Spark jobs, when every segment ran here.  The result is
     doc_id- and score-identical to wand_topk over the compacted index:
     compaction never changes what search returns, it only changes what
     search costs.  (With PENDING tombstones the superseded docs are
@@ -756,16 +822,21 @@ def search_live(
     Warns (RuntimeWarning) when compaction is overdue.  Returns
     query.RESULT_COLS ordered like run_query."""
     from websearchengine_spark.operators.query import RESULT_COLS
-    from websearchengine_spark.operators.topk import wand_topk
+    from websearchengine_spark.operators.topk import _local_result, wand_topk
 
-    merged, docs = _search_segments(
+    merged, hits, placed = _search_segments(
         spark, root, [query],
         lambda seg, **kw: wand_topk(spark, seg, query, k=k, **kw),
+        inproc_k=k,
     )
+    if merged is None:
+        return _local_result(spark, hits, k, docs_join=True)
+    if hits:
+        merged = merged.unionByName(_local_result(spark, hits, k, docs_join=False))
     topk = merged.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
     return (
         F.broadcast(topk)
-        .join(docs, "doc_id")
+        .join(_global_docs(spark, placed), "doc_id")
         .select(*RESULT_COLS)
         # limit is a no-op on the <=k joined rows but compiles the final
         # sort to TakeOrderedAndProject (no range-sampling job — r6,
@@ -794,7 +865,7 @@ def search_live_batch(
 
     from websearchengine_spark.operators.topk import wand_topk_batch
 
-    merged, docs = _search_segments(
+    merged, _hits, placed = _search_segments(
         spark, root, queries,
         lambda seg, **kw: wand_topk_batch(spark, seg, queries, k=k, **kw).select(
             "query", "doc_id", "score"
@@ -807,7 +878,7 @@ def search_live_batch(
     # n_queries x k rows vs the union of all segments' docs tables:
     # broadcast the small side (sf1 plan-audit finding, as in search_live)
     out = (
-        F.broadcast(topk).join(docs, "doc_id")
+        F.broadcast(topk).join(_global_docs(spark, placed), "doc_id")
         .select(
             "query", "doc_id", "url", "title", "score", "pagerank", "numviews", "rank"
         )
