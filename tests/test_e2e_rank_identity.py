@@ -222,16 +222,20 @@ def test_render_text_and_html_formats():
 
 
 def test_serve_search_renders_both_formats(spark, built_index):
+    from websearchengine_spark.operators import topk
     from websearchengine_spark.operators.render import serve_search
 
-    txt = serve_search(spark, built_index, "query=web+search&ranker=bm25&num=3")
+    side = "spark" if topk.INPROC_MAX_POSTINGS == 0 else "inproc"
+    txt, ran = serve_search(spark, built_index, "query=web+search&ranker=bm25&num=3")
+    assert ran == side
     lines = [l for l in txt.splitlines() if l]
     assert 0 < len(lines) <= 3
     assert all(len(l.split("\t")) == 5 for l in lines)
 
-    html = serve_search(
+    html, ran = serve_search(
         spark, built_index, "query=web+search&ranker=bm25&num=3&format=html"
     )
+    assert ran == side
     assert html.startswith("<!DOCTYPE html>") and "{{" not in html
 
 

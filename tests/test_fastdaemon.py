@@ -78,6 +78,10 @@ def test_changed_archive_is_reread_and_visible(tmp_path, patched_zipimport):
     assert b"X = 2" in zi.get_data("wse_fd_probe_mod.py")
 
 
+@pytest.mark.skipif(
+    os.name != "posix" or os.environ.get("SPARK_GRAFT_FASTDAEMON") == "0",
+    reason="get_spark wires the fastdaemon only on posix, unless disabled",
+)
 def test_get_spark_wires_fastdaemon_for_local_master(spark):
     # the shared session fixture goes through get_spark; on a posix local
     # master the daemon module and the package zip PYTHONPATH must be set
@@ -87,6 +91,26 @@ def test_get_spark_wires_fastdaemon_for_local_master(spark):
     )
     pyzip = spark.conf.get("spark.executorEnv.PYTHONPATH")
     assert pyzip.endswith("websearchengine_spark.zip") and os.path.exists(pyzip)
+
+
+def test_session_conf_joins_caller_pythonpath():
+    """A caller's executor PYTHONPATH is appended to the fastdaemon zip,
+    never replacing it (the daemon module stays set and must still
+    resolve); without the daemon it passes through unchanged."""
+    from websearchengine_spark.session import _session_conf
+
+    key = "spark.executorEnv.PYTHONPATH"
+    extra = {key: "/opt/libs", "spark.app.extra": "x"}
+    conf = _session_conf(8, "/tmp/pkg.zip", extra)
+    assert conf[key] == "/tmp/pkg.zip" + os.pathsep + "/opt/libs"
+    assert conf["spark.python.daemon.module"] == "websearchengine_spark.fastdaemon"
+    assert conf["spark.app.extra"] == "x"
+    assert conf["spark.sql.shuffle.partitions"] == "8"
+
+    stock = _session_conf(8, None, extra)
+    assert stock[key] == "/opt/libs"
+    assert "spark.python.daemon.module" not in stock
+    assert _session_conf(8, "/tmp/pkg.zip", None)[key] == "/tmp/pkg.zip"
 
 
 def test_pyfiles_zip_leaves_no_tmp_on_error(tmp_path, monkeypatch):

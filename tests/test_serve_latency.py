@@ -3,12 +3,22 @@
 the per-term df lookup and the per-token spell-candidate jobs are
 memoized on the server and invalidated when the index generation
 changes.  Actions are counted by instrumenting DataFrame.collect/
-toPandas (the driver's job-submitting calls on these paths)."""
+toPandas (the driver's job-submitting calls on these paths).
 
+A warm bm25 /search under the in-process budget goes further: it makes
+no JVM call at all (py4j round trips counted at the client), and its
+body is byte-identical to rendering the public DataFrame API's rows and
+to the same request forced to the Spark side."""
+
+import json
+import logging
 import os
+from urllib.parse import urlencode
 
 import pytest
 from pyspark.sql import DataFrame
+
+from websearchengine_spark.operators import topk
 
 
 @pytest.fixture(scope="module")
@@ -96,3 +106,144 @@ def test_generation_change_drops_caches(latency_srv):
     os.utime(manifest, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
     stats2, spell2 = latency_srv._caches()
     assert stats2 == {} and spell2 == {}  # invalidated, fresh dicts
+
+
+class Py4jCounter:
+    """Counts py4j round trips from this process (the client every
+    Python -> JVM call goes through)."""
+
+    def __init__(self, monkeypatch):
+        import py4j.clientserver as cs
+
+        self.n = 0
+        orig = cs.JavaClient.send_command
+        counter = self
+
+        def send_command(client, *a, **k):
+            counter.n += 1
+            return orig(client, *a, **k)
+
+        monkeypatch.setattr(cs.JavaClient, "send_command", send_command)
+
+
+def test_warm_gated_search_makes_no_jvm_call(latency_srv, monkeypatch):
+    """The in-process result renders straight from its pyarrow table:
+    no createDataFrame, no collect, no py4j round trip at all.  The
+    same request on the Spark side does cross (the counter counts)."""
+    q = "query=web+search&ranker=bm25&num=5"
+    cold = latency_srv._handle("/search", q)
+    counter = Py4jCounter(monkeypatch)
+    warm = latency_srv._handle("/search", q)
+    assert warm == cold
+    assert counter.n == 0, f"warm gated /search made {counter.n} py4j calls"
+    monkeypatch.setattr(topk, "INPROC_MAX_POSTINGS", 0)
+    assert latency_srv._handle("/search", q) == cold
+    assert counter.n > 0
+
+
+PARITY_QUERIES = [
+    ("web search", 10),  # plain
+    ('"data mining"', 10),  # phrase
+    ("web zzzznope", 10),  # a term absent from the index: empty
+    ("web search", 3),
+]
+
+
+def _expected_body(spark, root, uri):
+    """render.format_* over the public API's collected rows."""
+    from websearchengine_spark.operators.query import parse_cgi_args, search_uri
+    from websearchengine_spark.operators.render import (
+        format_html_results,
+        format_text_results,
+    )
+
+    args = parse_cgi_args(uri, url_decode=True)
+    rows = search_uri(spark, root, uri).collect()
+    if args["format"] == "html":
+        return format_html_results(rows, args["query"], args["ranker"])
+    return format_text_results(rows)
+
+
+def _assert_serve_parity(spark, srv, monkeypatch, queries):
+    """Each query in text and html: the served body equals rendering
+    search_uri(...).collect(), and is byte-identical with the gate
+    forced to the Spark side."""
+    nonempty = 0
+    for query, num in queries:
+        for fmt in ("text", "html"):
+            uri = urlencode(
+                {"query": query, "ranker": "bm25", "num": num, "format": fmt}
+            )
+            status, _ctype, body = srv._handle("/search", uri)
+            assert status == 200, body
+            assert body == _expected_body(spark, srv.index_root, uri), uri
+            with monkeypatch.context() as m:
+                m.setattr(topk, "INPROC_MAX_POSTINGS", 0)
+                assert srv._handle("/search", uri)[2] == body, uri
+            nonempty += fmt == "text" and body != ""
+    assert nonempty == len(queries) - 1  # only the absent-term query is empty
+
+
+def test_serve_body_parity_across_gate(spark, latency_srv, monkeypatch):
+    _assert_serve_parity(spark, latency_srv, monkeypatch, PARITY_QUERIES)
+
+
+@pytest.fixture(scope="module")
+def live_srv(spark, corpus_pdf, tmp_path_factory):
+    """A 2-segment live root: the 200-doc base plus a 30-url re-crawl
+    (30 pending tombstones), the re-crawls repeating the query words so
+    both segments match."""
+    from tests.test_tombstones import N_SHARDS, _recrawled
+    from websearchengine_spark.serve import SearchHTTPServer
+    from websearchengine_spark.streaming.ingest import (
+        apply_pages_batch,
+        pending_tombstones,
+    )
+
+    by_url, re = _recrawled(corpus_pdf, 40, 70, tag="data mining web search")
+    root = str(tmp_path_factory.mktemp("latency_live") / "live")
+    apply_pages_batch(
+        spark, spark.createDataFrame(by_url), 0, root,
+        n_shards=N_SHARDS, n_groups=2,
+    )
+    apply_pages_batch(spark, spark.createDataFrame(re), 1, root)
+    assert pending_tombstones(root) == 30
+    return SearchHTTPServer(spark, root)
+
+
+def test_live_serve_body_parity_across_gate(spark, live_srv, monkeypatch):
+    """The same parity through query.search's live dispatch, tombstones
+    masked on both sides; a warm all-in-process live /search makes no
+    JVM call either."""
+    _assert_serve_parity(spark, live_srv, monkeypatch, PARITY_QUERIES)
+    q = "query=data+mining&ranker=bm25&num=50"
+    cold = live_srv._handle("/search", q)
+    counter = Py4jCounter(monkeypatch)
+    assert live_srv._handle("/search", q) == cold
+    assert counter.n == 0, f"warm live /search made {counter.n} py4j calls"
+
+
+def test_request_records(latency_srv, monkeypatch, caplog):
+    """One JSON line per request on the serve logger: endpoint, status,
+    wall ms, and for /search the side the evaluation ran on."""
+    caplog.set_level(logging.INFO, logger="websearchengine_spark.serve")
+    q = "query=web+search&ranker=bm25&num=5"
+    latency_srv._handle("/search", q)
+    monkeypatch.setattr(topk, "INPROC_MAX_POSTINGS", 0)
+    latency_srv._handle("/search", q)
+    latency_srv._handle("/search", "query=x")  # ranker none: error page
+    latency_srv._handle("/prediction", "query=wes+search")
+    latency_srv._handle("/nope", "")
+    recs = [
+        json.loads(r.getMessage())
+        for r in caplog.records
+        if r.name == "websearchengine_spark.serve"
+    ]
+    assert [(r["endpoint"], r["status"], r.get("ran")) for r in recs] == [
+        ("/search", 200, "inproc"),
+        ("/search", 200, "spark"),
+        ("/search", 200, None),
+        ("/prediction", 200, None),
+        ("/nope", 404, None),
+    ]
+    assert all(r["wall_ms"] > 0 for r in recs)

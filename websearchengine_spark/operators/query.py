@@ -37,11 +37,13 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from websearchengine_spark.functions.analyze import analyze_query_word
 from websearchengine_spark.functions.codec import decode_posting_blocks
+from websearchengine_spark.operators.util import as_dataframe
 from websearchengine_spark.sources.storage import IndexStorage
 
 LAMBDA_JM = 0.5
@@ -553,17 +555,33 @@ def search(
     statistics tables; on a compacted (single-segment) live root they
     run against that segment transparently, and on a multi-segment root
     they raise with the fix spelled out rather than silently mis-scoring."""
+    return as_dataframe(
+        spark, _search(spark, index_root, query, ranker, k, stats_cache)
+    )
+
+
+def _search(
+    spark: SparkSession,
+    index_root: str,
+    query: str,
+    ranker: str,
+    k: int,
+    stats_cache: dict | None,
+) -> pa.Table | DataFrame:
+    """search's core: the bm25 cores' pyarrow table when the query ran
+    in this process, else a lazy DataFrame (util.as_rows /
+    as_dataframe read either)."""
     import os
 
     from websearchengine_spark.streaming.ingest import (
         CATALOG_NAME,
+        _search_live,
         live_segment_roots,
-        search_live,
     )
 
     if os.path.exists(os.path.join(index_root, CATALOG_NAME)):
         if ranker == "bm25":
-            return search_live(spark, index_root, query, k=k)
+            return _search_live(spark, index_root, query, k)
         segs = live_segment_roots(index_root)
         if len(segs) == 1:
             return run_query(spark, segs[0], query, ranker=ranker, k=k)
@@ -574,9 +592,9 @@ def search(
             "directly)"
         )
     if ranker == "bm25":
-        from websearchengine_spark.operators.topk import wand_topk
+        from websearchengine_spark.operators.topk import _wand_topk
 
-        return wand_topk(spark, index_root, query, k=k, stats_cache=stats_cache)
+        return _wand_topk(spark, index_root, query, k=k, stats_cache=stats_cache)
     return run_query(spark, index_root, query, ranker=ranker, k=k)
 
 
@@ -659,6 +677,25 @@ def search_uri(
     Non-positive ``num`` falls back to the default 10 — the parser's
     "never fail upon invalid user input" contract extends to values that
     parse as ints but are meaningless as result counts."""
+    return as_dataframe(
+        spark,
+        _search_uri(
+            spark, index_root, uri_query, fullscan_prep, docs_fs, stats_cache
+        ),
+    )
+
+
+def _search_uri(
+    spark: SparkSession,
+    index_root: str,
+    uri_query: str,
+    fullscan_prep: dict | None,
+    docs_fs: DataFrame | None,
+    stats_cache: dict | None,
+) -> pa.Table | DataFrame:
+    """search_uri's core: a pyarrow table when the query ran in this
+    process, else a lazy DataFrame (util.as_rows / as_dataframe read
+    either) — what render.serve_search renders."""
     args = parse_cgi_args(uri_query, url_decode=True)
     ranker = args["ranker"]
     k = args["num"] if args["num"] > 0 else 10
@@ -678,10 +715,7 @@ def search_uri(
                 )
             fullscan_prep = prepare_fullscan(docs_fs)
         return run_fullscan_query(spark, fullscan_prep, args["query"], ranker, k=k)
-    return search(
-        spark, index_root, args["query"], ranker=ranker, k=k,
-        stats_cache=stats_cache,
-    )
+    return _search(spark, index_root, args["query"], ranker, k, stats_cache)
 
 
 def page_summary(

@@ -12,7 +12,10 @@ complete evaluation in exactly one place:
         -> kernel per shard                      [shard_bm25_topk, in the driver]
         -> merge (score desc, doc_id asc)[:k]
         -> docs lookup of the k winners           [storage.lookup_rows]
-        -> spark.createDataFrame(pyarrow.Table)   [a local relation]
+        -> pyarrow.Table                          [zero JVM calls]
+        -> spark.createDataFrame(table)           [only at the DataFrame API:
+                                                   wand_topk; the serve path
+                                                   renders the table itself]
 
     in Spark (larger queries, exclude_df, and every wand_topk_batch;
     a single query is a batch of one):
@@ -48,6 +51,7 @@ import math
 from typing import NamedTuple
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,6 +67,7 @@ from websearchengine_spark.operators.query import (
     index_analyzer,
     parse_query,
 )
+from websearchengine_spark.operators.util import as_dataframe
 from websearchengine_spark.sources.storage import IndexStorage
 
 
@@ -387,8 +392,6 @@ def _shard_topk(
     # object Series per group, while Arrow hands the record batch over
     # directly (~20% off the kernel stage wall at bench; same numbers)
     def score_shard(tbl, exclude):
-        import pyarrow as pa
-
         term_lists = {
             t: _rows_to_blocks(b)
             for t, b in zip(
@@ -457,20 +460,18 @@ def _local_topk(
 
 
 def _local_result(
-    spark: SparkSession,
     hits: list[tuple[IndexStorage, int, np.ndarray, np.ndarray]],
     k: int,
     docs_join: bool,
-) -> DataFrame:
-    """Merge in-process top-ks into ONE local relation — zero Spark jobs
-    to build or to collect.  ``hits``: per index, (store, doc_id offset,
+) -> pa.Table:
+    """Merge in-process top-ks into ONE pyarrow table — no JVM call to
+    build it or to read it.  ``hits``: per index, (store, doc_id offset,
     local doc_ids, scores) as _local_topk returns them; the result keeps
     the k best on (score desc, doc_id asc) over the offset ids.  With
     ``docs_join`` each winner's metadata is looked up driver-side in its
     own index and the columns are RESULT_COLS with the docs table's own
     types, nullable as Spark reads parquet (what the Spark side's docs
     join yields); without it, bare (doc_id, score)."""
-    import pyarrow as pa
     import pyarrow.dataset as pads
 
     owner = np.concatenate([np.full(h[2].size, i) for i, h in enumerate(hits)])
@@ -505,7 +506,7 @@ def _local_result(
             meta.update({r["doc_id"] + off: r for r in found})
         # inner-join semantics: a doc missing from docs is dropped
         rows = [{**meta[g], "doc_id": g, "score": sc} for g, sc in top if g in meta]
-    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=schema))
+    return pa.Table.from_pylist(rows, schema=schema)
 
 
 def wand_topk(
@@ -567,16 +568,41 @@ def wand_topk(
 
     Returns the same columns as query.run_query, ordered by
     (score desc, doc_id asc)."""
+    return as_dataframe(
+        spark,
+        _wand_topk(
+            spark, index_root, query, k=k, corpus_stats=corpus_stats,
+            df_override=df_override, docs_join=docs_join, local_df=local_df,
+            exclude_df=exclude_df, stats_cache=stats_cache,
+        ),
+    )
+
+
+def _wand_topk(
+    spark: SparkSession,
+    index_root: str,
+    query: str,
+    k: int = 10,
+    corpus_stats: tuple[int, int] | None = None,
+    df_override: dict[str, int] | None = None,
+    docs_join: bool = True,
+    local_df: dict[str, int] | None = None,
+    exclude_df: DataFrame | None = None,
+    stats_cache: dict | None = None,
+) -> pa.Table | DataFrame:
+    """wand_topk's core: the in-process side's pyarrow table, or the
+    Spark side's lazy DataFrame (util.as_rows / as_dataframe read
+    either)."""
     store = IndexStorage(index_root)
     sc = _prepare(
         spark, store, [query], corpus_stats, df_override, local_df, stats_cache
     )
     if sc is None:
-        return _local_result(spark, [(store, 0, *NO_HITS)], k, docs_join)
+        return _local_result([(store, 0, *NO_HITS)], k, docs_join)
     if exclude_df is None and sc.postings <= INPROC_MAX_POSTINGS:
         hits = _local_topk(store, sc, k)
         if hits is not None:
-            return _local_result(spark, [(store, 0, *hits)], k, docs_join)
+            return _local_result([(store, 0, *hits)], k, docs_join)
     return _spark_topk(spark, store, sc, k, docs_join, exclude_df)
 
 

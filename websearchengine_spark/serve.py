@@ -26,10 +26,15 @@ Endpoints (same paths and CGI arguments as the reference):
 Architecture note (SURVEY.md §3.2): the engine's analytics path keeps
 the driver as the boundary — this server exists to complete the
 reference surface for interactive/live use.  It is a DRIVER-SIDE
-frontend: each request runs small Spark jobs on the shared
-SparkSession (ThreadingHTTPServer; Spark schedules concurrent jobs
+frontend on the shared SparkSession (ThreadingHTTPServer).  A warm
+bm25 /search under topk.INPROC_MAX_POSTINGS runs no Spark job and makes
+no JVM call: the kernel runs in this process and its pyarrow result is
+rendered directly.  Larger /search queries, the other rankers and the
+other endpoints run small Spark jobs (Spark schedules concurrent jobs
 fairly).  It is NOT the 100 TB scale path — that is the batch/driver
-contract — so it deliberately stays stdlib-only and tiny.
+contract — so it deliberately stays stdlib-only and tiny.  Every
+request logs one JSON record on the ``websearchengine_spark.serve``
+logger (see SearchHTTPServer._handle).
 
 Security: responses render through render.py, whose HTML path escapes
 query/ranker and text-node's titles (deliberate divergence from the
@@ -172,7 +177,42 @@ class SearchHTTPServer:
     # ---- request handling ----------------------------------------------
 
     def _handle(self, path: str, uri_query: str) -> tuple[int, str, str | bytes]:
-        """(status, content_type, body) for one GET."""
+        """(status, content_type, body) for one GET, and the request's
+        record: one JSON line on the ``websearchengine_spark.serve``
+        logger (INFO) with the endpoint, status, wall ms and, for
+        /search, where the evaluation ran (``inproc``/``spark``)."""
+        t0 = time.perf_counter()
+        record: dict = {"endpoint": path}
+        try:
+            status, ctype, body = self._route(path, uri_query, record)
+        except ValueError as e:
+            # invalid ranker etc. — the reference answers these with an
+            # error PAGE, never a dead socket
+            status, ctype, body = 200, "text/plain; charset=utf-8", str(e)
+        except Exception as e:  # noqa: BLE001 — same contract: any
+            # backend failure (missing doc_tokens table, a Spark analysis
+            # error) answers 500 with the message instead of dropping the
+            # connection.  The detailed message (which can carry local
+            # paths and Spark internals) is served only on loopback
+            # binds; a non-loopback server answers a generic body and the
+            # detail goes to the server-side log
+            _LOG.exception("500 on %s", path)
+            detail = (
+                f"{type(e).__name__}: {e}"
+                if self.host in ("127.0.0.1", "::1", "localhost")
+                else "internal server error"
+            )
+            status, ctype, body = 500, "text/plain; charset=utf-8", detail
+        record["status"] = status
+        record["wall_ms"] = round((time.perf_counter() - t0) * 1000, 3)
+        _LOG.info(json.dumps(record))
+        return status, ctype, body
+
+    def _route(
+        self, path: str, uri_query: str, record: dict
+    ) -> tuple[int, str, str | bytes]:
+        """Dispatch one GET to its endpoint; /search adds ``ran`` to
+        ``record``."""
         from websearchengine_spark.operators.query import parse_cgi_args
 
         if self.public_root is not None:
@@ -185,7 +225,7 @@ class SearchHTTPServer:
 
             args = parse_cgi_args(uri_query, url_decode=True)
             stats_cache, _ = self._caches()
-            body = serve_search(
+            body, record["ran"] = serve_search(
                 self.spark,
                 self.index_root,
                 uri_query,
@@ -295,37 +335,7 @@ class SearchHTTPServer:
         class Handler(BaseHTTPRequestHandler):
             def do_GET(self):  # noqa: N802 (stdlib API name)
                 parts = urlsplit(self.path)
-                try:
-                    status, ctype, body = outer._handle(
-                        parts.path, parts.query or ""
-                    )
-                except ValueError as e:
-                    # invalid ranker etc. — the reference answers these
-                    # with an error PAGE, never a dead socket
-                    status, ctype, body = (
-                        200,
-                        "text/plain; charset=utf-8",
-                        str(e),
-                    )
-                except Exception as e:  # noqa: BLE001 — same contract:
-                    # any backend failure (missing doc_tokens table, a
-                    # Spark analysis error) answers 500 with the message
-                    # instead of dropping the connection.  The detailed
-                    # message (which can carry local paths and Spark
-                    # internals) is served only on loopback binds; a
-                    # non-loopback server answers a generic body and the
-                    # detail goes to the server-side log
-                    _LOG.exception("500 on %s", parts.path)
-                    detail = (
-                        f"{type(e).__name__}: {e}"
-                        if outer.host in ("127.0.0.1", "::1", "localhost")
-                        else "internal server error"
-                    )
-                    status, ctype, body = (
-                        500,
-                        "text/plain; charset=utf-8",
-                        detail,
-                    )
+                status, ctype, body = outer._handle(parts.path, parts.query or "")
                 data = body.encode("utf-8") if isinstance(body, str) else body
                 self.send_response(status)
                 self.send_header("Content-Type", ctype)

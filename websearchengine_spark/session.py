@@ -43,6 +43,47 @@ def make_pyfiles_zip(out_path: str | None = None) -> str:
     return out_path
 
 
+def _session_conf(
+    shuffle_partitions: int, daemon_zip: str | None, extra_conf: dict | None
+) -> dict:
+    """The session conf get_spark applies — pure, so the merge of the
+    caller's ``extra_conf`` can be checked without starting a session.
+
+    ``daemon_zip``: the package zip the fastdaemon worker module loads
+    from (None: the stock daemon).  A caller's
+    ``spark.executorEnv.PYTHONPATH`` is JOINED after it, not replacing
+    it: with the daemon module set and its zip gone from the worker
+    path, every worker launch would fail."""
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        # AQE coalescing targets BYTES, but the engine's Python stages
+        # (posting encode, WAND kernels) cost per ROW/GROUP: a few MB of
+        # packed postings coalesced to 2-3 tasks serializes the encode on
+        # 2-3 cores.  A small floor keeps parallelismFirst coalescing up
+        # at the core count for small shuffles; at real data volumes
+        # (bytes/core >> 1 MB) this knob is inert, so it is not a
+        # local-only tuning.  Env-overridable for cluster profiles.
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
+            "SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"
+        ),
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "24g"),
+        "spark.ui.enabled": "false",
+        "spark.driver.extraJavaOptions": "-Djava.io.tmpdir=/tmp",
+    }
+    if daemon_zip is not None:
+        conf["spark.python.daemon.module"] = "websearchengine_spark.fastdaemon"
+        conf["spark.executorEnv.PYTHONPATH"] = daemon_zip
+    for k, v in (extra_conf or {}).items():
+        if k == "spark.executorEnv.PYTHONPATH" and k in conf:
+            v = os.pathsep.join([conf[k], v])
+        conf[k] = v
+    return conf
+
+
 def get_spark(
     app_name: str = "websearchengine_spark",
     cores: int | str | None = None,
@@ -61,29 +102,6 @@ def get_spark(
     n_cores = os.cpu_count() if cores in ("*", None) else int(cores)
     if shuffle_partitions is None:
         shuffle_partitions = max(8, n_cores)
-    b = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE coalescing targets BYTES, but the engine's Python stages
-        # (posting encode, WAND kernels) cost per ROW/GROUP: a few MB of
-        # packed postings coalesced to 2-3 tasks serializes the encode on
-        # 2-3 cores.  A small floor keeps parallelismFirst coalescing up
-        # at the core count for small shuffles; at real data volumes
-        # (bytes/core >> 1 MB) this knob is inert, so it is not a
-        # local-only tuning.  Env-overridable for cluster profiles.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp")
-    )
     # Python-worker daemon with the CPython-3.12 zipimport stat gate
     # (fastdaemon.py): pyspark.worker invalidates import caches once per
     # task, and on <=3.11 that re-parses every sys.path archive's central
@@ -93,21 +111,18 @@ def get_spark(
     # first task ships it via addPyFile.  Local masters only by default:
     # on a cluster the driver-local zip path does not exist on executors
     # (ship it and set SPARK_GRAFT_FASTDAEMON=1 to enable there).
+    daemon_zip = None
     _fd = os.environ.get("SPARK_GRAFT_FASTDAEMON", "")
     if _fd != "0" and os.name == "posix" and (
         master.startswith("local") or _fd == "1"
     ):
         try:
-            _pyzip = make_pyfiles_zip()
+            daemon_zip = make_pyfiles_zip()
         except OSError:
-            _pyzip = None  # unwritable tmp: run the stock daemon instead
-        if _pyzip is not None:
-            b = b.config(
-                "spark.python.daemon.module", "websearchengine_spark.fastdaemon"
-            ).config("spark.executorEnv.PYTHONPATH", _pyzip)
-    if extra_conf:
-        for k, v in extra_conf.items():
-            b = b.config(k, v)
+            pass  # unwritable tmp: run the stock daemon instead
+    b = SparkSession.builder.master(master).appName(app_name)
+    for k, v in _session_conf(shuffle_partitions, daemon_zip, extra_conf).items():
+        b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try:

@@ -85,6 +85,7 @@ import shutil
 import time
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -93,6 +94,7 @@ from websearchengine_spark.operators.merge import (
     merge_many_indexes,
     segment_id_span,
 )
+from websearchengine_spark.operators.util import as_dataframe
 from websearchengine_spark.sources.storage import IndexStorage, read_parquet_cached
 
 CATALOG_NAME = "_live.json"
@@ -821,6 +823,15 @@ def search_live(
     statistics equal a from-scratch build of the latest-version corpus.)
     Warns (RuntimeWarning) when compaction is overdue.  Returns
     query.RESULT_COLS ordered like run_query."""
+    return as_dataframe(spark, _search_live(spark, root, query, k))
+
+
+def _search_live(
+    spark: SparkSession, root: str, query: str, k: int
+) -> pa.Table | DataFrame:
+    """search_live's core: a pyarrow table when every segment ran in
+    this process, else the lazy DataFrame of the cross-segment merge
+    (util.as_rows / as_dataframe read either)."""
     from websearchengine_spark.operators.query import RESULT_COLS
     from websearchengine_spark.operators.topk import _local_result, wand_topk
 
@@ -830,9 +841,11 @@ def search_live(
         inproc_k=k,
     )
     if merged is None:
-        return _local_result(spark, hits, k, docs_join=True)
+        return _local_result(hits, k, docs_join=True)
     if hits:
-        merged = merged.unionByName(_local_result(spark, hits, k, docs_join=False))
+        merged = merged.unionByName(
+            as_dataframe(spark, _local_result(hits, k, docs_join=False))
+        )
     topk = merged.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
     return (
         F.broadcast(topk)
