@@ -214,7 +214,7 @@ SQL_CONJUNCTIVE_COUNT = (
 
 def q_bm25_topk(spark, sf_dir):
     """R-BM25 over conjunctive candidates, k1=1.2 b=0.75, top 20, via
-    the DataFrame BM25 path (query.run_query(ranker="bm25"))."""
+    the public ranked entry (query.run_query(ranker="bm25"))."""
     from websearchengine_spark.operators.query import run_query
 
     root = _index_for(spark, sf_dir)

@@ -117,7 +117,7 @@ def test_decode_remerges_interleaved_block_runs(pl):
     the EXACT doc-ordered (doc_ids, tfs, dls, positions) of the plain
     layout, and the kernel must score them identically."""
     from websearchengine_spark.functions.codec import bm25_impact
-    from websearchengine_spark.operators.topk import shard_bm25_topk
+    from websearchengine_spark.operators.topk import shard_topk
 
     doc_ids, tfs, dls, positions = pl
     avg_dl = float(dls.mean())
@@ -143,8 +143,8 @@ def test_decode_remerges_interleaved_block_runs(pl):
 
     plain = encode_posting_blocks(doc_ids, tfs, dls, positions, avg_dl, block_size=8)
     spec = [(0, {"t": 1.0}, [])]
-    want = shard_bm25_topk({"t": plain}, spec, {"t": 1.0}, avg_dl, 5)
-    got = shard_bm25_topk({"t": legacy}, spec, {"t": 1.0}, avg_dl, 5)
+    want = shard_topk({"t": plain}, spec, "bm25", {"t": 1.0}, avg_dl, 5)
+    got = shard_topk({"t": legacy}, spec, "bm25", {"t": 1.0}, avg_dl, 5)
     for w, g in zip(want[:3], got[:3]):
         np.testing.assert_array_equal(w, g)
 

@@ -83,8 +83,8 @@ def test_shard_count_invariance(spark, corpus_pdf, oracle_index, tmp_path):
 
 
 def test_search_front_door_routes_both_paths(spark, built_index, oracle_index):
-    """search() is the public entry: bm25 plain -> WAND kernel, everything
-    else -> DataFrame path; results must be path-independent."""
+    """search() is the public entry: bm25 and the reference scorers,
+    plain and phrase queries, all rank like the oracle."""
     from websearchengine_spark.operators.query import search
 
     got = [
@@ -240,9 +240,9 @@ def test_serve_search_renders_both_formats(spark, built_index):
 
 
 class TestSparkSide:
-    """The bm25 tests above route through wand_topk, which serves these
-    small corpora in-process; rerun them with the gate forced to the
-    Spark side so both places stay rank-identical."""
+    """Every ranker runs the one kernel, which serves these small corpora
+    in-process; rerun the tests with the gate forced to the Spark side so
+    both places stay rank-identical."""
 
     @pytest.fixture(autouse=True)
     def _spark_side(self, monkeypatch):
@@ -250,7 +250,12 @@ class TestSparkSide:
 
         monkeypatch.setattr(topk, "INPROC_MAX_POSTINGS", 0)
 
+    test_comprehensive_rank_identity = staticmethod(test_comprehensive_rank_identity)
+    test_favorite_rank_identity = staticmethod(test_favorite_rank_identity)
+    test_conjunctive_rank_identity = staticmethod(test_conjunctive_rank_identity)
+    test_phrase_rank_identity = staticmethod(test_phrase_rank_identity)
     test_bm25_rank_identity = staticmethod(test_bm25_rank_identity)
+    test_shard_count_invariance = staticmethod(test_shard_count_invariance)
     test_search_front_door_routes_both_paths = staticmethod(
         test_search_front_door_routes_both_paths
     )

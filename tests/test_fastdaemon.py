@@ -113,6 +113,26 @@ def test_session_conf_joins_caller_pythonpath():
     assert _session_conf(8, "/tmp/pkg.zip", None)[key] == "/tmp/pkg.zip"
 
 
+def test_session_conf_sizes_driver_heap_from_host(monkeypatch):
+    """spark.driver.memory defaults to min(24g, half the physical RAM)
+    — never a heap above what the host has — and SPARK_DRIVER_MEMORY
+    overrides it."""
+    from websearchengine_spark.session import _session_conf
+
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    page = 4096
+
+    def host(gib):
+        pages = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": gib * 2**30 // page}
+        monkeypatch.setattr(os, "sysconf", lambda name: pages[name])
+        return _session_conf(8, None, None)["spark.driver.memory"]
+
+    assert host(15) == f"{15 * 1024 // 2}m"
+    assert host(64) == f"{24 * 1024}m"
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert host(15) == "3g"
+
+
 def test_pyfiles_zip_leaves_no_tmp_on_error(tmp_path, monkeypatch):
     """A failure while zipping the package removes the half-written
     ``<zip>.<pid>.tmp`` and re-raises; the target is never created."""

@@ -167,10 +167,14 @@ def test_spearman_known_value(spark):
     assert abs(spearman(a, b_rev) - (-1.0)) < 1e-12
 
 
-def test_rank_identity_with_signals(spark, corpus_pdf, log_pdf, py_signals, tmp_path):
+def test_rank_identity_with_signals(
+    spark, corpus_pdf, log_pdf, py_signals, tmp_path, monkeypatch
+):
     """Full pipeline: mine -> build(signals) -> query; scores include the
-    0.3*log(pr+1) + 0.3*log(nv+1) terms and must still match the oracle."""
+    0.3*log(pr+1) + 0.3*log(nv+1) terms and must still match the oracle,
+    in process and with the gate forced to the Spark side."""
     from tests.oracle import OracleIndex
+    from websearchengine_spark.operators import topk
     from websearchengine_spark.operators.build import build_index
     from websearchengine_spark.operators.graph import mine_signals
     from websearchengine_spark.operators.query import run_query
@@ -184,13 +188,15 @@ def test_rank_identity_with_signals(spark, corpus_pdf, log_pdf, py_signals, tmp_
     signals = mine_signals(pages, spark.createDataFrame(log_pdf))
     build_index(spark, pages, root, n_shards=3, n_groups=2, signals=signals)
 
-    for q in ["data mining", "google map", '"web search"', "apple"]:
-        rows = run_query(spark, root, q, ranker="comprehensive", k=10).collect()
-        got = [(r["doc_id"], r["score"]) for r in rows]
-        want = oracle.query(q, "comprehensive", 10)
-        assert [d for d, _ in got] == [d for d, _ in want], q
-        for (d1, s1), (d2, s2) in zip(got, want):
-            assert abs(s1 - s2) < 1e-9, (q, d1)
+    for cap in (10**12, 0):
+        monkeypatch.setattr(topk, "INPROC_MAX_POSTINGS", cap)
+        for q in ["data mining", "google map", '"web search"', "apple"]:
+            rows = run_query(spark, root, q, ranker="comprehensive", k=10).collect()
+            got = [(r["doc_id"], r["score"]) for r in rows]
+            want = oracle.query(q, "comprehensive", 10)
+            assert [d for d, _ in got] == [d for d, _ in want], (cap, q)
+            for (d1, s1), (d2, s2) in zip(got, want):
+                assert abs(s1 - s2) < 1e-9, (cap, q, d1)
         # signals actually nonzero somewhere in the result set
     nz = [u for u, v in pr_py.items() if v > 0]
     assert nz

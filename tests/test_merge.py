@@ -101,7 +101,7 @@ def test_merge_comprehensive_rank_identity_vs_full_build(spark, merge_roots, que
 @pytest.mark.parametrize("query", ['"data mining"', 'new "york" city'])
 def test_merge_preserves_positions_for_phrases(spark, merge_roots, query):
     """Positions survive decode -> shift -> re-encode: phrase queries on
-    the merged index equal the full build (both WAND and DataFrame paths)."""
+    the merged index equal the full build."""
     got = [
         (r["url"], r["score"])
         for r in wand_topk(spark, merge_roots["merged"], query, k=10).collect()

@@ -108,18 +108,25 @@ def test_search_live_identical_to_full_build(spark, live, query):
 
 
 def test_search_front_door_serves_live_roots(spark, live):
-    """query.search() transparently serves a live root: bm25 routes to
-    search_live; the reference scorers raise on multi-segment roots
-    (their statistics tables are per-segment) with the compaction fix
-    named.  MUST run before the compaction test — the module fixture's
+    """query.search() transparently serves a live root for every indexed
+    ranker: bm25 equals search_live, and the reference scorers on the
+    multi-segment root (union df and ctf) equal run_query on the full
+    build.  MUST run before the compaction test — the module fixture's
     root has 3 segments only until then."""
-    from websearchengine_spark.operators.query import search
+    from websearchengine_spark.operators.query import run_query, search
 
+    assert len(live_segment_roots(live["root"])) == 3
     got = _ds(search(spark, live["root"], "web search", ranker="bm25", k=10))
     want = _ds(search_live(spark, live["root"], "web search", k=10))
     assert got == want
-    with pytest.raises(ValueError, match="compact_live"):
-        search(spark, live["root"], "web search", ranker="comprehensive", k=10)
+    for ranker in ("comprehensive", "favorite", "conjunctive"):
+        for q in ("web search", '"data mining"'):
+            got = _ds(search(spark, live["root"], q, ranker=ranker, k=10))
+            want = _ds(run_query(spark, live["full"], q, ranker=ranker, k=10))
+            assert got and len(got) == len(want), (ranker, q)
+            for (d1, s1, u1), (d2, s2, u2) in zip(got, want):
+                assert d1 == d2 and u1 == u2, (ranker, q)
+                assert abs(s1 - s2) < 1e-9, (ranker, q)
 
 
 def test_apply_batch_signals_are_per_batch_data_not_pinned(spark, corpus_pdf, tmp_path):

@@ -1,6 +1,6 @@
-"""Block-max WAND kernel tests: rank identity vs oracle AND vs the
-exhaustive DataFrame path (SURVEY.md §7.4: every WAND test also runs the
-exhaustive path), plus direct kernel tests proving block skipping."""
+"""Block-max WAND kernel tests: rank identity vs the oracle and between
+the query entries (wand_topk, run_query) on both sides of the
+in-process gate, plus direct kernel tests proving block skipping."""
 
 import numpy as np
 import pytest
@@ -9,7 +9,7 @@ from tests.conftest import REFERENCE_QUERIES, count_jobs
 from websearchengine_spark.functions.codec import encode_posting_blocks
 from websearchengine_spark.operators import topk
 from websearchengine_spark.operators.query import run_query
-from websearchengine_spark.operators.topk import shard_bm25_topk, wand_topk
+from websearchengine_spark.operators.topk import shard_topk, wand_topk
 from websearchengine_spark.sources.storage import IndexStorage
 
 
@@ -43,17 +43,19 @@ def test_wand_unknown_term_empty(spark, built_index):
     assert wand_topk(spark, built_index, "").count() == 0
 
 
+@pytest.mark.parametrize("ranker", ["bm25", "comprehensive", "favorite", "conjunctive"])
 @pytest.mark.parametrize("query", ["web search", '"data mining"'])
-def test_gate_sides_identical(spark, built_index, monkeypatch, query):
+def test_gate_sides_identical(spark, built_index, monkeypatch, query, ranker):
     """The same query forced to each side of the in-process gate returns
-    the same doc ids, scores and column types; the in-process side runs
-    zero Spark jobs, the Spark side runs its kernel job."""
+    the same doc ids, scores and column types for every indexed ranker;
+    the in-process side runs zero Spark jobs, the Spark side runs its
+    kernel job."""
     got = {}
     for side, cap in (("inproc", 10**12), ("spark", 0)):
         monkeypatch.setattr(topk, "INPROC_MAX_POSTINGS", cap)
 
         def run():
-            df = wand_topk(spark, built_index, query, k=10)
+            df = run_query(spark, built_index, query, ranker=ranker, k=10)
             return df.schema, [(r["doc_id"], r["score"]) for r in df.collect()]
 
         got[side] = count_jobs(spark, run)
@@ -106,7 +108,7 @@ def _spec(*terms, phrases=()):
 def test_kernel_block_skipping():
     tl = _mk_lists()
     idf = {"rare": 3.0, "common": 0.5}
-    q, d, s, stats = shard_bm25_topk(tl, _spec("rare", "common"), idf, avg_dl=10.0, k=10)
+    q, d, s, stats = shard_topk(tl, _spec("rare", "common"), "bm25", idf, 10.0, k=10)
     # conjunctive: docs 500 and 900 are even (in common), 5 is odd (not)
     assert d.tolist() == [900, 500]  # 900 has tf=3 for rare -> higher score
     assert q.tolist() == [0, 0]
@@ -130,10 +132,10 @@ def test_kernel_batch_shares_decode_and_keeps_skip():
         (2, {"rare": 1.0, "common": 1.0}, []),
         (3, {"absent": 1.0}, []),
     ]
-    q, d, s, stats = shard_bm25_topk(tl, specs, idf, 10.0, k=10)
+    q, d, s, stats = shard_topk(tl, specs, "bm25", idf, 10.0, k=10)
     assert stats["blocks_decoded"] <= 2 + 3  # shared, not 3x
     for qid, qw, ph in specs:
-        _q1, d1, s1, _ = shard_bm25_topk(tl, [(qid, qw, ph)], idf, 10.0, k=10)
+        _q1, d1, s1, _ = shard_topk(tl, [(qid, qw, ph)], "bm25", idf, 10.0, k=10)
         assert d[q == qid].tolist() == d1.tolist()
         np.testing.assert_array_equal(s[q == qid], s1)
     assert not (q == 3).any()
@@ -147,16 +149,18 @@ def test_kernel_phrase_adjacency():
     it; common at position 5 in docs 500 and 900 follows it in 500 only."""
     tl = _mk_lists()
     idf = {"rare": 3.0, "common": 0.5}
-    _q, d, _s, _ = shard_bm25_topk(
-        tl, _spec("rare", "common", phrases=[("rare", "common")]), idf, 10.0, k=10
+    _q, d, _s, _ = shard_topk(
+        tl, _spec("rare", "common", phrases=[("rare", "common")]), "bm25", idf,
+        10.0, k=10,
     )
     assert d.size == 0
     tl["common"] = encode_posting_blocks(
         np.array([500, 900]), np.array([1, 1]), np.array([12, 8]),
         np.array([5, 5]), 10.0, block_size=16,
     )
-    _q, d, _s, _ = shard_bm25_topk(
-        tl, _spec("rare", "common", phrases=[("rare", "common")]), idf, 10.0, k=10
+    _q, d, _s, _ = shard_topk(
+        tl, _spec("rare", "common", phrases=[("rare", "common")]), "bm25", idf,
+        10.0, k=10,
     )
     assert d.tolist() == [500]
 
@@ -164,16 +168,17 @@ def test_kernel_phrase_adjacency():
 def test_kernel_exclude_masks_before_topk():
     tl = _mk_lists()
     idf = {"rare": 3.0, "common": 0.5}
-    _q, d, _s, _ = shard_bm25_topk(
-        tl, _spec("rare", "common"), idf, 10.0, k=1, exclude=np.array([900])
+    _q, d, _s, _ = shard_topk(
+        tl, _spec("rare", "common"), "bm25", idf, 10.0, k=1, exclude=np.array([900])
     )
     assert d.tolist() == [500]
 
 
 def test_kernel_missing_term_means_empty():
     tl = _mk_lists()
-    q, d, s, stats = shard_bm25_topk(
-        tl, _spec("rare", "common", "absent"), {"rare": 1, "common": 1, "absent": 1}, 10.0, 10
+    q, d, s, stats = shard_topk(
+        tl, _spec("rare", "common", "absent"), "bm25",
+        {"rare": 1, "common": 1, "absent": 1}, 10.0, 10,
     )
     assert d.size == 0 and q.size == 0
 
@@ -184,7 +189,7 @@ def test_kernel_tie_break_doc_id_asc():
     same = encode_posting_blocks(
         docs, np.ones(3, dtype=np.int64), np.full(3, 10), np.arange(3), avg_dl
     )
-    _q, d, s, _ = shard_bm25_topk({"t": same}, _spec("t"), {"t": 1.0}, avg_dl, k=2)
+    _q, d, s, _ = shard_topk({"t": same}, _spec("t"), "bm25", {"t": 1.0}, avg_dl, k=2)
     assert d.tolist() == [3, 7]  # equal scores -> lowest doc_ids win
 
 
@@ -235,7 +240,7 @@ def test_hybrid_head_blocks_exist_and_rank_identity(spark, corpus_pdf, oracle_in
         ]
         want = [(d, round(s, 9)) for d, s in oracle_index.bm25(q, 10)]
         assert got == want, q
-    # phrase DataFrame path
+    # phrase, comprehensive
     got_ph = [
         r["doc_id"]
         for r in run_query(spark, root, '"data mining"', ranker="comprehensive", k=10).collect()

@@ -1,33 +1,40 @@
-"""Block-max conjunctive BM25 top-k — the scale path for `/search`
-(SURVEY.md §4 O1/O9, north_rule: "BM25 with block-max WAND posting-list
-intersection over per-partition index shards followed by a global top-k
-merge").
+"""Block-max conjunctive top-k — the one ranking kernel behind every
+indexed ranker of `/search` (SURVEY.md §4 O1/O9, north_rule: "BM25 with
+block-max WAND posting-list intersection over per-partition index shards
+followed by a global top-k merge"; the reference's R1 comprehensive, R2
+favorite and R3 conjunctive rankers score the same candidates).
 
-One kernel, two places.  After the dictionary probe, wand_topk weighs
-the query terms' df sum against INPROC_MAX_POSTINGS and runs ONE
-complete evaluation in exactly one place:
+One kernel, two places.  After the dictionary probe, the query core
+(_topk, behind wand_topk, query.run_query and query.search) weighs the
+query terms' df sum against INPROC_MAX_POSTINGS and runs ONE complete
+evaluation in exactly one place:
 
     in process (df sum <= INPROC_MAX_POSTINGS, zero Spark jobs):
       postings filtered to the query's terms  [pyarrow scan, row-group pruned]
-        -> kernel per shard                      [shard_bm25_topk, in the driver]
+        -> kernel per shard                      [shard_topk, in the driver]
+        -> comprehensive: docs lookup of every   [storage.lookup_rows:
+           candidate, priors -> final score       priors and metadata at once]
         -> merge (score desc, doc_id asc)[:k]
         -> docs lookup of the k winners           [storage.lookup_rows]
         -> pyarrow.Table                          [zero JVM calls]
         -> spark.createDataFrame(table)           [only at the DataFrame API:
-                                                   wand_topk; the serve path
-                                                   renders the table itself]
+                                                   wand_topk, run_query; the
+                                                   serve path renders the
+                                                   table itself]
 
     in Spark (larger queries, exclude_df, and every wand_topk_batch;
     a single query is a batch of one):
       postings (doc-sharded) filtered to the queries' terms  [parquet pushdown]
         -> groupBy(shard).applyInArrow(kernel)               [one task per shard]
              kernel: per query, rarest-first block-skip intersection,
-             phrase adjacency, tombstone mask, vectorized BM25
-             -> per-shard, per-query top-k
+             phrase adjacency, tombstone mask, the ranker's vectorized
+             score -> per-shard, per-query top-k
         -> global merge                                      [wand_topk:
              orderBy(score desc, doc_id asc).limit(k);        wand_topk_batch:
              rank window per query]
         -> broadcast join docs for url/title                 [J3]
+      comprehensive: the shards return every candidate's QL, and ONE docs
+      join adds the priors (and the metadata) before the bounded merge.
 
 The kernel is the doc-at-a-time galloping intersection of the reference
 (IndexerInvertedCompressed.java:438-462) re-expressed for a columnar
@@ -36,13 +43,30 @@ docids drive; for every other term only the blocks whose
 [first_docid, last_docid] range intersects the current candidate set
 are DECODED (the block-max skip — block metadata is read, block bytes
 are not), then candidates intersect via sorted-array intersection and
-the surviving docs get exact vectorized BM25 scores.  Each
-(term, block) is decoded at most once per shard task, so the queries of
-a batch share their decode work.
+the surviving docs get the ranker's exact score over their decoded
+(tf, dl) — a column operation per term.  Each (term, block) is decoded
+at most once per shard task, so the queries of a batch share their
+decode work.
 
-Scores are identical to the DataFrame fallback path and the NumPy
-oracle: skipping only avoids work, never changes the top-k (asserted by
-tests at multiple shard counts).
+Reference semantics pinned (SURVEY.md §7.3):
+  * phrase tokens are conjunctive members needing consecutive positions
+    (IndexerInvertedCompressed.java:379-436) but are split into words for
+    scoring (RankerComprehensive.java:51-56).  A phrase counts at
+    position 0 (the reference's ``result > 0`` check at :433 silently
+    drops a doc whose only phrase occurrence starts at position 0 — a
+    bug we do not reproduce; tests/oracle.py pins the fixed semantics).
+  * comprehensive = 1.4*QL + 0.3*log(pr+1) + 0.3*log(nv+1) with JM
+    smoothing lambda=0.5 (RankerComprehensive.java:20-23,42-45,59-60;
+    the 1.4 factor is the ``logScore += lambda_1 * logScore`` self-add);
+    favorite = exp(QL) (RankerFavorite.java:23,31-59); conjunctive = 1.0
+    (RankerConjunctive.java:29-35); bm25 k1=1.2, b=0.75, Lucene-style
+    non-negative idf.
+  * tie-break everywhere: (score desc, doc_id asc).
+
+The correctness references are the pure-Python oracle (tests/oracle.py)
+and the frozen DuckDB oracles of the driver entries: skipping only
+avoids work, never changes the top-k (asserted at multiple shard counts,
+on both sides of the gate).
 """
 
 from __future__ import annotations
@@ -70,6 +94,11 @@ from websearchengine_spark.operators.query import (
 from websearchengine_spark.operators.util import as_dataframe
 from websearchengine_spark.sources.storage import IndexStorage
 
+LAMBDA_JM = 0.5
+LAMBDA_1 = 0.4  # score self-add -> effective 1.4x
+LAMBDA_2 = 0.3  # log(pagerank+1) weight
+LAMBDA_3 = 0.3  # log(numviews+1) weight
+
 
 def _phrase_docs(phrase: tuple[str, ...], cand: np.ndarray, per_term: dict) -> np.ndarray:
     """Docs in ``cand`` containing the words adjacently: intersect the
@@ -90,10 +119,63 @@ def _phrase_docs(phrase: tuple[str, ...], cand: np.ndarray, per_term: dict) -> n
     return np.unique(keys >> 32)
 
 
-def shard_bm25_topk(
+def _score(
+    ranker: str,
+    const: dict[str, float],
+    avg_dl: float,
+    qweights: dict[str, float],
+    terms: list[str],
+    per_term: dict,
+    cand: np.ndarray,
+) -> np.ndarray:
+    """The ranker's exact score of the surviving candidates ``cand`` from
+    their decoded (tf, dl), summed over ``terms`` with the query weights
+    (word multiplicity):
+
+      bm25:        Σ w·idf·(k1+1)tf / (tf + k1(1−b+b·dl/avg_dl)),
+                   ``const`` = idf
+      QL:          Σ w·log((1−λ)tf/dl + λ·ctf/total_tf),
+                   ``const`` = λ·ctf/total_tf
+      favorite:    exp(QL)
+      comprehensive: QL (its per-doc priors are added after the kernel)
+      conjunctive: 1.0"""
+    if ranker == "conjunctive":
+        return np.ones(cand.size)
+    scores = np.zeros(cand.size, dtype=np.float64)
+    dl_cand = None
+    for t in terms:
+        d, tf, dl, _pos = per_term[t]
+        ix = np.searchsorted(d, cand)
+        tf_c = tf[ix].astype(np.float64)
+        if dl_cand is None:
+            dl_cand = dl[ix].astype(np.float64)
+        if ranker == "bm25":
+            scores += (
+                qweights[t]
+                * const[t]
+                * ((BM25_K1 + 1.0) * tf_c)
+                / (tf_c + BM25_K1 * (1.0 - BM25_B + BM25_B * dl_cand / avg_dl))
+            )
+        else:
+            scores += qweights[t] * np.log((1.0 - LAMBDA_JM) * tf_c / dl_cand + const[t])
+    return np.exp(scores) if ranker == "favorite" else scores
+
+
+def _comprehensive(ql, pagerank, numviews, log):
+    """R1 from the kernel's QL and a doc's priors — one formula for numpy
+    arrays (in process, ``log=np.log``) and Spark columns (``F.log``)."""
+    return (
+        (1.0 + LAMBDA_1) * ql
+        + LAMBDA_2 * log(pagerank + 1.0)
+        + LAMBDA_3 * log(numviews + 1.0)
+    )
+
+
+def shard_topk(
     term_lists: dict[str, list],
     query_specs: list[tuple[int, dict[str, float], list[tuple[str, ...]]]],
-    idf: dict[str, float],
+    ranker: str,
+    const: dict[str, float],
     avg_dl: float,
     k: int,
     exclude: np.ndarray | None = None,
@@ -102,6 +184,7 @@ def shard_bm25_topk(
     against the shard's posting blocks (``term_lists``: term -> block
     tuples as codec.encode_posting_blocks writes them).
 
+    Candidate generation is the same for every ranker.
     ``query_specs``: [(query_id, {term: weight}, phrases)...] where
     ``phrases`` is a (possibly empty) list of word tuples that must occur
     ADJACENTLY (positions p, p+1, ...); positions are decoded only for
@@ -110,12 +193,17 @@ def shard_bm25_topk(
     of the candidate sets BEFORE scoring (live-index tombstones: docs
     superseded by a re-crawl but not yet physically removed by
     compaction) — the surviving top-k is exact over the non-excluded
-    corpus.
+    corpus.  ``ranker``, ``const`` and ``avg_dl`` then pick the score
+    (see _score).
 
     Returns parallel arrays (query_ids, doc_ids, scores) of per-query
-    top-k, each query's rows in (score desc, doc_id asc) order, and
-    stats {"blocks_total", "blocks_decoded"} over the shard's term
-    lists (the block-max skip evidence)."""
+    top-k on the ranker's final score, each query's rows in (score desc,
+    doc_id asc) order — except comprehensive, whose priors are per-doc:
+    it returns every candidate with its QL.  ``stats``
+    {"blocks_total", "blocks_decoded"} is the block-max skip evidence
+    over the shard's term lists."""
+    if ranker == "comprehensive":
+        k = None
     pos_terms = {w for _, _, phrases in query_specs for ph in phrases for w in ph}
     size = {t: sum(b[2] for b in blocks) for t, blocks in term_lists.items()}
     decoded: dict[tuple[str, int], tuple] = {}
@@ -166,23 +254,9 @@ def shard_bm25_topk(
         if cand.size == 0:
             continue
 
-        # exact vectorized BM25 over surviving candidates
-        scores = np.zeros(cand.size, dtype=np.float64)
-        dl_cand = None
-        for t in terms:
-            d, tf, dl, _pos = per_term[t]
-            ix = np.searchsorted(d, cand)
-            tf_c = tf[ix].astype(np.float64)
-            if dl_cand is None:
-                dl_cand = dl[ix].astype(np.float64)
-            scores += (
-                qweights[t]
-                * idf[t]
-                * ((BM25_K1 + 1.0) * tf_c)
-                / (tf_c + BM25_K1 * (1.0 - BM25_B + BM25_B * dl_cand / avg_dl))
-            )
+        scores = _score(ranker, const, avg_dl, qweights, terms, per_term, cand)
         # per-shard top-k with the pinned tie-break (score desc, doc_id asc)
-        if cand.size > k:
+        if k is not None and cand.size > k:
             # keep every doc scoring >= the k-th best (ties resolved below)
             kth = np.partition(-scores, k - 1)[k - 1]
             keep = np.flatnonzero(-scores <= kth)
@@ -239,85 +313,96 @@ def _exclude_by_shard(exclude_df: DataFrame) -> "object":
     ).groupBy("shard")
 
 
-def _idf_table(
+def _term_consts(
+    ranker: str,
     num_docs: int,
-    df_by_term: dict[str, int],
-    df_override: dict[str, int] | None,
+    total_tf: int,
+    stats: dict[str, tuple[int, int]],
+    stats_override: dict[str, tuple] | None,
 ) -> dict[str, float]:
-    """BM25 idf per term present in THIS index, from the override df when
-    given.  A partial override is a caller contract error (the multi-
-    index path always supplies every term's global df) — raise a clear
-    ValueError instead of the opaque KeyError it used to be."""
-    idf_df = df_by_term if df_override is None else df_override
-    if df_override is not None:
-        missing = sorted(t for t in df_by_term if t not in df_override)
+    """The kernel's per-term constant (see _score) for every query term
+    present in THIS index (``stats``), from the override statistics when
+    given.  A partial override is a caller contract error (the
+    multi-index path always supplies every term's global statistics) —
+    raise a clear ValueError instead of an opaque KeyError."""
+    src = stats if stats_override is None else stats_override
+    if stats_override is not None:
+        missing = sorted(t for t in stats if t not in stats_override)
         if missing:
             raise ValueError(
                 "df_override must cover every query term present in this "
                 f"index's term_stats; missing: {missing}"
             )
-    return {
-        t: math.log((num_docs - idf_df[t] + 0.5) / (idf_df[t] + 0.5) + 1.0)
-        for t in df_by_term
-    }
+    if ranker == "bm25":
+        return {
+            t: math.log((num_docs - src[t][0] + 0.5) / (src[t][0] + 0.5) + 1.0)
+            for t in stats
+        }
+    if ranker == "conjunctive":
+        return {}
+    return {t: LAMBDA_JM * src[t][1] / total_tf for t in stats}
 
 
 def _df_lookup(
     spark, store: IndexStorage, terms: list[str], stats_cache: dict | None
-) -> dict[str, int]:
-    """{term: df} for the query's terms present in this index.
+) -> dict[str, tuple[int, int]]:
+    """{term: (df, ctf)} for the query's terms present in this index —
+    the one dictionary probe of every ranker.
 
-    The term-dictionary probe: storage.lookup_rows reads only the ~k
-    row groups covering the terms driver-side (term_stats is written
-    range-partitioned + term-sorted), replacing a per-query Spark job
-    whose fixed scheduling cost dwarfed its 2-3-row result.  Falls back
-    to the Spark collect when the pyarrow path is unavailable.  The
-    caller-owned ``stats_cache`` memo keeps its exact prior contract
-    (None pins "absent from index")."""
-    known = stats_cache.setdefault("df", {}) if stats_cache is not None else {}
+    storage.lookup_rows reads only the ~k row groups covering the terms
+    driver-side (term_stats is written range-partitioned + term-sorted),
+    replacing a per-query Spark job whose fixed scheduling cost dwarfed
+    its 2-3-row result.  Falls back to the Spark collect when the
+    pyarrow path is unavailable.  The caller-owned ``stats_cache`` memo
+    (``{"term_stats": {term: (df, ctf) or None}}``) holds both numbers;
+    None pins "absent from index"."""
+    known = (
+        stats_cache.setdefault("term_stats", {}) if stats_cache is not None else {}
+    )
     missing = [t for t in terms if t not in known]
     if missing:
-        rows = store.lookup_rows(
-            "term_stats", "term", missing, columns=["term", "df"]
-        )
+        cols = ["term", "df", "ctf"]
+        rows = store.lookup_rows("term_stats", "term", missing, columns=cols)
         if rows is None:
             rows = (
                 store.read_table(spark, "term_stats")
                 .filter(F.col("term").isin(missing))
-                .select("term", "df")
+                .select(*cols)
                 .collect()
             )
-        found = {r["term"]: int(r["df"]) for r in rows}
+        found = {r["term"]: (int(r["df"]), int(r["ctf"])) for r in rows}
         for t in missing:
             known[t] = found.get(t)  # None pins "absent from index"
     return {t: known[t] for t in terms if known[t] is not None}
 
 
-# The one gate between the two places the kernel runs.  A wand_topk
-# query whose terms' df sum (on a live segment with tombstones, plus the
-# catalog's pending tombstone count) is at most this runs in the calling
-# process: one pyarrow scan of its postings, the kernel per shard, a
-# driver-side merge and metadata lookup — zero Spark jobs.  A larger one
-# runs the kernel in one Spark task per shard.  In-process cost grows by
-# ~1 us per posting; the Spark side pays ~0.5 s of fixed job cost per
-# query however many cores run it, so below this bound the driver cannot
-# lose even to a fully parallel Spark side.  Measured on 4 cores
+# The one gate between the two places the kernel runs.  A query whose
+# terms' df sum (on a live segment with tombstones, plus the catalog's
+# pending tombstone count) is at most this runs in the calling process:
+# one pyarrow scan of its postings, the kernel per shard, a driver-side
+# merge and metadata lookup — zero Spark jobs.  A larger one runs the
+# kernel in one Spark task per shard.  In-process cost grows by ~1 us
+# per posting; the Spark side pays ~0.5 s of fixed job cost per query
+# however many cores run it, so below this bound the driver cannot lose
+# even to a fully parallel Spark side.  Measured on 4 cores
 # (CHANGES.md): in-process wins everywhere at sf0.1 and up to ~0.9M
 # postings at the sf1 shape.
 INPROC_MAX_POSTINGS = 500_000
 
 
-# (doc_ids, scores) of an index where the query cannot match
-NO_HITS = (np.empty(0, np.int64), np.empty(0, np.float64))
+# (doc_ids, scores, docs rows already fetched) of an index where the
+# query cannot match
+NO_HITS = (np.empty(0, np.int64), np.empty(0, np.float64), {})
 
 
 class _Scoring(NamedTuple):
-    """A resolved query batch: the kernel's specs, idf and avg_dl, the
-    terms whose postings it reads, and their df sum in this index (the
-    work the gate weighs)."""
+    """A resolved query batch: the kernel's specs, ranker and scoring
+    constants (see _score), the terms whose postings it reads, and their
+    df sum in this index (the work the gate weighs)."""
 
     specs: list[tuple[int, dict[str, float], list[tuple[str, ...]]]]
-    idf: dict[str, float]
+    ranker: str
+    const: dict[str, float]
     avg_dl: float
     terms: list[str]
     postings: int
@@ -328,13 +413,20 @@ def _prepare(
     store: IndexStorage,
     queries: list[str],
     corpus_stats: tuple[int, int] | None,
-    df_override: dict[str, int] | None,
-    local_df: dict[str, int] | None,
+    stats_override: dict[str, tuple] | None,
+    local_stats: dict[str, tuple] | None,
     stats_cache: dict | None,
+    ranker: str = "bm25",
 ) -> _Scoring | None:
-    """Analyze ``queries`` and resolve df/idf — driver-side, no Spark
-    job on a warm ``stats_cache`` or with ``local_df``.  None when no
-    query can match.  The parameters are documented on wand_topk."""
+    """Analyze ``queries`` and resolve their term statistics and the
+    ranker's constants — driver-side, no Spark job on a warm
+    ``stats_cache`` or with ``local_stats``.  None when no query can
+    match.  ``stats_override`` (the union statistics of a multi-index
+    caller, or wand_topk's df_override) and ``local_stats`` (THIS index's
+    statistics, when the caller already probed them) are {term: (df,
+    ctf)}; the other parameters are documented on wand_topk."""
+    if ranker not in ("comprehensive", "favorite", "conjunctive", "bm25"):
+        raise ValueError(f"unknown ranker: {ranker}")
     analyzer = index_analyzer(store)
     specs: list[tuple[int, dict[str, float], list[tuple[str, ...]]]] = []
     for qid, q in enumerate(queries):
@@ -361,17 +453,19 @@ def _prepare(
     if corpus_stats is not None:
         num_docs, total_tf = corpus_stats
         avg_dl = total_tf / max(1, num_docs)
-    if local_df is not None:
-        df_by_term = {t: local_df[t] for t in all_terms if t in local_df}
+    if local_stats is not None:
+        stats = {t: local_stats[t] for t in all_terms if t in local_stats}
     else:
-        df_by_term = _df_lookup(spark, store, all_terms, stats_cache)
+        stats = _df_lookup(spark, store, all_terms, stats_cache)
     # a query with a term absent from this index can never match
-    specs = [s for s in specs if all(t in df_by_term for t in s[1])]
+    specs = [s for s in specs if all(t in stats for t in s[1])]
     if not specs:
         return None
-    idf = _idf_table(num_docs, df_by_term, df_override)
+    const = _term_consts(ranker, num_docs, total_tf, stats, stats_override)
     terms = sorted({t for _, qw, _ in specs for t in qw})
-    return _Scoring(specs, idf, avg_dl, terms, sum(df_by_term[t] for t in terms))
+    return _Scoring(
+        specs, ranker, const, avg_dl, terms, sum(stats[t][0] for t in terms)
+    )
 
 
 def _shard_topk(
@@ -381,11 +475,12 @@ def _shard_topk(
     k: int,
     exclude_df: DataFrame | None,
 ) -> DataFrame:
-    """The Spark side, shared by wand_topk and wand_topk_batch: scan the
-    postings of every query term once and run shard_bm25_topk in one
-    task per shard.  Returns the per-shard top-k as (qid, doc_id, score)
-    rows, qid indexing the queries ``sc`` was prepared from."""
-    specs, idf, avg_dl = sc.specs, sc.idf, sc.avg_dl
+    """The Spark side's kernel stage, shared by every query path: scan
+    the postings of every query term once and run shard_topk in one task
+    per shard.  Returns the per-shard top-k (every candidate for
+    comprehensive) as (qid, doc_id, score) rows, qid indexing the
+    queries ``sc`` was prepared from."""
+    specs, ranker, const, avg_dl = sc.specs, sc.ranker, sc.const, sc.avg_dl
 
     # kernels run as GROUPED ARROW udfs (r6): the blocks column is a
     # list<struct<..., binary>>; the pandas path materialized it as an
@@ -398,8 +493,8 @@ def _shard_topk(
                 tbl.column("term").to_pylist(), tbl.column("blocks").to_pylist()
             )
         }
-        q, d, s, _stats = shard_bm25_topk(
-            term_lists, specs, idf, avg_dl, k, exclude=exclude
+        q, d, s, _stats = shard_topk(
+            term_lists, specs, ranker, const, avg_dl, k, exclude=exclude
         )
         return pa.table(
             {
@@ -433,14 +528,19 @@ def _shard_topk(
 
 def _local_topk(
     store: IndexStorage, sc: _Scoring, k: int, exclude: np.ndarray | None = None
-) -> tuple[np.ndarray, np.ndarray] | None:
+) -> tuple[np.ndarray, np.ndarray, dict] | None:
     """The in-process side for ONE query: the same kernel per shard over
     one pyarrow scan of the query terms' postings (storage.lookup_rows:
     term-sorted row groups, so the scan reads about one row group per
-    term and group).  Returns every shard's top-k as (doc_ids, scores)
-    for _local_result to merge, or None when the pyarrow path is
-    unavailable (the caller runs the Spark side instead).  ``exclude``:
-    doc_ids masked before scoring, as on the Spark side."""
+    term and group).  ``exclude``: doc_ids masked before scoring, as on
+    the Spark side.
+
+    Returns (doc_ids, scores, docs rows by doc_id) for _local_result to
+    merge: every shard's top-k with no rows yet — or, for comprehensive,
+    every candidate with its final score and its docs row, fetched in ONE
+    lookup (priors and metadata together; a candidate missing from docs
+    is dropped, as by the Spark side's join).  None when the pyarrow
+    path is unavailable (the caller runs the Spark side instead)."""
     rows = store.lookup_rows(
         "postings", "term", sc.terms, columns=["shard", "term", "blocks"]
     )
@@ -450,26 +550,42 @@ def _local_topk(
     for r in rows:
         by_shard.setdefault(r["shard"], {})[r["term"]] = _rows_to_blocks(r["blocks"])
     tops = [
-        shard_bm25_topk(term_lists, sc.specs, sc.idf, sc.avg_dl, k, exclude=exclude)
+        shard_topk(
+            term_lists, sc.specs, sc.ranker, sc.const, sc.avg_dl, k, exclude=exclude
+        )
         for term_lists in by_shard.values()
     ]
-    return (
-        np.concatenate([NO_HITS[0]] + [t[1] for t in tops]),
-        np.concatenate([NO_HITS[1]] + [t[2] for t in tops]),
+    ids = np.concatenate([NO_HITS[0]] + [t[1] for t in tops])
+    scores = np.concatenate([NO_HITS[1]] + [t[2] for t in tops])
+    if sc.ranker != "comprehensive":
+        return ids, scores, {}
+    found = store.lookup_rows(
+        "docs", "doc_id", ids.tolist(), columns=[c for c in RESULT_COLS if c != "score"]
     )
+    if found is None:
+        return None
+    docs = {r["doc_id"]: r for r in found}
+    keep = np.array([d in docs for d in ids.tolist()], dtype=bool)
+    ids, ql = ids[keep], scores[keep]
+    prior = {
+        c: np.array([docs[d][c] for d in ids.tolist()], dtype=np.float64)
+        for c in ("pagerank", "numviews")
+    }
+    return ids, _comprehensive(ql, prior["pagerank"], prior["numviews"], np.log), docs
 
 
 def _local_result(
-    hits: list[tuple[IndexStorage, int, np.ndarray, np.ndarray]],
+    hits: list[tuple[IndexStorage, int, np.ndarray, np.ndarray, dict]],
     k: int,
     docs_join: bool,
 ) -> pa.Table:
     """Merge in-process top-ks into ONE pyarrow table — no JVM call to
     build it or to read it.  ``hits``: per index, (store, doc_id offset,
-    local doc_ids, scores) as _local_topk returns them; the result keeps
-    the k best on (score desc, doc_id asc) over the offset ids.  With
-    ``docs_join`` each winner's metadata is looked up driver-side in its
-    own index and the columns are RESULT_COLS with the docs table's own
+    local doc_ids, scores, docs rows) as _local_topk returns them; the
+    result keeps the k best on (score desc, doc_id asc) over the offset
+    ids.  With ``docs_join`` each winner's metadata comes from its
+    index's rows, looked up driver-side for the winners that have none
+    yet, and the columns are RESULT_COLS with the docs table's own
     types, nullable as Spark reads parquet (what the Spark side's docs
     join yields); without it, bare (doc_id, score)."""
     import pyarrow.dataset as pads
@@ -493,17 +609,18 @@ def _local_result(
             ]
         )
         meta: dict[int, dict] = {}
-        for i, (store, off, _d, _s) in enumerate(hits):
-            mine = gids[owner == i] - off
-            if not mine.size:
-                continue
-            found = store.lookup_rows(
-                "docs", "doc_id", mine.tolist(),
-                columns=[c for c in RESULT_COLS if c != "score"],
-            )
-            if found is None:
-                raise OSError(f"cannot read {store.table_path('docs')}")
-            meta.update({r["doc_id"] + off: r for r in found})
+        for i, (store, off, _d, _s, known) in enumerate(hits):
+            mine = (gids[owner == i] - off).tolist()
+            need = [d for d in mine if d not in known]
+            if need:
+                found = store.lookup_rows(
+                    "docs", "doc_id", need,
+                    columns=[c for c in RESULT_COLS if c != "score"],
+                )
+                if found is None:
+                    raise OSError(f"cannot read {store.table_path('docs')}")
+                known = {**known, **{r["doc_id"]: r for r in found}}
+            meta.update({d + off: known[d] for d in mine if d in known})
         # inner-join semantics: a doc missing from docs is dropped
         rows = [{**meta[g], "doc_id": g, "score": sc} for g, sc in top if g in meta]
     return pa.Table.from_pylist(rows, schema=schema)
@@ -517,7 +634,6 @@ def wand_topk(
     corpus_stats: tuple[int, int] | None = None,
     df_override: dict[str, int] | None = None,
     docs_join: bool = True,
-    local_df: dict[str, int] | None = None,
     exclude_df: DataFrame | None = None,
     stats_cache: dict | None = None,
 ) -> DataFrame:
@@ -527,35 +643,29 @@ def wand_topk(
     after the dictionary probe: in this process when the query terms'
     df sum is at most INPROC_MAX_POSTINGS (and no ``exclude_df`` is
     given), else in one Spark task per shard.  Both return the same
-    rows with the same column types.
+    rows with the same column types.  query.run_query runs the same
+    core for every ranker.
 
     Phrase tokens are supported: positions are decoded in the kernel for
     the phrase terms only, and candidates are filtered to docs where the
-    words occur adjacently — same semantics as run_query's phrase path,
-    rank-identical.  A positionless index raises ValueError on them.
+    words occur adjacently.  A positionless index raises ValueError on
+    them.
 
     ``corpus_stats=(num_docs, total_tf)`` and ``df_override={term: df}``
     replace this index's OWN statistics with caller-supplied (e.g.
-    GLOBAL, multi-index) ones — the streaming live-search path
-    (streaming/ingest.py::search_live) scores every live index segment
-    with union statistics so that base+delta search is score-identical
-    to the compacted index.  Term PRESENCE is still checked against this
-    index (a doc here can only match if its terms are here).
+    GLOBAL, multi-index) ones.  Term PRESENCE is still checked against
+    this index (a doc here can only match if its terms are here).
     ``docs_join=False`` returns bare (doc_id, score) without the
     url/title metadata join — for callers that merge several indexes and
-    join metadata once at the end.
-    ``local_df`` pre-supplies THIS index's {term: df} for the query's
-    terms (what the term_stats lookup would return), letting a
-    multi-index caller that already looked every segment up skip the
-    per-segment lookup.
+    join metadata once at the end.  (The live-search path,
+    streaming/ingest.py, resolves union statistics once per query and
+    calls the cores directly.)
 
-    ``stats_cache``: a CALLER-OWNED dict memoizing the per-term df
-    lookups across calls (``{"df": {term: df-or-None}}``; None records
-    a term absent from the index).  A warm serve loop then runs zero
-    term_stats jobs per request — only terms never seen before cost one
-    lookup.  The caller is responsible for invalidation (the HTTP server
-    drops it when the index generation changes); ignored when
-    ``local_df`` is given.
+    ``stats_cache``: a CALLER-OWNED dict memoizing the per-term
+    dictionary lookups across calls (see _df_lookup).  A warm serve loop
+    then reads no term_stats per request — only terms never seen before
+    cost one lookup.  The caller is responsible for invalidation (the
+    HTTP server drops it when the index generation changes).
 
     ``exclude_df`` is the EXECUTOR-RESIDENT tombstone mask: a
     (shard, doc_id) DataFrame cogrouped with the postings by shard, so
@@ -568,34 +678,41 @@ def wand_topk(
 
     Returns the same columns as query.run_query, ordered by
     (score desc, doc_id asc)."""
+    # the cores take {term: (df, ctf)}; bm25 reads no ctf
+    stats_override = (
+        None if df_override is None else {t: (d, None) for t, d in df_override.items()}
+    )
     return as_dataframe(
         spark,
-        _wand_topk(
+        _topk(
             spark, index_root, query, k=k, corpus_stats=corpus_stats,
-            df_override=df_override, docs_join=docs_join, local_df=local_df,
+            stats_override=stats_override, docs_join=docs_join,
             exclude_df=exclude_df, stats_cache=stats_cache,
         ),
     )
 
 
-def _wand_topk(
+def _topk(
     spark: SparkSession,
     index_root: str,
     query: str,
     k: int = 10,
     corpus_stats: tuple[int, int] | None = None,
-    df_override: dict[str, int] | None = None,
+    stats_override: dict[str, tuple] | None = None,
     docs_join: bool = True,
-    local_df: dict[str, int] | None = None,
     exclude_df: DataFrame | None = None,
     stats_cache: dict | None = None,
+    ranker: str = "bm25",
 ) -> pa.Table | DataFrame:
-    """wand_topk's core: the in-process side's pyarrow table, or the
-    Spark side's lazy DataFrame (util.as_rows / as_dataframe read
-    either)."""
+    """The query core of wand_topk, query.run_query and query.search:
+    the in-process side's pyarrow table, or the Spark side's lazy
+    DataFrame (util.as_rows / as_dataframe read either).  ``ranker``:
+    bm25, comprehensive, favorite or conjunctive; ``stats_override`` is
+    wand_topk's df_override as {term: (df, ctf)}."""
     store = IndexStorage(index_root)
     sc = _prepare(
-        spark, store, [query], corpus_stats, df_override, local_df, stats_cache
+        spark, store, [query], corpus_stats, stats_override, None,
+        stats_cache, ranker,
     )
     if sc is None:
         return _local_result([(store, 0, *NO_HITS)], k, docs_join)
@@ -614,27 +731,71 @@ def _spark_topk(
     docs_join: bool,
     exclude_df: DataFrame | None,
 ) -> DataFrame:
-    """wand_topk's Spark side: the per-shard kernel tasks, a bounded
-    (score desc, doc_id asc) merge and the broadcast metadata join."""
-    topk = _shard_topk(spark, store, sc, k, exclude_df).select(
-        "doc_id", "score"
-    ).orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    """The Spark side of one query: the per-shard kernel tasks, a
+    bounded (score desc, doc_id asc) merge and the broadcast metadata
+    join — or, for comprehensive, whose shards return every candidate's
+    QL, ONE docs join that brings the priors (and the metadata) before
+    the bounded merge."""
+    hits = _shard_topk(spark, store, sc, k, exclude_df).select("doc_id", "score")
+
+    def top(df: DataFrame) -> DataFrame:
+        # .limit makes the sort a TakeOrderedAndProject: a bounded heap,
+        # and no range-sampling job when it re-orders <= k joined rows
+        return df.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+
+    if sc.ranker == "comprehensive":
+        docs = store.read_table(spark, "docs")
+        scored = hits.withColumnRenamed("score", "ql").join(docs, "doc_id")
+        return top(
+            scored.withColumn(
+                "score",
+                _comprehensive(
+                    F.col("ql"), F.col("pagerank"), F.col("numviews"), F.log
+                ),
+            ).select(*(RESULT_COLS if docs_join else ["doc_id", "score"]))
+        )
     if not docs_join:
-        return topk
+        return top(hits)
     docs = store.read_table(spark, "docs")
     # metadata join: broadcast the K-ROW result side explicitly.  Catalyst
     # can't size the kernel's UDF output, so past ~10 MB of docs it would
     # fall back to a sort-merge join that SHUFFLES THE WHOLE DOCS TABLE
     # for k rows (caught by the sf1 plan audit — fine at 500 docs, wrong
     # at 50k, catastrophic at 10^9)
+    return top(F.broadcast(top(hits)).join(docs, "doc_id").select(*RESULT_COLS))
+
+
+def _batch_ranked(
+    spark: SparkSession,
+    store: IndexStorage,
+    sc: _Scoring,
+    queries: list[str],
+    k: int,
+    exclude_df: DataFrame | None,
+) -> DataFrame:
+    """wand_topk_batch's Spark side up to its metadata join: the
+    per-shard top-ks ranked per query by a window, as (qid, doc_id,
+    score, rank, query) rows with rank <= k."""
+    from pyspark.sql import Window
+
+    per_shard = _shard_topk(spark, store, sc, k, exclude_df)
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
+    qnames = spark.createDataFrame(
+        [(i, q) for i, q in enumerate(queries)], "qid long, query string"
+    )
     return (
-        F.broadcast(topk).join(docs, "doc_id")
-        .select(*RESULT_COLS)
-        # re-established order over the <=k joined rows: .limit(k) is a
-        # no-op on the rows but makes it a TakeOrderedAndProject instead
-        # of a range-sampled global sort (one job fewer per query)
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
+        per_shard.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .join(F.broadcast(qnames), "qid")
+    )
+
+
+def _empty_batch(spark: SparkSession) -> DataFrame:
+    """wand_topk_batch's result schema, no rows."""
+    return spark.createDataFrame(
+        [],
+        "query string, doc_id long, url string, title string, score double, "
+        "pagerank double, numviews long, rank int",
     )
 
 
@@ -643,49 +804,24 @@ def wand_topk_batch(
     index_root: str,
     queries: list[str],
     k: int = 10,
-    corpus_stats: tuple[int, int] | None = None,
-    df_override: dict[str, int] | None = None,
-    docs_join: bool = True,
-    local_df: dict[str, int] | None = None,
-    exclude_df: DataFrame | None = None,
-    stats_cache: dict | None = None,
 ) -> DataFrame:
     """BM25 top-k for MANY queries in one job: postings for the union of
     all query terms are scanned once; each shard task scores every query
     (decode shared across queries); per-query global merge via a ranking
-    window.  Returns (query, doc_id, url, title, score, pagerank,
-    numviews, rank) ordered by (query, rank).
-
-    Phrase tokens, ``corpus_stats`` / ``df_override`` / ``local_df`` /
-    ``exclude_df`` / ``stats_cache``: see wand_topk — the live
-    multi-index search path supplies union statistics here and joins
-    metadata once after the cross-index merge (``docs_join=False``
-    returns (query, doc_id, score, rank) without the docs join)."""
-    from pyspark.sql import Window
-
+    window.  Phrase tokens are supported.  Returns (query, doc_id, url,
+    title, score, pagerank, numviews, rank) ordered by (query, rank)."""
     store = IndexStorage(index_root)
-    sc = _prepare(
-        spark, store, queries, corpus_stats, df_override, local_df, stats_cache
-    )
+    sc = _prepare(spark, store, queries, None, None, None, None)
     if sc is None:
-        if docs_join:
-            return spark.createDataFrame(
-                [], "query string, doc_id long, url string, title string, "
-                "score double, pagerank double, numviews long, rank int"
-            )
-        return spark.createDataFrame(
-            [], "query string, doc_id long, score double, rank int"
-        )
-
-    per_shard = _shard_topk(spark, store, sc, k, exclude_df)
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    qnames = spark.createDataFrame(
-        [(i, q) for i, q in enumerate(queries)], "qid long, query string"
-    )
-    ranked = (
-        per_shard.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .join(F.broadcast(qnames), "qid")
+        return _empty_batch(spark)
+    ranked = _batch_ranked(spark, store, sc, queries, k, None)
+    # n_queries x k rows vs the full docs table: broadcast the ranked
+    # side (same sf1 plan-audit rationale as wand_topk's metadata join)
+    docs = store.read_table(spark, "docs")
+    out = (
+        F.broadcast(ranked).join(docs, "doc_id").select(
+            "query", "doc_id", "url", "title", "score", "pagerank", "numviews", "rank"
+        ).orderBy("query", "rank")
     )
     # the result is <= len(queries)*k rows; .limit of that bound is a
     # no-op on the rows but compiles the final orderBy down to
@@ -694,18 +830,4 @@ def wand_topk_batch(
     # driver-side heap, so a 10^6-query batch must keep the distributed
     # sort instead (guide §5: the driver does no data work).
     n_bound = max(1, len(queries)) * k
-
-    def _ordered(df):
-        o = df.orderBy("query", "rank")
-        return o.limit(n_bound) if n_bound <= 100_000 else o
-
-    if not docs_join:
-        return _ordered(ranked.select("query", "doc_id", "score", "rank"))
-    # n_queries x k rows vs the full docs table: broadcast the ranked
-    # side (same sf1 plan-audit rationale as wand_topk's metadata join)
-    docs = store.read_table(spark, "docs")
-    return _ordered(
-        F.broadcast(ranked).join(docs, "doc_id").select(
-            "query", "doc_id", "url", "title", "score", "pagerank", "numviews", "rank"
-        )
-    )
+    return out.limit(n_bound) if n_bound <= 100_000 else out

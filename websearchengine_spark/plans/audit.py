@@ -23,7 +23,6 @@ def plan_of(df: DataFrame, mode: str = "formatted") -> str:
 
 
 def audit_plans(spark, index_root: str) -> dict[str, tuple[bool, str]]:
-    from websearchengine_spark.operators.query import load_postings_for_terms, run_query
     from websearchengine_spark.operators.topk import (
         INPROC_MAX_POSTINGS,
         _prepare,
@@ -77,8 +76,8 @@ def audit_plans(spark, index_root: str) -> dict[str, tuple[bool, str]]:
     #    small index without a plan): metadata join is a broadcast,
     #    global top-k is TakeOrderedAndProject (bounded heap merge, no
     #    full sort)
-    def spark_side(q: str) -> str:
-        sc = _prepare(spark, store, [q], None, None, None, None)
+    def spark_side(q: str, ranker: str = "bm25") -> str:
+        sc = _prepare(spark, store, [q], None, None, None, None, ranker)
         return plan_of(_spark_topk(spark, store, sc, 10, True, None))
 
     wp = spark_side(audit_q)
@@ -116,10 +115,23 @@ def audit_plans(spark, index_root: str) -> dict[str, tuple[bool, str]]:
         ok, f"{gated_q}: " + _grep(gp, ["LocalTableScan", "Exchange"])
     )
 
-    # 3. DataFrame scorer path: same properties
-    rp = plan_of(run_query(spark, index_root, audit_q, ranker="bm25", k=10))
-    ok = "TakeOrderedAndProject" in rp and "BroadcastHashJoin" in rp
-    out["dataframe_scorer_merge"] = (ok, _grep(rp, ["TakeOrderedAndProject", "BroadcastHashJoin"]))
+    # 3. run_query's Spark side, every indexed ranker: one kernel shell
+    #    and a bounded TakeOrderedAndProject merge, no rank Window; the
+    #    shard grouping is the only shuffle except for comprehensive,
+    #    whose every-candidate docs join (the priors) may shuffle too
+    shapes = []
+    for ranker in ("bm25", "favorite", "conjunctive", "comprehensive"):
+        qp = spark_side(audit_q, ranker)
+        n_exchange = len(re.findall(r"\(\d+\) Exchange", qp))
+        ok = "TakeOrderedAndProject" in qp and "Window" not in qp
+        if ranker != "comprehensive":
+            ok = ok and n_exchange == 1
+        shapes.append(
+            (ok, f"{ranker}: {n_exchange} Exchange, Window={'Window' in qp}")
+        )
+    out["run_query_one_kernel"] = (
+        all(ok for ok, _ in shapes), "\n".join(ev for _, ev in shapes)
+    )
 
     # 4. docs lookup by doc_id list (J3): predicate pushed to scan
     docs = store.read_table(spark, "docs").filter(F.col("doc_id").isin([1, 2, 3]))

@@ -43,6 +43,17 @@ def make_pyfiles_zip(out_path: str | None = None) -> str:
     return out_path
 
 
+def _default_driver_memory() -> str:
+    """min(24g, half the host's physical RAM), in MiB.  A fixed 24g heap
+    on a smaller host lets the driver JVM grow until the OS kills it,
+    instead of spilling or raising; 24g when the RAM size is unknown."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "24g"
+    return f"{min(24 * 1024, ram // 2**21)}m"
+
+
 def _session_conf(
     shuffle_partitions: int, daemon_zip: str | None, extra_conf: dict | None
 ) -> dict:
@@ -70,7 +81,9 @@ def _session_conf(
         ),
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "24g"),
+        "spark.driver.memory": os.environ.get(
+            "SPARK_DRIVER_MEMORY", _default_driver_memory()
+        ),
         "spark.ui.enabled": "false",
         "spark.driver.extraJavaOptions": "-Djava.io.tmpdir=/tmp",
     }

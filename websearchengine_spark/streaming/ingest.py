@@ -26,11 +26,12 @@ of ordinary index segments:
     an already-applied id is a no-op; a torn build is rebuilt under the
     same id with build_index's own group resume, and only the final
     atomic catalog write publishes it).
-  * SEARCH (search_live): BM25 WAND over ALL live segments, each scored
-    with the UNION corpus statistics (num_docs/total_tf summed from
-    segment manifests, per-term global df summed from each segment's
-    driver-side term-dictionary probe — zero Spark jobs), per-segment
-    top-k, then a global (score desc, doc_id asc) merge.  Segment
+  * SEARCH (search_live; query.search for every indexed ranker): the
+    block-max kernel over ALL live segments, each scored with the UNION
+    corpus statistics (num_docs/total_tf summed from segment manifests,
+    per-term global df and ctf summed from each segment's driver-side
+    term-dictionary probe — zero Spark jobs), per-segment top-k, then a
+    global (score desc, doc_id asc) merge.  Segment
     doc_ids map into the global id space by the SAME cumulative
     shard-preserving offsets compaction uses (merge.doc_id_offsets),
     so live search is doc_id- AND score-IDENTICAL to searching the
@@ -52,7 +53,7 @@ of ordinary index segments:
     later offsets clear the full occupied range.  Tombstones are
     EXECUTOR-RESIDENT on the Spark side of search (round 4): it hands
     them to the WAND kernel as (shard, doc_id) rows cogrouped with the
-    postings (topk.wand_topk(exclude_df=)) — never collected to the
+    postings (topk._shard_topk's cogroup) — never collected to the
     driver, never serialized into task closures; only a segment whose
     query is under topk.INPROC_MAX_POSTINGS, the pending tombstone
     count included, reads them in-process — and their VISIBILITY is
@@ -678,7 +679,8 @@ def _search_segments(
     spark: SparkSession,
     root: str,
     queries: list[str],
-    score_segment,
+    ranker: str,
+    spark_side,
     inproc_k: int | None = None,
 ) -> tuple[DataFrame | None, list, list]:
     """The segment side of search_live/search_live_batch: every live
@@ -690,21 +692,22 @@ def _search_segments(
     segment's (store, offset) for _global_docs).
 
     Union statistics: (num_docs, total_tf) summed from the manifests and
-    per-term global df summed from each segment's driver-side
-    term-dictionary probe (topk._df_lookup) — zero Spark jobs.
-    Tombstoned docs still count in df/num_docs until compaction corrects
-    the statistics (Lucene-style visibility).
+    per-term global (df, ctf) summed from each segment's driver-side
+    term-dictionary probe (topk._df_lookup) — zero Spark jobs — so every
+    indexed ``ranker`` scores exactly as on the compacted index.
+    Tombstoned docs still count in the statistics until compaction
+    corrects them (Lucene-style visibility).
 
-    Each segment is scored in one of two places.  With ``inproc_k``
-    (search_live's k) a segment whose query terms' df sum — plus the
-    catalog's pending tombstone count when the segment has tombstones —
-    is at most topk.INPROC_MAX_POSTINGS runs the kernel in this process
-    (its tombstones read with pyarrow).  Every other segment runs
-    ``score_segment(seg_root, **kw)`` (a docs_join=False call of
-    wand_topk or wand_topk_batch), where the tombstone mask stays
-    EXECUTOR-RESIDENT: (shard, doc_id) rows cogrouped with the segment's
-    postings (wand_topk(exclude_df=)), reading only its own seg=
-    partition subdirs."""
+    Each segment is prepared once (topk._prepare) and scored in one of
+    two places.  With ``inproc_k`` (search_live's k) a segment whose
+    query terms' df sum — plus the catalog's pending tombstone count
+    when the segment has tombstones — is at most
+    topk.INPROC_MAX_POSTINGS runs the kernel in this process (its
+    tombstones read with pyarrow).  Every other segment runs
+    ``spark_side(store, scoring, exclude_df)`` — topk's Spark side with
+    the tombstone mask EXECUTOR-RESIDENT: (shard, doc_id) rows cogrouped
+    with the segment's postings, reading only its own seg= partition
+    subdirs."""
     from websearchengine_spark.operators.query import (
         analyze_tokens,
         index_analyzer,
@@ -747,25 +750,26 @@ def _search_segments(
             for w in ws
         }
     )
-    seg_dfs = [_df_lookup(spark, s, terms, None) for s in stores]
-    gdf: dict[str, int] = {}
-    for d in seg_dfs:
-        for t, df in d.items():
-            gdf[t] = gdf.get(t, 0) + df
+    seg_stats = [_df_lookup(spark, s, terms, None) for s in stores]
+    gstats: dict[str, tuple[int, int]] = {}
+    for st in seg_stats:
+        for t, (df, ctf) in st.items():
+            gdf, gctf = gstats.get(t, (0, 0))
+            gstats[t] = (gdf + df, gctf + ctf)
 
     names = [os.path.basename(s) for s in segs]
     tomb_parts = _tombstone_parts(root, names)
     pending = pending_tombstones(root)
     seg_tombs = merged = None
     hits: list = []
-    for seg, name, store, off, local_df in zip(segs, names, stores, offsets, seg_dfs):
+    for name, store, off, local in zip(names, stores, offsets, seg_stats):
+        sc = _prepare(
+            spark, store, queries, (num_docs, total_tf), gstats, local, None, ranker
+        )
+        if sc is None:  # a query term absent here: no match
+            hits.append((store, off, *NO_HITS))
+            continue
         if inproc_k is not None:
-            sc = _prepare(
-                spark, store, queries, (num_docs, total_tf), gdf, local_df, None
-            )
-            if sc is None:  # a query term absent here: no match
-                hits.append((store, off, *NO_HITS))
-                continue
             parts = tomb_parts[name]
             # a legacy root's backlog size is unknown: Spark side
             tombs = (pending if pending is not None else float("inf")) if parts else 0
@@ -777,13 +781,7 @@ def _search_segments(
                     continue
         if seg_tombs is None:
             seg_tombs = tombstones_for_segments(spark, root, n_shards, names)
-        p = score_segment(
-            seg,
-            corpus_stats=(num_docs, total_tf), df_override=gdf,
-            docs_join=False,
-            exclude_df=seg_tombs[name],
-            local_df=local_df,
-        )
+        p = spark_side(store, sc, seg_tombs[name])
         if off:
             p = p.withColumn("doc_id", (F.col("doc_id") + F.lit(off)).cast("long"))
         merged = p if merged is None else merged.unionByName(p)
@@ -810,7 +808,7 @@ def search_live(
     """BM25 WAND top-k over ALL live segments with UNION statistics.
 
     Each segment is scored with the summed (num_docs, total_tf) and
-    per-term global df, in this process or by wand_topk's Spark side
+    per-term global statistics, in this process or by topk's Spark side
     under topk.INPROC_MAX_POSTINGS (see _search_segments), its local
     doc_ids are shifted into the global id space, and the per-segment
     top-ks merge on (score desc, doc_id asc) — in this process, with
@@ -821,23 +819,24 @@ def search_live(
     already invisible but still count in df/num_docs until compaction —
     the standard Lucene visibility contract; after compaction the
     statistics equal a from-scratch build of the latest-version corpus.)
-    Warns (RuntimeWarning) when compaction is overdue.  Returns
-    query.RESULT_COLS ordered like run_query."""
+    query.search serves the other indexed rankers over live roots the
+    same way.  Warns (RuntimeWarning) when compaction is overdue.
+    Returns query.RESULT_COLS ordered like run_query."""
     return as_dataframe(spark, _search_live(spark, root, query, k))
 
 
 def _search_live(
-    spark: SparkSession, root: str, query: str, k: int
+    spark: SparkSession, root: str, query: str, k: int, ranker: str = "bm25"
 ) -> pa.Table | DataFrame:
-    """search_live's core: a pyarrow table when every segment ran in
-    this process, else the lazy DataFrame of the cross-segment merge
-    (util.as_rows / as_dataframe read either)."""
+    """search_live's core for any indexed ``ranker``: a pyarrow table
+    when every segment ran in this process, else the lazy DataFrame of
+    the cross-segment merge (util.as_rows / as_dataframe read either)."""
     from websearchengine_spark.operators.query import RESULT_COLS
-    from websearchengine_spark.operators.topk import _local_result, wand_topk
+    from websearchengine_spark.operators.topk import _local_result, _spark_topk
 
     merged, hits, placed = _search_segments(
-        spark, root, [query],
-        lambda seg, **kw: wand_topk(spark, seg, query, k=k, **kw),
+        spark, root, [query], ranker,
+        lambda store, sc, ex: _spark_topk(spark, store, sc, k, False, ex),
         inproc_k=k,
     )
     if merged is None:
@@ -866,24 +865,26 @@ def search_live_batch(
     k: int = 10,
 ) -> DataFrame:
     """Throughput mode over a live index: MANY queries against every
-    live segment via wand_topk_batch (one postings scan per segment for
-    the union of all query terms, decode shared across queries), scored
-    with the same union statistics as search_live, then a per-query rank
-    window over the cross-segment union.  Same output schema/order as
-    topk.wand_topk_batch; per-query results equal search_live's (and the
-    compacted index's batch results).  Phrase tokens are supported;
-    tombstoned docs are excluded; warns like search_live when
-    compaction is overdue."""
+    live segment on wand_topk_batch's Spark side (one postings scan per
+    segment for the union of all query terms, decode shared across
+    queries), scored with the same union statistics as search_live,
+    then a per-query rank window over the cross-segment union.  Same
+    output schema/order as topk.wand_topk_batch; per-query results equal
+    search_live's (and the compacted index's batch results).  Phrase
+    tokens are supported; tombstoned docs are excluded; warns like
+    search_live when compaction is overdue."""
     from pyspark.sql import Window
 
-    from websearchengine_spark.operators.topk import wand_topk_batch
+    from websearchengine_spark.operators.topk import _batch_ranked, _empty_batch
 
     merged, _hits, placed = _search_segments(
-        spark, root, queries,
-        lambda seg, **kw: wand_topk_batch(spark, seg, queries, k=k, **kw).select(
+        spark, root, queries, "bm25",
+        lambda store, sc, ex: _batch_ranked(spark, store, sc, queries, k, ex).select(
             "query", "doc_id", "score"
         ),
     )
+    if merged is None:  # no query can match in any segment
+        return _empty_batch(spark)
     w = Window.partitionBy("query").orderBy(F.desc("score"), F.asc("doc_id"))
     topk = merged.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
