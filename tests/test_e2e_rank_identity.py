@@ -226,13 +226,17 @@ def test_serve_search_renders_both_formats(spark, built_index):
     from websearchengine_spark.operators.render import serve_search
 
     side = "spark" if topk.INPROC_MAX_POSTINGS == 0 else "inproc"
-    txt, ran = serve_search(spark, built_index, "query=web+search&ranker=bm25&num=3")
+    txt, ran, read = serve_search(
+        spark, built_index, "query=web+search&ranker=bm25&num=3"
+    )
     assert ran == side
+    # the in-process side says what it read; the Spark side reads nothing here
+    assert (read["postings"]["files_read"] > 0) if side == "inproc" else read == {}
     lines = [l for l in txt.splitlines() if l]
     assert 0 < len(lines) <= 3
     assert all(len(l.split("\t")) == 5 for l in lines)
 
-    html, ran = serve_search(
+    html, ran, _ = serve_search(
         spark, built_index, "query=web+search&ranker=bm25&num=3&format=html"
     )
     assert ran == side

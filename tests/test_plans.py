@@ -44,6 +44,45 @@ def test_build_has_single_wide_shuffle(spark, corpus_pdf):
     assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, p
 
 
+def test_build_postings_plan_single_range_exchange(
+    spark, corpus_pdf, tmp_path, monkeypatch
+):
+    """The frame build_index hands to the postings writer has exactly
+    ONE Exchange and it is the term-clustered range partitioning: the
+    occurrence groupBy reuses it (no second, hash Exchange), so the
+    build stays single-shuffle while every write task holds one
+    contiguous term range."""
+    import re
+
+    from websearchengine_spark.operators.build import build_index
+    from websearchengine_spark.sources.storage import IndexStorage
+
+    plans = []
+    write = IndexStorage.write_partitions_atomic
+
+    def capture(self, df, *args, **kwargs):
+        # explained while the build's analyzed relation is still cached
+        plans.append(plan_of(df, "simple"))
+        return write(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(IndexStorage, "write_partitions_atomic", capture)
+    build_index(
+        spark, spark.createDataFrame(corpus_pdf), str(tmp_path / "idx"),
+        n_shards=3, n_groups=2,
+    )
+    assert len(plans) == 1
+    p = plans[0]
+    # the url-rank exchanges live inside the cached analyzed relation
+    # (computed once, before the postings job); the postings job's own
+    # exchanges are those above its scan
+    top = p[: p.index("InMemoryTableScan")]
+    assert len(re.findall(r"Exchange ", top)) == 1, p
+    assert re.search(
+        r"Exchange rangepartitioning\(term#\d+ ASC NULLS FIRST, shard#\d+ ASC", top
+    ), p
+    assert "hashpartitioning(shard" not in p, p
+
+
 def test_kway_merge_plan_single_compressed_shuffle(
     spark, corpus_pdf, tmp_path, monkeypatch
 ):
@@ -80,6 +119,8 @@ def test_kway_merge_plan_single_compressed_shuffle(
     assert len(written) == 1
     p = plan_of(written[0], "formatted")
     assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, p
+    # that Exchange is the build's term-clustered range partitioning
+    assert re.search(r"Arguments: rangepartitioning\(term#\d+ ASC NULLS FIRST, shard", p), p
     # the scan reads the compressed postings tables, not pages/tokens
     assert "postings" in p
     assert "tokens" not in p
@@ -92,8 +133,8 @@ def test_kway_merge_plan_single_compressed_shuffle(
     merge_many_indexes(spark, roots, out)
     assert len(written) == 2
     p = plan_of(written[1], "simple")
-    assert len(re.findall(r"Exchange hashpartitioning", p)) == 1, p
-    below = p[p.index("Exchange hashpartitioning"):]
+    assert len(re.findall(r"Exchange rangepartitioning", p)) == 1, p
+    below = p[p.index("Exchange rangepartitioning"):]
     assert re.search(r"Filter .*\(shard#\d+ % 2\)", below), p
 
 

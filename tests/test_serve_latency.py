@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import DataFrame
 
 from websearchengine_spark.operators import topk
+from websearchengine_spark.sources.storage import IndexStorage
 
 
 @pytest.fixture(scope="module")
@@ -233,7 +234,10 @@ def test_live_serve_body_parity_across_gate(spark, live_srv, monkeypatch):
 
 def test_request_records(latency_srv, monkeypatch, caplog):
     """One JSON line per request on the serve logger: endpoint, status,
-    wall ms, and for /search the side the evaluation ran on."""
+    wall ms, and for /search the side the evaluation ran on — plus, in
+    process, what it read: the kernel's blocks decoded versus the query
+    terms' blocks, and per table the files and row groups read versus
+    the table's totals (gathered without a JVM call)."""
     caplog.set_level(logging.INFO, logger="websearchengine_spark.serve")
     q = "query=web+search&ranker=bm25&num=5"
     latency_srv._handle("/search", q)
@@ -255,3 +259,14 @@ def test_request_records(latency_srv, monkeypatch, caplog):
         ("/nope", 404, None),
     ]
     assert all(r["wall_ms"] > 0 for r in recs)
+    read = recs[0]["read"]
+    assert 0 < read["blocks_decoded"] <= read["blocks_total"]
+    for table in ("postings", "docs"):
+        seen = read[table]
+        assert 0 < seen["files_read"] <= seen["files_total"], (table, seen)
+        assert 0 < seen["row_groups_read"] <= seen["row_groups_total"], (table, seen)
+    # the term-clustered postings: a 2-term query opens at most 2 files
+    # per (term, group) of the table's files
+    groups = IndexStorage(latency_srv.index_root).read_manifest()["config"]["n_groups"]
+    assert read["postings"]["files_read"] <= 2 * 2 * groups
+    assert all("read" not in r for r in recs[1:])

@@ -10,17 +10,19 @@ Pipeline (all DataFrame; boundaries are Spark stages):
       │ posexplode(tokens); pack occurrence -> ONE int64
       │   (doc_id << 22 | pos), doc_len -> (doc_id << 22 | doc_len)
       ▼
-    groupBy(shard = doc_id % n_shards, term)             [the ONE shuffle]
+    repartitionByRange(term, shard)                      [the ONE shuffle:
+      │                                                   term-clustered]
+    groupBy(shard = doc_id % n_shards, term)             [reuses it]
       │ sort_array(collect_list(occ_packed))  — 8 B/occurrence
-      │ sort_array(collect_set(dl_packed))    — map-side dedup, ~df rows
+      │ sort_array(collect_set(dl_packed))    — one per (doc, term)
       ▼
     mapInArrow encode: zero-copy numpy slices of the packed-long
       buffers, run-length split per doc, delta-gap + varbyte
       block-max blocks (r6)
       ▼
     postings(shard, term, df_shard, ctf_shard, blocks)   [_write_postings:
-      one dynamic-partitioned write, per-group commits; merge.py writes
-      through the same helper]
+      one dynamic-partitioned write, per-group commits, each file's
+      term ranges recorded; merge.py writes through the same helper]
     term_stats = sum of per-shard df/ctf over postings   [tiny agg, no
       rescan; term-sorted 1 MB row groups = the query-time dictionary]
 
@@ -34,20 +36,25 @@ Scale design decisions (the 100 TB story):
   * the occurrence stream is shuffled exactly ONCE, and each occurrence
     crosses the wire as a SINGLE packed int64 (doc_id << 22 | pos) — the
     shuffle phase is memcpy-bound, so row width IS the scaling ceiling.
-    doc_len ships as a second packed long deduplicated map-side
-    (collect_set partial aggregation -> ~df rows, not ~ctf).  No
-    intermediate per-(doc,term) aggregation, no multi-GB cache of
+    doc_len ships as a second packed long, deduplicated by collect_set.
+    No intermediate per-(doc,term) aggregation, no multi-GB cache of
     position arrays, no doc_len join.  Per-doc tf/positions are rebuilt
     by numpy run-length splitting inside the Arrow encoder.
+  * the shuffle is TERM-CLUSTERED (_term_clustered): a range
+    partitioning on (term, shard) that the groupBy(shard, term) reuses,
+    so each write task holds one contiguous term range and the
+    driver-side point read of a query's postings opens about one file
+    per term and group instead of the whole table.  Its price: one
+    range-sampling job, and the partial aggregation runs after the
+    exchange instead of map-side.
   * postings are DOC-SHARDED (shard = doc_id % n_shards): every term's
     list is split across all shards, so head-term skew (stopwords with
     df ~ corpus size) is bounded by ceil(df / n_shards) — sharding IS the
     salting the north_rule demands; no groupBy ever collects a full head
     term's corpus-wide posting list in one task.  Query-time WAND runs
     per shard and merges (operators/topk.py).
-  * both aggregations are native hash aggs with map-side partial
-    aggregation; the only Python is the Arrow-batched extract/analyze UDF
-    and the block encoder (numpy).
+  * both aggregations are native hash aggs; the only Python is the
+    Arrow-batched extract/analyze UDF and the block encoder (numpy).
   * the postings table is laid out as ``n_groups`` shard-groups; each
     group commit is recorded in the manifest -> resumable builds with
     per-partition lineage + metrics (north_rule).  A resume runs the
@@ -76,8 +83,8 @@ DEFAULT_N_GROUPS = 4
 
 # Packed-occurrence layout for the ONE wide shuffle: each occurrence is a
 # single int64 ``doc_id << PACK_BITS | pos`` (and the per-doc doc_len a
-# single ``doc_id << PACK_BITS | doc_len`` carried ONCE per (doc, term)
-# via a map-side-deduplicating collect_set) instead of a 3-field struct
+# single ``doc_id << PACK_BITS | doc_len``, kept ONCE per (doc, term) by
+# a deduplicating collect_set) instead of a 3-field struct
 # repeated per occurrence.  Shuffle bytes drop ~2.5-3x, and sort order on
 # the packed long IS (doc_id, pos) order since doc_id occupies the high
 # bits.  Limits: doc_id < 2^41 (covers the 10^12-doc north_rule with
@@ -268,13 +275,18 @@ def _write_docs(
 ) -> tuple[dict, list[int]]:
     """Write ``docs`` and the one-row ``stats`` table derived from it.
 
-    The corpus stats (num_docs, total_tf, max_dl) and the docs per
-    shard-group ride the docs write as an Observation — zero extra jobs
-    and zero re-reads; ``stats`` is then written driver-side like the
-    manifest.  Returns (stats, docs per group)."""
+    docs is written doc_id-CLUSTERED: range-partitioned on doc_id (the
+    one Exchange; adaptive execution coalesces the ranges to sized
+    files) and sorted within each file, so a lookup of k doc_ids
+    (storage.lookup_rows: the winners' metadata, comprehensive's
+    candidate priors) opens about one row group per id instead of every
+    file.  The corpus stats (num_docs, total_tf, max_dl) and the docs
+    per shard-group ride the docs write as an Observation — zero extra
+    jobs and zero re-reads; ``stats`` is then written driver-side like
+    the manifest.  Returns (stats, docs per group)."""
     obs = Observation("corpus_stats")
     grp = (F.col("doc_id") % n_shards) % n_groups
-    out = docs.observe(
+    out = docs.repartitionByRange("doc_id").sortWithinPartitions("doc_id").observe(
         obs,
         F.count(F.lit(1)).cast("long").alias("num_docs"),
         F.sum("doc_len").cast("long").alias("total_tf"),
@@ -327,6 +339,22 @@ def _postings_batch(rows: list[tuple]) -> pa.RecordBatch:
     )
 
 
+def _term_clustered(rows: DataFrame) -> DataFrame:
+    """The one postings shuffle, term-CLUSTERED: range-partition the
+    caller's pre-aggregation rows on (term, shard) into the session's
+    shuffle-partition count, ahead of its groupBy(shard, term).  A range
+    partitioning on the grouping keys satisfies the aggregation's
+    clustering, so Catalyst plans this Exchange as the only one (the
+    partial aggregate runs after it), and each write task then holds
+    one contiguous term range: every group's files cover disjoint term
+    ranges (only a boundary term, split by shard, can sit in two
+    adjacent files), and a point read opens about one file per query
+    term and group (storage.lookup_rows).  The range bounds cost one
+    sampling job."""
+    n = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return rows.repartitionByRange(n, "term", "shard")
+
+
 def _write_postings(
     store: IndexStorage,
     rows: DataFrame,
@@ -341,7 +369,8 @@ def _write_postings(
     compaction all end here.
 
     ``rows`` holds one row per (shard, term) straight out of the
-    caller's single shuffle; ``encode_rows`` turns an Arrow batch of
+    caller's single, term-clustered shuffle (_term_clustered ahead of
+    its groupBy); ``encode_rows`` turns an Arrow batch of
     them into (shard, term, df_shard, ctf_shard, blocks) rows with
     deferred block bytes (``encode_posting_blocks(_defer_bytes=True)``).
     Only ``groups`` (the shard-groups not yet committed) are written:
@@ -380,8 +409,9 @@ def _write_postings(
         .observe(obs, *exprs)
         # (group, term): the partition-column prefix satisfies the
         # dynamic-partition writer's required ordering (no extra sort
-        # gets inserted) and keeps term-sorted row groups so the
-        # `term IN (...)` query filter prunes on parquet min/max stats
+        # gets inserted), and each file is term-sorted inside its
+        # task's term range, so its row groups' min/max term ranges
+        # (recorded at commit) direct the point reads
         .sortWithinPartitions("group", "term")
     )
     store.write_partitions_atomic(postings, "postings", "group", groups)
@@ -409,11 +439,13 @@ def _write_term_stats(spark: SparkSession, store: IndexStorage) -> None:
     df/ctf are additive across doc-shards, so this is a tiny aggregation
     over the (vocab x shards)-row postings table — no token rescan.
     Term-sorted SMALL row groups on disk: the table is the term
-    DICTIONARY; with rows sorted by term inside each file and ~1 MB row
-    groups, a k-term lookup (storage.lookup_rows / the Spark fallback's
-    `term IN` filter) prunes on parquet min/max stats to at most one row
-    group per file — bounded work at any vocabulary size, without paying
-    a range-repartition (sampling + exchange) job."""
+    DICTIONARY; with rows sorted by term inside each file and
+    storage.ROW_GROUP_BYTES row groups, a k-term lookup
+    (storage.lookup_rows / the Spark fallback's `term IN` filter) reads
+    at most ~k row groups per file — bounded work per file at any
+    vocabulary size.  It is not range-partitioned: the sampling job of
+    a range exchange buys nothing on a table this small (one file at
+    bench scale)."""
     term_stats = (
         store.read_partitioned(spark, "postings")
         .groupBy("term")
@@ -423,9 +455,7 @@ def _write_term_stats(spark: SparkSession, store: IndexStorage) -> None:
         )
         .sortWithinPartitions("term")
     )
-    store.write_table(
-        term_stats, "term_stats", options={"parquet.block.size": str(1 << 20)}
-    )
+    store.write_table(term_stats, "term_stats")
 
 
 def _encode_occurrences(b, positions: bool, avg_dl: float, block_size: int):
@@ -556,15 +586,9 @@ def build_index(
             )
         else:
             docs = docs.withColumn("pagerank", F.lit(0.0)).withColumn("numviews", F.lit(0).cast("long"))
-        # rebalance on write (guide §6): the docs table inherits the
-        # parallelism-widened partitioning (cores x2 tiny files at bench,
-        # unsized shards at scale); an AQE rebalance sizes output files by
-        # bytes, and EVERY query's metadata join re-lists this table
         srow, docs_per_group = _write_docs(
             store,
-            docs.select(
-                "doc_id", "url", "title", "doc_len", "pagerank", "numviews"
-            ).hint("rebalance"),
+            docs.select("doc_id", "url", "title", "doc_len", "pagerank", "numviews"),
             n_shards, n_groups,
         )
         _mark("analyze_and_docs")
@@ -598,15 +622,13 @@ def build_index(
 
         # ---- postings: doc-sharded, blocked, per-group commits ------------
         # SINGLE-SHUFFLE design with PACKED rows: explode -> pack each
-        # occurrence into ONE int64 -> one groupBy(shard, term) -> encode.
-        # No intermediate (doc_id, term) aggregation, no cache of
-        # 10^1x-row position arrays, no doc_len join — the occurrence
-        # stream is shuffled exactly once, and what crosses the wire per
-        # occurrence is 8 bytes (``doc_id << 22 | pos``) instead of a
-        # 3-field struct (~40 B serialized).  doc_len ships once per
-        # (doc, term) as a second packed long via collect_set, whose
-        # map-side partial aggregation dedups the tf>1 repeats before the
-        # exchange.
+        # occurrence into ONE int64 -> one term-clustered exchange ->
+        # groupBy(shard, term) -> encode.  No intermediate (doc_id, term)
+        # aggregation, no cache of 10^1x-row position arrays, no doc_len
+        # join — the occurrence stream is shuffled exactly once, each
+        # occurrence as a packed ``doc_id << 22 | pos`` instead of a
+        # 3-field struct (~40 B serialized).  doc_len travels as a second
+        # packed long, kept once per (doc, term) by collect_set.
         occs = analyzed.select(
             (F.col("doc_id") % F.lit(n_shards)).cast("int").alias("shard"),
             F.shiftleft(F.col("doc_id"), PACK_BITS).alias("pk"),
@@ -615,18 +637,18 @@ def build_index(
         )
         if positions:
             plists = (
-                occs.select(
-                    "shard",
-                    "term",
-                    (F.col("pk") + F.col("pos")).alias("occ_p"),
-                    (F.col("pk") + F.col("doc_len")).alias("dl_p"),
+                _term_clustered(
+                    occs.select(
+                        "shard",
+                        "term",
+                        (F.col("pk") + F.col("pos")).alias("occ_p"),
+                        (F.col("pk") + F.col("doc_len")).alias("dl_p"),
+                    )
                 )
                 .groupBy("shard", "term")
                 .agg(
                     F.sort_array(F.collect_list("occ_p")).alias("occs"),
-                    # one packed (doc_id, doc_len) per doc; collect_set's
-                    # partial aggregation dedups tf>1 repeats MAP-SIDE, so
-                    # the exchange carries ~df rows of it, not ~ctf
+                    # one packed (doc_id, doc_len) per doc
                     F.sort_array(F.collect_set("dl_p")).alias("dls"),
                 )
             )
@@ -634,8 +656,10 @@ def build_index(
             # positionless: doc_len packs directly into each occurrence
             # (the pos field is dropped before the shuffle entirely)
             plists = (
-                occs.select(
-                    "shard", "term", (F.col("pk") + F.col("doc_len")).alias("occ_p")
+                _term_clustered(
+                    occs.select(
+                        "shard", "term", (F.col("pk") + F.col("doc_len")).alias("occ_p")
+                    )
                 )
                 .groupBy("shard", "term")
                 .agg(F.sort_array(F.collect_list("occ_p")).alias("occs"))

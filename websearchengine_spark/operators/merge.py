@@ -16,7 +16,9 @@ Scale design (the 100 TB story):
     is ONE groupBy(shard, term) over the K *compressed postings tables*
     — rows are already per-(shard, term) blocks, i.e. orders of
     magnitude smaller than the occurrence stream the original builds
-    shuffled.  Decode → concat → re-encode runs embarrassingly parallel
+    shuffled — and its Exchange is the build's term-clustered range
+    partitioning (build._term_clustered), so the output has the
+    build's layout.  Decode → concat → re-encode runs embarrassingly parallel
     in an Arrow-batched numpy pass (``merge_rows``), whose output goes
     through the build's own postings writer (build._write_postings):
     one shuffle and one write regardless of K and of n_groups.
@@ -57,6 +59,7 @@ from websearchengine_spark.functions.codec import (
 )
 from websearchengine_spark.operators.build import (
     _arrow_batch_cap,
+    _term_clustered,
     _write_docs,
     _write_postings,
     _write_term_stats,
@@ -269,7 +272,7 @@ def merge_many_indexes(
     for t in tables[1:]:
         both = both.unionByName(t)
     grouped = (
-        both.select("shard", "term", "side", "blocks")
+        _term_clustered(both.select("shard", "term", "side", "blocks"))
         .groupBy("shard", "term")
         .agg(F.collect_list(F.struct("side", "blocks")).alias("parts"))
     )

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import base64
 import html as _html
+import json
 
 # Minimal stand-in for the reference's public/index.html: same four
 # placeholders, decoded client-side like the reference's js — EXCEPT
@@ -113,15 +114,17 @@ def serve_search(
     docs_fs=None,
     html_template: str | None = None,
     stats_cache: dict | None = None,
-) -> tuple[str, str]:
+) -> tuple[str, str, dict]:
     """The full /search response path: parse CGI args, dispatch the
     ranker (query.search_uri's core), render per the requested
-    ``format``.  Returns (response string, where the evaluation ran):
-    ``"inproc"`` when the query ran in this process — its pyarrow table
-    renders with zero JVM calls — else ``"spark"`` (the plan is
-    collected).  Fullscan-family results carry only (doc_id, score);
-    missing display columns render as the reference's defaults (empty
-    title, 0 signals)."""
+    ``format``.  Returns (response string, where the evaluation ran,
+    what it read).  ``"inproc"`` when the query ran in this process —
+    its pyarrow table renders with zero JVM calls — and the read
+    evidence is the table's (topk._read_evidence: blocks decoded and,
+    per table, files and row groups read versus the totals); else
+    ``"spark"`` (the plan is collected) and {}.  Fullscan-family results
+    carry only (doc_id, score); missing display columns render as the
+    reference's defaults (empty title, 0 signals)."""
     from pyspark.sql import DataFrame
 
     from websearchengine_spark.operators.query import _search_uri, parse_cgi_args
@@ -141,11 +144,14 @@ def serve_search(
         }
         for r in as_rows(result)
     ]
-    ran = "spark" if isinstance(result, DataFrame) else "inproc"
+    if isinstance(result, DataFrame):
+        ran, read = "spark", {}
+    else:
+        ran, read = "inproc", json.loads((result.schema.metadata or {}).get(b"read", b"{}"))
     if args["format"] == "html":
         body = format_html_results(
             rows, args["query"], args["ranker"], template=html_template
         )
     else:
         body = format_text_results(rows)
-    return body, ran
+    return body, ran, read

@@ -10,13 +10,18 @@ query terms' df sum against INPROC_MAX_POSTINGS and runs ONE complete
 evaluation in exactly one place:
 
     in process (df sum <= INPROC_MAX_POSTINGS, zero Spark jobs):
-      postings filtered to the query's terms  [pyarrow scan, row-group pruned]
+      the query terms' postings rows          [storage.lookup_rows: only
+                                                 the row groups whose
+                                                 recorded term range
+                                                 covers a query term]
         -> kernel per shard                      [shard_topk, in the driver]
         -> comprehensive: docs lookup of every   [storage.lookup_rows:
            candidate, priors -> final score       priors and metadata at once]
         -> merge (score desc, doc_id asc)[:k]
         -> docs lookup of the k winners           [storage.lookup_rows]
-        -> pyarrow.Table                          [zero JVM calls]
+        -> pyarrow.Table                          [zero JVM calls; its
+                                                   schema metadata holds
+                                                   the read evidence]
         -> spark.createDataFrame(table)           [only at the DataFrame API:
                                                    wand_topk, run_query; the
                                                    serve path renders the
@@ -71,6 +76,7 @@ on both sides of the gate).
 
 from __future__ import annotations
 
+import json
 import math
 from typing import NamedTuple
 
@@ -349,8 +355,9 @@ def _df_lookup(
     """{term: (df, ctf)} for the query's terms present in this index —
     the one dictionary probe of every ranker.
 
-    storage.lookup_rows reads only the ~k row groups covering the terms
-    driver-side (term_stats is written range-partitioned + term-sorted),
+    storage.lookup_rows reads only the row groups whose recorded term
+    range covers a query term, driver-side (term_stats is written
+    term-sorted within each file, in ROW_GROUP_BYTES row groups),
     replacing a per-query Spark job whose fixed scheduling cost dwarfed
     its 2-3-row result.  Falls back to the Spark collect when the
     pyarrow path is unavailable.  The caller-owned ``stats_cache`` memo
@@ -379,20 +386,22 @@ def _df_lookup(
 # The one gate between the two places the kernel runs.  A query whose
 # terms' df sum (on a live segment with tombstones, plus the catalog's
 # pending tombstone count) is at most this runs in the calling process:
-# one pyarrow scan of its postings, the kernel per shard, a driver-side
-# merge and metadata lookup — zero Spark jobs.  A larger one runs the
-# kernel in one Spark task per shard.  In-process cost grows by ~1 us
-# per posting; the Spark side pays ~0.5 s of fixed job cost per query
-# however many cores run it, so below this bound the driver cannot lose
-# even to a fully parallel Spark side.  Measured on 4 cores
-# (CHANGES.md): in-process wins everywhere at sf0.1 and up to ~0.9M
-# postings at the sf1 shape.
+# a range-directed read of its postings, the kernel per shard, a
+# driver-side merge and metadata lookup — zero Spark jobs.  A larger one
+# runs the kernel in one Spark task per shard.  In-process cost follows
+# the query's own postings: the read decodes only the row groups that
+# hold its terms (not the whole postings table), and the kernel's decode
+# grows with the df sum.  The Spark side pays ~0.5 s of fixed job cost
+# per query however many cores run it.  Measured on 4 cores while the
+# read still decoded the whole postings table (CHANGES.md): in-process
+# won everywhere at sf0.1 and up to ~0.9M postings at the sf1 shape; the
+# bound stays under that crossover.
 INPROC_MAX_POSTINGS = 500_000
 
 
-# (doc_ids, scores, docs rows already fetched) of an index where the
-# query cannot match
-NO_HITS = (np.empty(0, np.int64), np.empty(0, np.float64), {})
+# (doc_ids, scores, docs rows already fetched, kernel stats) of an index
+# where the query cannot match
+NO_HITS = (np.empty(0, np.int64), np.empty(0, np.float64), {}, {})
 
 
 class _Scoring(NamedTuple):
@@ -528,19 +537,21 @@ def _shard_topk(
 
 def _local_topk(
     store: IndexStorage, sc: _Scoring, k: int, exclude: np.ndarray | None = None
-) -> tuple[np.ndarray, np.ndarray, dict] | None:
+) -> tuple[np.ndarray, np.ndarray, dict, dict] | None:
     """The in-process side for ONE query: the same kernel per shard over
-    one pyarrow scan of the query terms' postings (storage.lookup_rows:
-    term-sorted row groups, so the scan reads about one row group per
-    term and group).  ``exclude``: doc_ids masked before scoring, as on
-    the Spark side.
+    the query terms' postings rows, fetched by storage.lookup_rows's
+    range-directed read (postings are term-clustered, so it decodes
+    about one row group per term and group, not the table).
+    ``exclude``: doc_ids masked before scoring, as on the Spark side.
 
-    Returns (doc_ids, scores, docs rows by doc_id) for _local_result to
-    merge: every shard's top-k with no rows yet — or, for comprehensive,
-    every candidate with its final score and its docs row, fetched in ONE
-    lookup (priors and metadata together; a candidate missing from docs
-    is dropped, as by the Spark side's join).  None when the pyarrow
-    path is unavailable (the caller runs the Spark side instead)."""
+    Returns (doc_ids, scores, docs rows by doc_id, kernel stats) for
+    _local_result to merge: every shard's top-k with no rows yet — or,
+    for comprehensive, every candidate with its final score and its docs
+    row, fetched in ONE lookup (priors and metadata together; a
+    candidate missing from docs is dropped, as by the Spark side's
+    join).  The kernel stats are shard_topk's block-max evidence summed
+    over the shards.  None when the pyarrow path is unavailable (the
+    caller runs the Spark side instead)."""
     rows = store.lookup_rows(
         "postings", "term", sc.terms, columns=["shard", "term", "blocks"]
     )
@@ -557,8 +568,11 @@ def _local_topk(
     ]
     ids = np.concatenate([NO_HITS[0]] + [t[1] for t in tops])
     scores = np.concatenate([NO_HITS[1]] + [t[2] for t in tops])
+    kstats = {
+        key: sum(t[3][key] for t in tops) for key in ("blocks_decoded", "blocks_total")
+    }
     if sc.ranker != "comprehensive":
-        return ids, scores, {}
+        return ids, scores, {}, kstats
     found = store.lookup_rows(
         "docs", "doc_id", ids.tolist(), columns=[c for c in RESULT_COLS if c != "score"]
     )
@@ -571,23 +585,46 @@ def _local_topk(
         c: np.array([docs[d][c] for d in ids.tolist()], dtype=np.float64)
         for c in ("pagerank", "numviews")
     }
-    return ids, _comprehensive(ql, prior["pagerank"], prior["numviews"], np.log), docs
+    return (
+        ids,
+        _comprehensive(ql, prior["pagerank"], prior["numviews"], np.log),
+        docs,
+        kstats,
+    )
+
+
+def _read_evidence(hits: list) -> dict:
+    """What an in-process evaluation read: the kernel's block-max stats
+    summed over ``hits`` (_local_result's input) and, per table, the
+    files and row groups the lookups of every index read versus the
+    tables' totals (IndexStorage.reads)."""
+    out = {
+        key: sum(h[5].get(key, 0) for h in hits)
+        for key in ("blocks_decoded", "blocks_total")
+    }
+    for store in {id(h[0]): h[0] for h in hits}.values():
+        for name, seen in store.reads.items():
+            mine = out.setdefault(name, dict.fromkeys(seen, 0))
+            for key, v in seen.items():
+                mine[key] += v
+    return out
 
 
 def _local_result(
-    hits: list[tuple[IndexStorage, int, np.ndarray, np.ndarray, dict]],
+    hits: list[tuple[IndexStorage, int, np.ndarray, np.ndarray, dict, dict]],
     k: int,
     docs_join: bool,
 ) -> pa.Table:
     """Merge in-process top-ks into ONE pyarrow table — no JVM call to
     build it or to read it.  ``hits``: per index, (store, doc_id offset,
-    local doc_ids, scores, docs rows) as _local_topk returns them; the
-    result keeps the k best on (score desc, doc_id asc) over the offset
-    ids.  With ``docs_join`` each winner's metadata comes from its
-    index's rows, looked up driver-side for the winners that have none
-    yet, and the columns are RESULT_COLS with the docs table's own
-    types, nullable as Spark reads parquet (what the Spark side's docs
-    join yields); without it, bare (doc_id, score)."""
+    local doc_ids, scores, docs rows, kernel stats) as _local_topk
+    returns them; the result keeps the k best on (score desc, doc_id
+    asc) over the offset ids.  With ``docs_join`` each winner's metadata
+    comes from its index's rows, looked up driver-side for the winners
+    that have none yet, and the columns are RESULT_COLS with the docs
+    table's own types, nullable as Spark reads parquet (what the Spark
+    side's docs join yields); without it, bare (doc_id, score).  The
+    table's schema metadata ``read`` holds _read_evidence as JSON."""
     import pyarrow.dataset as pads
 
     owner = np.concatenate([np.full(h[2].size, i) for i, h in enumerate(hits)])
@@ -609,7 +646,7 @@ def _local_result(
             ]
         )
         meta: dict[int, dict] = {}
-        for i, (store, off, _d, _s, known) in enumerate(hits):
+        for i, (store, off, _d, _s, known, _k) in enumerate(hits):
             mine = (gids[owner == i] - off).tolist()
             need = [d for d in mine if d not in known]
             if need:
@@ -623,6 +660,7 @@ def _local_result(
             meta.update({d + off: known[d] for d in mine if d in known})
         # inner-join semantics: a doc missing from docs is dropped
         rows = [{**meta[g], "doc_id": g, "score": sc} for g, sc in top if g in meta]
+    schema = schema.with_metadata({"read": json.dumps(_read_evidence(hits))})
     return pa.Table.from_pylist(rows, schema=schema)
 
 

@@ -9,6 +9,7 @@ to regenerate PLANS.md.
 from __future__ import annotations
 
 import io
+import os
 import re
 from contextlib import redirect_stdout
 
@@ -42,6 +43,24 @@ def audit_plans(spark, index_root: str) -> dict[str, tuple[bool, str]]:
     p = plan_of(postings)
     ok = ("PushedFilters: [In(term" in p or "PushedFilters: [In(`term`" in p) and "html" not in p
     out["postings_scan_pushdown"] = (ok, _scan_lines(p))
+
+    # 1b. the in-process point read (storage.lookup_rows) is range-
+    #     directed: postings are term-clustered, so a term's rows sit in
+    #     one file per group (two when the term is a range boundary), and
+    #     the recorded row-group ranges open only those — the read
+    #     follows the query's postings, not the table
+    probe = IndexStorage(index_root)
+    terms = ["web", "search"]
+    n_groups = int(probe.read_manifest().get("config", {}).get("n_groups", 1))
+    probe.lookup_rows("postings", "term", terms, columns=["term"])
+    seen = probe.reads["postings"]
+    ok = 0 < seen["files_read"] <= 2 * len(terms) * n_groups < seen["files_total"]
+    out["postings_point_read_range_directed"] = (
+        ok,
+        f"{terms}: {seen['files_read']}/{seen['files_total']} files, "
+        f"{seen['row_groups_read']}/{seen['row_groups_total']} row groups "
+        f"({n_groups} groups)",
+    )
 
     # audit query = two high-df terms of THIS index's own vocabulary — a
     # fixed "web search" probe audits the EMPTY-RESULT short-circuit on
@@ -141,8 +160,6 @@ def audit_plans(spark, index_root: str) -> dict[str, tuple[bool, str]]:
 
     # 5. IVF probe: list_id filter is a PARTITION filter on the persisted
     #    index — a query reads nprobe/nlist of the files, never the rest
-    import os
-
     from websearchengine_spark.operators.similarity import (
         ivf_build_centroids,
         ivf_write_index,
@@ -164,7 +181,55 @@ def audit_plans(spark, index_root: str) -> dict[str, tuple[bool, str]]:
         _grep(ip, ["PartitionFilters", "Location"]),
     )
 
+    # 6. the one postings writer's input, in both callers: exactly ONE
+    #    Exchange of the postings job, the term-clustered range
+    #    partitioning (build._term_clustered), reused by the
+    #    groupBy(shard, term) above it
+    for name, plan in postings_write_plans(spark, os.path.join(index_root, "_write_audit")).items():
+        # a build's url-rank exchanges sit inside its cached analyzed
+        # relation, computed before the postings job
+        top = plan.split("InMemoryTableScan")[0]
+        ranges = re.findall(r"Exchange rangepartitioning\([^)]*\)", top)
+        ok = len(re.findall(r"Exchange ", top)) == 1 and len(ranges) == 1 and (
+            re.match(r"Exchange rangepartitioning\(term#\d+ ASC NULLS FIRST, shard#", ranges[0])
+            is not None
+        )
+        out[f"{name}_postings_one_range_exchange"] = (ok, _grep(top, ["Exchange", "HashAggregate"]))
+
     return out
+
+
+def postings_write_plans(spark, work_dir: str) -> dict[str, str]:
+    """The physical plans of the frames build_index and
+    merge_many_indexes hand to the postings writer
+    (IndexStorage.write_partitions_atomic), explained at write time: two
+    120-doc builds under ``work_dir`` and their merge."""
+    import shutil
+
+    from websearchengine_spark.operators.build import build_index
+    from websearchengine_spark.operators.merge import merge_many_indexes
+    from websearchengine_spark.sources.corpus import gen_pages_df
+    from websearchengine_spark.sources.storage import IndexStorage
+
+    plans: list[str] = []
+    write = IndexStorage.write_partitions_atomic
+
+    def capture(self, df, *args, **kwargs):
+        plans.append(plan_of(df, "simple"))
+        return write(self, df, *args, **kwargs)
+
+    shutil.rmtree(work_dir, ignore_errors=True)
+    roots = [os.path.join(work_dir, f"seg{i}") for i in range(2)]
+    IndexStorage.write_partitions_atomic = capture
+    try:
+        for i, r in enumerate(roots):
+            build_index(
+                spark, gen_pages_df(spark, 120, seed=11 + i), r, n_shards=3, n_groups=2
+            )
+        merge_many_indexes(spark, roots, os.path.join(work_dir, "merged"))
+    finally:
+        IndexStorage.write_partitions_atomic = write
+    return {"build": plans[0], "merge": plans[-1]}
 
 
 def _grep(plan: str, needles: list[str]) -> str:

@@ -180,7 +180,10 @@ class SearchHTTPServer:
         """(status, content_type, body) for one GET, and the request's
         record: one JSON line on the ``websearchengine_spark.serve``
         logger (INFO) with the endpoint, status, wall ms and, for
-        /search, where the evaluation ran (``inproc``/``spark``)."""
+        /search, where the evaluation ran (``inproc``/``spark``) and,
+        in process, what it read (``read``: blocks decoded versus the
+        query terms' blocks, and per table the files and row groups read
+        versus the table's totals)."""
         t0 = time.perf_counter()
         record: dict = {"endpoint": path}
         try:
@@ -211,8 +214,8 @@ class SearchHTTPServer:
     def _route(
         self, path: str, uri_query: str, record: dict
     ) -> tuple[int, str, str | bytes]:
-        """Dispatch one GET to its endpoint; /search adds ``ran`` to
-        ``record``."""
+        """Dispatch one GET to its endpoint; /search adds ``ran`` (and,
+        in process, ``read``) to ``record``."""
         from websearchengine_spark.operators.query import parse_cgi_args
 
         if self.public_root is not None:
@@ -225,7 +228,7 @@ class SearchHTTPServer:
 
             args = parse_cgi_args(uri_query, url_decode=True)
             stats_cache, _ = self._caches()
-            body, record["ran"] = serve_search(
+            body, record["ran"], read = serve_search(
                 self.spark,
                 self.index_root,
                 uri_query,
@@ -234,6 +237,8 @@ class SearchHTTPServer:
                 html_template=self.html_template,
                 stats_cache=stats_cache,
             )
+            if read:
+                record["read"] = read
             ctype = (
                 "text/html; charset=utf-8"
                 if args["format"] == "html"

@@ -22,15 +22,38 @@ Tables of an index root:
     term_stats   term, df, ctf
     stats        num_docs, total_tf, max_dl
     build_meta   per-shard-group build metrics + attempt lineage
+
+Point reads.  The tables of POINT_KEYS are read by key from the driver
+(IndexStorage.lookup_rows): the dictionary probe, a query's postings,
+the winners' docs rows.  Their writers cluster rows on the key
+(postings and docs are range-partitioned on it, every file is sorted
+by it), row groups are capped at ROW_GROUP_BYTES, and the commit
+records each data file's per-row-group [min, max] key range in a
+``_ranges.json`` next to the files (read once from the fresh footers,
+driver-side).  A lookup then opens only the files, and decodes only
+the row groups, whose range covers a wanted key, so its cost follows
+the query's own rows, not the table's size.
 """
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import shutil
 import time
 import uuid
+
+# table -> key column of the driver-side point reads (lookup_rows)
+POINT_KEYS = {"postings": "term", "docs": "doc_id", "term_stats": "term"}
+# Row-group cap of the POINT_KEYS tables, in bytes (the parquet writer's
+# block size): a point read decodes whole row groups, so this bounds
+# what one key costs at any table size.  Bytes, not rows — a row cap
+# would multiply footer bytes on small tables and leave fat head-term
+# postings rows unbounded.
+ROW_GROUP_BYTES = 1 << 20
+# per-directory record of each data file's row-group key ranges
+RANGES_FILE = "_ranges.json"
 
 # (path -> (dir_mtime_ns, StructType)) memo for parquet schema inference:
 # every bare ``spark.read.parquet`` runs a footer-reading JOB (~50-100 ms
@@ -68,6 +91,92 @@ def read_parquet_cached(spark, path: str, base_path: str | None = None):
     return df
 
 
+def _data_files(d: str) -> list:
+    """The parquet data files of one table directory, by name (Spark's
+    and pyarrow's hidden-file rule: ``_``/``.`` names are not data)."""
+    return sorted(
+        (
+            e
+            for e in os.scandir(d)
+            if e.is_file()
+            and e.name.endswith(".parquet")
+            and not e.name.startswith(("_", "."))
+        ),
+        key=lambda e: e.name,
+    )
+
+
+def _leaf_dirs(path: str) -> list[str]:
+    """The directories holding a table's data files: the partition
+    directories (``col=val``) of a partitioned table, else the table
+    directory itself."""
+    subs = sorted(e.path for e in os.scandir(path) if e.is_dir() and "=" in e.name)
+    return [d for s in subs for d in _leaf_dirs(s)] if subs else [path]
+
+
+def _file_key_ranges(path: str, key_col: str) -> list:
+    """[min, max] of ``key_col`` per row group of one parquet file, from
+    its footer; None for a row group without statistics (always read)."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    j = next(i for i in range(md.num_columns) if md.schema.column(i).path == key_col)
+    out = []
+    for g in range(md.num_row_groups):
+        st = md.row_group(g).column(j).statistics
+        out.append([st.min, st.max] if st is not None and st.has_min_max else None)
+    return out
+
+
+def key_ranges(d: str, key_col: str, recorded: dict | None = None) -> dict:
+    """{file name: {"size", "row_groups": per-row-group [min, max]}} for
+    the data files of directory ``d``.  A file listed in ``recorded``
+    (a _ranges.json "files" map) with its size unchanged takes the
+    recorded ranges; any other file's are read from its footer — the
+    one path for both a commit and a root written without a record."""
+    recorded = recorded or {}
+    out = {}
+    for e in _data_files(d):
+        size = e.stat().st_size
+        hit = recorded.get(e.name)
+        out[e.name] = {
+            "size": size,
+            "row_groups": hit["row_groups"]
+            if hit is not None and hit.get("size") == size
+            else _file_key_ranges(e.path, key_col),
+        }
+    return out
+
+
+def record_key_ranges(d: str, key_col: str) -> None:
+    """Commit-time record of every data file's row-group key ranges in
+    ``d`` (read once from the fresh footers, driver-side) as
+    ``d/_ranges.json``."""
+    tmp = os.path.join(d, RANGES_FILE + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump({"key": key_col, "files": key_ranges(d, key_col)}, f)
+    os.replace(tmp, os.path.join(d, RANGES_FILE))
+
+
+def _recorded_ranges(d: str, key_col: str) -> dict:
+    """The "files" map of ``d``'s _ranges.json, {} when it is missing,
+    unreadable or records another key."""
+    try:
+        with open(os.path.join(d, RANGES_FILE)) as f:
+            rec = json.load(f)
+    except (OSError, ValueError):
+        return {}
+    return rec.get("files", {}) if rec.get("key") == key_col else {}
+
+
+def _covers(want: list, rng) -> bool:
+    """Does the row-group range ``rng`` hold any of the sorted ``want``?"""
+    if rng is None:
+        return True
+    i = bisect.bisect_left(want, rng[0])
+    return i < len(want) and want[i] <= rng[1]
+
+
 def iceberg_available(spark) -> bool:
     """True if an Iceberg catalog can be configured in this session."""
     try:
@@ -84,6 +193,9 @@ class IndexStorage:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
+        # what this instance's lookup_rows calls read, per table: files
+        # and row groups read versus the table's totals
+        self.reads: dict[str, dict[str, int]] = {}
 
     # -- manifest ---------------------------------------------------------
     @property
@@ -138,7 +250,7 @@ class IndexStorage:
     def write_table(
         self, df, name: str, mode: str = "overwrite", partition_by=None, options=None
     ):
-        w = df.write.mode(mode)
+        w = _writer(df, name).mode(mode)
         if options:
             for k, v in options.items():
                 w = w.option(k, v)
@@ -146,6 +258,9 @@ class IndexStorage:
             w = w.partitionBy(*partition_by)
         p = self.table_path(name)
         w.parquet(p)
+        if name in POINT_KEYS:
+            for d in _leaf_dirs(p):
+                record_key_ranges(d, POINT_KEYS[name])
         if not partition_by:
             # seed the schema memo: the common write-then-read-back flow
             # (build metrics, term_stats) must not pay an inference job
@@ -193,13 +308,15 @@ class IndexStorage:
         (groups committed by an earlier attempt) are never touched.
         ``vals`` lists every partition value being written; values the
         data did not produce get an empty dir so every expected
-        partition exists.  The postings table's only writer
-        (build._write_postings) commits through here."""
+        partition exists.  A POINT_KEYS table's key ranges are recorded
+        in each dir before it moves, so they commit with its files.  The
+        postings table's only writer (build._write_postings) commits
+        through here."""
         base = self.table_path(name)
         tmp = base + "__build_tmp"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
+        _writer(df, name).mode("overwrite").partitionBy(partition_col).parquet(tmp)
         os.makedirs(base, exist_ok=True)
         for v in vals:
             sub = f"{partition_col}={v}"
@@ -208,6 +325,8 @@ class IndexStorage:
             if os.path.exists(dst):
                 shutil.rmtree(dst)
             if os.path.exists(src):
+                if name in POINT_KEYS:
+                    record_key_ranges(src, POINT_KEYS[name])
                 os.replace(src, dst)
             else:
                 os.makedirs(dst)
@@ -230,26 +349,64 @@ class IndexStorage:
 
     def lookup_rows(self, name: str, key_col: str, values, columns=None):
         """Driver-side point lookup: rows of table ``name`` whose
-        ``key_col`` is in ``values``, via a pyarrow dataset scan with
-        predicate pushdown.  The term-dictionary read of a search engine
-        is a k-key lookup; a Spark job per lookup costs ~100 ms of fixed
-        scheduling for 2-3 rows.  Row groups are pruned by parquet
-        min/max stats, and build_index writes term_stats range-
-        partitioned + term-sorted, so the scan touches at most ~k row
-        groups regardless of vocabulary size (bounded driver work — this
-        is a dictionary probe, not a data pass).  Returns a list of
-        dicts, or None if the pyarrow path is unavailable (caller falls
-        back to a Spark collect)."""
+        ``key_col`` is in ``values``.  A search engine's dictionary
+        probe, postings fetch and winners' metadata are k-key lookups; a
+        Spark job per lookup costs ~100 ms of fixed scheduling for a few
+        rows.  The read is range-directed: each data file's row-group
+        [min, max] key ranges (recorded at commit, see key_ranges) pick
+        the files to open and the row groups to decode, and only the
+        matching rows are kept.  On a key-clustered table (postings and
+        docs are range-partitioned on their key, every file is
+        key-sorted) that is about one row group per key and partition,
+        whatever the table's size.  What was read accumulates in
+        ``self.reads[name]``.  Returns a list of dicts, or None if the
+        pyarrow path is unavailable (caller falls back to a Spark
+        collect)."""
         try:
-            import pyarrow.dataset as pads
+            import pyarrow as pa
+            import pyarrow.compute as pc
+            import pyarrow.parquet as pq
 
-            d = pads.dataset(self.table_path(name), format="parquet")
-            tbl = d.to_table(
-                columns=columns, filter=pads.field(key_col).isin(list(values))
+            want = sorted(set(values))
+            cols = None if columns is None else list(dict.fromkeys([*columns, key_col]))
+            seen = self.reads.setdefault(
+                name,
+                dict.fromkeys(
+                    ("files_read", "files_total", "row_groups_read", "row_groups_total"),
+                    0,
+                ),
             )
-            return tbl.to_pylist()
+            parts = []
+            for d in _leaf_dirs(self.table_path(name)):
+                for fname, rec in key_ranges(d, key_col, _recorded_ranges(d, key_col)).items():
+                    rgs = [i for i, r in enumerate(rec["row_groups"]) if _covers(want, r)]
+                    seen["files_total"] += 1
+                    seen["row_groups_total"] += len(rec["row_groups"])
+                    if rgs:
+                        seen["files_read"] += 1
+                        seen["row_groups_read"] += len(rgs)
+                        # a few small row groups: decoder threads cost
+                        # more than they save
+                        parts.append(
+                            pq.ParquetFile(os.path.join(d, fname)).read_row_groups(
+                                rgs, columns=cols, use_threads=False
+                            )
+                        )
+            if not parts:
+                return []
+            tbl = pa.concat_tables(parts)
+            keys = pa.array(want).cast(tbl.schema.field(key_col).type)
+            tbl = tbl.filter(pc.is_in(tbl[key_col], value_set=keys))
+            return (tbl if columns is None else tbl.select(columns)).to_pylist()
         except Exception:
             return None
+
+
+def _writer(df, name: str):
+    """``df.write`` with a POINT_KEYS table's row groups capped at
+    ROW_GROUP_BYTES."""
+    w = df.write
+    return w.option("parquet.block.size", str(ROW_GROUP_BYTES)) if name in POINT_KEYS else w
 
 
 def skew_report(store: "IndexStorage", spark) -> dict:
