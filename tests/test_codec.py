@@ -10,6 +10,7 @@ from hypothesis import given, settings, strategies as st
 from websearchengine_spark.functions.codec import (
     decode_posting_blocks,
     encode_posting_blocks,
+    posting_blocks,
     varbyte_decode,
     varbyte_encode,
 )
@@ -77,7 +78,7 @@ def test_posting_blocks_roundtrip(pl):
     doc_ids, tfs, dls, positions = pl
     avg_dl = float(dls.mean())
     blocks = encode_posting_blocks(doc_ids, tfs, dls, positions, avg_dl, block_size=64)
-    d, t, dl, p = decode_posting_blocks(blocks, want_doclens=True)
+    d, t, dl, p = decode_posting_blocks(posting_blocks(blocks), want_doclens=True)
     assert d.tolist() == doc_ids.tolist()
     assert t.tolist() == tfs.tolist()
     assert dl.tolist() == dls.tolist()
@@ -101,7 +102,7 @@ def test_posting_blocks_skip_decode_positions():
     dls = np.array([7, 3, 9])
     positions = np.array([0, 5, 2, 1, 4, 9])
     blocks = encode_posting_blocks(doc_ids, tfs, dls, positions, avg_dl=6.0)
-    d, t, dl, p = decode_posting_blocks(blocks, want_positions=False)
+    d, t, dl, p = decode_posting_blocks(posting_blocks(blocks), want_positions=False)
     assert p is None
     assert dl is None
     assert d.tolist() == [3, 10, 11]
@@ -135,7 +136,7 @@ def test_decode_remerges_interleaved_block_runs(pl):
         )
 
     legacy = [b[:6] + (True,) for b in run(head)] + (run(~head) if (~head).any() else [])
-    d, t, dl, p = decode_posting_blocks(legacy, want_doclens=True)
+    d, t, dl, p = decode_posting_blocks(posting_blocks(legacy), want_doclens=True)
     assert d.tolist() == doc_ids.tolist()
     assert t.tolist() == tfs.tolist()
     assert dl.tolist() == dls.tolist()
@@ -143,8 +144,8 @@ def test_decode_remerges_interleaved_block_runs(pl):
 
     plain = encode_posting_blocks(doc_ids, tfs, dls, positions, avg_dl, block_size=8)
     spec = [(0, {"t": 1.0}, [])]
-    want = shard_topk({"t": plain}, spec, "bm25", {"t": 1.0}, avg_dl, 5)
-    got = shard_topk({"t": legacy}, spec, "bm25", {"t": 1.0}, avg_dl, 5)
+    want = shard_topk({"t": posting_blocks(plain)}, spec, "bm25", {"t": 1.0}, avg_dl, 5)
+    got = shard_topk({"t": posting_blocks(legacy)}, spec, "bm25", {"t": 1.0}, avg_dl, 5)
     for w, g in zip(want[:3], got[:3]):
         np.testing.assert_array_equal(w, g)
 
@@ -211,3 +212,121 @@ def test_encode_posting_blocks_defer_bytes_identical():
         datas = varbyte_encode_many([b[5] for b in deferred])
         rebuilt = [b[:5] + (d,) + b[6:] for b, d in zip(deferred, datas)]
         assert rebuilt == eager
+
+
+def test_varbyte_encode_many_crosses_pass_boundary(monkeypatch):
+    """Chunked passes are byte-identical to one encode per chunk: with a
+    tiny pass size (chunks and values straddle every pass boundary) and
+    with the real ENCODE_PASS_VALUES over a batch that crosses it."""
+    from websearchengine_spark.functions import codec
+
+    rng = np.random.default_rng(3)
+    chunks = [
+        rng.integers(0, 1 << int(b), size=int(n), dtype=np.int64)
+        for b, n in zip(rng.integers(1, 62, size=40), rng.integers(0, 23, size=40))
+    ]
+    want = [varbyte_encode(c) for c in chunks]
+    with monkeypatch.context() as m:
+        m.setattr(codec, "ENCODE_PASS_VALUES", 7)
+        assert codec.varbyte_encode_many(chunks) == want
+    big = [
+        rng.integers(0, 1 << 40, size=600_000, dtype=np.int64),
+        rng.integers(0, 300, size=700_000, dtype=np.int64),
+        np.arange(5, dtype=np.int64),
+    ]
+    assert sum(c.size for c in big) > codec.ENCODE_PASS_VALUES
+    assert codec.varbyte_encode_many(big) == [varbyte_encode(c) for c in big]
+
+
+# ---- the vectorized multi-block decoder against a per-block reference --
+
+KEY_SHIFT = 41  # the kernel's (shard, doc_id) key: shard << 41 | doc_id
+
+
+def _reference_decode(blocks, want_positions):
+    """Plain per-block decode of block tuples: each block's stream is
+    [n gaps, n tfs, n doc lengths, position deltas], positions restart
+    per doc; the postings are returned in ascending doc order."""
+    rows = []
+    for first, _last, n, _mt, _mi, data, *_ in blocks:
+        vals = varbyte_decode(data).tolist()
+        gaps, tfs, dls, deltas = vals[:n], vals[n : 2 * n], vals[2 * n : 3 * n], vals[3 * n :]
+        doc, at = first, 0
+        for g, tf, dl in zip(gaps, tfs, dls):
+            doc += g
+            pos = []
+            for j in range(tf):
+                pos.append(deltas[at] if j == 0 else pos[-1] + deltas[at])
+                at += 1
+            rows.append((doc, tf, dl, pos))
+    rows.sort(key=lambda r: r[0])
+    return (
+        [r[0] for r in rows],
+        [r[1] for r in rows],
+        [r[2] for r in rows],
+        [p for r in rows for p in r[3]] if want_positions else None,
+    )
+
+
+@st.composite
+def sharded_blocks(draw):
+    """Block tuples of 1-4 shards' posting lists (doc_id % n_shards ==
+    shard), keyed by (shard, doc_id) like the kernel keys them,
+    interleaved across shards; some shards stored in the legacy
+    two-run head layout; plus a random block subset."""
+    n_shards = draw(st.integers(1, 4))
+    block_size = draw(st.integers(4, 128))
+    blocks = []
+    for shard in range(n_shards):
+        m = draw(st.integers(1, 150))
+        gaps = draw(st.lists(st.integers(1, 50), min_size=m, max_size=m))
+        docs = np.cumsum(np.array(gaps, dtype=np.int64)) * n_shards + shard
+        tfs = np.array(draw(st.lists(st.integers(1, 5), min_size=m, max_size=m)), dtype=np.int64)
+        dls = tfs + np.array(draw(st.lists(st.integers(0, 400), min_size=m, max_size=m)), dtype=np.int64)
+        pos = np.concatenate(
+            [np.cumsum(draw(st.lists(st.integers(1, 30), min_size=int(t), max_size=int(t)))) - 1 for t in tfs]
+        ).astype(np.int64)
+        starts = np.concatenate([[0], np.cumsum(tfs)[:-1]])
+        key = np.int64(shard) << KEY_SHIFT
+
+        def run(mask):
+            p = [pos[s : s + t] for s, t in zip(starts[mask], tfs[mask])]
+            return [
+                (b[0] + key, b[1] + key, *b[2:])
+                for b in encode_posting_blocks(
+                    docs[mask], tfs[mask], dls[mask],
+                    np.concatenate(p) if p else np.empty(0, np.int64),
+                    10.0, block_size=block_size,
+                )
+            ]
+
+        if draw(st.booleans()) and m > 1:  # legacy head layout
+            head = np.zeros(m, dtype=bool)
+            head[draw(st.lists(st.integers(0, m - 1), min_size=1, max_size=m))] = True
+            blocks += [b[:6] + (True,) for b in run(head)]
+            blocks += run(~head) if (~head).any() else []
+        else:
+            blocks += run(np.ones(m, dtype=bool))
+    order = draw(st.permutations(range(len(blocks))))
+    blocks = [blocks[i] for i in order]
+    subset = draw(st.lists(st.booleans(), min_size=len(blocks), max_size=len(blocks)))
+    return blocks, np.array(subset, dtype=bool)
+
+
+@given(sharded_blocks(), st.booleans())
+@settings(max_examples=150, deadline=None)
+def test_decode_posting_blocks_matches_per_block_reference(case, want_positions):
+    """One vectorized pass over many blocks decodes exactly what a plain
+    per-block decode gives: random lists, block sizes 4-128, random
+    block subsets, blocks interleaved across shards, positions on and
+    off, legacy head blocks."""
+    blocks, subset = case
+    chosen = [b for b, keep in zip(blocks, subset) if keep]
+    d, t, dl, p = decode_posting_blocks(
+        posting_blocks(blocks).take(subset), want_positions=want_positions, want_doclens=True
+    )
+    want = _reference_decode(chosen, want_positions)
+    assert d.tolist() == want[0]
+    assert t.tolist() == want[1]
+    assert dl.tolist() == want[2]
+    assert (p is None) if not want_positions else p.tolist() == want[3]

@@ -164,10 +164,10 @@ def test_gated_read_opens_at_most_two_files_per_term_and_group(
     terms = _top_terms(spark, root, 40)
     for q in (terms[0], terms[7], f"{terms[3]} {terms[21]}", terms[39]):
         store = IndexStorage(root)
-        sc = topk._prepare(spark, store, [q], None, None, None, None, "bm25")
+        sc = topk._prepare(spark, store, [q], None, None, None, "bm25")
         assert sc.postings <= topk.INPROC_MAX_POSTINGS
         assert topk._local_topk(store, sc, 10) is not None
-        seen = store.reads["postings"]
+        seen = sc.reads["postings"]
         bound = 2 * len(sc.terms) * n_groups
         assert seen["files_total"] > bound, seen
         assert seen["files_read"] <= bound, (q, seen)
@@ -197,11 +197,14 @@ def test_root_without_recorded_ranges_answers_identically(
         want = run_query(spark, roots["fresh"], q, ranker=ranker, k=10).collect()
         assert [r.asDict() for r in got] == [r.asDict() for r in want], (q, ranker)
 
-    with_rec, without = IndexStorage(roots["fresh"]), IndexStorage(bare)
-    for store in (with_rec, without):
-        assert store.lookup_rows("postings", "term", ["web", "google"], ["term"])
-        assert store.lookup_rows("docs", "doc_id", [3, 150], ["doc_id"]) == [
-            {"doc_id": 3}, {"doc_id": 150}
-        ]
-    assert with_rec.reads == without.reads
+    reads = {}
+    for root in (roots["fresh"], bare):
+        store, reads[root] = IndexStorage(root), {}
+        assert store.lookup_rows(
+            "postings", "term", ["web", "google"], ["term"], reads=reads[root]
+        ).num_rows
+        assert store.lookup_rows(
+            "docs", "doc_id", [3, 150], ["doc_id"], reads=reads[root]
+        ).to_pylist() == [{"doc_id": 3}, {"doc_id": 150}]
+    assert reads[roots["fresh"]] == reads[bare]
     assert not glob.glob(f"{bare}/**/{RANGES_FILE}", recursive=True)

@@ -13,6 +13,7 @@ to the same request forced to the Spark side."""
 import json
 import logging
 import os
+import sys
 from urllib.parse import urlencode
 
 import pytest
@@ -100,13 +101,14 @@ def test_warm_prediction_is_single_action(latency_srv, monkeypatch):
 
 def test_generation_change_drops_caches(latency_srv):
     latency_srv._handle("/search", "query=web+search&ranker=bm25&num=5")
-    stats, spell = latency_srv._caches()
-    assert stats.get("term_stats")  # warmed
+    store, spell = latency_srv._caches()
+    assert store.term_stats  # warmed
     manifest = os.path.join(latency_srv.index_root, "_manifest.json")
     st = os.stat(manifest)
     os.utime(manifest, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
-    stats2, spell2 = latency_srv._caches()
-    assert stats2 == {} and spell2 == {}  # invalidated, fresh dicts
+    store2, spell2 = latency_srv._caches()
+    # invalidated: a new store with an empty memo, a fresh spell dict
+    assert store2 is not store and store2.term_stats == {} and spell2 == {}
 
 
 class Py4jCounter:
@@ -270,3 +272,117 @@ def test_request_records(latency_srv, monkeypatch, caplog):
     groups = IndexStorage(latency_srv.index_root).read_manifest()["config"]["n_groups"]
     assert read["postings"]["files_read"] <= 2 * 2 * groups
     assert all("read" not in r for r in recs[1:])
+
+
+def _open_fds_under(root: str) -> int:
+    """File descriptors of this process open on files under ``root``."""
+    n = 0
+    for fd in os.listdir("/proc/self/fd"):
+        try:
+            n += os.readlink(f"/proc/self/fd/{fd}").startswith(os.path.realpath(root))
+        except OSError:
+            pass
+    return n
+
+
+def test_warm_gated_search_reads_no_ranges_or_footers(latency_srv, monkeypatch):
+    """On an unchanged generation a warm gated /search reuses the opened
+    index: it reads no _ranges.json and parses no parquet footer (counted
+    at the functions that do, not by timing)."""
+    import pyarrow.parquet as pq
+
+    from websearchengine_spark.sources import storage
+
+    for ranker in ("bm25", "comprehensive"):
+        latency_srv._handle("/search", f"query=web+search&ranker={ranker}&num=5")
+    counts = {"ranges": 0, "footers": 0}
+
+    def counting(key, fn):
+        def wrapped(*a, **kw):
+            counts[key] += 1
+            return fn(*a, **kw)
+
+        return wrapped
+
+    monkeypatch.setattr(storage, "_recorded_ranges", counting("ranges", storage._recorded_ranges))
+    monkeypatch.setattr(storage, "_file_key_ranges", counting("footers", storage._file_key_ranges))
+    monkeypatch.setattr(pq, "ParquetFile", counting("footers", pq.ParquetFile))
+    monkeypatch.setattr(pq, "read_metadata", counting("footers", pq.read_metadata))
+    for ranker in ("bm25", "comprehensive"):
+        status, _, body = latency_srv._handle(
+            "/search", f"query=web+search&ranker={ranker}&num=5"
+        )
+        assert status == 200 and body
+    assert counts == {"ranges": 0, "footers": 0}
+
+
+def test_generation_change_builds_a_new_store_and_closes_the_old(latency_srv):
+    """A generation change gives the next request a new store, and the
+    old store's open files are closed: no descriptor outlives it."""
+    q = "query=web+search&ranker=bm25&num=5"
+    body = latency_srv._handle("/search", q)[2]
+    old, _ = latency_srv._caches()
+    assert _open_fds_under(latency_srv.index_root) > 0
+    manifest = os.path.join(latency_srv.index_root, "_manifest.json")
+    st = os.stat(manifest)
+    os.utime(manifest, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    new, _ = latency_srv._caches()
+    assert new is not old
+    assert _open_fds_under(latency_srv.index_root) == 0
+    assert latency_srv._handle("/search", q)[2] == body
+    assert latency_srv._caches()[0] is new
+
+
+def test_concurrent_searches_equal_serial(latency_srv):
+    """N threads on one server (one shared store) get the bodies of a
+    serial run, and each request's ``read`` record covers that request
+    alone."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    uris = [
+        f"query={q}&ranker={r}&num={n}"
+        for q in ("web+search", "data+mining", "google", "%22data+mining%22", "the+of")
+        for r in ("bm25", "comprehensive")
+        for n in (3, 10)
+    ]
+
+    def run(uri):
+        record: dict = {}
+        body = latency_srv._route("/search", uri, record)[2]
+        return body, record.get("read")
+
+    for uri in uris:  # warm: a cold term's record also counts its term_stats read
+        run(uri)
+    serial = [run(u) for u in uris]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads finely
+    try:
+        with ThreadPoolExecutor(max_workers=2 * os.cpu_count()) as pool:
+            for _ in range(3):
+                assert list(pool.map(run, uris, timeout=120)) == serial
+    finally:
+        sys.setswitchinterval(switch)
+    assert all(read for _, read in serial)
+
+
+def test_live_search_reads_the_catalog_once(spark, live_srv, monkeypatch):
+    """A live query reads _live.json once, on either side of the gate,
+    and answers as before (the parity tests pin the answers)."""
+    from websearchengine_spark.streaming import ingest
+
+    calls = []
+    read = ingest.read_live_catalog
+    monkeypatch.setattr(
+        ingest, "read_live_catalog", lambda root: calls.append(root) or read(root)
+    )
+    want = None
+    for cap in (topk.INPROC_MAX_POSTINGS, 0):
+        monkeypatch.setattr(topk, "INPROC_MAX_POSTINGS", cap)
+        calls.clear()
+        rows = [
+            (r["doc_id"], r["score"])
+            for r in ingest.search_live(spark, live_srv.index_root, "data mining", k=20).collect()
+        ]
+        assert calls == [live_srv.index_root]
+        want = want or rows
+        assert rows == want and rows

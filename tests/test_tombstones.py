@@ -368,9 +368,7 @@ def test_live_gate_sides_identical(spark, corpus_pdf, tmp_path, monkeypatch):
     # delta-000000001 costs its df sum alone (no tombstones of its own);
     # delta-000000000 costs more (larger df plus the 30 pending)
     delta1 = IndexStorage(os.path.join(root, "delta-000000001"))
-    cheap = topk._prepare(
-        spark, delta1, ["data mining"], None, None, None, None
-    ).postings
+    cheap = topk._prepare(spark, delta1, ["data mining"], None, None, None).postings
     for query in ("data mining", '"data mining"'):
         got = {}
         for side, cap in (("inproc", 10**12), ("spark", 0), ("mixed", cheap)):

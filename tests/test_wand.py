@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 
 from tests.conftest import REFERENCE_QUERIES, count_jobs
-from websearchengine_spark.functions.codec import encode_posting_blocks
+from websearchengine_spark.functions.codec import encode_posting_blocks, posting_blocks
 from websearchengine_spark.operators import topk
 from websearchengine_spark.operators.query import run_query
 from websearchengine_spark.operators.topk import shard_topk, wand_topk
@@ -70,7 +70,7 @@ def test_gate_boundary_is_the_df_sum(spark, built_index, monkeypatch):
     """A query whose df sum equals the budget runs in-process; one
     posting over it runs Spark jobs."""
     store = IndexStorage(built_index)
-    sc = topk._prepare(spark, store, ["web search"], None, None, None, None)
+    sc = topk._prepare(spark, store, ["web search"], None, None, None)
     for cap, spark_side in ((sc.postings, False), (sc.postings - 1, True)):
         monkeypatch.setattr(topk, "INPROC_MAX_POSTINGS", cap)
         _rows, jobs = count_jobs(
@@ -98,7 +98,7 @@ def _mk_lists(avg_dl=10.0):
     dls[common_docs == 900] = 8
     pos = np.arange(500, dtype=np.int64)
     common = encode_posting_blocks(common_docs, tfs, dls, pos, avg_dl, block_size=16)
-    return {"rare": rare, "common": common}
+    return {"rare": posting_blocks(rare), "common": posting_blocks(common)}
 
 
 def _spec(*terms, phrases=()):
@@ -154,10 +154,10 @@ def test_kernel_phrase_adjacency():
         10.0, k=10,
     )
     assert d.size == 0
-    tl["common"] = encode_posting_blocks(
+    tl["common"] = posting_blocks(encode_posting_blocks(
         np.array([500, 900]), np.array([1, 1]), np.array([12, 8]),
         np.array([5, 5]), 10.0, block_size=16,
-    )
+    ))
     _q, d, _s, _ = shard_topk(
         tl, _spec("rare", "common", phrases=[("rare", "common")]), "bm25", idf,
         10.0, k=10,
@@ -189,7 +189,9 @@ def test_kernel_tie_break_doc_id_asc():
     same = encode_posting_blocks(
         docs, np.ones(3, dtype=np.int64), np.full(3, 10), np.arange(3), avg_dl
     )
-    _q, d, s, _ = shard_topk({"t": same}, _spec("t"), "bm25", {"t": 1.0}, avg_dl, k=2)
+    _q, d, s, _ = shard_topk(
+        {"t": posting_blocks(same)}, _spec("t"), "bm25", {"t": 1.0}, avg_dl, k=2
+    )
     assert d.tolist() == [3, 7]  # equal scores -> lowest doc_ids win
 
 
@@ -268,3 +270,123 @@ class TestSparkSide:
     test_hybrid_head_blocks_exist_and_rank_identity = staticmethod(
         test_hybrid_head_blocks_exist_and_rank_identity
     )
+
+
+# ---- one kernel call over many shards ---------------------------------
+
+def _sharded_lists(n_shards: int, n_docs: int, seed: int):
+    """Per-shard block columns of three terms over a doc-sharded corpus
+    (doc_id % n_shards == shard), 8-doc blocks: {shard: {term: blocks}}
+    and the same blocks as ONE term -> columns map over every shard."""
+    from websearchengine_spark.functions.codec import PostingBlocks
+
+    rng = np.random.default_rng(seed)
+    dls = rng.integers(20, 60, size=n_docs)
+    per_shard: dict[int, dict] = {s: {} for s in range(n_shards)}
+    for term, share in (("a", 0.6), ("b", 0.3), ("c", 0.02)):
+        has = rng.random(n_docs) < share
+        for s in range(n_shards):
+            docs = np.flatnonzero(has & (np.arange(n_docs) % n_shards == s))
+            if docs.size == 0:
+                continue
+            tfs = rng.integers(1, 4, size=docs.size)
+            pos = np.concatenate([np.sort(rng.choice(19, t, replace=False)) for t in tfs])
+            per_shard[s][term] = posting_blocks(
+                encode_posting_blocks(docs, tfs, dls[docs], pos, 40.0, block_size=8), shard=s
+            )
+    merged = {}
+    for term in ("a", "b", "c"):
+        parts = [per_shard[s][term] for s in range(n_shards) if term in per_shard[s]]
+        shift = np.cumsum([0] + [p.buf.size for p in parts[:-1]])
+        merged[term] = PostingBlocks(
+            *(
+                np.concatenate([getattr(p, f) + (o if f in ("start", "end") else 0) for p, o in zip(parts, shift)])
+                for f in ("shard", "first", "last", "n", "start", "end")
+            ),
+            np.concatenate([p.buf for p in parts]),
+        )
+    return per_shard, merged
+
+
+@pytest.mark.parametrize("ranker", ["bm25", "favorite", "comprehensive", "conjunctive"])
+def test_one_call_over_shards_equals_per_shard_loop(ranker):
+    """At 40 shards, one kernel call over every shard returns what one
+    call per shard merged on (score desc, doc_id asc) returns — same
+    doc ids, bit-identical scores — and decodes no more blocks: a
+    block's [first, last] meets only its own shard's candidates."""
+    n_shards, k = 40, 10
+    per_shard, merged = _sharded_lists(n_shards, 6000, seed=1)
+    specs = [
+        (0, {"a": 1.0, "c": 1.0}, []),
+        (1, {"c": 1.0, "a": 1.0, "b": 1.0}, []),
+        (2, {"b": 2.0, "c": 1.0}, [("b", "c")]),
+    ]
+    const = {"a": 0.3, "b": 0.9, "c": 2.1} if ranker == "bm25" else {"a": 0.2, "b": 0.1, "c": 0.01}
+    q1, d1, s1, st1 = shard_topk(merged, specs, ranker, const, 40.0, k)
+    loop = [shard_topk(per_shard[s], specs, ranker, const, 40.0, k) for s in range(n_shards)]
+    q2, d2, s2 = (np.concatenate([r[i] for r in loop]) for i in range(3))
+    decoded_loop = sum(r[3]["blocks_decoded"] for r in loop)
+    assert st1["blocks_total"] == sum(r[3]["blocks_total"] for r in loop)
+    assert 0 < st1["blocks_decoded"] <= decoded_loop < st1["blocks_total"]
+    for qid, *_ in specs:
+        m1, m2 = q1 == qid, q2 == qid
+        o2 = np.lexsort((d2[m2], -s2[m2]))[: None if ranker == "comprehensive" else k]
+        o1 = np.lexsort((d1[m1], -s1[m1]))
+        assert d1[m1][o1].tolist() == d2[m2][o2].tolist(), (ranker, qid)
+        np.testing.assert_array_equal(s1[m1][o1], s2[m2][o2])
+    assert (q1 == 1).any()
+
+
+def test_query_batch_decodes_each_block_once(monkeypatch):
+    """A batch of queries sharing terms decodes each (term, block) at
+    most once in one kernel call, over many shards."""
+    _per_shard, merged = _sharded_lists(32, 4000, seed=2)
+    seen = []
+    decode = topk.decode_posting_blocks
+
+    def counting(blocks, *a, **kw):
+        seen.extend((id(blocks.buf), s) for s in blocks.start.tolist())
+        return decode(blocks, *a, **kw)
+
+    monkeypatch.setattr(topk, "decode_posting_blocks", counting)
+    specs = [
+        (0, {"a": 1.0, "c": 1.0}, []),
+        (1, {"b": 1.0, "c": 1.0}, []),
+        (2, {"a": 1.0, "b": 1.0}, []),
+        (3, {"a": 1.0, "b": 1.0, "c": 1.0}, [("a", "b")]),
+    ]
+    _q, _d, _s, stats = shard_topk(merged, specs, "bm25", {"a": 1, "b": 1, "c": 1}, 40.0, 10)
+    assert len(seen) == len(set(seen)) == stats["blocks_decoded"]
+
+
+def test_comprehensive_priors_read_as_columns(spark, built_index):
+    """The in-process comprehensive side reads its candidates' docs rows
+    as ONE table aligned with the candidates (priors as columns, no row
+    dict per candidate)."""
+    import pyarrow as pa
+
+    store = IndexStorage(built_index)
+    sc = topk._prepare(spark, store, ["the of"], None, None, None, "comprehensive")
+    ids, _scores, rows, _reads = topk._local_topk(store, sc, 10)
+    assert ids.size > 10 and isinstance(rows, pa.Table)
+    assert rows.column("doc_id").to_numpy().tolist() == ids.tolist()
+
+
+def test_missing_root_read_names_it_and_creates_nothing(spark, tmp_path):
+    """A read of a missing index root raises one FileNotFoundError that
+    names the root and leaves no directory behind; the write paths
+    still create their root."""
+    from websearchengine_spark.operators.query import search
+
+    missing = str(tmp_path / "no" / "such" / "root")
+    for read in (
+        lambda: wand_topk(spark, missing, "web search"),
+        lambda: run_query(spark, missing, "web search", ranker="bm25"),
+        lambda: search(spark, missing, "web search"),
+    ):
+        with pytest.raises(FileNotFoundError, match=missing):
+            read()
+    assert not (tmp_path / "no").exists()
+    fresh = tmp_path / "fresh"
+    IndexStorage(str(fresh)).write_manifest({"config": {}})
+    assert (fresh / "_manifest.json").exists()

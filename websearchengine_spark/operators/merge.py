@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from websearchengine_spark.functions.codec import (
     BLOCK_SIZE,
+    arrow_posting_blocks,
     decode_posting_blocks,
     encode_posting_blocks,
 )
@@ -285,25 +286,32 @@ def merge_many_indexes(
 
     def merge_rows(batch):
         dels_x = dels_bc.value if dels_bc is not None else {}
-        for shard, term, parts in zip(
-            *(batch.column(c).to_pylist() for c in ("shard", "term", "parts"))
+        # the parts (side, blocks) of every row as columns: row r's parts
+        # are part_offs[r]:part_offs[r+1], part j's blocks are
+        # block_offs[j]:block_offs[j+1]
+        parts = batch.column("parts")
+        part_offs = parts.offsets.to_numpy().astype(np.int64)
+        part_offs -= part_offs[0]
+        sides, part_blocks = parts.flatten().flatten()
+        sides = sides.to_numpy()
+        stored, block_offs = arrow_posting_blocks(
+            part_blocks, np.zeros(len(sides), dtype=np.int64)
+        )
+        for r, (shard, term) in enumerate(
+            zip(*(batch.column(c).to_pylist() for c in ("shard", "term")))
         ):
             docs_l, tfs_l, dls_l, pos_l = [], [], [], []
             # parts arrive unordered; segment order = doc_id order
             # (offsets ascending, ranges disjoint)
-            for part in sorted(parts, key=lambda s: s["side"]):
+            mine = range(part_offs[r], part_offs[r + 1])
+            for j in sorted(mine, key=lambda j: sides[j]):
                 d, t, dl, p = decode_posting_blocks(
-                    [
-                        (
-                            b["first_docid"], b["last_docid"], b["n"],
-                            b["max_tf"], b["max_impact"], b["data"],
-                        )
-                        for b in part["blocks"]
-                    ],
+                    stored.take(slice(block_offs[j], block_offs[j + 1])),
                     want_positions=positions,
                     want_doclens=True,
                 )
-                da = dels_x.get(int(part["side"]))
+                side = int(sides[j])
+                da = dels_x.get(side)
                 if da is not None and d.size:
                     keep = ~np.isin(d, da)
                     if not keep.all():
@@ -311,7 +319,7 @@ def merge_many_indexes(
                             # flat positions align per-occurrence
                             p = p[np.repeat(keep, t)]
                         d, t, dl = d[keep], t[keep], dl[keep]
-                off = offsets[part["side"]]
+                off = offsets[side]
                 if off:
                     d = d + off
                 docs_l.append(d)

@@ -24,13 +24,15 @@ tests/oracle.py and the frozen DuckDB oracles of the driver entries.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from websearchengine_spark.functions.analyze import analyze_query_word
-from websearchengine_spark.functions.codec import decode_posting_blocks
+from websearchengine_spark.functions.codec import (
+    arrow_posting_blocks,
+    decode_posting_blocks,
+)
 from websearchengine_spark.operators.util import as_dataframe
 from websearchengine_spark.sources.storage import IndexStorage
 
@@ -96,9 +98,10 @@ def load_postings_for_terms(
     """postings rows for ``terms`` decoded to (doc_id, term, tf, doc_len[,
     positions]) — the DataFrame form the spell-correction features read.
 
-    The term filter is pushed into the parquet scan; decode is one Arrow
-    pass.  Output is doc-sharded exactly like the index, so downstream
-    groupBy(doc_id) shuffles only matched rows.
+    The term filter is pushed into the parquet scan; each row's blocks
+    decode in one vectorized pass from the Arrow batch's columns.  Output
+    is doc-sharded exactly like the index, so downstream groupBy(doc_id)
+    shuffles only matched rows.
     """
     if want_positions and not store.read_manifest().get("config", {}).get(
         "positions", True
@@ -115,46 +118,46 @@ def load_postings_for_terms(
     )
 
     def decode(batches):
-        for pdf in batches:
-            doc_ids, terms_out, tfs, dls, poss = [], [], [], [], []
-            for term, blocks in zip(pdf["term"], pdf["blocks"]):
-                blks = [
-                    (
-                        b["first_docid"],
-                        b["last_docid"],
-                        b["n"],
-                        b["max_tf"],
-                        b["max_impact"],
-                        b["data"],
-                    )
-                    for b in blocks
-                ]
-                d, t, dl, p = decode_posting_blocks(
-                    blks, want_positions=want_positions, want_doclens=True
+        for batch in batches:
+            blocks, offs = arrow_posting_blocks(
+                batch.column("blocks"), np.zeros(batch.num_rows, dtype=np.int64)
+            )
+            parts = [
+                decode_posting_blocks(
+                    blocks.take(slice(offs[r], offs[r + 1])),
+                    want_positions=want_positions,
+                    want_doclens=True,
                 )
-                doc_ids.append(d)
-                tfs.append(t)
-                dls.append(dl)
-                terms_out.extend([term] * len(d))
-                if want_positions:
-                    off = np.zeros(len(t) + 1, dtype=np.int64)
-                    np.cumsum(t, out=off[1:])
-                    poss.extend(
-                        [p[off[i] : off[i + 1]].astype("int32") for i in range(len(t))]
-                    )
-            out = {
-                "doc_id": np.concatenate(doc_ids) if doc_ids else np.empty(0, np.int64),
-                "term": terms_out,
-                "tf": (np.concatenate(tfs) if tfs else np.empty(0, np.int64)).astype("int32"),
+                for r in range(batch.num_rows)
+            ]
+            terms_out = batch.column("term").to_pylist()
+
+            def cat(i, dtype):
+                return pa.array(
+                    np.concatenate([np.empty(0, np.int64), *(p[i] for p in parts)]).astype(dtype)
+                )
+
+            cols = {
+                "doc_id": cat(0, np.int64),
+                "term": pa.array(
+                    [t for t, p in zip(terms_out, parts) for _ in range(p[0].size)],
+                    pa.string(),
+                ),
+                "tf": cat(1, np.int32),
                 # doc_len is part of every posting (the blocks carry it
                 # for BM25), so it costs no docs-table join
-                "doc_len": (np.concatenate(dls) if dls else np.empty(0, np.int64)).astype("int32"),
+                "doc_len": cat(2, np.int32),
             }
             if want_positions:
-                out["positions"] = poss
-            yield pd.DataFrame(out)
+                tfs = np.concatenate([np.empty(0, np.int64), *(p[1] for p in parts)])
+                offsets = np.zeros(tfs.size + 1, dtype=np.int32)
+                np.cumsum(tfs, out=offsets[1:])
+                cols["positions"] = pa.ListArray.from_arrays(
+                    pa.array(offsets), cat(3, np.int32)
+                )
+            yield pa.RecordBatch.from_pydict(cols)
 
-    return postings.select("term", "blocks").mapInPandas(decode, schema=schema)
+    return postings.select("term", "blocks").mapInArrow(decode, schema=schema)
 
 
 RESULT_COLS = ["doc_id", "url", "title", "score", "pagerank", "numviews"]
@@ -176,7 +179,8 @@ def run_query(
     ordered by (score desc, doc_id asc) — the pinned tie-break."""
     from websearchengine_spark.operators.topk import _topk
 
-    return as_dataframe(spark, _topk(spark, index_root, query, k=k, ranker=ranker))
+    with IndexStorage.open(index_root) as store:
+        return as_dataframe(spark, _topk(spark, store, query, k=k, ranker=ranker))
 
 
 def search(
@@ -185,39 +189,33 @@ def search(
     query: str,
     ranker: str = "comprehensive",
     k: int = 10,
-    stats_cache: dict | None = None,
 ) -> DataFrame:
     """The engine's front door: run_query's ranking over a plain index
     root, and over a LIVE root (streaming/ingest.py catalog present)
     search_live's multi-segment evaluation with union statistics —
-    identical results to the compacted index, for every indexed ranker.
-    ``stats_cache``: the caller-owned dictionary memo of wand_topk."""
-    return as_dataframe(
-        spark, _search(spark, index_root, query, ranker, k, stats_cache)
-    )
+    identical results to the compacted index, for every indexed ranker."""
+    with IndexStorage.open(index_root) as store:
+        return as_dataframe(spark, _search(spark, store, query, ranker, k))
 
 
 def _search(
     spark: SparkSession,
-    index_root: str,
+    store: IndexStorage,
     query: str,
     ranker: str,
     k: int,
-    stats_cache: dict | None,
 ) -> pa.Table | DataFrame:
-    """search's core: a pyarrow table when the query ran in this
-    process, else a lazy DataFrame (util.as_rows / as_dataframe read
-    either)."""
+    """search's core over the opened index ``store``: a pyarrow table
+    when the query ran in this process, else a lazy DataFrame
+    (util.as_rows / as_dataframe read either)."""
     import os
 
     from websearchengine_spark.operators.topk import _topk
     from websearchengine_spark.streaming.ingest import CATALOG_NAME, _search_live
 
-    if os.path.exists(os.path.join(index_root, CATALOG_NAME)):
-        return _search_live(spark, index_root, query, k, ranker)
-    return _topk(
-        spark, index_root, query, k=k, stats_cache=stats_cache, ranker=ranker
-    )
+    if os.path.exists(os.path.join(store.require().root, CATALOG_NAME)):
+        return _search_live(spark, store, query, k, ranker)
+    return _topk(spark, store, query, k=k, ranker=ranker)
 
 
 CGI_RANKER_TYPES = frozenset(
@@ -283,7 +281,6 @@ def search_uri(
     uri_query: str,
     fullscan_prep: dict | None = None,
     docs_fs: DataFrame | None = None,
-    stats_cache: dict | None = None,
 ) -> DataFrame:
     """Serve a raw '?query=...&ranker=...&num=...' string — the /search
     front door one level up from search(), dispatching EVERY reference
@@ -299,25 +296,23 @@ def search_uri(
     Non-positive ``num`` falls back to the default 10 — the parser's
     "never fail upon invalid user input" contract extends to values that
     parse as ints but are meaningless as result counts."""
-    return as_dataframe(
-        spark,
-        _search_uri(
-            spark, index_root, uri_query, fullscan_prep, docs_fs, stats_cache
-        ),
-    )
+    with IndexStorage(index_root) as store:
+        return as_dataframe(
+            spark, _search_uri(spark, store, uri_query, fullscan_prep, docs_fs)
+        )
 
 
 def _search_uri(
     spark: SparkSession,
-    index_root: str,
+    store: IndexStorage,
     uri_query: str,
     fullscan_prep: dict | None,
     docs_fs: DataFrame | None,
-    stats_cache: dict | None,
 ) -> pa.Table | DataFrame:
-    """search_uri's core: a pyarrow table when the query ran in this
-    process, else a lazy DataFrame (util.as_rows / as_dataframe read
-    either) — what render.serve_search renders."""
+    """search_uri's core over the opened index ``store``: a pyarrow
+    table when the query ran in this process, else a lazy DataFrame
+    (util.as_rows / as_dataframe read either) — what render.serve_search
+    renders."""
     args = parse_cgi_args(uri_query, url_decode=True)
     ranker = args["ranker"]
     k = args["num"] if args["num"] > 0 else 10
@@ -337,7 +332,7 @@ def _search_uri(
                 )
             fullscan_prep = prepare_fullscan(docs_fs)
         return run_fullscan_query(spark, fullscan_prep, args["query"], ranker, k=k)
-    return _search(spark, index_root, args["query"], ranker, k, stats_cache)
+    return _search(spark, store, args["query"], ranker, k)
 
 
 def page_summary(

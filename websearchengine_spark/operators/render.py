@@ -26,6 +26,7 @@ from __future__ import annotations
 import base64
 import html as _html
 import json
+from contextlib import nullcontext
 
 # Minimal stand-in for the reference's public/index.html: same four
 # placeholders, decoded client-side like the reference's js — EXCEPT
@@ -113,7 +114,7 @@ def serve_search(
     fullscan_prep: dict | None = None,
     docs_fs=None,
     html_template: str | None = None,
-    stats_cache: dict | None = None,
+    store=None,
 ) -> tuple[str, str, dict]:
     """The full /search response path: parse CGI args, dispatch the
     ranker (query.search_uri's core), render per the requested
@@ -124,16 +125,20 @@ def serve_search(
     per table, files and row groups read versus the totals); else
     ``"spark"`` (the plan is collected) and {}.  Fullscan-family results
     carry only (doc_id, score); missing display columns render as the
-    reference's defaults (empty title, 0 signals)."""
+    reference's defaults (empty title, 0 signals).
+
+    ``store``: the IndexStorage of ``index_root`` to read through, kept
+    open across calls (the HTTP server keeps one per index generation);
+    None opens one for this call."""
     from pyspark.sql import DataFrame
 
     from websearchengine_spark.operators.query import _search_uri, parse_cgi_args
     from websearchengine_spark.operators.util import as_rows
+    from websearchengine_spark.sources.storage import IndexStorage
 
     args = parse_cgi_args(uri_query, url_decode=True)
-    result = _search_uri(
-        spark, index_root, uri_query, fullscan_prep, docs_fs, stats_cache
-    )
+    with IndexStorage(index_root) if store is None else nullcontext(store) as st:
+        result = _search_uri(spark, st, uri_query, fullscan_prep, docs_fs)
     rows = [
         {
             "doc_id": r["doc_id"],

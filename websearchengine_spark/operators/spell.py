@@ -129,7 +129,7 @@ def token_candidates(
         t_rows = vocab.filter(F.col("term") == target).collect()
         target_freq = t_rows[0]["freq"] if t_rows else 0
     else:
-        target_freq = 2 * int(t_rows[0]["ctf"]) if t_rows else 0
+        target_freq = 2 * int(t_rows.column("ctf")[0].as_py()) if t_rows.num_rows else 0
 
     out: list[str] = [target]
     if len(target) > 1:

@@ -13,10 +13,16 @@ evaluation in exactly one place:
       the query terms' postings rows          [storage.lookup_rows: only
                                                  the row groups whose
                                                  recorded term range
-                                                 covers a query term]
-        -> kernel per shard                      [shard_topk, in the driver]
+                                                 covers a query term, from
+                                                 files the store opened once]
+        -> per-term block columns                [_term_columns: Arrow
+                                                   buffers, no per-block
+                                                   Python]
+        -> ONE kernel call over every shard      [shard_topk, in the driver;
+                                                   block skip still per shard]
         -> comprehensive: docs lookup of every   [storage.lookup_rows:
-           candidate, priors -> final score       priors and metadata at once]
+           candidate, priors -> final score       priors and metadata at once,
+                                                  read as columns]
         -> merge (score desc, doc_id asc)[:k]
         -> docs lookup of the k winners           [storage.lookup_rows]
         -> pyarrow.Table                          [zero JVM calls; its
@@ -30,7 +36,9 @@ evaluation in exactly one place:
     in Spark (larger queries, exclude_df, and every wand_topk_batch;
     a single query is a batch of one):
       postings (doc-sharded) filtered to the queries' terms  [parquet pushdown]
-        -> groupBy(shard).applyInArrow(kernel)               [one task per shard]
+        -> groupBy(shard).applyInArrow(kernel)               [one task per shard;
+                                                               the same block
+                                                               columns]
              kernel: per query, rarest-first block-skip intersection,
              phrase adjacency, tombstone mask, the ranker's vectorized
              score -> per-shard, per-query top-k
@@ -47,11 +55,13 @@ engine, a batch of queries at a time: for each query the rarest term's
 docids drive; for every other term only the blocks whose
 [first_docid, last_docid] range intersects the current candidate set
 are DECODED (the block-max skip — block metadata is read, block bytes
-are not), then candidates intersect via sorted-array intersection and
-the surviving docs get the ranker's exact score over their decoded
-(tf, dl) — a column operation per term.  Each (term, block) is decoded
-at most once per shard task, so the queries of a batch share their
-decode work.
+are not; a posting is keyed by (shard, doc_id), so the skip holds per
+shard however many shards one call holds), in one vectorized pass per
+term (codec.decode_posting_blocks), then candidates intersect via
+sorted-array intersection and the surviving docs get the ranker's exact
+score over their decoded (tf, dl) — a column operation per term.  Each
+(term, block) is decoded at most once per kernel call, so the queries of
+a batch share their decode work.
 
 Reference semantics pinned (SURVEY.md §7.3):
   * phrase tokens are conjunctive members needing consecutive positions
@@ -88,9 +98,12 @@ from pyspark.sql import functions as F
 from websearchengine_spark.functions.codec import (
     BM25_B,
     BM25_K1,
-    concat_decoded,
-    decode_block,
+    PostingBlocks,
+    arrow_posting_blocks,
+    decode_posting_blocks,
+    doc_ordered,
 )
+from websearchengine_spark.operators.build import MAX_DOC_ID
 from websearchengine_spark.operators.query import (
     RESULT_COLS,
     analyze_tokens,
@@ -106,23 +119,39 @@ LAMBDA_2 = 0.3  # log(pagerank+1) weight
 LAMBDA_3 = 0.3  # log(numviews+1) weight
 
 
+# the kernel keys a posting by (shard, doc_id) as one int64, the
+# shard's index in the call << _SHARD_SHIFT | doc_id (doc_ids stay below
+# build.MAX_DOC_ID)
+_SHARD_SHIFT = MAX_DOC_ID.bit_length() - 1
+_DOC_MASK = MAX_DOC_ID - 1
+
+
+def _in_sorted(x: np.ndarray, sorted_keys: np.ndarray) -> np.ndarray:
+    """Mask of the ``x`` found in the sorted ``sorted_keys``: a binary
+    search (np.isin sorts both sides, which dominates at kernel sizes)."""
+    if sorted_keys.size == 0:
+        return np.zeros(x.size, dtype=bool)
+    ix = np.minimum(np.searchsorted(sorted_keys, x), sorted_keys.size - 1)
+    return sorted_keys[ix] == x
+
+
 def _phrase_docs(phrase: tuple[str, ...], cand: np.ndarray, per_term: dict) -> np.ndarray:
-    """Docs in ``cand`` containing the words adjacently: intersect the
-    per-word sets {doc<<32 | (pos - i)} — fully vectorized across all
-    candidate docs at once."""
+    """Candidates in ``cand`` (sorted keys) containing the words
+    adjacently: intersect the per-word sets {candidate index << 32 |
+    (pos - i)} — fully vectorized across all candidates at once."""
     keys = None
     for i, w in enumerate(phrase):
         d, tf, _dl, pos = per_term[w]
         rep = np.repeat(d, tf)
-        m = np.isin(rep, cand)
+        m = _in_sorted(rep, cand)
         # arithmetic add, not OR: (pos - i) can be negative for later
         # words at small positions (such keys match nothing — a doc's
-        # valid offsets are far from 2^32, so no cross-doc collision)
-        kw = (rep[m].astype(np.int64) << 32) + (pos[m].astype(np.int64) - i)
+        # valid offsets are far from 2^32, so no cross-candidate collision)
+        kw = (np.searchsorted(cand, rep[m]) << 32) + (pos[m].astype(np.int64) - i)
         keys = kw if keys is None else np.intersect1d(keys, kw, assume_unique=False)
         if keys.size == 0:
             return np.empty(0, np.int64)
-    return np.unique(keys >> 32)
+    return cand[np.unique(keys >> 32)]
 
 
 def _score(
@@ -130,13 +159,13 @@ def _score(
     const: dict[str, float],
     avg_dl: float,
     qweights: dict[str, float],
-    terms: list[str],
+    order: list[str],
     per_term: dict,
     cand: np.ndarray,
 ) -> np.ndarray:
     """The ranker's exact score of the surviving candidates ``cand`` from
-    their decoded (tf, dl), summed over ``terms`` with the query weights
-    (word multiplicity):
+    their decoded (tf, dl), summed over the query's terms in ``order``
+    with the query weights (word multiplicity):
 
       bm25:        Σ w·idf·(k1+1)tf / (tf + k1(1−b+b·dl/avg_dl)),
                    ``const`` = idf
@@ -144,12 +173,16 @@ def _score(
                    ``const`` = λ·ctf/total_tf
       favorite:    exp(QL)
       comprehensive: QL (its per-doc priors are added after the kernel)
-      conjunctive: 1.0"""
+      conjunctive: 1.0
+
+    ``order`` is the candidates' shards' rarest-first term order, so a
+    score's rounding is the same wherever the kernel runs (one call per
+    shard or one over all)."""
     if ranker == "conjunctive":
         return np.ones(cand.size)
     scores = np.zeros(cand.size, dtype=np.float64)
     dl_cand = None
-    for t in terms:
+    for t in order:
         d, tf, dl, _pos = per_term[t]
         ix = np.searchsorted(d, cand)
         tf_c = tf[ix].astype(np.float64)
@@ -178,7 +211,7 @@ def _comprehensive(ql, pagerank, numviews, log):
 
 
 def shard_topk(
-    term_lists: dict[str, list],
+    term_lists: dict[str, PostingBlocks],
     query_specs: list[tuple[int, dict[str, float], list[tuple[str, ...]]]],
     ranker: str,
     const: dict[str, float],
@@ -186,11 +219,20 @@ def shard_topk(
     k: int,
     exclude: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, dict]:
-    """Pure kernel for ONE shard: score every query of ``query_specs``
-    against the shard's posting blocks (``term_lists``: term -> block
-    tuples as codec.encode_posting_blocks writes them).
+    """Pure kernel: score every query of ``query_specs`` against the
+    posting blocks of ``term_lists`` (term -> its blocks as columns, of
+    one shard or of many: the Spark side calls it once per shard, the
+    in-process side once over every shard).
 
-    Candidate generation is the same for every ranker.
+    Candidate generation is the same for every ranker, and per shard:
+    in each shard the query's rarest term there drives, and for every
+    other term only the blocks whose [first, last] range meets that
+    shard's candidates are decoded (a posting is keyed by (shard,
+    doc_id), so a block is tested against its own shard's candidates
+    only).  Shards that share the query's term order are evaluated
+    together, one vectorized step per term.  Each (term, block) is
+    decoded at most once per call, so the queries of a batch share their
+    decode work.
     ``query_specs``: [(query_id, {term: weight}, phrases)...] where
     ``phrases`` is a (possibly empty) list of word tuples that must occur
     ADJACENTLY (positions p, p+1, ...); positions are decoded only for
@@ -207,79 +249,128 @@ def shard_topk(
     doc_id asc) order — except comprehensive, whose priors are per-doc:
     it returns every candidate with its QL.  ``stats``
     {"blocks_total", "blocks_decoded"} is the block-max skip evidence
-    over the shard's term lists."""
+    over the call's term lists."""
     if ranker == "comprehensive":
         k = None
+    empty = np.empty(0, np.int64)
     pos_terms = {w for _, _, phrases in query_specs for ph in phrases for w in ph}
-    size = {t: sum(b[2] for b in blocks) for t, blocks in term_lists.items()}
-    decoded: dict[tuple[str, int], tuple] = {}
-    joined: dict[tuple[str, tuple[int, ...]], tuple] = {}
+    shards = np.unique(np.concatenate([empty, *(b.shard for b in term_lists.values())]))
+    # inside the call a posting is keyed (shard's index in ``shards``,
+    # doc_id), so a shard mask gathers by key instead of searching
+    at_block: dict[str, np.ndarray] = {}
+    keyed: dict[str, PostingBlocks] = {}
+    for t, b in term_lists.items():
+        at_block[t] = np.searchsorted(shards, b.shard)
+        base = at_block[t] << _SHARD_SHIFT
+        keyed[t] = b._replace(first=base + b.first, last=base + b.last)
+    # postings per (term, shard): each shard's rarest-first term order
+    size = {
+        t: np.bincount(at_block[t], weights=b.n, minlength=shards.size)
+        for t, b in keyed.items()
+    }
+    done = {t: np.zeros(b.n.size, dtype=bool) for t, b in keyed.items()}
+    decoded: dict[str, tuple] = {}
 
-    def postings(t: str, cand: np.ndarray | None) -> tuple:
-        """t's (docs, tfs, dls, positions-or-None) over the blocks whose
-        docid range meets ``cand`` (every block when cand is None, or
-        when an earlier query already decoded them all: a superset of
-        the candidates' postings is as good, and costs no decode)."""
-        blocks = term_lists[t]
-        sel = tuple(range(len(blocks)))
-        if cand is not None and (t, sel) not in joined:
-            first = np.array([b[0] for b in blocks], dtype=np.int64)
-            last = np.array([b[1] for b in blocks], dtype=np.int64)
-            j = np.minimum(np.searchsorted(cand, first), cand.size - 1)
-            sel = tuple(np.flatnonzero((cand[j] >= first) & (cand[j] <= last)).tolist())
-        if (t, sel) not in joined:
-            want_pos = t in pos_terms
-            for i in sel:
-                if (t, i) not in decoded:
-                    decoded[(t, i)] = decode_block(blocks[i], want_pos, want_doclens=True)
-            joined[(t, sel)] = concat_decoded(
-                [decoded[(t, i)] for i in sel], want_pos, want_doclens=True
+    def postings(t: str, need: np.ndarray) -> tuple:
+        """t's (keys, tfs, dls, positions-or-None) over every block
+        decoded so far, after decoding the ``need`` blocks not yet
+        decoded (a superset of the candidates' postings is as good)."""
+        new = need & ~done[t]
+        if new.any() or t not in decoded:
+            part = decode_posting_blocks(
+                keyed[t].take(new), t in pos_terms, want_doclens=True
             )
-        return joined[(t, sel)]
+            done[t] |= new
+            old = decoded.get(t)
+            decoded[t] = part if old is None else doc_ordered(
+                *(
+                    None if a is None else np.concatenate([a, b])
+                    for a, b in zip(old, part)
+                )
+            )
+        return decoded[t]
 
     out_q, out_d, out_s = [], [], []
     for qid, qweights, phrases in query_specs:
-        if any(t not in term_lists for t in qweights):
+        if any(t not in keyed for t in qweights):
             continue
-        # rarest term drives the candidate set
-        terms = sorted(qweights, key=lambda t: (size[t], t))
+        terms = sorted(qweights)
+        sz = np.stack([size[t] for t in terms])
+        # shards holding every query term: no other shard can match
+        live = np.flatnonzero((sz > 0).all(axis=0))
+        # each live shard's rarest-first order (size, then term), and
+        # the shards grouped by it: a group is evaluated like one shard
+        by_rank = np.argsort(sz[:, live], axis=0, kind="stable")
+        groups: dict[tuple, list[int]] = {}
+        for s, col in zip(live.tolist(), by_rank.T.tolist()):
+            groups.setdefault(tuple(col), []).append(s)
         per_term: dict[str, tuple] = {}
-        cand = None
-        for t in terms:
-            per_term[t] = postings(t, cand)
-            d = per_term[t][0]
-            cand = d if cand is None else cand[np.isin(cand, d, assume_unique=True)]
-            if cand.size == 0:
-                break
-        for ph in phrases:
-            if cand.size == 0:
-                break
-            cand = _phrase_docs(ph, cand, per_term)
-        if exclude is not None and exclude.size and cand.size:
-            cand = cand[~np.isin(cand, exclude)]
-        if cand.size == 0:
+        found, scored = [], []
+        for col, members in groups.items():
+            at = np.zeros(shards.size, dtype=bool)
+            at[members] = True
+            order = [terms[i] for i in col]
+            cand = None
+            for t in order:
+                b = keyed[t]
+                need = at[at_block[t]]
+                if cand is not None:
+                    # the block-max skip: only blocks meeting a candidate
+                    j = np.minimum(np.searchsorted(cand, b.first), cand.size - 1)
+                    need &= (cand[j] >= b.first) & (cand[j] <= b.last)
+                per_term[t] = postings(t, need)
+                d = per_term[t][0]
+                cand = d[at[d >> _SHARD_SHIFT]] if cand is None else cand[_in_sorted(cand, d)]
+                if cand.size == 0:
+                    break
+            for ph in phrases:
+                if cand.size == 0:
+                    break
+                cand = _phrase_docs(ph, cand, per_term)
+            if exclude is not None and exclude.size and cand.size:
+                cand = cand[~np.isin(cand & _DOC_MASK, exclude)]
+            if cand.size:
+                found.append(cand)
+                scored.append(_score(ranker, const, avg_dl, qweights, order, per_term, cand))
+        if not found:
             continue
-
-        scores = _score(ranker, const, avg_dl, qweights, terms, per_term, cand)
-        # per-shard top-k with the pinned tie-break (score desc, doc_id asc)
+        cand, scores = np.concatenate(found), np.concatenate(scored)
+        # top-k with the pinned tie-break (score desc, doc_id asc)
         if k is not None and cand.size > k:
             # keep every doc scoring >= the k-th best (ties resolved below)
             kth = np.partition(-scores, k - 1)[k - 1]
             keep = np.flatnonzero(-scores <= kth)
             cand, scores = cand[keep], scores[keep]
-        order = np.lexsort((cand, -scores))[:k]
-        out_q.append(np.full(order.size, qid, dtype=np.int64))
-        out_d.append(cand[order])
-        out_s.append(scores[order])
+        ids = cand & _DOC_MASK
+        best = np.lexsort((ids, -scores))[:k]
+        out_q.append(np.full(best.size, qid, dtype=np.int64))
+        out_d.append(ids[best])
+        out_s.append(scores[best])
 
     stats = {
-        "blocks_total": sum(len(b) for b in term_lists.values()),
-        "blocks_decoded": len(decoded),
+        "blocks_total": sum(b.n.size for b in keyed.values()),
+        "blocks_decoded": sum(int(m.sum()) for m in done.values()),
     }
     if not out_q:
-        e = np.empty(0, np.int64)
-        return e, e, np.empty(0, np.float64), stats
+        return empty, empty, np.empty(0, np.float64), stats
     return np.concatenate(out_q), np.concatenate(out_d), np.concatenate(out_s), stats
+
+
+def _term_columns(tbl: pa.Table) -> dict[str, PostingBlocks]:
+    """{term: its blocks as columns, by shard} from stored (shard, term,
+    blocks) postings rows — one Arrow pass, no per-block Python."""
+    shard_of = tbl.column("shard").to_numpy()
+    blocks, offsets = arrow_posting_blocks(tbl.column("blocks"), shard_of)
+    rows: dict[str, list[int]] = {}
+    for r, t in enumerate(tbl.column("term").to_pylist()):
+        rows.setdefault(t, []).append(r)
+    out = {}
+    for t, rs in rows.items():
+        rs.sort(key=lambda r: shard_of[r])
+        out[t] = blocks.take(
+            np.concatenate([np.arange(offsets[r], offsets[r + 1]) for r in rs])
+        )
+    return out
 
 
 def _corpus_stats(spark, store: IndexStorage) -> tuple[int, int, float]:
@@ -292,22 +383,6 @@ def _corpus_stats(spark, store: IndexStorage) -> tuple[int, int, float]:
         srow = store.read_table(spark, "stats").collect()[0]
         nd, tt = srow["num_docs"], srow["total_tf"]
     return nd, tt, tt / max(1, nd)
-
-
-def _rows_to_blocks(blocks) -> list:
-    """Stored block structs -> codec block tuples (the kernel reads only
-    the docid range, n and data; the stored ``head`` flag is ignored)."""
-    return [
-        (
-            b["first_docid"],
-            b["last_docid"],
-            b["n"],
-            b["max_tf"],
-            b["max_impact"],
-            b["data"],
-        )
-        for b in blocks
-    ]
 
 
 def _exclude_by_shard(exclude_df: DataFrame) -> "object":
@@ -350,7 +425,7 @@ def _term_consts(
 
 
 def _df_lookup(
-    spark, store: IndexStorage, terms: list[str], stats_cache: dict | None
+    spark, store: IndexStorage, terms: list[str], reads: dict | None = None
 ) -> dict[str, tuple[int, int]]:
     """{term: (df, ctf)} for the query's terms present in this index —
     the one dictionary probe of every ranker.
@@ -360,23 +435,23 @@ def _df_lookup(
     term-sorted within each file, in ROW_GROUP_BYTES row groups),
     replacing a per-query Spark job whose fixed scheduling cost dwarfed
     its 2-3-row result.  Falls back to the Spark collect when the
-    pyarrow path is unavailable.  The caller-owned ``stats_cache`` memo
-    (``{"term_stats": {term: (df, ctf) or None}}``) holds both numbers;
-    None pins "absent from index"."""
-    known = (
-        stats_cache.setdefault("term_stats", {}) if stats_cache is not None else {}
-    )
+    pyarrow path is unavailable.  Both numbers are memoized on the store
+    (``store.term_stats``), so a store kept open across queries (the
+    HTTP server keeps one per index generation) reads each term once.
+    ``reads``: the lookup's evidence (see IndexStorage.lookup_rows)."""
+    known = store.term_stats
     missing = [t for t in terms if t not in known]
     if missing:
         cols = ["term", "df", "ctf"]
-        rows = store.lookup_rows("term_stats", "term", missing, columns=cols)
-        if rows is None:
-            rows = (
-                store.read_table(spark, "term_stats")
-                .filter(F.col("term").isin(missing))
-                .select(*cols)
-                .collect()
-            )
+        tbl = store.lookup_rows("term_stats", "term", missing, columns=cols, reads=reads)
+        rows = (
+            tbl.to_pylist()
+            if tbl is not None
+            else store.read_table(spark, "term_stats")
+            .filter(F.col("term").isin(missing))
+            .select(*cols)
+            .collect()
+        )
         found = {r["term"]: (int(r["df"]), int(r["ctf"])) for r in rows}
         for t in missing:
             known[t] = found.get(t)  # None pins "absent from index"
@@ -390,8 +465,11 @@ def _df_lookup(
 # driver-side merge and metadata lookup — zero Spark jobs.  A larger one
 # runs the kernel in one Spark task per shard.  In-process cost follows
 # the query's own postings: the read decodes only the row groups that
-# hold its terms (not the whole postings table), and the kernel's decode
-# grows with the df sum.  The Spark side pays ~0.5 s of fixed job cost
+# hold its terms (not the whole postings table), from files the store
+# opened once, and the kernel — one call over every shard, blocks kept
+# as Arrow columns from the read to the score — decodes the blocks it
+# keeps in one vectorized pass per term, so its cost grows with the df
+# sum, not with the shard count.  The Spark side pays ~0.5 s of fixed job cost
 # per query however many cores run it.  Measured on 4 cores while the
 # read still decoded the whole postings table (CHANGES.md): in-process
 # won everywhere at sf0.1 and up to ~0.9M postings at the sf1 shape; the
@@ -399,15 +477,16 @@ def _df_lookup(
 INPROC_MAX_POSTINGS = 500_000
 
 
-# (doc_ids, scores, docs rows already fetched, kernel stats) of an index
-# where the query cannot match
-NO_HITS = (np.empty(0, np.int64), np.empty(0, np.float64), {}, {})
+# (doc_ids, scores, docs rows already fetched, read evidence) of an
+# index where the query cannot match
+NO_HITS = (np.empty(0, np.int64), np.empty(0, np.float64), None, {})
 
 
 class _Scoring(NamedTuple):
     """A resolved query batch: the kernel's specs, ranker and scoring
-    constants (see _score), the terms whose postings it reads, and their
-    df sum in this index (the work the gate weighs)."""
+    constants (see _score), the terms whose postings it reads, their df
+    sum in this index (the work the gate weighs), and the evidence of
+    what this evaluation read (its own dict: see _read_evidence)."""
 
     specs: list[tuple[int, dict[str, float], list[tuple[str, ...]]]]
     ranker: str
@@ -415,6 +494,7 @@ class _Scoring(NamedTuple):
     avg_dl: float
     terms: list[str]
     postings: int
+    reads: dict
 
 
 def _prepare(
@@ -424,12 +504,10 @@ def _prepare(
     corpus_stats: tuple[int, int] | None,
     stats_override: dict[str, tuple] | None,
     local_stats: dict[str, tuple] | None,
-    stats_cache: dict | None,
     ranker: str = "bm25",
 ) -> _Scoring | None:
     """Analyze ``queries`` and resolve their term statistics and the
-    ranker's constants — driver-side, no Spark job on a warm
-    ``stats_cache`` or with ``local_stats``.  None when no query can
+    ranker's constants — driver-side, no Spark job.  None when no query can
     match.  ``stats_override`` (the union statistics of a multi-index
     caller, or wand_topk's df_override) and ``local_stats`` (THIS index's
     statistics, when the caller already probed them) are {term: (df,
@@ -462,10 +540,11 @@ def _prepare(
     if corpus_stats is not None:
         num_docs, total_tf = corpus_stats
         avg_dl = total_tf / max(1, num_docs)
+    reads: dict = {}
     if local_stats is not None:
         stats = {t: local_stats[t] for t in all_terms if t in local_stats}
     else:
-        stats = _df_lookup(spark, store, all_terms, stats_cache)
+        stats = _df_lookup(spark, store, all_terms, reads)
     # a query with a term absent from this index can never match
     specs = [s for s in specs if all(t in stats for t in s[1])]
     if not specs:
@@ -473,7 +552,7 @@ def _prepare(
     const = _term_consts(ranker, num_docs, total_tf, stats, stats_override)
     terms = sorted({t for _, qw, _ in specs for t in qw})
     return _Scoring(
-        specs, ranker, const, avg_dl, terms, sum(stats[t][0] for t in terms)
+        specs, ranker, const, avg_dl, terms, sum(stats[t][0] for t in terms), reads
     )
 
 
@@ -496,14 +575,8 @@ def _shard_topk(
     # object Series per group, while Arrow hands the record batch over
     # directly (~20% off the kernel stage wall at bench; same numbers)
     def score_shard(tbl, exclude):
-        term_lists = {
-            t: _rows_to_blocks(b)
-            for t, b in zip(
-                tbl.column("term").to_pylist(), tbl.column("blocks").to_pylist()
-            )
-        }
         q, d, s, _stats = shard_topk(
-            term_lists, specs, ranker, const, avg_dl, k, exclude=exclude
+            _term_columns(tbl), specs, ranker, const, avg_dl, k, exclude=exclude
         )
         return pa.table(
             {
@@ -535,97 +608,97 @@ def _shard_topk(
     )
 
 
+# the docs columns a result row carries besides its score
+_META_COLS = [c for c in RESULT_COLS if c != "score"]
+# what the kernel reads of a postings row: the stored block fields
+# max_tf, max_impact and head stay undecoded
+_POSTING_COLS = ["shard", "term"] + [
+    f"blocks.list.element.{f}" for f in ("first_docid", "last_docid", "n", "data")
+]
+
+
 def _local_topk(
     store: IndexStorage, sc: _Scoring, k: int, exclude: np.ndarray | None = None
-) -> tuple[np.ndarray, np.ndarray, dict, dict] | None:
-    """The in-process side for ONE query: the same kernel per shard over
-    the query terms' postings rows, fetched by storage.lookup_rows's
-    range-directed read (postings are term-clustered, so it decodes
-    about one row group per term and group, not the table).
-    ``exclude``: doc_ids masked before scoring, as on the Spark side.
+) -> tuple[np.ndarray, np.ndarray, pa.Table | None, dict] | None:
+    """The in-process side for ONE query: ONE kernel call over every
+    shard's blocks of the query terms, read as Arrow columns by
+    storage.lookup_rows's range-directed read (postings are
+    term-clustered, so it decodes about one row group per term and
+    group, not the table).  ``exclude``: doc_ids masked before scoring,
+    as on the Spark side.
 
-    Returns (doc_ids, scores, docs rows by doc_id, kernel stats) for
-    _local_result to merge: every shard's top-k with no rows yet — or,
-    for comprehensive, every candidate with its final score and its docs
-    row, fetched in ONE lookup (priors and metadata together; a
-    candidate missing from docs is dropped, as by the Spark side's
-    join).  The kernel stats are shard_topk's block-max evidence summed
-    over the shards.  None when the pyarrow path is unavailable (the
-    caller runs the Spark side instead)."""
-    rows = store.lookup_rows(
-        "postings", "term", sc.terms, columns=["shard", "term", "blocks"]
-    )
-    if rows is None:
+    Returns (doc_ids, scores, docs rows, read evidence) for
+    _local_result to merge: the top-k with no rows yet — or, for
+    comprehensive, every candidate with its final score and its docs
+    rows (a table aligned with the doc_ids), fetched in ONE lookup and
+    read as columns (priors and metadata together; a candidate missing
+    from docs is dropped, as by the Spark side's join).  The evidence
+    is ``sc.reads`` with the kernel's block-max stats added.  None when
+    the pyarrow path is unavailable (the caller runs the Spark side
+    instead)."""
+    import pyarrow.compute as pc
+
+    tbl = store.lookup_rows("postings", "term", sc.terms, columns=_POSTING_COLS, reads=sc.reads)
+    if tbl is None:
         return None
-    by_shard: dict[int, dict[str, list]] = {}
-    for r in rows:
-        by_shard.setdefault(r["shard"], {})[r["term"]] = _rows_to_blocks(r["blocks"])
-    tops = [
-        shard_topk(
-            term_lists, sc.specs, sc.ranker, sc.const, sc.avg_dl, k, exclude=exclude
-        )
-        for term_lists in by_shard.values()
-    ]
-    ids = np.concatenate([NO_HITS[0]] + [t[1] for t in tops])
-    scores = np.concatenate([NO_HITS[1]] + [t[2] for t in tops])
-    kstats = {
-        key: sum(t[3][key] for t in tops) for key in ("blocks_decoded", "blocks_total")
-    }
+    _q, ids, scores, kstats = shard_topk(
+        _term_columns(tbl), sc.specs, sc.ranker, sc.const, sc.avg_dl, k, exclude
+    )
+    sc.reads.update(kstats)
     if sc.ranker != "comprehensive":
-        return ids, scores, {}, kstats
-    found = store.lookup_rows(
-        "docs", "doc_id", ids.tolist(), columns=[c for c in RESULT_COLS if c != "score"]
-    )
-    if found is None:
+        return ids, scores, None, sc.reads
+    docs = store.lookup_rows("docs", "doc_id", ids.tolist(), columns=_META_COLS, reads=sc.reads)
+    if docs is None:
         return None
-    docs = {r["doc_id"]: r for r in found}
-    keep = np.array([d in docs for d in ids.tolist()], dtype=bool)
-    ids, ql = ids[keep], scores[keep]
-    prior = {
-        c: np.array([docs[d][c] for d in ids.tolist()], dtype=np.float64)
-        for c in ("pagerank", "numviews")
-    }
+    at = pc.index_in(pa.array(ids), value_set=docs.column("doc_id"))
+    keep = at.is_valid().to_numpy(zero_copy_only=False)
+    rows = docs.take(at.drop_null())
     return (
-        ids,
-        _comprehensive(ql, prior["pagerank"], prior["numviews"], np.log),
-        docs,
-        kstats,
+        ids[keep],
+        _comprehensive(
+            scores[keep],
+            rows.column("pagerank").to_numpy().astype(np.float64),
+            rows.column("numviews").to_numpy().astype(np.float64),
+            np.log,
+        ),
+        rows,
+        sc.reads,
     )
 
 
 def _read_evidence(hits: list) -> dict:
-    """What an in-process evaluation read: the kernel's block-max stats
-    summed over ``hits`` (_local_result's input) and, per table, the
-    files and row groups the lookups of every index read versus the
-    tables' totals (IndexStorage.reads)."""
-    out = {
-        key: sum(h[5].get(key, 0) for h in hits)
-        for key in ("blocks_decoded", "blocks_total")
-    }
-    for store in {id(h[0]): h[0] for h in hits}.values():
-        for name, seen in store.reads.items():
-            mine = out.setdefault(name, dict.fromkeys(seen, 0))
-            for key, v in seen.items():
-                mine[key] += v
+    """What an in-process evaluation read, summed over ``hits``
+    (_local_result's input): the kernel's block-max stats and, per
+    table, the files and row groups its lookups read versus the tables'
+    totals (IndexStorage.lookup_rows)."""
+    out = dict.fromkeys(("blocks_decoded", "blocks_total"), 0)
+    for h in hits:
+        for key, v in h[5].items():
+            if isinstance(v, dict):
+                mine = out.setdefault(key, dict.fromkeys(v, 0))
+                for c, n in v.items():
+                    mine[c] += n
+            else:
+                out[key] += v
     return out
 
 
 def _local_result(
-    hits: list[tuple[IndexStorage, int, np.ndarray, np.ndarray, dict, dict]],
+    hits: list[tuple[IndexStorage, int, np.ndarray, np.ndarray, pa.Table | None, dict]],
     k: int,
     docs_join: bool,
 ) -> pa.Table:
     """Merge in-process top-ks into ONE pyarrow table — no JVM call to
     build it or to read it.  ``hits``: per index, (store, doc_id offset,
-    local doc_ids, scores, docs rows, kernel stats) as _local_topk
+    local doc_ids, scores, docs rows, read evidence) as _local_topk
     returns them; the result keeps the k best on (score desc, doc_id
     asc) over the offset ids.  With ``docs_join`` each winner's metadata
-    comes from its index's rows, looked up driver-side for the winners
-    that have none yet, and the columns are RESULT_COLS with the docs
+    comes from its index's rows, looked up driver-side for an index
+    that has none yet, and the columns are RESULT_COLS with the docs
     table's own types, nullable as Spark reads parquet (what the Spark
     side's docs join yields); without it, bare (doc_id, score).  The
     table's schema metadata ``read`` holds _read_evidence as JSON."""
-    import pyarrow.dataset as pads
+    import pyarrow.compute as pc
 
     owner = np.concatenate([np.full(h[2].size, i) for i, h in enumerate(hits)])
     gids = np.concatenate([h[2] + h[1] for h in hits])
@@ -637,8 +710,7 @@ def _local_result(
         schema = pa.schema([("doc_id", pa.int64()), ("score", pa.float64())])
         rows = [{"doc_id": g, "score": sc} for g, sc in top]
     else:
-        docs = hits[0][0].table_path("docs")
-        types = pads.dataset(docs, format="parquet").schema
+        types = hits[0][0].point_schema("docs")
         schema = pa.schema(
             [
                 (c, pa.float64() if c == "score" else types.field(c).type)
@@ -646,18 +718,20 @@ def _local_result(
             ]
         )
         meta: dict[int, dict] = {}
-        for i, (store, off, _d, _s, known, _k) in enumerate(hits):
-            mine = (gids[owner == i] - off).tolist()
-            need = [d for d in mine if d not in known]
-            if need:
-                found = store.lookup_rows(
-                    "docs", "doc_id", need,
-                    columns=[c for c in RESULT_COLS if c != "score"],
+        for i, (store, off, _d, _s, known, reads) in enumerate(hits):
+            mine = gids[owner == i] - off
+            if mine.size == 0:
+                continue
+            if known is None:
+                known = store.lookup_rows(
+                    "docs", "doc_id", mine.tolist(), columns=_META_COLS, reads=reads
                 )
-                if found is None:
+                if known is None:
                     raise OSError(f"cannot read {store.table_path('docs')}")
-                known = {**known, **{r["doc_id"]: r for r in found}}
-            meta.update({d + off: known[d] for d in mine if d in known})
+            at = pc.index_in(pa.array(mine), value_set=known.column("doc_id"))
+            meta.update(
+                {r["doc_id"] + off: r for r in known.take(at.drop_null()).to_pylist()}
+            )
         # inner-join semantics: a doc missing from docs is dropped
         rows = [{**meta[g], "doc_id": g, "score": sc} for g, sc in top if g in meta]
     schema = schema.with_metadata({"read": json.dumps(_read_evidence(hits))})
@@ -673,7 +747,6 @@ def wand_topk(
     df_override: dict[str, int] | None = None,
     docs_join: bool = True,
     exclude_df: DataFrame | None = None,
-    stats_cache: dict | None = None,
 ) -> DataFrame:
     """BM25 top-k over the sharded index via the block-max kernel.
 
@@ -699,12 +772,6 @@ def wand_topk(
     streaming/ingest.py, resolves union statistics once per query and
     calls the cores directly.)
 
-    ``stats_cache``: a CALLER-OWNED dict memoizing the per-term
-    dictionary lookups across calls (see _df_lookup).  A warm serve loop
-    then reads no term_stats per request — only terms never seen before
-    cost one lookup.  The caller is responsible for invalidation (the
-    HTTP server drops it when the index generation changes).
-
     ``exclude_df`` is the EXECUTOR-RESIDENT tombstone mask: a
     (shard, doc_id) DataFrame cogrouped with the postings by shard, so
     the exclusion set reaches each shard's kernel through the shuffle —
@@ -720,38 +787,36 @@ def wand_topk(
     stats_override = (
         None if df_override is None else {t: (d, None) for t, d in df_override.items()}
     )
-    return as_dataframe(
-        spark,
-        _topk(
-            spark, index_root, query, k=k, corpus_stats=corpus_stats,
-            stats_override=stats_override, docs_join=docs_join,
-            exclude_df=exclude_df, stats_cache=stats_cache,
-        ),
-    )
+    with IndexStorage.open(index_root) as store:
+        return as_dataframe(
+            spark,
+            _topk(
+                spark, store, query, k=k, corpus_stats=corpus_stats,
+                stats_override=stats_override, docs_join=docs_join,
+                exclude_df=exclude_df,
+            ),
+        )
 
 
 def _topk(
     spark: SparkSession,
-    index_root: str,
+    store: IndexStorage,
     query: str,
     k: int = 10,
     corpus_stats: tuple[int, int] | None = None,
     stats_override: dict[str, tuple] | None = None,
     docs_join: bool = True,
     exclude_df: DataFrame | None = None,
-    stats_cache: dict | None = None,
     ranker: str = "bm25",
 ) -> pa.Table | DataFrame:
     """The query core of wand_topk, query.run_query and query.search:
     the in-process side's pyarrow table, or the Spark side's lazy
     DataFrame (util.as_rows / as_dataframe read either).  ``ranker``:
     bm25, comprehensive, favorite or conjunctive; ``stats_override`` is
-    wand_topk's df_override as {term: (df, ctf)}."""
-    store = IndexStorage(index_root)
-    sc = _prepare(
-        spark, store, [query], corpus_stats, stats_override, None,
-        stats_cache, ranker,
-    )
+    wand_topk's df_override as {term: (df, ctf)}; ``store`` is the
+    index opened for reading (the HTTP server's is kept across
+    queries)."""
+    sc = _prepare(spark, store, [query], corpus_stats, stats_override, None, ranker)
     if sc is None:
         return _local_result([(store, 0, *NO_HITS)], k, docs_join)
     if exclude_df is None and sc.postings <= INPROC_MAX_POSTINGS:
@@ -848,8 +913,8 @@ def wand_topk_batch(
     (decode shared across queries); per-query global merge via a ranking
     window.  Phrase tokens are supported.  Returns (query, doc_id, url,
     title, score, pagerank, numviews, rank) ordered by (query, rank)."""
-    store = IndexStorage(index_root)
-    sc = _prepare(spark, store, queries, None, None, None, None)
+    with IndexStorage.open(index_root) as store:
+        sc = _prepare(spark, store, queries, None, None, None)
     if sc is None:
         return _empty_batch(spark)
     ranked = _batch_ranked(spark, store, sc, queries, k, None)

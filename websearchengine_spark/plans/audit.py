@@ -49,11 +49,11 @@ def audit_plans(spark, index_root: str) -> dict[str, tuple[bool, str]]:
     #     one file per group (two when the term is a range boundary), and
     #     the recorded row-group ranges open only those — the read
     #     follows the query's postings, not the table
-    probe = IndexStorage(index_root)
     terms = ["web", "search"]
-    n_groups = int(probe.read_manifest().get("config", {}).get("n_groups", 1))
-    probe.lookup_rows("postings", "term", terms, columns=["term"])
-    seen = probe.reads["postings"]
+    n_groups = int(store.read_manifest().get("config", {}).get("n_groups", 1))
+    reads: dict = {}
+    store.lookup_rows("postings", "term", terms, columns=["term"], reads=reads)
+    seen = reads["postings"]
     ok = 0 < seen["files_read"] <= 2 * len(terms) * n_groups < seen["files_total"]
     out["postings_point_read_range_directed"] = (
         ok,
@@ -96,7 +96,7 @@ def audit_plans(spark, index_root: str) -> dict[str, tuple[bool, str]]:
     #    global top-k is TakeOrderedAndProject (bounded heap merge, no
     #    full sort)
     def spark_side(q: str, ranker: str = "bm25") -> str:
-        sc = _prepare(spark, store, [q], None, None, None, None, ranker)
+        sc = _prepare(spark, store, [q], None, None, None, ranker)
         return plan_of(_spark_topk(spark, store, sc, 10, True, None))
 
     wp = spark_side(audit_q)

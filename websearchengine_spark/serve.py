@@ -51,6 +51,8 @@ import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import urlsplit
 
+from websearchengine_spark.sources.storage import IndexStorage
+
 _LOG = logging.getLogger("websearchengine_spark.serve")
 
 
@@ -96,14 +98,16 @@ class SearchHTTPServer:
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
         self._click_lock = threading.Lock()
-        # request-to-request memo of vocab-adjacent driver lookups (per-
-        # term df for /search, per-token spell candidates for
-        # /prediction): the warm path then runs at most the one scoring
-        # job per request.  Invalidation is by index GENERATION — any
-        # commit to the root's catalog/manifest drops both dicts
+        # per index GENERATION: the index opened for reading (an
+        # IndexStorage: each point-read table's files, key ranges and
+        # parsed footers, the open files, and the per-term df memo) and
+        # the per-token spell-candidate memo of /prediction.  A warm
+        # /search then pays only for its own row groups, and /prediction
+        # runs at most its one scoring job.  Any commit to the root's
+        # catalog/manifest drops both and closes the store's files
         self._cache_lock = threading.Lock()
         self._cache_gen: tuple | None = None
-        self._stats_cache: dict = {}
+        self._store: IndexStorage | None = None
         self._spell_cache: dict = {}
 
     # ---- per-index caches ------------------------------------------------
@@ -123,13 +127,18 @@ class SearchHTTPServer:
                 toks.append((name, None, None))
         return tuple(toks)
 
-    def _caches(self) -> tuple[dict, dict]:
+    def _caches(self) -> tuple[IndexStorage, dict]:
+        """(the opened index, the spell memo) of the current generation.
+        A request keeps the store it got even if the generation changes
+        under it: close() lets an in-flight read finish."""
         gen = self._index_generation()
         with self._cache_lock:
             if gen != self._cache_gen:
-                self._stats_cache, self._spell_cache = {}, {}
+                if self._store is not None:
+                    self._store.close()
+                self._store, self._spell_cache = IndexStorage(self.index_root), {}
                 self._cache_gen = gen
-            return self._stats_cache, self._spell_cache
+            return self._store, self._spell_cache
 
     # ---- static files ---------------------------------------------------
 
@@ -227,7 +236,7 @@ class SearchHTTPServer:
             from websearchengine_spark.operators.render import serve_search
 
             args = parse_cgi_args(uri_query, url_decode=True)
-            stats_cache, _ = self._caches()
+            store, _ = self._caches()
             body, record["ran"], read = serve_search(
                 self.spark,
                 self.index_root,
@@ -235,7 +244,7 @@ class SearchHTTPServer:
                 fullscan_prep=self.fullscan_prep,
                 docs_fs=self.docs_fs,
                 html_template=self.html_template,
-                stats_cache=stats_cache,
+                store=store,
             )
             if read:
                 record["read"] = read
@@ -367,6 +376,10 @@ class SearchHTTPServer:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
+        with self._cache_lock:
+            if self._store is not None:
+                self._store.close()
+            self._store, self._cache_gen = None, None
 
     def __enter__(self):
         self.start()

@@ -30,9 +30,17 @@ the winners' docs rows.  Their writers cluster rows on the key
 by it), row groups are capped at ROW_GROUP_BYTES, and the commit
 records each data file's per-row-group [min, max] key range in a
 ``_ranges.json`` next to the files (read once from the fresh footers,
-driver-side).  A lookup then opens only the files, and decodes only
+driver-side).  A lookup then reads only the files, and decodes only
 the row groups, whose range covers a wanted key, so its cost follows
 the query's own rows, not the table's size.
+
+An IndexStorage is also the index OPENED for reading: the first point
+read of a table lists its data files, takes their ranges from the
+_ranges.json records and parses their footers, and the instance keeps
+all of it (and the files open) until close().  A serving process keeps
+one instance per index generation (serve.SearchHTTPServer), so a warm
+lookup pays only for its own row groups.  An instance sees commits made
+through other instances only when reopened.
 """
 
 from __future__ import annotations
@@ -41,6 +49,7 @@ import bisect
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 
@@ -187,15 +196,104 @@ def iceberg_available(spark) -> bool:
         return False
 
 
+class _PointFile:
+    """One data file of a point-read table: its row-group key ranges
+    and, once read, its parsed footer and open reader.  Reads of one
+    file are serialized (one reader, shared by threads); a closed file
+    still reads, opening and closing its reader per read."""
+
+    def __init__(self, path: str, ranges: list, closed: bool):
+        self.path = path
+        self.ranges = ranges
+        self.meta = None  # the parsed footer
+        self._reader = None
+        self._closed = closed
+        self._lock = threading.Lock()
+
+    def read(self, row_groups: list[int], columns):
+        """The ``row_groups`` as one pyarrow table."""
+        import pyarrow.parquet as pq
+
+        with self._lock:
+            reader = self._reader or pq.ParquetFile(self.path, metadata=self.meta)
+            self.meta = reader.metadata
+            try:
+                # a few small row groups: decoder threads cost more than
+                # they save
+                return reader.read_row_groups(row_groups, columns=columns, use_threads=False)
+            finally:
+                if self._closed:
+                    reader.close()
+                else:
+                    self._reader = reader
+
+    def close(self) -> None:
+        with self._lock:
+            self._closed = True
+            if self._reader is not None:
+                self._reader.close()
+                self._reader = None
+
+
 class IndexStorage:
-    """Partitioned-parquet table format with an explicit manifest."""
+    """Partitioned-parquet table format with an explicit manifest, and
+    the index opened for point reads (see the module docstring).
+
+    Constructing one touches nothing on disk: the write paths create the
+    root, and IndexStorage.open names a missing root instead of reading
+    nothing from it."""
 
     def __init__(self, root: str):
         self.root = root
-        os.makedirs(root, exist_ok=True)
-        # what this instance's lookup_rows calls read, per table: files
-        # and row groups read versus the table's totals
-        self.reads: dict[str, dict[str, int]] = {}
+        # {term: (df, ctf) or None}: the dictionary probe's memo
+        # (topk._df_lookup); None pins "absent from index"
+        self.term_stats: dict[str, tuple[int, int] | None] = {}
+        self._point: dict[str, list[_PointFile]] = {}
+        self._segments: dict[str, "IndexStorage"] = {}
+        self._lock = threading.Lock()
+        self._closed = False
+
+    @classmethod
+    def open(cls, root: str) -> "IndexStorage":
+        """The index at ``root`` for reading (see require)."""
+        return cls(root).require()
+
+    def require(self) -> "IndexStorage":
+        """This store, or FileNotFoundError naming the root when it does
+        not exist: a read never creates it, and fails with this one
+        error instead of whichever table it would have read first."""
+        if not os.path.isdir(self.root):
+            raise FileNotFoundError(f"no index at {self.root}: the directory does not exist")
+        return self
+
+    def segment(self, name: str) -> "IndexStorage":
+        """The store of the sub-index ``name`` under this root (a live
+        root's segment), opened once and closed with this store."""
+        with self._lock:
+            if name not in self._segments:
+                seg = IndexStorage(os.path.join(self.root, name))
+                seg._closed = self._closed
+                self._segments[name] = seg
+            return self._segments[name]
+
+    def close(self) -> None:
+        """Release every file this store (and its segments) opened.  A
+        read still in flight finishes; later reads open, read and close
+        their files."""
+        with self._lock:
+            self._closed = True
+            files = [f for fs in self._point.values() for f in fs]
+            segments = list(self._segments.values())
+        for f in files:
+            f.close()
+        for seg in segments:
+            seg.close()
+
+    def __enter__(self) -> "IndexStorage":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
     # -- manifest ---------------------------------------------------------
     @property
@@ -216,6 +314,7 @@ class IndexStorage:
         }
 
     def write_manifest(self, manifest: dict) -> None:
+        os.makedirs(self.root, exist_ok=True)
         tmp = self._manifest_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=2, sort_keys=True)
@@ -257,6 +356,7 @@ class IndexStorage:
         if partition_by:
             w = w.partitionBy(*partition_by)
         p = self.table_path(name)
+        self._forget(name)
         w.parquet(p)
         if name in POINT_KEYS:
             for d in _leaf_dirs(p):
@@ -296,6 +396,7 @@ class IndexStorage:
         )
 
     def drop(self, name: str) -> None:
+        self._forget(name)
         p = self.table_path(name)
         if os.path.exists(p):
             shutil.rmtree(p)
@@ -312,6 +413,7 @@ class IndexStorage:
         in each dir before it moves, so they commit with its files.  The
         postings table's only writer (build._write_postings) commits
         through here."""
+        self._forget(name)
         base = self.table_path(name)
         tmp = base + "__build_tmp"
         if os.path.exists(tmp):
@@ -347,57 +449,96 @@ class IndexStorage:
         p = self.table_path(name)
         return read_parquet_cached(spark, p, base_path=p)
 
-    def lookup_rows(self, name: str, key_col: str, values, columns=None):
+    def _forget(self, name: str) -> None:
+        """Drop what this store opened of table ``name`` (it is being
+        rewritten)."""
+        with self._lock:
+            files = self._point.pop(name, [])
+        for f in files:
+            f.close()
+
+    def _point_files(self, name: str, key_col: str) -> list[_PointFile]:
+        """Table ``name``'s data files with their row-group key ranges:
+        listed, and the ranges taken from the _ranges.json records (or
+        the footers), on the first call only."""
+        with self._lock:
+            files = self._point.get(name)
+            if files is None:
+                files = [
+                    _PointFile(os.path.join(d, fname), rec["row_groups"], self._closed)
+                    for d in _leaf_dirs(self.table_path(name))
+                    for fname, rec in key_ranges(
+                        d, key_col, _recorded_ranges(d, key_col)
+                    ).items()
+                ]
+                self._point[name] = files
+            return files
+
+    def point_schema(self, name: str):
+        """The pyarrow schema of point-read table ``name``, from its
+        first data file's footer (read once)."""
+        files = self._point_files(name, POINT_KEYS[name])
+        if not files:
+            raise FileNotFoundError(f"no data files in {self.table_path(name)}")
+        if files[0].meta is None:
+            files[0].read([], None)
+        return files[0].meta.schema.to_arrow_schema()
+
+    def lookup_rows(
+        self, name: str, key_col: str, values, columns=None, reads: dict | None = None
+    ):
         """Driver-side point lookup: rows of table ``name`` whose
         ``key_col`` is in ``values``.  A search engine's dictionary
         probe, postings fetch and winners' metadata are k-key lookups; a
         Spark job per lookup costs ~100 ms of fixed scheduling for a few
         rows.  The read is range-directed: each data file's row-group
         [min, max] key ranges (recorded at commit, see key_ranges) pick
-        the files to open and the row groups to decode, and only the
+        the files to read and the row groups to decode, and only the
         matching rows are kept.  On a key-clustered table (postings and
         docs are range-partitioned on their key, every file is
         key-sorted) that is about one row group per key and partition,
-        whatever the table's size.  What was read accumulates in
-        ``self.reads[name]``.  Returns a list of dicts, or None if the
+        whatever the table's size.  The file list, the ranges and the
+        footers come from this store's first read of the table; later
+        reads reuse them and the open files.
+
+        ``columns`` name top-level columns or nested leaves
+        (``blocks.list.element.n``: only those leaves are decoded).
+        ``reads``: a dict this call adds its evidence to, under
+        ``reads[name]``: files and row groups read versus the table's
+        totals.  Returns a pyarrow Table of the matching rows (the
+        top-level columns of ``columns``, else all), or None if the
         pyarrow path is unavailable (caller falls back to a Spark
         collect)."""
         try:
             import pyarrow as pa
             import pyarrow.compute as pc
-            import pyarrow.parquet as pq
 
             want = sorted(set(values))
             cols = None if columns is None else list(dict.fromkeys([*columns, key_col]))
-            seen = self.reads.setdefault(
-                name,
-                dict.fromkeys(
-                    ("files_read", "files_total", "row_groups_read", "row_groups_total"),
-                    0,
-                ),
+            zero = dict.fromkeys(
+                ("files_read", "files_total", "row_groups_read", "row_groups_total"), 0
             )
+            seen = zero if reads is None else reads.setdefault(name, zero)
+            files = self._point_files(name, key_col)
             parts = []
-            for d in _leaf_dirs(self.table_path(name)):
-                for fname, rec in key_ranges(d, key_col, _recorded_ranges(d, key_col)).items():
-                    rgs = [i for i, r in enumerate(rec["row_groups"]) if _covers(want, r)]
-                    seen["files_total"] += 1
-                    seen["row_groups_total"] += len(rec["row_groups"])
-                    if rgs:
-                        seen["files_read"] += 1
-                        seen["row_groups_read"] += len(rgs)
-                        # a few small row groups: decoder threads cost
-                        # more than they save
-                        parts.append(
-                            pq.ParquetFile(os.path.join(d, fname)).read_row_groups(
-                                rgs, columns=cols, use_threads=False
-                            )
-                        )
-            if not parts:
-                return []
+            for f in files:
+                rgs = [i for i, r in enumerate(f.ranges) if _covers(want, r)]
+                seen["files_total"] += 1
+                seen["row_groups_total"] += len(f.ranges)
+                if rgs:
+                    seen["files_read"] += 1
+                    seen["row_groups_read"] += len(rgs)
+                    parts.append(f.read(rgs, cols))
+            if not files:
+                return None
+            if not parts:  # no row group holds a wanted key
+                parts = [files[0].read([], cols)]
             tbl = pa.concat_tables(parts)
             keys = pa.array(want).cast(tbl.schema.field(key_col).type)
             tbl = tbl.filter(pc.is_in(tbl[key_col], value_set=keys))
-            return (tbl if columns is None else tbl.select(columns)).to_pylist()
+            if columns is None:
+                return tbl
+            return tbl.select(list(dict.fromkeys(c.split(".")[0] for c in columns)))
         except Exception:
             return None
 

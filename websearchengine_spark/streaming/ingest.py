@@ -145,15 +145,16 @@ def live_segment_roots(root: str) -> list[str]:
     return [os.path.join(root, s["dir"]) for s in cat["segments"]]
 
 
-def tombstone_files(root: str) -> list[dict]:
+def tombstone_files(root: str, cat: dict | None = None) -> list[dict]:
     """Catalog-listed PENDING tombstone files, [{"file": rel, "n": rows}].
 
     Visibility is gated on the catalog: a tombstone parquet written by a
     batch that crashed before its catalog publish is NOT returned (its
     urls stay visible until redelivery republishes tombstones + segment
     together — the atomic-publish contract).  Legacy roots whose catalog
-    predates the listing fall back to a directory scan (unknown counts)."""
-    cat = read_live_catalog(root)
+    predates the listing fall back to a directory scan (unknown counts).
+    ``cat``: the catalog already read (else it is read here)."""
+    cat = read_live_catalog(root) if cat is None else cat
     if "tombstone_files" in cat:
         return list(cat["tombstone_files"])
     p = os.path.join(root, TOMBSTONES_DIR)
@@ -184,10 +185,11 @@ def _ensure_tombstone_listing(cat: dict, root: str) -> None:
     )
 
 
-def pending_tombstones(root: str) -> int | None:
+def pending_tombstones(root: str, cat: dict | None = None) -> int | None:
     """Total tombstoned doc_ids awaiting compaction — catalog sums, zero
-    Spark jobs (None on a legacy root whose counts are unknown)."""
-    files = tombstone_files(root)
+    Spark jobs (None on a legacy root whose counts are unknown).
+    ``cat``: the catalog already read (else it is read here)."""
+    files = tombstone_files(root, cat)
     if any(f.get("n") is None for f in files):
         return None
     return sum(int(f["n"]) for f in files)
@@ -199,11 +201,14 @@ def pending_tombstones(root: str) -> int | None:
 COMPACTION_OVERDUE_TOMBSTONES = 10_000_000
 
 
-def compaction_overdue(root: str, threshold: int | None = None) -> bool:
+def compaction_overdue(
+    root: str, threshold: int | None = None, cat: dict | None = None
+) -> bool:
     """True when the pending-tombstone backlog exceeds ``threshold``
     (default COMPACTION_OVERDUE_TOMBSTONES) — the LSM health gauge the
-    compaction policy should watch alongside segment count."""
-    n = pending_tombstones(root)
+    compaction policy should watch alongside segment count.  ``cat``:
+    the catalog already read (else it is read here)."""
+    n = pending_tombstones(root, cat)
     t = COMPACTION_OVERDUE_TOMBSTONES if threshold is None else threshold
     return n is not None and n > t
 
@@ -231,16 +236,19 @@ def _read_tomb_file(spark: SparkSession, path: str):
     return read_parquet_cached(spark, path).select("seg", "doc_id")
 
 
-def _tombstone_parts(root: str, seg_names: list[str]) -> dict[str, list]:
-    """{segment_dir: [(parquet dir, flat)]}: the catalog-listed tombstone
-    files holding each segment's rows, found by driver-side listdir.
+def _tombstone_parts(
+    root: str, seg_names: list[str], files: list[dict]
+) -> dict[str, list]:
+    """{segment_dir: [(parquet dir, flat)]}: the tombstone ``files``
+    (tombstone_files) holding each segment's rows, found by driver-side
+    listdir.
 
     Two layouts: batch/op files are written ``partitionBy("seg")`` and
     contribute only the seg= subdirs that exist (flat=False, a doc_id
     column); legacy flat files carry seg as a data column and are
     listed for every segment (flat=True, filter on seg when read)."""
     out: dict[str, list] = {s: [] for s in seg_names}
-    for f in tombstone_files(root):
+    for f in files:
         path = os.path.join(root, f["file"])
         if not os.path.isdir(path):
             continue
@@ -256,14 +264,21 @@ def _tombstone_parts(root: str, seg_names: list[str]) -> dict[str, list]:
 
 
 def tombstones_for_segments(
-    spark: SparkSession, root: str, n_shards: int, seg_names: list[str]
+    spark: SparkSession,
+    root: str,
+    n_shards: int,
+    seg_names: list[str],
+    files: list[dict] | None = None,
 ) -> dict[str, "object"]:
     """{segment_dir: (shard, doc_id) DataFrame or None} for the live
     segments — the Spark side's tombstone mask in search_live/
     search_live_batch (a tombstone-free segment costs a driver-side
-    listdir, no Spark job, None result)."""
+    listdir, no Spark job, None result).  ``files``: the catalog's
+    tombstone files already read (else tombstone_files reads them)."""
+    if files is None:
+        files = tombstone_files(root)
     out: dict[str, "object"] = {}
-    for s, parts in _tombstone_parts(root, seg_names).items():
+    for s, parts in _tombstone_parts(root, seg_names, files).items():
         if not parts:
             out[s] = None
             continue
@@ -677,19 +692,20 @@ def live_stats(spark: SparkSession, root: str) -> tuple[int, int, int]:
 
 def _search_segments(
     spark: SparkSession,
-    root: str,
+    store: IndexStorage,
     queries: list[str],
     ranker: str,
     spark_side,
     inproc_k: int | None = None,
 ) -> tuple[DataFrame | None, list, list]:
-    """The segment side of search_live/search_live_batch: every live
-    segment scored with the UNION statistics, its local doc_ids shifted
-    by the cumulative shard-preserving offsets (merge.doc_id_offsets —
-    the SAME rule compaction applies) and its pending tombstones
-    masked.  Returns (union of the Spark-side per-segment results or
-    None, in-process hits as topk._local_result takes them, every
-    segment's (store, offset) for _global_docs).
+    """The segment side of search_live/search_live_batch over the live
+    root opened as ``store``: every live segment scored with the UNION
+    statistics, its local doc_ids shifted by the cumulative
+    shard-preserving offsets (merge.doc_id_offsets — the SAME rule
+    compaction applies) and its pending tombstones masked.  Returns
+    (union of the Spark-side per-segment results or None, in-process
+    hits as topk._local_result takes them, every segment's (store,
+    offset) for _global_docs).  The catalog is read once per call.
 
     Union statistics: (num_docs, total_tf) summed from the manifests and
     per-term global (df, ctf) summed from each segment's driver-side
@@ -721,20 +737,23 @@ def _search_segments(
         _prepare,
     )
 
-    segs = live_segment_roots(root)
-    if not segs:
+    root = store.root
+    cat = read_live_catalog(root)
+    names = [s["dir"] for s in cat["segments"]]
+    if not names:
         raise ValueError(f"live index at {root} has no segments")
-    if compaction_overdue(root):
+    pending = pending_tombstones(root, cat)
+    if compaction_overdue(root, cat=cat):
         import warnings
 
         warnings.warn(
-            f"live index at {root} has {pending_tombstones(root)} pending "
+            f"live index at {root} has {pending} pending "
             "tombstones (> COMPACTION_OVERDUE_TOMBSTONES): statistics "
             "drift and per-query masking grow until compact_live runs",
             RuntimeWarning,
             stacklevel=3,
         )
-    stores = [IndexStorage(s) for s in segs]
+    stores = [store.segment(n) for n in names]
     cfgs = [s.read_manifest()["config"] for s in stores]
     n_shards = int(cfgs[0]["n_shards"])
     offsets = doc_id_offsets([segment_id_span(c) for c in cfgs], n_shards)
@@ -750,24 +769,21 @@ def _search_segments(
             for w in ws
         }
     )
-    seg_stats = [_df_lookup(spark, s, terms, None) for s in stores]
+    seg_stats = [_df_lookup(spark, s, terms) for s in stores]
     gstats: dict[str, tuple[int, int]] = {}
     for st in seg_stats:
         for t, (df, ctf) in st.items():
             gdf, gctf = gstats.get(t, (0, 0))
             gstats[t] = (gdf + df, gctf + ctf)
 
-    names = [os.path.basename(s) for s in segs]
-    tomb_parts = _tombstone_parts(root, names)
-    pending = pending_tombstones(root)
+    files = tombstone_files(root, cat)
+    tomb_parts = _tombstone_parts(root, names, files)
     seg_tombs = merged = None
     hits: list = []
-    for name, store, off, local in zip(names, stores, offsets, seg_stats):
-        sc = _prepare(
-            spark, store, queries, (num_docs, total_tf), gstats, local, None, ranker
-        )
+    for name, seg, off, local in zip(names, stores, offsets, seg_stats):
+        sc = _prepare(spark, seg, queries, (num_docs, total_tf), gstats, local, ranker)
         if sc is None:  # a query term absent here: no match
-            hits.append((store, off, *NO_HITS))
+            hits.append((seg, off, *NO_HITS))
             continue
         if inproc_k is not None:
             parts = tomb_parts[name]
@@ -775,13 +791,13 @@ def _search_segments(
             tombs = (pending if pending is not None else float("inf")) if parts else 0
             if sc.postings + tombs <= INPROC_MAX_POSTINGS:
                 exclude = _tombstone_ids(parts, name) if parts else None
-                h = _local_topk(store, sc, inproc_k, exclude)
+                h = _local_topk(seg, sc, inproc_k, exclude)
                 if h is not None:
-                    hits.append((store, off, *h))
+                    hits.append((seg, off, *h))
                     continue
         if seg_tombs is None:
-            seg_tombs = tombstones_for_segments(spark, root, n_shards, names)
-        p = spark_side(store, sc, seg_tombs[name])
+            seg_tombs = tombstones_for_segments(spark, root, n_shards, names, files)
+        p = spark_side(seg, sc, seg_tombs[name])
         if off:
             p = p.withColumn("doc_id", (F.col("doc_id") + F.lit(off)).cast("long"))
         merged = p if merged is None else merged.unionByName(p)
@@ -822,20 +838,23 @@ def search_live(
     query.search serves the other indexed rankers over live roots the
     same way.  Warns (RuntimeWarning) when compaction is overdue.
     Returns query.RESULT_COLS ordered like run_query."""
-    return as_dataframe(spark, _search_live(spark, root, query, k))
+    with IndexStorage.open(root) as store:
+        return as_dataframe(spark, _search_live(spark, store, query, k))
 
 
 def _search_live(
-    spark: SparkSession, root: str, query: str, k: int, ranker: str = "bm25"
+    spark: SparkSession, store: IndexStorage, query: str, k: int, ranker: str = "bm25"
 ) -> pa.Table | DataFrame:
-    """search_live's core for any indexed ``ranker``: a pyarrow table
-    when every segment ran in this process, else the lazy DataFrame of
-    the cross-segment merge (util.as_rows / as_dataframe read either)."""
+    """search_live's core for any indexed ``ranker`` over the live root
+    opened as ``store`` (its segments open as store.segment): a pyarrow
+    table when every segment ran in this process, else the lazy
+    DataFrame of the cross-segment merge (util.as_rows / as_dataframe
+    read either)."""
     from websearchengine_spark.operators.query import RESULT_COLS
     from websearchengine_spark.operators.topk import _local_result, _spark_topk
 
     merged, hits, placed = _search_segments(
-        spark, root, [query], ranker,
+        spark, store, [query], ranker,
         lambda store, sc, ex: _spark_topk(spark, store, sc, k, False, ex),
         inproc_k=k,
     )
@@ -877,12 +896,13 @@ def search_live_batch(
 
     from websearchengine_spark.operators.topk import _batch_ranked, _empty_batch
 
-    merged, _hits, placed = _search_segments(
-        spark, root, queries, "bm25",
-        lambda store, sc, ex: _batch_ranked(spark, store, sc, queries, k, ex).select(
-            "query", "doc_id", "score"
-        ),
-    )
+    with IndexStorage.open(root) as store:
+        merged, _hits, placed = _search_segments(
+            spark, store, queries, "bm25",
+            lambda seg, sc, ex: _batch_ranked(spark, seg, sc, queries, k, ex).select(
+                "query", "doc_id", "score"
+            ),
+        )
     if merged is None:  # no query can match in any segment
         return _empty_batch(spark)
     w = Window.partitionBy("query").orderBy(F.desc("score"), F.asc("doc_id"))
