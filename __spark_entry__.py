@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from websearchengine_spark.operators.prf import STOPWORDS as _PRF_STOPWORDS
 from websearchengine_spark.operators.util import widen_for_explode
-from websearchengine_spark.sources.storage import read_parquet_cached
+from websearchengine_spark.sources.storage import read_parquet
 
 QUERY_TERMS = ["data", "stream", "join"]  # present in the documents vocab
 QL_TERMS = ["data", "stream"]
@@ -69,7 +69,7 @@ INLINE_ENTRIES: dict[str, str] = {
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_parquet_cached(spark, f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1622,7 +1622,7 @@ def q_spell_candidates(spark, sf_dir):
     from websearchengine_spark.operators.spell import token_candidates
     from websearchengine_spark.sources.storage import IndexStorage
 
-    store = IndexStorage(_index_for(spark, sf_dir))
+    store = IndexStorage.open(_index_for(spark, sf_dir))
     alts = [
         t
         for t in token_candidates(spark, store, SPELL_TARGET, _SPELL_FREQ_GATE)

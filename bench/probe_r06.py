@@ -60,7 +60,7 @@ def main() -> None:
         import websearchengine_spark.operators.topk as topk_mod
         from websearchengine_spark.sources.storage import IndexStorage
 
-        store = IndexStorage(root)
+        store = IndexStorage.open(root)
         for rep in range(3):
             for q in ["data stream join", "hash merge", "customer query batch"]:
                 t0 = time.time()

@@ -15,7 +15,8 @@ from doc_id/vec_id) — then:
      audit (plans.audit.audit_plans) against it, asserting no plan-shape
      change;
   3. times the dedup/cluster/ANN tier — the registered driver entries —
-     at sf1, recording hot-bucket drop counts (LAST_BUCKET_DROP_OBS).
+     at sf1, recording the MinHash-LSH hot-bucket drop counts (its
+     drop_obs Observation).
 
 Prints ONE JSON document; BENCH/BASELINE.md §BENCH_SF1 is written from
 it.  Usage:
@@ -232,7 +233,6 @@ def main() -> None:
 
     # ---- 3. dedup/cluster/ANN tier at sf1 ------------------------------
     import __spark_entry__ as entry_mod
-    from websearchengine_spark.operators import dedup
 
     qs = entry_mod.queries()
     tier: dict = {}
@@ -248,11 +248,15 @@ def main() -> None:
     # 50k docs on the 30-word flat vocab — 2^(16/3)-bucket bands; the
     # docstring's sizing rule says bits=64 here), and the default-capped
     # MinHash-LSH pair path with its observed drops
+    from pyspark.sql import Observation
+
     from websearchengine_spark.operators.dedup import (
         minhash_lsh_pairs,
         simhash_duplicate_pairs,
     )
 
+    drops = Observation()
+    minhash_label = "minhash_lsh_pairs (library, default cap)"
     docs_sf1 = spark.read.parquet(os.path.join(SF1_DIR, "documents.parquet"))
     for label, fn in (
         (
@@ -260,8 +264,9 @@ def main() -> None:
             lambda: simhash_duplicate_pairs(docs_sf1, bits=64, max_hamming=2),
         ),
         (
-            "minhash_lsh_pairs (library, default cap)",
-            lambda: minhash_lsh_pairs(docs_sf1),  # default 10k bucket cap
+            minhash_label,
+            # default 10k bucket cap
+            lambda: minhash_lsh_pairs(docs_sf1, drop_obs=drops),
         ),
     ):
         t0 = time.time()
@@ -271,13 +276,12 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 — never lose the report
             tier[label] = {"error": f"{type(e).__name__}: {e}"[:300]}
         print(f"# tier {label}: {tier[label]}", flush=True)
-    drops = {}
-    for op, obs in dedup.LAST_BUCKET_DROP_OBS.items():
-        try:
-            drops[op] = obs.get  # Observation.get is a property
-        except Exception as e:  # noqa: BLE001 — unexecuted observation
-            drops[op] = f"unavailable: {type(e).__name__}"
-    report["bucket_drops"] = drops
+    # Observation.get waits for a run that completed: read it only then
+    report["bucket_drops"] = {
+        "minhash_lsh": "unavailable: the run failed"
+        if "error" in tier[minhash_label]
+        else drops.get
+    }
 
     print(json.dumps(report))
 

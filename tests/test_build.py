@@ -25,9 +25,12 @@ def test_docs_table(spark, store, oracle_index, corpus_pdf):
 
 
 def test_stats_table(spark, store, oracle_index):
-    s = store.read_table(spark, "stats").collect()[0]
+    s = store.read_manifest()["config"]
     assert s["num_docs"] == oracle_index.num_docs
     assert s["total_tf"] == oracle_index.total_tf
+    assert s["max_dl"] == max(oracle_index.doc_len.values())
+    assert s["id_span"] == s["num_docs"]  # a build's doc_ids are dense
+    assert not store.exists("stats")
 
 
 def test_term_stats(spark, store, oracle_index):

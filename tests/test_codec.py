@@ -73,27 +73,20 @@ def posting_list(draw):
 @given(posting_list())
 @settings(max_examples=50, deadline=None)
 def test_posting_blocks_roundtrip(pl):
-    from websearchengine_spark.functions.codec import bm25_impact
-
     doc_ids, tfs, dls, positions = pl
-    avg_dl = float(dls.mean())
-    blocks = encode_posting_blocks(doc_ids, tfs, dls, positions, avg_dl, block_size=64)
+    blocks = encode_posting_blocks(doc_ids, tfs, dls, positions, block_size=64)
     d, t, dl, p = decode_posting_blocks(posting_blocks(blocks), want_doclens=True)
     assert d.tolist() == doc_ids.tolist()
     assert t.tolist() == tfs.tolist()
     assert dl.tolist() == dls.tolist()
     assert p.tolist() == positions.tolist()
-    # block metadata is correct
-    assert blocks[0][0] == doc_ids[0]
-    assert blocks[-1][1] == doc_ids[-1]
-    assert sum(b[2] for b in blocks) == len(doc_ids)
-    assert max(b[3] for b in blocks) == tfs.max()
-    # max_impact is a true upper bound per block
-    impacts = bm25_impact(tfs.astype(float), dls.astype(float), avg_dl)
+    # block metadata is correct: each block's [first, last] doc range
+    # and posting count
     off = 0
-    for b in blocks:
-        assert b[4] >= impacts[off : off + b[2]].max() - 1e-12
-        off += b[2]
+    for first, last, n, _data in blocks:
+        assert (first, last) == (doc_ids[off], doc_ids[off + n - 1])
+        off += n
+    assert off == len(doc_ids)
 
 
 def test_posting_blocks_skip_decode_positions():
@@ -101,7 +94,7 @@ def test_posting_blocks_skip_decode_positions():
     tfs = np.array([2, 1, 3])
     dls = np.array([7, 3, 9])
     positions = np.array([0, 5, 2, 1, 4, 9])
-    blocks = encode_posting_blocks(doc_ids, tfs, dls, positions, avg_dl=6.0)
+    blocks = encode_posting_blocks(doc_ids, tfs, dls, positions)
     d, t, dl, p = decode_posting_blocks(posting_blocks(blocks), want_positions=False)
     assert p is None
     assert dl is None
@@ -109,45 +102,43 @@ def test_posting_blocks_skip_decode_positions():
     assert t.tolist() == [2, 1, 3]
 
 
-@given(posting_list())
+@given(posting_list(), st.data())
 @settings(max_examples=50, deadline=None)
-def test_decode_remerges_interleaved_block_runs(pl):
-    """Indexes written with the retired champion-head layout store a
-    list as two doc-ordered runs whose block ranges interleave (the
-    top-impact postings, then the rest).  Decoding must re-merge them to
-    the EXACT doc-ordered (doc_ids, tfs, dls, positions) of the plain
-    layout, and the kernel must score them identically."""
-    from websearchengine_spark.functions.codec import bm25_impact
+def test_decode_remerges_interleaved_block_runs(pl, data):
+    """Within one kernel call a term's blocks are decoded in steps (each
+    query of a batch, each shard group, decodes only the blocks meeting
+    its candidates), so the blocks decoded so far are two runs whose doc
+    ranges interleave.  shard_topk re-merges them (codec.doc_ordered):
+    a batch whose first query decodes some of a term's blocks scores
+    its second query, which needs all of them, exactly like that query
+    alone."""
     from websearchengine_spark.operators.topk import shard_topk
 
     doc_ids, tfs, dls, positions = pl
     avg_dl = float(dls.mean())
-    impacts = bm25_impact(tfs.astype(float), dls.astype(float), avg_dl)
-    head = np.zeros(len(doc_ids), dtype=bool)
-    head[np.argsort(-impacts, kind="stable")[: max(1, len(doc_ids) // 10)]] = True
-    starts = np.concatenate([[0], np.cumsum(tfs)[:-1]])
-
-    def run(mask):
-        pos = [positions[s : s + t] for s, t in zip(starts[mask], tfs[mask])]
-        return encode_posting_blocks(
-            doc_ids[mask], tfs[mask], dls[mask],
-            np.concatenate(pos) if pos else np.empty(0, np.int64),
-            avg_dl, block_size=8,
-        )
-
-    legacy = [b[:6] + (True,) for b in run(head)] + (run(~head) if (~head).any() else [])
-    d, t, dl, p = decode_posting_blocks(posting_blocks(legacy), want_doclens=True)
-    assert d.tolist() == doc_ids.tolist()
-    assert t.tolist() == tfs.tolist()
-    assert dl.tolist() == dls.tolist()
-    assert p.tolist() == positions.tolist()
-
-    plain = encode_posting_blocks(doc_ids, tfs, dls, positions, avg_dl, block_size=8)
-    spec = [(0, {"t": 1.0}, [])]
-    want = shard_topk({"t": posting_blocks(plain)}, spec, "bm25", {"t": 1.0}, avg_dl, 5)
-    got = shard_topk({"t": posting_blocks(legacy)}, spec, "bm25", {"t": 1.0}, avg_dl, 5)
-    for w, g in zip(want[:3], got[:3]):
+    # the probe term: a few of the list's docs, so query 0 decodes only
+    # the "t" blocks that hold one of them
+    probe = np.unique(data.draw(st.lists(st.sampled_from(doc_ids.tolist()), min_size=1)))
+    lists = {
+        "t": posting_blocks(
+            encode_posting_blocks(doc_ids, tfs, dls, positions, block_size=8)
+        ),
+        "p": posting_blocks(
+            encode_posting_blocks(
+                probe, np.ones(probe.size, np.int64), dls[np.searchsorted(doc_ids, probe)],
+                np.zeros(probe.size, np.int64), block_size=8,
+            )
+        ),
+    }
+    const = {"t": 1.0, "p": 1.0}
+    alone = shard_topk(lists, [(1, {"t": 1.0}, [])], "bm25", const, avg_dl, 5)
+    batch = shard_topk(
+        lists, [(0, {"t": 1.0, "p": 1.0}, []), (1, {"t": 1.0}, [])], "bm25", const, avg_dl, 5
+    )
+    second = batch[0] == 1
+    for w, g in zip(alone[1:3], (batch[1][second], batch[2][second])):
         np.testing.assert_array_equal(w, g)
+    assert batch[3]["blocks_decoded"] == batch[3]["blocks_total"]
 
 
 # ---- batched varbyte (the build/compaction encode path) ---------------
@@ -205,12 +196,10 @@ def test_encode_posting_blocks_defer_bytes_identical():
         pos = np.concatenate(
             [np.sort(rng.integers(0, 200, size=t)) for t in tfs]
         ).astype(np.int64)
-        eager = encode_posting_blocks(docs, tfs, dls, pos, 55.0)
-        deferred = encode_posting_blocks(
-            docs, tfs, dls, pos, 55.0, _defer_bytes=True
-        )
-        datas = varbyte_encode_many([b[5] for b in deferred])
-        rebuilt = [b[:5] + (d,) + b[6:] for b, d in zip(deferred, datas)]
+        eager = encode_posting_blocks(docs, tfs, dls, pos)
+        deferred = encode_posting_blocks(docs, tfs, dls, pos, _defer_bytes=True)
+        datas = varbyte_encode_many([b[3] for b in deferred])
+        rebuilt = [b[:3] + (d,) for b, d in zip(deferred, datas)]
         assert rebuilt == eager
 
 
@@ -248,7 +237,7 @@ def _reference_decode(blocks, want_positions):
     [n gaps, n tfs, n doc lengths, position deltas], positions restart
     per doc; the postings are returned in ascending doc order."""
     rows = []
-    for first, _last, n, _mt, _mi, data, *_ in blocks:
+    for first, _last, n, data in blocks:
         vals = varbyte_decode(data).tolist()
         gaps, tfs, dls, deltas = vals[:n], vals[n : 2 * n], vals[2 * n : 3 * n], vals[3 * n :]
         doc, at = first, 0
@@ -271,9 +260,8 @@ def _reference_decode(blocks, want_positions):
 @st.composite
 def sharded_blocks(draw):
     """Block tuples of 1-4 shards' posting lists (doc_id % n_shards ==
-    shard), keyed by (shard, doc_id) like the kernel keys them,
-    interleaved across shards; some shards stored in the legacy
-    two-run head layout; plus a random block subset."""
+    shard), keyed by (shard, doc_id) and in shard order, as the kernel
+    holds them; plus a random block subset."""
     n_shards = draw(st.integers(1, 4))
     block_size = draw(st.integers(4, 128))
     blocks = []
@@ -286,29 +274,11 @@ def sharded_blocks(draw):
         pos = np.concatenate(
             [np.cumsum(draw(st.lists(st.integers(1, 30), min_size=int(t), max_size=int(t)))) - 1 for t in tfs]
         ).astype(np.int64)
-        starts = np.concatenate([[0], np.cumsum(tfs)[:-1]])
         key = np.int64(shard) << KEY_SHIFT
-
-        def run(mask):
-            p = [pos[s : s + t] for s, t in zip(starts[mask], tfs[mask])]
-            return [
-                (b[0] + key, b[1] + key, *b[2:])
-                for b in encode_posting_blocks(
-                    docs[mask], tfs[mask], dls[mask],
-                    np.concatenate(p) if p else np.empty(0, np.int64),
-                    10.0, block_size=block_size,
-                )
-            ]
-
-        if draw(st.booleans()) and m > 1:  # legacy head layout
-            head = np.zeros(m, dtype=bool)
-            head[draw(st.lists(st.integers(0, m - 1), min_size=1, max_size=m))] = True
-            blocks += [b[:6] + (True,) for b in run(head)]
-            blocks += run(~head) if (~head).any() else []
-        else:
-            blocks += run(np.ones(m, dtype=bool))
-    order = draw(st.permutations(range(len(blocks))))
-    blocks = [blocks[i] for i in order]
+        blocks += [
+            (b[0] + key, b[1] + key, *b[2:])
+            for b in encode_posting_blocks(docs, tfs, dls, pos, block_size=block_size)
+        ]
     subset = draw(st.lists(st.booleans(), min_size=len(blocks), max_size=len(blocks)))
     return blocks, np.array(subset, dtype=bool)
 
@@ -318,8 +288,7 @@ def sharded_blocks(draw):
 def test_decode_posting_blocks_matches_per_block_reference(case, want_positions):
     """One vectorized pass over many blocks decodes exactly what a plain
     per-block decode gives: random lists, block sizes 4-128, random
-    block subsets, blocks interleaved across shards, positions on and
-    off, legacy head blocks."""
+    block subsets, blocks of several shards, positions on and off."""
     blocks, subset = case
     chosen = [b for b, keep in zip(blocks, subset) if keep]
     d, t, dl, p = decode_posting_blocks(

@@ -392,10 +392,12 @@ def test_hot_bucket_cap_default_on_and_drop_counted(spark):
     mega-clusters.  SimHash bands / sign-LSH buckets are coarse random
     partitions whose size grows with CORPUS size; a default cap there
     would silently empty the result at scale, so it stays opt-in
-    (round-3 review finding).  Drops are never silent —
-    LAST_BUCKET_DROP_OBS records dropped/total rows via an Observation
-    riding the action (no extra job)."""
+    (round-3 review finding).  Drops are never silent — the caller's
+    drop_obs Observation records dropped/total rows, riding the action
+    (no extra job)."""
     import inspect
+
+    from pyspark.sql import Observation
 
     from websearchengine_spark.operators import dedup, similarity
 
@@ -411,15 +413,20 @@ def test_hot_bucket_cap_default_on_and_drop_counted(spark):
              (101, "a genuinely unique document about salsa!")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    dedup.minhash_lsh_pairs(docs, threshold=0.5, max_bucket_size=10).collect()
-    got = dedup.LAST_BUCKET_DROP_OBS["minhash_lsh"].get
+    obs = Observation()
+    dedup.minhash_lsh_pairs(
+        docs, threshold=0.5, max_bucket_size=10, drop_obs=obs
+    ).collect()
+    got = obs.get
     assert got["rows_dropped"] > 0
     assert got["rows_total"] > got["rows_dropped"]
 
-    # cap off (explicit None): no observation recorded for a fresh key
-    dedup.LAST_BUCKET_DROP_OBS.clear()
-    dedup.minhash_lsh_pairs(docs, threshold=0.5, max_bucket_size=None).collect()
-    assert "minhash_lsh" not in dedup.LAST_BUCKET_DROP_OBS
+    # cap off (explicit None): the observation still fills, dropping none
+    obs = Observation()
+    dedup.minhash_lsh_pairs(
+        docs, threshold=0.5, max_bucket_size=None, drop_obs=obs
+    ).collect()
+    assert obs.get["rows_dropped"] == 0 and obs.get["rows_total"] > 0
 
 
 def test_ivf_kmeans_recall_on_clustered_corpus(spark, tmp_path):
@@ -957,8 +964,9 @@ def test_semantic_dedup_matches_numpy_oracle(spark):
 def test_semantic_dedup_hot_cluster_cap(spark):
     """A cluster over max_cluster_size is excluded from the self-join:
     all its members stay KEPT (no silent deletion) and the drop is
-    observed under LAST_BUCKET_DROP_OBS['semantic_dedup']."""
-    from websearchengine_spark.operators import dedup
+    observed by the caller's drop_obs Observation."""
+    from pyspark.sql import Observation
+
     from websearchengine_spark.operators.similarity import semantic_dedup
 
     rows = [(i, [1.0, 0.0]) for i in range(12)] + [
@@ -968,13 +976,14 @@ def test_semantic_dedup_hot_cluster_cap(spark):
                       "embedding": [r[1] for r in rows]})
     )
     cents = [[1.0, 0.0], [0.0, 1.0]]
+    drop_obs = Observation()
     got = {r["vec_id"]: r["keep"]
            for r in semantic_dedup(
-               emb, cents, threshold=0.9, max_cluster_size=10
+               emb, cents, threshold=0.9, max_cluster_size=10, drop_obs=drop_obs
            ).collect()}
     assert all(got[i] for i in range(12))        # capped cluster: all kept
     assert got[100] and not got[101]             # small cluster still deduped
-    obs = dedup.LAST_BUCKET_DROP_OBS["semantic_dedup"].get
+    obs = drop_obs.get
     assert obs["rows_dropped"] == 12 and obs["rows_total"] == 14
 
 

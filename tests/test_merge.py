@@ -62,7 +62,7 @@ def test_merged_stats_and_term_stats_match_full_build(spark, merge_roots):
     assert abs(m_cfg["avg_dl"] - full_cfg["avg_dl"]) < 1e-12
     assert m_cfg["n_shards"] == N_SHARDS
     # offset is the smallest multiple of n_shards >= |A| (shard-preserving)
-    assert m_cfg["doc_id_offset"] == 102
+    assert m_cfg["doc_id_offsets"] == [0, 102]
 
     def ts(root):
         return {
@@ -141,20 +141,23 @@ def test_merge_mismatched_format_raises(spark, merge_roots, tmp_path):
         merge_indexes(spark, merge_roots["a"], fake.root, str(tmp_path / "out"))
 
 
-def test_segment_id_span_handles_legacy_and_deleted_configs():
-    """Offset computation must clear a segment's OCCUPIED id range:
-    dense builds (span == num_docs), post-delete merges (explicit
-    id_span), and legacy binary merges (gapped space, no id_span — a
-    safe upper bound derives from doc_id_offset)."""
-    from websearchengine_spark.operators.merge import segment_id_span
+def test_configs_record_the_id_span(merge_roots):
+    """Offset computation must clear a segment's OCCUPIED id range, and
+    every config records it: a build's ids are dense (span ==
+    num_docs), a merge's span ends at its last input's offset plus that
+    input's span rounded up to a shard multiple (so a post-delete merge
+    keeps the span of the ids it never remapped)."""
+    from websearchengine_spark.operators.merge import doc_id_offsets
 
-    assert segment_id_span({"num_docs": 100}) == 100
-    assert segment_id_span({"num_docs": 195, "id_span": 240}) == 240
-    # legacy merge of 5+7 docs at n_shards=4 occupies ids 0-4 and 8-14:
-    # num_docs=12 would collide; the derived bound must clear id 14
-    legacy = {"num_docs": 12, "n_shards": 4, "doc_id_offset": 8}
-    span = segment_id_span(legacy)
-    assert span >= 15 and span % 4 == 0
+    cfg = {
+        k: IndexStorage(merge_roots[k]).read_manifest()["config"]
+        for k in ("a", "b", "merged")
+    }
+    for k in ("a", "b"):
+        assert cfg[k]["id_span"] == cfg[k]["num_docs"]
+    offs = doc_id_offsets([cfg["a"]["id_span"], cfg["b"]["id_span"]], N_SHARDS)
+    assert cfg["merged"]["doc_id_offsets"] == offs
+    assert cfg["merged"]["id_span"] == offs[1] + -(-cfg["b"]["id_span"] // N_SHARDS) * N_SHARDS
 
 
 def _postings_content(spark, root):

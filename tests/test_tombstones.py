@@ -158,7 +158,7 @@ def test_tombstone_visibility_is_catalog_gated(spark, upserted):
     rel = os.path.join("tombstones", "batch-000000099")
     spark.createDataFrame(
         [(seg, int(local_id))], "seg string, doc_id long"
-    ).write.mode("overwrite").parquet(os.path.join(root, rel))
+    ).write.mode("overwrite").partitionBy("seg").parquet(os.path.join(root, rel))
 
     # unlisted -> crash-window file -> victim still visible
     mid = search_live(spark, root, "data mining", k=30).collect()
@@ -190,7 +190,7 @@ def test_compact_gc_spares_unconsumed_tombstones(
         # entry published while merge_many_indexes is running
         spark.createDataFrame(
             [("delta-000000001", 0)], "seg string, doc_id long"
-        ).write.mode("overwrite").parquet(os.path.join(root, late_rel))
+        ).write.mode("overwrite").partitionBy("seg").parquet(os.path.join(root, late_rel))
         cat = read_live_catalog(root)
         cat["tombstone_files"].append({"file": late_rel, "n": 1})
         with open(os.path.join(root, "_live.json"), "w") as f:
@@ -233,29 +233,6 @@ def test_partial_df_override_raises_clear_error(spark, upserted):
             spark, seg, "data mining", k=5,
             corpus_stats=(230, 50_000), df_override={"data": 10},
         ).collect()
-
-
-def test_legacy_root_without_catalog_listing_scans_dir(spark, upserted):
-    """Roots written before the catalog-gated scheme (no tombstone_files
-    key) fall back to a directory scan with unknown counts."""
-    root = upserted["root"]
-    cat = read_live_catalog(root)
-    del cat["tombstone_files"]
-    with open(os.path.join(root, "_live.json"), "w") as f:
-        json.dump(cat, f)
-    files = tombstone_files(root)
-    assert [f["n"] for f in files] == [None]
-    assert pending_tombstones(root) is None
-    assert not compaction_overdue(root, threshold=0)  # unknown != overdue
-    # searches still apply the legacy tombstones
-    hits = search_live(spark, root, "fresh recrawl", k=50).collect()
-    assert {r["url"] for r in hits} == upserted["recrawled_urls"]
-    # and the next catalog write absorbs them (with unknown counts)
-    np_pages = upserted["by_url"].iloc[190:200].copy()
-    np_pages["url"] = ["zzz" + u for u in np_pages["url"]]
-    apply_pages_batch(spark, spark.createDataFrame(np_pages), 7, root)
-    absorbed = read_live_catalog(root)["tombstone_files"]
-    assert [f["n"] for f in absorbed] == [None]
 
 
 def test_exclude_df_masks_ids(spark, upserted):
@@ -317,38 +294,6 @@ def test_tombstone_files_are_seg_partitioned(spark, upserted):
     assert per_seg[clean] is None
     d = per_seg[tombed]
     assert d is not None and d.count() == 30
-
-
-def test_legacy_crash_redelivery_does_not_duplicate_listing(
-    spark, corpus_pdf, tmp_path
-):
-    """Legacy root + crash between tombstone write and catalog publish:
-    redelivery absorbs the leftover file (n=None) but the batch then
-    replaces it with its own counted entry — one listing, gauge alive."""
-    from websearchengine_spark.streaming.ingest import apply_pages_batch as apb
-
-    by_url, re = _recrawled(corpus_pdf, 10, 25, tag="legacy crash probe")
-    root = str(tmp_path / "live")
-    apb(spark, spark.createDataFrame(by_url), 0, root, n_shards=N_SHARDS, n_groups=2)
-
-    # make the root legacy (no tombstone_files key) and simulate the
-    # crashed first delivery's leftover tombstone file
-    cat = read_live_catalog(root)
-    del cat["tombstone_files"]
-    with open(os.path.join(root, "_live.json"), "w") as f:
-        json.dump(cat, f)
-    spark.createDataFrame(
-        [("delta-000000000", 10)], "seg string, doc_id long"
-    ).write.mode("overwrite").partitionBy("seg").parquet(
-        os.path.join(root, "tombstones", "batch-000000001")
-    )
-
-    apb(spark, spark.createDataFrame(re), 1, root)  # the redelivery
-    files = tombstone_files(root)
-    batch_entries = [f for f in files if f["file"].endswith("batch-000000001")]
-    assert len(batch_entries) == 1
-    assert batch_entries[0]["n"] == 15  # the counted entry, not n=None
-    assert pending_tombstones(root) == 15  # gauge not poisoned by None
 
 
 def test_live_gate_sides_identical(spark, corpus_pdf, tmp_path, monkeypatch):

@@ -79,7 +79,7 @@ def test_gate_boundary_is_the_df_sum(spark, built_index, monkeypatch):
         assert (jobs > 0) == spark_side, (cap, jobs)
 
 
-def _mk_lists(avg_dl=10.0):
+def _mk_lists():
     """Two synthetic terms: rare (3 docs) and common (many blocks)."""
     rare_docs = np.array([5, 500, 900], dtype=np.int64)
     rare = encode_posting_blocks(
@@ -87,7 +87,6 @@ def _mk_lists(avg_dl=10.0):
         np.array([2, 1, 3]),
         np.array([10, 12, 8]),
         np.array([0, 1, 4, 2, 3, 7]),
-        avg_dl,
         block_size=2,
     )
     common_docs = np.arange(0, 1000, 2, dtype=np.int64)  # 500 docs, evens
@@ -97,7 +96,7 @@ def _mk_lists(avg_dl=10.0):
     dls[common_docs == 500] = 12
     dls[common_docs == 900] = 8
     pos = np.arange(500, dtype=np.int64)
-    common = encode_posting_blocks(common_docs, tfs, dls, pos, avg_dl, block_size=16)
+    common = encode_posting_blocks(common_docs, tfs, dls, pos, block_size=16)
     return {"rare": posting_blocks(rare), "common": posting_blocks(common)}
 
 
@@ -156,7 +155,7 @@ def test_kernel_phrase_adjacency():
     assert d.size == 0
     tl["common"] = posting_blocks(encode_posting_blocks(
         np.array([500, 900]), np.array([1, 1]), np.array([12, 8]),
-        np.array([5, 5]), 10.0, block_size=16,
+        np.array([5, 5]), block_size=16,
     ))
     _q, d, _s, _ = shard_topk(
         tl, _spec("rare", "common", phrases=[("rare", "common")]), "bm25", idf,
@@ -187,7 +186,7 @@ def test_kernel_tie_break_doc_id_asc():
     avg_dl = 10.0
     docs = np.array([3, 7, 11], dtype=np.int64)
     same = encode_posting_blocks(
-        docs, np.ones(3, dtype=np.int64), np.full(3, 10), np.arange(3), avg_dl
+        docs, np.ones(3, dtype=np.int64), np.full(3, 10), np.arange(3)
     )
     _q, d, s, _ = shard_topk(
         {"t": posting_blocks(same)}, _spec("t"), "bm25", {"t": 1.0}, avg_dl, k=2
@@ -292,7 +291,7 @@ def _sharded_lists(n_shards: int, n_docs: int, seed: int):
             tfs = rng.integers(1, 4, size=docs.size)
             pos = np.concatenate([np.sort(rng.choice(19, t, replace=False)) for t in tfs])
             per_shard[s][term] = posting_blocks(
-                encode_posting_blocks(docs, tfs, dls[docs], pos, 40.0, block_size=8), shard=s
+                encode_posting_blocks(docs, tfs, dls[docs], pos, block_size=8), shard=s
             )
     merged = {}
     for term in ("a", "b", "c"):

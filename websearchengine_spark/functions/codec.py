@@ -15,15 +15,16 @@ layout — the index is internal state, so the format is ours to define
 
   per (shard, term) the posting list is cut into blocks of up to
   ``BLOCK_SIZE`` docs; each block is
-      struct<first_docid, last_docid, n, max_tf, data:binary>
+      struct<first_docid, last_docid, n, data:binary>
   where ``data`` is ONE varbyte stream holding, in order:
       n doc-gaps   (gap[0] = docid[0] - first_docid == 0, then deltas)
       n tfs
       n doc-lengths (rides the block so BM25 needs no doc-table join)
       sum(tf) position-deltas (per doc: pos[0], then deltas)
 
-Blocks carry ``last_docid`` (skip pointer) and ``max_tf`` (score upper
-bound input) for block-max WAND.
+A block stores only what the ranking kernel reads: [first_docid,
+last_docid] is the block-max skip test (a block is decoded only when
+its doc range meets the candidates), ``n`` sizes the decode.
 
 All encode/decode paths are numpy array ops — no per-value Python in
 the hot loop beyond the final ``bytes()`` copy.
@@ -144,16 +145,6 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def bm25_impact(tfs: np.ndarray, dls: np.ndarray, avg_dl: float) -> np.ndarray:
-    """Per-posting BM25 term impact (idf excluded): the tf-saturation part
-    (k1+1)*tf / (tf + k1*(1 - b + b*dl/avgdl)).  Monotone in tf, anti-
-    monotone in dl -> its block max is a valid score upper bound once
-    multiplied by the (query-time, global-df) idf."""
-    return ((BM25_K1 + 1.0) * tfs) / (
-        tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * dls / avg_dl)
-    )
-
-
 def _gather_segments(values: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
     """values[starts[i] : starts[i]+lens[i]] for every i, concatenated.
     Fully vectorized (np.repeat index arithmetic, no per-segment loop);
@@ -174,23 +165,18 @@ def encode_posting_blocks(
     tfs: np.ndarray,
     doc_lens: np.ndarray,
     positions: np.ndarray | None,
-    avg_dl: float,
     block_size: int = BLOCK_SIZE,
     _defer_bytes: bool = False,
-) -> list[tuple[int, int, int, int, float, bytes, bool]]:
+) -> list[tuple[int, int, int, bytes]]:
     """Encode one term's posting list into block-max blocks.
 
     ``doc_ids`` strictly ascending int64 (len m); ``tfs``/``doc_lens``
     int64 (len m); ``positions`` int64 concatenation of each doc's
-    ascending position list (len sum(tfs)).  ``avg_dl`` is the corpus
-    average doc length (stats.total_tf / stats.num_docs), baked into the
-    per-block ``max_impact`` BM25 upper bound (k1=1.2, b=0.75).
+    ascending position list (len sum(tfs)).
 
-    Returns (first_docid, last_docid, n, max_tf, max_impact, data, head)
-    tuples; ``data`` is one varbyte stream of [gaps, tfs, dls, posdeltas].
-    ``head`` is always False: the stored struct keeps the field so that
-    indexes written with the retired champion-head layout (head blocks
-    whose doc ranges overlap the tail's) still decode and merge.
+    Returns (first_docid, last_docid, n, data) tuples, the stored block
+    struct's fields; ``data`` is one varbyte stream of [gaps, tfs, dls,
+    posdeltas].
 
     ``_defer_bytes=True`` returns the per-block VALUE ARRAY in the data
     slot instead of varbyte bytes, so a batching caller can run ONE
@@ -205,7 +191,6 @@ def encode_posting_blocks(
     if positions is not None:
         positions = np.asarray(positions, dtype=np.int64)
     m = doc_ids.size
-    impacts = bm25_impact(tfs.astype(np.float64), doc_lens.astype(np.float64), avg_dl)
     pos_offsets = np.zeros(m + 1, dtype=np.int64)
     np.cumsum(tfs, out=pos_offsets[1:])
     blocks = []
@@ -225,17 +210,7 @@ def encode_posting_blocks(
         else:
             vals = np.concatenate([gaps, t, dl])
         data = vals if _defer_bytes else varbyte_encode(vals)
-        blocks.append(
-            (
-                int(d[0]),
-                int(d[-1]),
-                int(d.size),
-                int(t.max()),
-                float(impacts[start:end].max()),
-                data,
-                False,
-            )
-        )
+        blocks.append((int(d[0]), int(d[-1]), int(d.size), data))
     return blocks
 
 
@@ -261,20 +236,20 @@ class PostingBlocks(NamedTuple):
 def posting_blocks(blocks: list[tuple], shard: int = 0) -> PostingBlocks:
     """Columns of one posting list's blocks as encode_posting_blocks
     returns them."""
-    lens = np.array([len(b[5]) for b in blocks], dtype=np.int64)
+    lens = np.array([len(b[3]) for b in blocks], dtype=np.int64)
     end = np.cumsum(lens)
     return PostingBlocks(
         np.full(len(blocks), shard, dtype=np.int64),
         *(np.array([b[i] for b in blocks], dtype=np.int64) for i in range(3)),
         end - lens,
         end,
-        np.frombuffer(b"".join(b[5] for b in blocks), dtype=np.uint8),
+        np.frombuffer(b"".join(b[3] for b in blocks), dtype=np.uint8),
     )
 
 
 def arrow_posting_blocks(lists, shards: np.ndarray) -> tuple[PostingBlocks, np.ndarray]:
     """Columns of a stored ``blocks`` column (Arrow list<struct<
-    first_docid, last_docid, n, ..., data>>, one list per row) with
+    first_docid, last_docid, n, data>>, one list per row) with
     ``shards`` giving each row's shard.  Returns the blocks of every row
     and the row offsets: row r's blocks are entries offsets[r] to
     offsets[r+1].  The numeric fields and the data bytes are zero-copy
@@ -321,9 +296,10 @@ def doc_ordered(
     positions: np.ndarray | None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray | None, np.ndarray | None]:
     """Postings (doc_ids, tfs, doclens, per-doc position runs) in
-    ascending doc_id order: runs whose doc ranges interleave (the retired
-    champion-head layout, or blocks decoded at different times) are
-    merge-sorted back into one order, positions re-gathered run-wise."""
+    ascending doc_id order: runs whose doc ranges interleave (the kernel
+    concatenating blocks of one term decoded at different times,
+    topk.shard_topk) are merge-sorted back into one order, positions
+    re-gathered run-wise."""
     if doc_ids.size > 1 and np.any(doc_ids[1:] < doc_ids[:-1]):
         order = np.argsort(doc_ids, kind="stable")
         if positions is not None and positions.size:
@@ -343,8 +319,10 @@ def decode_posting_blocks(
     want_doclens: bool = False,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray | None, np.ndarray | None]:
     """Decode every block of ``blocks`` in ONE vectorized pass to
-    (doc_ids, tfs, doclens-or-None, positions-or-None), doc_id-ascending
-    (see doc_ordered).  The doc_ids are each block's ``first`` plus its
+    (doc_ids, tfs, doclens-or-None, positions-or-None), in block order:
+    doc_id-ascending for a posting list's blocks as stored, and for the
+    kernel's (shard, doc_id)-keyed blocks in shard order.  The doc_ids
+    are each block's ``first`` plus its
     gaps, so a caller that offsets ``first`` (the kernel's (shard,
     doc_id) keys) gets its keys back.  Without ``want_positions`` the
     position bytes are never decoded: only each block's first 3n values
@@ -392,4 +370,4 @@ def decode_posting_blocks(
         starts = np.zeros(n_post, dtype=np.int64)
         np.cumsum(tfs[:-1], out=starts[1:])
         positions = positions - np.repeat(positions[starts] - pdelta[starts], tfs)
-    return doc_ordered(doc_ids, tfs, doclens, positions)
+    return doc_ids, tfs, doclens, positions

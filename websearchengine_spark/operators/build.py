@@ -111,10 +111,7 @@ POSTINGS_SCHEMA = T.StructType(
                         T.StructField("first_docid", T.LongType()),
                         T.StructField("last_docid", T.LongType()),
                         T.StructField("n", T.IntegerType()),
-                        T.StructField("max_tf", T.IntegerType()),
-                        T.StructField("max_impact", T.DoubleType()),
                         T.StructField("data", T.BinaryType()),
-                        T.StructField("head", T.BooleanType()),
                     ]
                 )
             ),
@@ -273,7 +270,7 @@ def _arrow_batch_cap(spark: SparkSession):
 def _write_docs(
     store: IndexStorage, docs: DataFrame, n_shards: int, n_groups: int
 ) -> tuple[dict, list[int]]:
-    """Write ``docs`` and the one-row ``stats`` table derived from it.
+    """Write ``docs``; return its corpus stats.
 
     docs is written doc_id-CLUSTERED: range-partitioned on doc_id (the
     one Exchange; adaptive execution coalesces the ranges to sized
@@ -282,8 +279,8 @@ def _write_docs(
     candidate priors) opens about one row group per id instead of every
     file.  The corpus stats (num_docs, total_tf, max_dl) and the docs
     per shard-group ride the docs write as an Observation — zero extra
-    jobs and zero re-reads; ``stats`` is then written driver-side like
-    the manifest.  Returns (stats, docs per group)."""
+    jobs and zero re-reads; the caller records the stats in the
+    manifest config.  Returns (stats, docs per group)."""
     obs = Observation("corpus_stats")
     grp = (F.col("doc_id") % n_shards) % n_groups
     out = docs.repartitionByRange("doc_id").sortWithinPartitions("doc_id").observe(
@@ -296,11 +293,6 @@ def _write_docs(
     store.write_table(out, "docs")
     v = obs.get
     stats = {k: int(v[k] or 0) for k in ("num_docs", "total_tf", "max_dl")}
-    store.write_small_table(
-        {k: [x] for k, x in stats.items()},
-        "stats",
-        pa.schema([(k, pa.int64()) for k in stats]),
-    )
     return stats, [int(v[f"nd_{g}"]) for g in range(n_groups)]
 
 
@@ -317,12 +309,12 @@ def _postings_batch(rows: list[tuple]) -> pa.RecordBatch:
 
     shards, terms, dfs, ctfs, block_lists = zip(*rows)
     flat = [blk for bl in block_lists for blk in bl]
-    datas = varbyte_encode_many([blk[5] for blk in flat])
+    datas = varbyte_encode_many([blk[3] for blk in flat])
     offs = np.zeros(len(block_lists) + 1, dtype=np.int32)
     np.cumsum([len(bl) for bl in block_lists], out=offs[1:])
     struct = pa.StructArray.from_arrays(
         [
-            pa.array(datas if i == 5 else [blk[i] for blk in flat], f.type)
+            pa.array(datas if i == 3 else [blk[i] for blk in flat], f.type)
             for i, f in enumerate(_BLOCKS_T.value_type)
         ],
         fields=list(_BLOCKS_T.value_type),
@@ -441,7 +433,7 @@ def _write_term_stats(spark: SparkSession, store: IndexStorage) -> None:
     Term-sorted SMALL row groups on disk: the table is the term
     DICTIONARY; with rows sorted by term inside each file and
     storage.ROW_GROUP_BYTES row groups, a k-term lookup
-    (storage.lookup_rows / the Spark fallback's `term IN` filter) reads
+    (storage.lookup_rows, or a Spark scan's pushed `term IN` filter) reads
     at most ~k row groups per file — bounded work per file at any
     vocabulary size.  It is not range-partitioned: the sampling job of
     a range exchange buys nothing on a table this small (one file at
@@ -458,7 +450,7 @@ def _write_term_stats(spark: SparkSession, store: IndexStorage) -> None:
     store.write_table(term_stats, "term_stats")
 
 
-def _encode_occurrences(b, positions: bool, avg_dl: float, block_size: int):
+def _encode_occurrences(b, positions: bool, block_size: int):
     """Build encoder: grouped rows (shard, term, occs[], dls[]) -> postings
     rows.  ``occs`` is the sorted packed-long occurrence list; ``dls``
     the sorted packed-long (doc_id, doc_len) set (positional builds) or
@@ -503,8 +495,7 @@ def _encode_occurrences(b, positions: bool, avg_dl: float, block_size: int):
             dls = (occ & PACK_MASK)[starts]
             p = None
         blocks = encode_posting_blocks(
-            uniq, counts, dls, p, avg_dl, block_size=block_size,
-            _defer_bytes=True,
+            uniq, counts, dls, p, block_size=block_size, _defer_bytes=True
         )
         yield shard, term, int(uniq.size), int(d_all.size), blocks
 
@@ -669,7 +660,7 @@ def build_index(
         _write_postings(
             store,
             plists,
-            lambda b: _encode_occurrences(b, positions, avg_dl, bsz),
+            lambda b: _encode_occurrences(b, positions, bsz),
             n_shards,
             n_groups,
             [g for g in range(n_groups) if g not in done],
@@ -728,6 +719,9 @@ def build_index(
                 "avg_dl": avg_dl,
                 "num_docs": srow["num_docs"],
                 "total_tf": srow["total_tf"],
+                "max_dl": srow["max_dl"],
+                # a build's doc_ids are dense: its id space is num_docs
+                "id_span": srow["num_docs"],
                 "positions": positions,
                 "spell_assist": bool(spell_assist),
                 "phase_timings_sec": phase_t,

@@ -44,11 +44,6 @@ DEFAULT_BANDS = 4
 # users who know their key space.
 DEFAULT_MAX_BUCKET_SIZE = 10_000
 
-# Per-op drop evidence for the LAST candidate-generation action (the
-# no-silent-caps rule): op name -> pyspark Observation whose .get yields
-# {"rows_dropped": n, "rows_total": m} once the query has run.
-LAST_BUCKET_DROP_OBS: dict[str, Observation] = {}
-
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact dedup groups: (text_hash, n_dups, doc_ids) for groups > 1."""
@@ -150,7 +145,7 @@ def minhash_signatures(
 
 
 def _drop_hot_buckets(
-    df: DataFrame, key_cols: list[str], cap: int | None, op_name: str = "lsh"
+    df: DataFrame, key_cols: list[str], cap: int | None, drop_obs: Observation | None
 ) -> DataFrame:
     """Skew guard for bucket self-joins: a bucket of m members yields
     m^2/2 pairs, so one hot bucket (boilerplate page, empty doc, spam
@@ -160,20 +155,23 @@ def _drop_hot_buckets(
     The count join is on the same key as the subsequent self-join, so it
     reuses the co-partitioning.
 
-    The drop is never silent: an Observation (zero extra jobs — metrics
-    ride the action) records rows_dropped/rows_total, exposed via
-    ``LAST_BUCKET_DROP_OBS[op_name]``."""
+    The drop is never silent: the caller's ``drop_obs`` Observation
+    (zero extra jobs — metrics ride the action) receives rows_dropped /
+    rows_total once the result runs; rows_dropped is 0 without a cap."""
     if cap is None:
-        return df
+        if drop_obs is None:
+            return df
+        return df.observe(
+            drop_obs, F.lit(0).alias("rows_dropped"), F.count(F.lit(1)).alias("rows_total")
+        )
     counts = df.groupBy(*key_cols).agg(F.count("*").alias("_bn"))
     joined = df.join(counts, key_cols)
-    obs = Observation()
-    joined = joined.observe(
-        obs,
-        F.count_if(F.col("_bn") > cap).alias("rows_dropped"),
-        F.count(F.lit(1)).alias("rows_total"),
-    )
-    LAST_BUCKET_DROP_OBS[op_name] = obs
+    if drop_obs is not None:
+        joined = joined.observe(
+            drop_obs,
+            F.count_if(F.col("_bn") > cap).alias("rows_dropped"),
+            F.count(F.lit(1)).alias("rows_total"),
+        )
     return joined.filter(F.col("_bn") <= cap).drop("_bn")
 
 
@@ -185,6 +183,7 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     shingle_k: int = 8,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
+    drop_obs: Observation | None = None,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash-LSH.
 
@@ -195,8 +194,8 @@ def minhash_lsh_pairs(
 
     ``max_bucket_size``: hot-bucket cap (see _drop_hot_buckets) — the
     quadratic-blowup guard for web-scale corpora; ON by default
-    (DEFAULT_MAX_BUCKET_SIZE), ``None`` disables.  Drop counts are
-    recorded in LAST_BUCKET_DROP_OBS["minhash_lsh"].
+    (DEFAULT_MAX_BUCKET_SIZE), ``None`` disables.  ``drop_obs``: an
+    Observation that receives the drop counts (see _drop_hot_buckets).
     """
     rows_per_band = n_hashes // bands
     sig = minhash_signatures(docs, text_col, n_hashes, shingle_k).persist()
@@ -217,7 +216,7 @@ def minhash_lsh_pairs(
             ],
         ).alias("bucket"),
     )
-    banded = _drop_hot_buckets(banded, ["bucket"], max_bucket_size, "minhash_lsh")
+    banded = _drop_hot_buckets(banded, ["bucket"], max_bucket_size, drop_obs)
     a = banded.select(
         F.col("doc_id").alias("doc_a"), F.col("mh").alias("mh_a"), "bucket"
     )
@@ -301,6 +300,7 @@ def simhash_duplicate_pairs(
     bits: int = 16,
     max_hamming: int = 0,
     max_bucket_size: int | None = None,
+    drop_obs: Observation | None = None,
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash_a, simhash_b) <= max_hamming.
 
@@ -317,11 +317,12 @@ def simhash_duplicate_pairs(
     buckets), so their size grows with corpus size, not duplication —
     a default cap would silently drop distinct documents at scale.  At
     web scale, size ``bits`` so that 2^(bits/(k+1)) comfortably exceeds
-    corpus_size / tolerable_bucket_size.
+    corpus_size / tolerable_bucket_size.  ``drop_obs``: an Observation
+    that receives the drop counts (see _drop_hot_buckets).
     """
     s = simhash(docs, text_col, bits)
     if max_hamming == 0:
-        s = _drop_hot_buckets(s, ["simhash"], max_bucket_size, "simhash_exact")
+        s = _drop_hot_buckets(s, ["simhash"], max_bucket_size, drop_obs)
         a = s.select(F.col("doc_id").alias("doc_a"), "simhash")
         b = s.select(F.col("doc_id").alias("doc_b"), "simhash")
         # same schema as the banded path so callers can vary max_hamming
@@ -350,9 +351,7 @@ def simhash_duplicate_pairs(
     banded = s.select(
         "doc_id", "simhash", F.explode(F.array(*band_cols)).alias("band")
     ).select("doc_id", "simhash", "band.band_id", "band.band_bits")
-    banded = _drop_hot_buckets(
-        banded, ["band_id", "band_bits"], max_bucket_size, "simhash_bands"
-    )
+    banded = _drop_hot_buckets(banded, ["band_id", "band_bits"], max_bucket_size, drop_obs)
 
     a = banded.select(
         F.col("doc_id").alias("doc_a"),

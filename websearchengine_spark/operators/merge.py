@@ -28,10 +28,8 @@ Scale design (the 100 TB story):
     docs, doc_terms, or postings.  doc_ids stay unique and ascending
     (A's ids < offset <= B's shifted ids) but are no longer dense; the
     query path never assumes density.
-  * posting lists re-encode because df and avg_dl change after the
-    merge: per-block ``max_impact`` upper bounds bake in avg_dl
-    (codec.bm25_impact), so they must be recomputed to stay *valid*
-    bounds over the merged corpus.
+  * posting lists re-encode because B's doc_ids shift and deleted
+    docs drop out: every block's gaps and [first, last] range change.
   * per shard-group resumable commits + lineage in the manifest, same
     writer and contract as build_index (north_rule: checkpoint resume,
     per-partition metrics): a rerun after a torn compaction writes only
@@ -91,8 +89,7 @@ def merge_indexes(
     B's doc_ids shift by the smallest multiple of n_shards >= A's
     num_docs (shard-preserving).  Posting blocks are decoded, shifted,
     concatenated (A-then-B keeps doc order: every shifted B id exceeds
-    every A id) and re-encoded against the merged corpus avg_dl, so
-    block-max WAND bounds stay valid.
+    every A id) and re-encoded.
     Returns the output IndexStorage; queries on it are score-identical
     to a from-scratch build of the union corpus (doc_ids differ, so
     exact score ties may order differently).
@@ -101,33 +98,6 @@ def merge_indexes(
         spark, [root_a, root_b], out_root,
         n_groups=n_groups, block_size=block_size, resume=resume,
     )
-
-
-def segment_id_span(cfg: dict) -> int:
-    """The id-space EXTENT a built/merged index occupies — the quantity
-    offset computation must clear (num_docs only equals it for dense,
-    never-merged, never-deleted builds).
-
-    * config carries ``id_span`` (post-round-3 merges): authoritative.
-    * legacy merged index (has ``doc_id_offsets`` but no span): its id
-      space is gapped (each input rounded up to a shard multiple), so
-      the true span exceeds num_docs; ``last_offset + roundup(num_docs)``
-      is a safe upper bound (the last input's size <= total num_docs) —
-      over-allocating offsets only widens gaps, never collides.
-    * plain build: dense ids, span == num_docs.
-    """
-    if "id_span" in cfg:
-        return int(cfg["id_span"])
-    num_docs = int(cfg["num_docs"])
-    n_shards = int(cfg.get("n_shards", 1) or 1)
-    offs = cfg.get("doc_id_offsets")
-    if offs is None and "doc_id_offset" in cfg:
-        offs = [0, int(cfg["doc_id_offset"])]
-    if offs:
-        return int(offs[-1]) + (
-            (num_docs + n_shards - 1) // n_shards
-        ) * n_shards
-    return num_docs
 
 
 def doc_id_offsets(num_docs_list: list[int], n_shards: int) -> list[int]:
@@ -162,25 +132,24 @@ def merge_many_indexes(
     cumulative shard-preserving offset (see doc_id_offsets), all K
     compressed postings tables union into a single groupBy(shard, term),
     and each group decodes its parts in segment order, concatenates
-    (offsets ascending => doc order preserved) and re-encodes against
-    the merged avg_dl.  Merging K segments therefore costs ONE shuffle
-    of the compressed postings and ONE write regardless of K and of
-    n_groups — a fold of binary merges would rewrite the whole index
-    K-1 times.
+    (offsets ascending => doc order preserved) and re-encodes.  Merging
+    K segments therefore costs ONE shuffle of the compressed postings
+    and ONE write regardless of K and of n_groups — a fold of binary
+    merges would rewrite the whole index K-1 times.
 
     ``deleted_doc_ids`` maps segment INDEX -> LOCAL doc_ids to drop
     physically (live-index tombstones from superseding re-crawls): the
     docs/forward tables anti-join them out, the postings mask them
     during decode (tf/positions included), and num_docs/total_tf/avg_dl
-    are recomputed over the SURVIVORS — so block-max impact bounds and
-    BM25 statistics come out exactly as if the deleted docs had never
-    been indexed.  doc_id offsets still derive from the ORIGINAL segment
+    are recomputed over the SURVIVORS — so the postings and BM25
+    statistics come out exactly as if the deleted docs had never been
+    indexed.  doc_id offsets still derive from the ORIGINAL segment
     sizes (ids are never remapped, deleted ids just vanish), keeping the
     id space stable across compactions.
     """
     if len(roots) < 2:
         raise ValueError("merge_many_indexes needs at least two roots")
-    stores = [IndexStorage(r) for r in roots]
+    stores = [IndexStorage.open(r) for r in roots]
     cfgs = [s.read_manifest().get("config", {}) for s in stores]
     n_shards = None
     analyzer = "reference"
@@ -196,9 +165,8 @@ def merge_many_indexes(
     # its live doc count: deletions drop ids without remapping the
     # space, so a post-delete segment still occupies [0, id_span) and a
     # smaller num_docs-based offset would collide later segments' ids.
-    # Built segments have dense ids (span == num_docs); compacted bases
-    # record their span explicitly; legacy merges derive a safe bound.
-    nd_list = [segment_id_span(c) for c in cfgs]
+    # Builds record span == num_docs (dense ids), merges their extent.
+    nd_list = [int(c["id_span"]) for c in cfgs]
     offsets = doc_id_offsets(nd_list, n_shards)
     id_span = offsets[-1] + (
         (nd_list[-1] + n_shards - 1) // n_shards
@@ -256,8 +224,8 @@ def merge_many_indexes(
         return u
 
     # corpus statistics over the SURVIVORS, observed on the docs write
-    # exactly as build_index does: the re-encoded impact bounds and BM25
-    # stats match a from-scratch build of the post-delete corpus
+    # exactly as build_index does: the BM25 stats match a from-scratch
+    # build of the post-delete corpus
     srow, docs_per_group = _write_docs(out, union_shifted("docs"), n_shards, n_groups)
     for opt_table in ("doc_terms", "doc_tokens"):
         if all(s.exists(opt_table) for s in stores):
@@ -334,7 +302,7 @@ def merge_many_indexes(
             blocks = encode_posting_blocks(
                 d, t, np.concatenate(dls_l),
                 np.concatenate(pos_l) if positions else None,
-                avg_dl, block_size=block_size, _defer_bytes=True,
+                block_size=block_size, _defer_bytes=True,
             )
             yield shard, term, int(d.size), int(t.sum()), blocks
 
@@ -378,12 +346,11 @@ def merge_many_indexes(
         "avg_dl": avg_dl,
         "num_docs": srow["num_docs"],
         "total_tf": srow["total_tf"],
+        "max_dl": srow["max_dl"],
         "positions": positions,
         "merged_from": list(roots),
         "doc_id_offsets": offsets,
         "id_span": id_span,
     }
-    if len(roots) == 2:
-        cfg["doc_id_offset"] = offsets[1]
     out.finalize_snapshot(cfg)
     return out

@@ -64,7 +64,7 @@ def prf_expand(
 
     Ordered by (prob desc, term asc).
     """
-    store = IndexStorage(index_root)
+    store = IndexStorage.open(index_root)
     top = run_query(spark, index_root, query, ranker=ranker, k=num_docs)
     top_ids = [r["doc_id"] for r in top.select("doc_id").collect()]
     if not top_ids:

@@ -296,7 +296,7 @@ def search_uri(
     Non-positive ``num`` falls back to the default 10 — the parser's
     "never fail upon invalid user input" contract extends to values that
     parse as ints but are meaningless as result counts."""
-    with IndexStorage(index_root) as store:
+    with IndexStorage.open(index_root) as store:
         return as_dataframe(
             spark, _search_uri(spark, store, uri_query, fullscan_prep, docs_fs)
         )
@@ -346,7 +346,7 @@ def page_summary(
     (``build_index(keep_doc_tokens=True)``); one row per position:
     (pos, term), pos 0-based ascending.
     """
-    store = IndexStorage(index_root)
+    store = IndexStorage.open(index_root)
     doc_tokens = store.read_table(spark, "doc_tokens")
     return (
         doc_tokens.filter(F.col("doc_id") == doc_id)

@@ -137,7 +137,7 @@ def serve_search(
     from websearchengine_spark.sources.storage import IndexStorage
 
     args = parse_cgi_args(uri_query, url_decode=True)
-    with IndexStorage(index_root) if store is None else nullcontext(store) as st:
+    with IndexStorage.open(index_root) if store is None else nullcontext(store) as st:
         result = _search_uri(spark, st, uri_query, fullscan_prep, docs_fs)
     rows = [
         {

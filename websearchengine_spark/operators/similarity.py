@@ -17,7 +17,7 @@ query time would re-scan 100% of the vectors per query.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from websearchengine_spark.operators.dedup import _drop_hot_buckets
@@ -105,6 +105,7 @@ def cosine_near_dup_pairs(
     vec_col: str = "embedding",
     exhaustive: bool = False,
     max_bucket_size: int | None = None,
+    drop_obs: Observation | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a, id_b, cosine) with
     cosine >= threshold and id_a < id_b.
@@ -122,7 +123,9 @@ def cosine_near_dup_pairs(
     grows with corpus size — a default cap would silently drop distinct
     vectors past ~cap * 2^n_planes rows.  Scale n_planes with the
     corpus instead (buckets halve per plane), and cap only when a
-    degenerate embedding cluster is known to exist.
+    degenerate embedding cluster is known to exist.  ``drop_obs``: an
+    Observation that receives the drop counts of the bucket path (see
+    dedup._drop_hot_buckets).
     """
     v = _as_double(F.col(vec_col))
     base = emb.select(F.col(id_col).alias("_id"), v.alias("_v"))
@@ -137,8 +140,7 @@ def cosine_near_dup_pairs(
         bb = base.join(buckets, base["_id"] == buckets[id_col]).select(
             "_id", "_v", "bucket"
         )
-        if max_bucket_size is not None:
-            bb = _drop_hot_buckets(bb, ["bucket"], max_bucket_size, "cosine_lsh")
+        bb = _drop_hot_buckets(bb, ["bucket"], max_bucket_size, drop_obs)
         cand = (
             bb.alias("a")
             .join(bb.alias("b"), "bucket")
@@ -525,13 +527,10 @@ def ivf_topk_indexed(
     is a PARTITION filter on the parquet layout, so the scan reads only
     the nprobe probed lists — nprobe/nlist of the data, per query."""
     probe = _probe_lists(centroids, query_vec, nprobe, round_dots)
-    from websearchengine_spark.sources.storage import read_parquet_cached
+    from websearchengine_spark.sources.storage import read_parquet
 
-    # schema-memoized read (r6): the per-query probe re-opened the index
-    # for schema inference — a fixed-cost Spark job per query
-    subset = read_parquet_cached(spark, index_path).filter(
-        F.col("list_id").isin(probe)
-    )
+    # footer-typed read: no schema-inference job per query
+    subset = read_parquet(spark, index_path).filter(F.col("list_id").isin(probe))
     return cosine_topk(subset, query_vec, k, id_col, vec_col)
 
 
@@ -604,6 +603,7 @@ def semantic_dedup(
     round_cos: int | None = None,
     round_dots: int | None = None,
     max_cluster_size: int | None = None,
+    drop_obs: Observation | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication of an embedding corpus.  Assign every vector to its
@@ -621,8 +621,8 @@ def semantic_dedup(
     corpus (the SemDeDup paper uses ~#vectors/10k clusters) so the mean
     cluster stays bounded; ``max_cluster_size`` caps degenerate clusters
     BEFORE the pair stage with the same observed-drop contract as the
-    LSH ops (``dedup.LAST_BUCKET_DROP_OBS['semantic_dedup']``; a dropped
-    cluster's members are all KEPT — no silent deletion).
+    LSH ops (the caller's ``drop_obs`` Observation receives the counts;
+    a dropped cluster's members are all KEPT — no silent deletion).
 
     Two implementations per stage, one semantics:
 
@@ -679,7 +679,7 @@ def semantic_dedup(
     assigned = ac.unionByName(
         base.filter(dirty).withColumn("list_id", F.lit(None).cast("int"))
     )
-    pool = _drop_hot_buckets(ac, ["list_id"], max_cluster_size, "semantic_dedup")
+    pool = _drop_hot_buckets(ac, ["list_id"], max_cluster_size, drop_obs)
     if round_cos is None:
         dropped = _semantic_drops_arrow(pool, threshold)
     else:

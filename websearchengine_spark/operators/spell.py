@@ -119,17 +119,10 @@ def token_candidates(
     key = (target, freq_threshold)
     if cache is not None and key in cache:
         return list(cache[key])
-    vocab = store.read_table(spark, "term_stats")
-    # posting-list length in the occurrence format = 2 * ctf
-    vocab = vocab.select("term", (2 * F.col("ctf")).alias("freq"))
     # target frequency is a 1-term dictionary probe (r6: driver-side
     # row-group lookup, no Spark job; see storage.lookup_rows)
     t_rows = store.lookup_rows("term_stats", "term", [target], columns=["term", "ctf"])
-    if t_rows is None:
-        t_rows = vocab.filter(F.col("term") == target).collect()
-        target_freq = t_rows[0]["freq"] if t_rows else 0
-    else:
-        target_freq = 2 * int(t_rows.column("ctf")[0].as_py()) if t_rows.num_rows else 0
+    target_freq = 2 * int(t_rows.column("ctf")[0].as_py()) if t_rows.num_rows else 0
 
     out: list[str] = [target]
     if len(target) > 1:
@@ -149,8 +142,11 @@ def token_candidates(
                 .select("term", "freq", "bigram")
             )
         else:
-            vb = vocab.select("term", "freq", _bigram_col()).filter(
-                F.length("bigram") == 2
+            vb = (
+                store.read_table(spark, "term_stats")
+                # posting-list length in the occurrence format = 2 * ctf
+                .select("term", (2 * F.col("ctf")).alias("freq"), _bigram_col())
+                .filter(F.length("bigram") == 2)
             )
         cand = (
             vb.join(F.broadcast(bdf), "bigram")
@@ -187,7 +183,7 @@ def correct_query(
     """Returns (rank, corrected, distance, n_hits) suggestions.
 
     ``cache`` memoizes per-token candidate lists (see token_candidates)."""
-    store = IndexStorage(index_root)
+    store = IndexStorage.open(index_root)
     tokens = parse_query(query)
     if not tokens:
         return spark.createDataFrame(
@@ -259,7 +255,7 @@ def next_word_suggestions(
     (build_index(keep_doc_tokens=True)).  Returns (next_word, n) by
     (n desc, next_word asc).
     """
-    store = IndexStorage(index_root)
+    store = IndexStorage.open(index_root)
     analyzer = index_analyzer(store)
     words = [w for ws in analyze_tokens(parse_query(prefix), analyzer) for w in ws]
     if not words:

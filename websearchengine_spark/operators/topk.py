@@ -274,7 +274,10 @@ def shard_topk(
     def postings(t: str, need: np.ndarray) -> tuple:
         """t's (keys, tfs, dls, positions-or-None) over every block
         decoded so far, after decoding the ``need`` blocks not yet
-        decoded (a superset of the candidates' postings is as good)."""
+        decoded (a superset of the candidates' postings is as good).
+        Blocks decoded by an earlier call (another query of the batch,
+        or another shard group) may lie between the new ones, so the
+        union is put back in key order (doc_ordered)."""
         new = need & ~done[t]
         if new.any() or t not in decoded:
             part = decode_posting_blocks(
@@ -373,15 +376,10 @@ def _term_columns(tbl: pa.Table) -> dict[str, PostingBlocks]:
     return out
 
 
-def _corpus_stats(spark, store: IndexStorage) -> tuple[int, int, float]:
-    """num_docs/total_tf/avg_dl from the manifest (zero Spark jobs) with
-    a stats-table fallback for indexes built before they were recorded."""
-    cfg = store.read_manifest().get("config", {})
-    if "num_docs" in cfg and "total_tf" in cfg:
-        nd, tt = int(cfg["num_docs"]), int(cfg["total_tf"])
-    else:
-        srow = store.read_table(spark, "stats").collect()[0]
-        nd, tt = srow["num_docs"], srow["total_tf"]
+def _corpus_stats(store: IndexStorage) -> tuple[int, int, float]:
+    """num_docs/total_tf/avg_dl from the manifest (zero Spark jobs)."""
+    cfg = store.read_manifest()["config"]
+    nd, tt = int(cfg["num_docs"]), int(cfg["total_tf"])
     return nd, tt, tt / max(1, nd)
 
 
@@ -425,7 +423,7 @@ def _term_consts(
 
 
 def _df_lookup(
-    spark, store: IndexStorage, terms: list[str], reads: dict | None = None
+    store: IndexStorage, terms: list[str], reads: dict | None = None
 ) -> dict[str, tuple[int, int]]:
     """{term: (df, ctf)} for the query's terms present in this index —
     the one dictionary probe of every ranker.
@@ -434,24 +432,16 @@ def _df_lookup(
     range covers a query term, driver-side (term_stats is written
     term-sorted within each file, in ROW_GROUP_BYTES row groups),
     replacing a per-query Spark job whose fixed scheduling cost dwarfed
-    its 2-3-row result.  Falls back to the Spark collect when the
-    pyarrow path is unavailable.  Both numbers are memoized on the store
+    its 2-3-row result.  Both numbers are memoized on the store
     (``store.term_stats``), so a store kept open across queries (the
     HTTP server keeps one per index generation) reads each term once.
     ``reads``: the lookup's evidence (see IndexStorage.lookup_rows)."""
     known = store.term_stats
     missing = [t for t in terms if t not in known]
     if missing:
-        cols = ["term", "df", "ctf"]
-        tbl = store.lookup_rows("term_stats", "term", missing, columns=cols, reads=reads)
-        rows = (
-            tbl.to_pylist()
-            if tbl is not None
-            else store.read_table(spark, "term_stats")
-            .filter(F.col("term").isin(missing))
-            .select(*cols)
-            .collect()
-        )
+        rows = store.lookup_rows(
+            "term_stats", "term", missing, columns=["term", "df", "ctf"], reads=reads
+        ).to_pylist()
         found = {r["term"]: (int(r["df"]), int(r["ctf"])) for r in rows}
         for t in missing:
             known[t] = found.get(t)  # None pins "absent from index"
@@ -536,7 +526,7 @@ def _prepare(
     if not all_terms:
         return None
 
-    num_docs, total_tf, avg_dl = _corpus_stats(spark, store)
+    num_docs, total_tf, avg_dl = _corpus_stats(store)
     if corpus_stats is not None:
         num_docs, total_tf = corpus_stats
         avg_dl = total_tf / max(1, num_docs)
@@ -544,7 +534,7 @@ def _prepare(
     if local_stats is not None:
         stats = {t: local_stats[t] for t in all_terms if t in local_stats}
     else:
-        stats = _df_lookup(spark, store, all_terms, reads)
+        stats = _df_lookup(store, all_terms, reads)
     # a query with a term absent from this index can never match
     specs = [s for s in specs if all(t in stats for t in s[1])]
     if not specs:
@@ -610,16 +600,13 @@ def _shard_topk(
 
 # the docs columns a result row carries besides its score
 _META_COLS = [c for c in RESULT_COLS if c != "score"]
-# what the kernel reads of a postings row: the stored block fields
-# max_tf, max_impact and head stay undecoded
-_POSTING_COLS = ["shard", "term"] + [
-    f"blocks.list.element.{f}" for f in ("first_docid", "last_docid", "n", "data")
-]
+# what the kernel reads of a postings row
+_POSTING_COLS = ["shard", "term", "blocks"]
 
 
 def _local_topk(
     store: IndexStorage, sc: _Scoring, k: int, exclude: np.ndarray | None = None
-) -> tuple[np.ndarray, np.ndarray, pa.Table | None, dict] | None:
+) -> tuple[np.ndarray, np.ndarray, pa.Table | None, dict]:
     """The in-process side for ONE query: ONE kernel call over every
     shard's blocks of the query terms, read as Arrow columns by
     storage.lookup_rows's range-directed read (postings are
@@ -633,14 +620,10 @@ def _local_topk(
     rows (a table aligned with the doc_ids), fetched in ONE lookup and
     read as columns (priors and metadata together; a candidate missing
     from docs is dropped, as by the Spark side's join).  The evidence
-    is ``sc.reads`` with the kernel's block-max stats added.  None when
-    the pyarrow path is unavailable (the caller runs the Spark side
-    instead)."""
+    is ``sc.reads`` with the kernel's block-max stats added."""
     import pyarrow.compute as pc
 
     tbl = store.lookup_rows("postings", "term", sc.terms, columns=_POSTING_COLS, reads=sc.reads)
-    if tbl is None:
-        return None
     _q, ids, scores, kstats = shard_topk(
         _term_columns(tbl), sc.specs, sc.ranker, sc.const, sc.avg_dl, k, exclude
     )
@@ -648,8 +631,6 @@ def _local_topk(
     if sc.ranker != "comprehensive":
         return ids, scores, None, sc.reads
     docs = store.lookup_rows("docs", "doc_id", ids.tolist(), columns=_META_COLS, reads=sc.reads)
-    if docs is None:
-        return None
     at = pc.index_in(pa.array(ids), value_set=docs.column("doc_id"))
     keep = at.is_valid().to_numpy(zero_copy_only=False)
     rows = docs.take(at.drop_null())
@@ -726,8 +707,6 @@ def _local_result(
                 known = store.lookup_rows(
                     "docs", "doc_id", mine.tolist(), columns=_META_COLS, reads=reads
                 )
-                if known is None:
-                    raise OSError(f"cannot read {store.table_path('docs')}")
             at = pc.index_in(pa.array(mine), value_set=known.column("doc_id"))
             meta.update(
                 {r["doc_id"] + off: r for r in known.take(at.drop_null()).to_pylist()}
@@ -820,9 +799,7 @@ def _topk(
     if sc is None:
         return _local_result([(store, 0, *NO_HITS)], k, docs_join)
     if exclude_df is None and sc.postings <= INPROC_MAX_POSTINGS:
-        hits = _local_topk(store, sc, k)
-        if hits is not None:
-            return _local_result([(store, 0, *hits)], k, docs_join)
+        return _local_result([(store, 0, *_local_topk(store, sc, k))], k, docs_join)
     return _spark_topk(spark, store, sc, k, docs_join, exclude_df)
 
 

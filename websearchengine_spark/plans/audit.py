@@ -32,7 +32,7 @@ def audit_plans(spark, index_root: str) -> dict[str, tuple[bool, str]]:
     )
     from websearchengine_spark.sources.storage import IndexStorage
 
-    store = IndexStorage(index_root)
+    store = IndexStorage.open(index_root)
     out: dict[str, tuple[bool, str]] = {}
 
     # 1. query-term filter reaches the parquet scan (PushedFilters) and

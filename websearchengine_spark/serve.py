@@ -134,9 +134,10 @@ class SearchHTTPServer:
         gen = self._index_generation()
         with self._cache_lock:
             if gen != self._cache_gen:
+                store = IndexStorage.open(self.index_root)
                 if self._store is not None:
                     self._store.close()
-                self._store, self._spell_cache = IndexStorage(self.index_root), {}
+                self._store, self._spell_cache = store, {}
                 self._cache_gen = gen
             return self._store, self._spell_cache
 

@@ -1,46 +1,54 @@
-"""Index storage layer: Iceberg when available, partitioned Parquet otherwise.
+"""Index storage: partitioned-parquet tables under one root, a JSON
+manifest, and the index opened for point reads.
 
-The north_rule asks for Iceberg tables with per-partition lineage +
-metrics and resumable builds.  This sandbox has no Iceberg runtime jar
-and no network (SURVEY.md §7.0), so the layer is written against one
-small API and backed by:
-
-  * ``iceberg`` mode  — ``df.writeTo(catalog.table).append()`` (activated
-    automatically if the Iceberg SQL extension is on the classpath; the
-    config flip lives in :func:`iceberg_available`)
-  * ``parquet`` mode  — a directory per table + an explicit JSON manifest
-    (``_manifest.json``) recording snapshot id, completed shard-groups,
-    and per-group build metrics.  This preserves the observable contract:
-    atomic-ish commits (write to ``_tmp`` then rename), resume-from-
-    checkpoint, lineage.
+One on-disk format.  Every ``_manifest.json`` (an index root) and
+``_live.json`` (a live root, streaming/ingest.py) records ``"format":
+FORMAT``, written from the one constant below by write_record.  A
+reader opens a root through IndexStorage.open, and it and every record
+read raise IndexFormatError naming the root and both formats for any
+other or a missing format: rebuilding the index is the migration.  No
+reader carries a branch for an older layout.
 
 Tables of an index root:
-    pages        (optional materialized input)
     docs         doc_id, url, title, doc_len, pagerank, numviews
-    doc_terms    doc_id, term, tf
-    postings     shard, term, df_shard, ctf_shard, blocks[...]   (partitioned by shard_group)
+    doc_terms    doc_id, term, tf                    (optional)
+    doc_tokens   doc_id, tokens                      (optional)
+    postings     shard, term, df_shard, ctf_shard, blocks   (partitioned by group)
     term_stats   term, df, ctf
-    stats        num_docs, total_tf, max_dl
-    build_meta   per-shard-group build metrics + attempt lineage
+    build_meta   per-shard-group build metrics
+The manifest holds the build config (corpus statistics included), the
+committed shard-groups and the attempt lineage: commits write to a
+temporary path and rename, so a build resumes from its last committed
+group.
+
+Spark reads.  read_parquet types every read from the parquet footer
+(pyarrow, driver-side) and hands that schema to ``spark.read.schema``:
+a read starts no schema-inference job, and no schema is cached or
+stored anywhere.
 
 Point reads.  The tables of POINT_KEYS are read by key from the driver
 (IndexStorage.lookup_rows): the dictionary probe, a query's postings,
 the winners' docs rows.  Their writers cluster rows on the key
 (postings and docs are range-partitioned on it, every file is sorted
 by it), row groups are capped at ROW_GROUP_BYTES, and the commit
-records each data file's per-row-group [min, max] key range in a
-``_ranges.json`` next to the files (read once from the fresh footers,
+records each data file's size and per-row-group [min, max] key range in
+a ``_ranges.json`` next to the files (read once from the fresh footers,
 driver-side).  A lookup then reads only the files, and decodes only
 the row groups, whose range covers a wanted key, so its cost follows
-the query's own rows, not the table's size.
+the query's own rows, not the table's size.  Ranges come only from the
+records: a data file missing from its record, or whose size differs
+from it, raises IndexFormatError — on a point read and on a Spark read
+of the table alike.
 
-An IndexStorage is also the index OPENED for reading: the first point
-read of a table lists its data files, takes their ranges from the
-_ranges.json records and parses their footers, and the instance keeps
-all of it (and the files open) until close().  A serving process keeps
-one instance per index generation (serve.SearchHTTPServer), so a warm
-lookup pays only for its own row groups.  An instance sees commits made
-through other instances only when reopened.
+An IndexStorage is also the index OPENED for reading: the first read
+of a point table lists its data files and checks them against their
+records, the first point read of a file parses its footer, and the
+instance keeps all of it (and the files open) until close().  A serving
+process keeps one instance per index generation
+(serve.SearchHTTPServer), so a warm lookup pays only for its own row
+groups.  An instance sees commits made through other instances only
+when reopened.  lookup_rows returns a pyarrow Table; a read error
+raises.
 """
 
 from __future__ import annotations
@@ -53,6 +61,11 @@ import threading
 import time
 import uuid
 
+# the on-disk format this code writes and reads (see the module docstring)
+FORMAT = 1
+MANIFEST = "_manifest.json"
+LIVE_CATALOG = "_live.json"
+
 # table -> key column of the driver-side point reads (lookup_rows)
 POINT_KEYS = {"postings": "term", "docs": "doc_id", "term_stats": "term"}
 # Row-group cap of the POINT_KEYS tables, in bytes (the parquet writer's
@@ -64,40 +77,55 @@ ROW_GROUP_BYTES = 1 << 20
 # per-directory record of each data file's row-group key ranges
 RANGES_FILE = "_ranges.json"
 
-# (path -> (dir_mtime_ns, StructType)) memo for parquet schema inference:
-# every bare ``spark.read.parquet`` runs a footer-reading JOB (~50-100 ms
-# of fixed scheduling cost in local mode, a full stage on a cluster) even
-# when the table was just written by this very process.  Index tables
-# have fixed schemas per path, so the first read (or the write itself)
-# records the schema and later reads pass it explicitly — zero jobs.
-# Keyed on the directory mtime (ns) so an overwrite with a different
-# schema invalidates the entry.
-_SCHEMA_CACHE: dict[str, tuple[int, object]] = {}
+
+class IndexFormatError(Exception):
+    """An index root, or one of its files, that is not in this code's
+    on-disk FORMAT: rebuild the index."""
 
 
-def _dir_mtime_ns(path: str) -> int:
-    try:
-        return os.stat(path).st_mtime_ns
-    except OSError:
-        return -1
+def _format_error(root: str, found) -> IndexFormatError:
+    return IndexFormatError(
+        f"index at {root} has format {found!r}; this code reads format "
+        f"{FORMAT}: rebuild the index"
+    )
 
 
-def _cache_schema(path: str, schema) -> None:
-    _SCHEMA_CACHE[path] = (_dir_mtime_ns(path), schema)
+def read_record(root: str, name: str) -> dict | None:
+    """The JSON record ``name`` (MANIFEST or LIVE_CATALOG) of ``root``,
+    None when there is none; IndexFormatError unless it is FORMAT."""
+    p = os.path.join(root, name)
+    if not os.path.exists(p):
+        return None
+    with open(p) as f:
+        rec = json.load(f)
+    if rec.get("format") != FORMAT:
+        raise _format_error(root, rec.get("format"))
+    return rec
 
 
-def read_parquet_cached(spark, path: str, base_path: str | None = None):
-    """spark.read.parquet with the schema-inference job memoized away."""
-    reader = spark.read
+def write_record(root: str, name: str, rec: dict) -> None:
+    """Atomically write the JSON record ``name`` of ``root``, stamped
+    with FORMAT."""
+    os.makedirs(root, exist_ok=True)
+    p = os.path.join(root, name)
+    with open(p + ".tmp", "w") as f:
+        json.dump({**rec, "format": FORMAT}, f, indent=2, sort_keys=True)
+    os.replace(p + ".tmp", p)
+
+
+def read_parquet(spark, path: str, base_path: str | None = None):
+    """``spark.read.parquet(path)`` typed from the parquet footer: the
+    schema (hive partition columns included) is read driver-side with
+    pyarrow and passed to ``spark.read.schema``, so Spark starts no
+    schema-inference job."""
+    import pyarrow.dataset as pads
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    schema = pads.dataset(path, format="parquet", partitioning="hive").schema
+    reader = spark.read.schema(from_arrow_schema(schema, prefer_timestamp_ntz=True))
     if base_path is not None:
         reader = reader.option("basePath", base_path)
-    hit = _SCHEMA_CACHE.get(path)
-    mtime = _dir_mtime_ns(path)
-    if hit is not None and hit[0] == mtime:
-        return reader.schema(hit[1]).parquet(path)
-    df = reader.parquet(path)
-    _SCHEMA_CACHE[path] = (mtime, df.schema)
-    return df
+    return reader.parquet(path)
 
 
 def _data_files(d: str) -> list:
@@ -137,45 +165,45 @@ def _file_key_ranges(path: str, key_col: str) -> list:
     return out
 
 
-def key_ranges(d: str, key_col: str, recorded: dict | None = None) -> dict:
-    """{file name: {"size", "row_groups": per-row-group [min, max]}} for
-    the data files of directory ``d``.  A file listed in ``recorded``
-    (a _ranges.json "files" map) with its size unchanged takes the
-    recorded ranges; any other file's are read from its footer — the
-    one path for both a commit and a root written without a record."""
-    recorded = recorded or {}
-    out = {}
-    for e in _data_files(d):
-        size = e.stat().st_size
-        hit = recorded.get(e.name)
-        out[e.name] = {
-            "size": size,
-            "row_groups": hit["row_groups"]
-            if hit is not None and hit.get("size") == size
-            else _file_key_ranges(e.path, key_col),
-        }
-    return out
-
-
 def record_key_ranges(d: str, key_col: str) -> None:
-    """Commit-time record of every data file's row-group key ranges in
-    ``d`` (read once from the fresh footers, driver-side) as
+    """Commit-time record of every data file's size and row-group key
+    ranges in ``d`` (read once from the fresh footers, driver-side) as
     ``d/_ranges.json``."""
+    files = {
+        e.name: {"size": e.stat().st_size, "row_groups": _file_key_ranges(e.path, key_col)}
+        for e in _data_files(d)
+    }
     tmp = os.path.join(d, RANGES_FILE + ".tmp")
     with open(tmp, "w") as f:
-        json.dump({"key": key_col, "files": key_ranges(d, key_col)}, f)
+        json.dump({"key": key_col, "files": files}, f)
     os.replace(tmp, os.path.join(d, RANGES_FILE))
 
 
-def _recorded_ranges(d: str, key_col: str) -> dict:
-    """The "files" map of ``d``'s _ranges.json, {} when it is missing,
-    unreadable or records another key."""
-    try:
-        with open(os.path.join(d, RANGES_FILE)) as f:
+def _recorded_ranges(d: str, key_col: str) -> list[tuple[str, list]]:
+    """(path, row-group key ranges) of every data file of directory
+    ``d``, from its _ranges.json.  IndexFormatError when the data files
+    and the record differ: a file missing from it, of another size than
+    recorded, or recorded but gone."""
+    p = os.path.join(d, RANGES_FILE)
+    rec = {}
+    if os.path.exists(p):
+        with open(p) as f:
             rec = json.load(f)
-    except (OSError, ValueError):
-        return {}
-    return rec.get("files", {}) if rec.get("key") == key_col else {}
+    files = rec.get("files", {}) if rec.get("key") == key_col else {}
+    out = []
+    for e in _data_files(d):
+        hit = files.get(e.name)
+        if hit is None or hit["size"] != e.stat().st_size:
+            raise IndexFormatError(
+                f"index data file {e.path} does not match its {RANGES_FILE} "
+                f"record ({'size differs' if hit else 'not recorded'}): rebuild the index"
+            )
+        out.append((e.path, hit["row_groups"]))
+    if len(out) != len(files):
+        raise IndexFormatError(
+            f"{p} records data files that are gone: rebuild the index"
+        )
+    return out
 
 
 def _covers(want: list, rng) -> bool:
@@ -184,16 +212,6 @@ def _covers(want: list, rng) -> bool:
         return True
     i = bisect.bisect_left(want, rng[0])
     return i < len(want) and want[i] <= rng[1]
-
-
-def iceberg_available(spark) -> bool:
-    """True if an Iceberg catalog can be configured in this session."""
-    try:
-        jvm = spark.sparkContext._jvm
-        jvm.Class.forName("org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions")
-        return True
-    except Exception:
-        return False
 
 
 class _PointFile:
@@ -240,8 +258,9 @@ class IndexStorage:
     the index opened for point reads (see the module docstring).
 
     Constructing one touches nothing on disk: the write paths create the
-    root, and IndexStorage.open names a missing root instead of reading
-    nothing from it."""
+    root, and every read path opens it through IndexStorage.open, which
+    names a missing root or a foreign format instead of reading nothing
+    or the wrong thing from it."""
 
     def __init__(self, root: str):
         self.root = root
@@ -255,8 +274,13 @@ class IndexStorage:
 
     @classmethod
     def open(cls, root: str) -> "IndexStorage":
-        """The index at ``root`` for reading (see require)."""
-        return cls(root).require()
+        """The index (or live root) at ``root`` for reading: require,
+        then IndexFormatError unless its manifest or live catalog is
+        this code's FORMAT."""
+        store = cls(root).require()
+        if read_record(root, LIVE_CATALOG) is None and read_record(root, MANIFEST) is None:
+            raise _format_error(root, None)
+        return store
 
     def require(self) -> "IndexStorage":
         """This store, or FileNotFoundError naming the root when it does
@@ -271,7 +295,7 @@ class IndexStorage:
         root's segment), opened once and closed with this store."""
         with self._lock:
             if name not in self._segments:
-                seg = IndexStorage(os.path.join(self.root, name))
+                seg = IndexStorage.open(os.path.join(self.root, name))
                 seg._closed = self._closed
                 self._segments[name] = seg
             return self._segments[name]
@@ -296,15 +320,10 @@ class IndexStorage:
         self.close()
 
     # -- manifest ---------------------------------------------------------
-    @property
-    def _manifest_path(self) -> str:
-        return os.path.join(self.root, "_manifest.json")
-
     def read_manifest(self) -> dict:
-        if os.path.exists(self._manifest_path):
-            with open(self._manifest_path) as f:
-                return json.load(f)
-        return {
+        """The manifest (see read_record), or a new one for a root not
+        yet written."""
+        return read_record(self.root, MANIFEST) or {
             "snapshot_id": None,
             "build_id": None,
             "created_ts": None,
@@ -314,11 +333,7 @@ class IndexStorage:
         }
 
     def write_manifest(self, manifest: dict) -> None:
-        os.makedirs(self.root, exist_ok=True)
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=2, sort_keys=True)
-        os.replace(tmp, self._manifest_path)
+        write_record(self.root, MANIFEST, manifest)
 
     def new_build_id(self) -> str:
         return uuid.uuid4().hex[:12]
@@ -361,14 +376,10 @@ class IndexStorage:
         if name in POINT_KEYS:
             for d in _leaf_dirs(p):
                 record_key_ranges(d, POINT_KEYS[name])
-        if not partition_by:
-            # seed the schema memo: the common write-then-read-back flow
-            # (build metrics, term_stats) must not pay an inference job
-            _cache_schema(p, df.schema)
 
     def write_small_table(self, pdf, name: str, schema) -> None:
-        """Driver-side parquet write for METADATA-scale tables (stats,
-        build_meta: a handful of rows).  A Spark write action costs a
+        """Driver-side parquet write for METADATA-scale tables
+        (build_meta: a handful of rows).  A Spark write action costs a
         full job (~150 ms fixed) to move a few hundred bytes; these
         tables are driver-known scalars, so write them like the manifest
         — directly, with an explicit arrow schema so Spark reads them
@@ -386,13 +397,17 @@ class IndexStorage:
             pass
 
     def read_table(self, spark, name: str):
-        return read_parquet_cached(spark, self.table_path(name))
+        """Table ``name`` as a DataFrame (read_parquet); a point table's
+        data files are checked against their records first."""
+        if name in POINT_KEYS:
+            self._point_files(name)
+        return read_parquet(spark, self.table_path(name))
 
     def exists(self, name: str) -> bool:
         p = self.table_path(name)
         return os.path.exists(p) and (
             os.path.exists(os.path.join(p, "_SUCCESS"))
-            or any(x.startswith(("part-", "group=", "shard_group=")) for x in os.listdir(p))
+            or any(x.startswith("part-") for x in os.listdir(p))
         )
 
     def drop(self, name: str) -> None:
@@ -433,21 +448,14 @@ class IndexStorage:
             else:
                 os.makedirs(dst)
         shutil.rmtree(tmp)
-        self._seed_partitioned_schema(df.schema, name, partition_col)
-
-    def _seed_partitioned_schema(self, data_schema, name: str, partition_col: str) -> None:
-        """Seed the schema memo for a partitioned table just written:
-        discovery appends the partition column (int-valued dir names
-        infer as integer) after the data columns."""
-        from pyspark.sql import types as T
-
-        fields = [f for f in data_schema.fields if f.name != partition_col]
-        fields.append(T.StructField(partition_col, T.IntegerType()))
-        _cache_schema(self.table_path(name), T.StructType(fields))
 
     def read_partitioned(self, spark, name: str):
+        """Partitioned table ``name`` with its partition column, checked
+        like read_table."""
+        if name in POINT_KEYS:
+            self._point_files(name)
         p = self.table_path(name)
-        return read_parquet_cached(spark, p, base_path=p)
+        return read_parquet(spark, p, base_path=p)
 
     def _forget(self, name: str) -> None:
         """Drop what this store opened of table ``name`` (it is being
@@ -457,29 +465,28 @@ class IndexStorage:
         for f in files:
             f.close()
 
-    def _point_files(self, name: str, key_col: str) -> list[_PointFile]:
-        """Table ``name``'s data files with their row-group key ranges:
-        listed, and the ranges taken from the _ranges.json records (or
-        the footers), on the first call only."""
+    def _point_files(self, name: str) -> list[_PointFile]:
+        """Point table ``name``'s data files with their row-group key
+        ranges, listed and checked against the _ranges.json records
+        (_recorded_ranges) on the first call only.  FileNotFoundError
+        when the table has no data files."""
         with self._lock:
             files = self._point.get(name)
             if files is None:
                 files = [
-                    _PointFile(os.path.join(d, fname), rec["row_groups"], self._closed)
+                    _PointFile(path, ranges, self._closed)
                     for d in _leaf_dirs(self.table_path(name))
-                    for fname, rec in key_ranges(
-                        d, key_col, _recorded_ranges(d, key_col)
-                    ).items()
+                    for path, ranges in _recorded_ranges(d, POINT_KEYS[name])
                 ]
+                if not files:
+                    raise FileNotFoundError(f"no data files in {self.table_path(name)}")
                 self._point[name] = files
             return files
 
     def point_schema(self, name: str):
         """The pyarrow schema of point-read table ``name``, from its
         first data file's footer (read once)."""
-        files = self._point_files(name, POINT_KEYS[name])
-        if not files:
-            raise FileNotFoundError(f"no data files in {self.table_path(name)}")
+        files = self._point_files(name)
         if files[0].meta is None:
             files[0].read([], None)
         return files[0].meta.schema.to_arrow_schema()
@@ -492,8 +499,8 @@ class IndexStorage:
         probe, postings fetch and winners' metadata are k-key lookups; a
         Spark job per lookup costs ~100 ms of fixed scheduling for a few
         rows.  The read is range-directed: each data file's row-group
-        [min, max] key ranges (recorded at commit, see key_ranges) pick
-        the files to read and the row groups to decode, and only the
+        [min, max] key ranges (recorded at commit, see record_key_ranges)
+        pick the files to read and the row groups to decode, and only the
         matching rows are kept.  On a key-clustered table (postings and
         docs are range-partitioned on their key, every file is
         key-sorted) that is about one row group per key and partition,
@@ -501,46 +508,39 @@ class IndexStorage:
         footers come from this store's first read of the table; later
         reads reuse them and the open files.
 
-        ``columns`` name top-level columns or nested leaves
-        (``blocks.list.element.n``: only those leaves are decoded).
-        ``reads``: a dict this call adds its evidence to, under
-        ``reads[name]``: files and row groups read versus the table's
-        totals.  Returns a pyarrow Table of the matching rows (the
-        top-level columns of ``columns``, else all), or None if the
-        pyarrow path is unavailable (caller falls back to a Spark
-        collect)."""
-        try:
-            import pyarrow as pa
-            import pyarrow.compute as pc
+        ``columns`` name top-level columns.  ``reads``: a dict this call
+        adds its evidence to, under ``reads[name]``: files and row groups
+        read versus the table's totals.  Returns a pyarrow Table of the
+        matching rows (the columns of ``columns``, else all).  A read
+        error raises: IndexFormatError for files that do not match their
+        records (see _recorded_ranges), FileNotFoundError for a table
+        with no data files, pyarrow's own error for an unreadable
+        file."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-            want = sorted(set(values))
-            cols = None if columns is None else list(dict.fromkeys([*columns, key_col]))
-            zero = dict.fromkeys(
-                ("files_read", "files_total", "row_groups_read", "row_groups_total"), 0
-            )
-            seen = zero if reads is None else reads.setdefault(name, zero)
-            files = self._point_files(name, key_col)
-            parts = []
-            for f in files:
-                rgs = [i for i, r in enumerate(f.ranges) if _covers(want, r)]
-                seen["files_total"] += 1
-                seen["row_groups_total"] += len(f.ranges)
-                if rgs:
-                    seen["files_read"] += 1
-                    seen["row_groups_read"] += len(rgs)
-                    parts.append(f.read(rgs, cols))
-            if not files:
-                return None
-            if not parts:  # no row group holds a wanted key
-                parts = [files[0].read([], cols)]
-            tbl = pa.concat_tables(parts)
-            keys = pa.array(want).cast(tbl.schema.field(key_col).type)
-            tbl = tbl.filter(pc.is_in(tbl[key_col], value_set=keys))
-            if columns is None:
-                return tbl
-            return tbl.select(list(dict.fromkeys(c.split(".")[0] for c in columns)))
-        except Exception:
-            return None
+        want = sorted(set(values))
+        cols = None if columns is None else list(dict.fromkeys([*columns, key_col]))
+        zero = dict.fromkeys(
+            ("files_read", "files_total", "row_groups_read", "row_groups_total"), 0
+        )
+        seen = zero if reads is None else reads.setdefault(name, zero)
+        files = self._point_files(name)
+        parts = []
+        for f in files:
+            rgs = [i for i, r in enumerate(f.ranges) if _covers(want, r)]
+            seen["files_total"] += 1
+            seen["row_groups_total"] += len(f.ranges)
+            if rgs:
+                seen["files_read"] += 1
+                seen["row_groups_read"] += len(rgs)
+                parts.append(f.read(rgs, cols))
+        if not parts:  # no row group holds a wanted key
+            parts = [files[0].read([], cols)]
+        tbl = pa.concat_tables(parts)
+        keys = pa.array(want).cast(tbl.schema.field(key_col).type)
+        tbl = tbl.filter(pc.is_in(tbl[key_col], value_set=keys))
+        return tbl if columns is None else tbl.select(list(columns))
 
 
 def _writer(df, name: str):

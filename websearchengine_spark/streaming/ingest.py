@@ -60,6 +60,8 @@ of ordinary index segments:
     catalog-gated: only files listed in _live.json count, so a crash
     between tombstone write and catalog publish leaves the old versions
     visible (not vanished) until redelivery republishes both together.
+    Every tombstone file is written partitionBy("seg"), so a segment
+    reads only its own seg= subdirs.
     pending_tombstones()/compaction_overdue() gauge the backlog from
     the catalog alone.
 
@@ -80,7 +82,6 @@ operators/build.py PACK_BITS) leaves room for ~2e12 cumulative docs.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
@@ -90,15 +91,17 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from websearchengine_spark.operators.merge import (
-    doc_id_offsets,
-    merge_many_indexes,
-    segment_id_span,
-)
+from websearchengine_spark.operators.merge import doc_id_offsets, merge_many_indexes
 from websearchengine_spark.operators.util import as_dataframe
-from websearchengine_spark.sources.storage import IndexStorage, read_parquet_cached
+from websearchengine_spark.sources.storage import (
+    LIVE_CATALOG,
+    IndexStorage,
+    read_parquet,
+    read_record,
+    write_record,
+)
 
-CATALOG_NAME = "_live.json"
+CATALOG_NAME = LIVE_CATALOG
 TOMBSTONES_DIR = "tombstones"
 
 # build kwargs that are PER-BATCH DATA, not index format: they are never
@@ -107,16 +110,10 @@ TOMBSTONES_DIR = "tombstones"
 UNPINNED_BUILD_KWARGS = frozenset(["signals", "resume"])
 
 
-def _catalog_path(root: str) -> str:
-    return os.path.join(root, CATALOG_NAME)
-
-
 def read_live_catalog(root: str) -> dict:
-    p = _catalog_path(root)
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return {
+    """The catalog of the live root ``root`` (IndexFormatError unless it
+    is storage.FORMAT), or a new one for a root not yet written."""
+    return read_record(root, CATALOG_NAME) or {
         "generation": 0,
         "segments": [],        # [{"dir", "batch_id"|None, "num_docs"}] in id order
         "applied_batches": [],  # batch ids already ingested (exactly-once)
@@ -131,14 +128,6 @@ def read_live_catalog(root: str) -> dict:
     }
 
 
-def _write_live_catalog(root: str, cat: dict) -> None:
-    os.makedirs(root, exist_ok=True)
-    tmp = _catalog_path(root) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(cat, f, indent=2, sort_keys=True)
-    os.replace(tmp, _catalog_path(root))  # atomic publish
-
-
 def live_segment_roots(root: str) -> list[str]:
     """Absolute segment roots in doc_id-space order (base first)."""
     cat = read_live_catalog(root)
@@ -151,48 +140,17 @@ def tombstone_files(root: str, cat: dict | None = None) -> list[dict]:
     Visibility is gated on the catalog: a tombstone parquet written by a
     batch that crashed before its catalog publish is NOT returned (its
     urls stay visible until redelivery republishes tombstones + segment
-    together — the atomic-publish contract).  Legacy roots whose catalog
-    predates the listing fall back to a directory scan (unknown counts).
-    ``cat``: the catalog already read (else it is read here)."""
+    together — the atomic-publish contract).  ``cat``: the catalog
+    already read (else it is read here)."""
     cat = read_live_catalog(root) if cat is None else cat
-    if "tombstone_files" in cat:
-        return list(cat["tombstone_files"])
-    p = os.path.join(root, TOMBSTONES_DIR)
-    if not os.path.isdir(p):
-        return []
-    return [
-        {"file": os.path.join(TOMBSTONES_DIR, e), "n": None}
-        for e in sorted(os.listdir(p))
-        if e.startswith(("batch-", "op-"))
-    ]
+    return list(cat["tombstone_files"])
 
 
-def _ensure_tombstone_listing(cat: dict, root: str) -> None:
-    """First catalog write under the catalog-gated scheme on a legacy
-    root: absorb the directory's pre-listing tombstone files so they
-    stay visible once the key exists (the scan fallback stops then)."""
-    if "tombstone_files" in cat:
-        return
-    p = os.path.join(root, TOMBSTONES_DIR)
-    cat["tombstone_files"] = (
-        [
-            {"file": os.path.join(TOMBSTONES_DIR, e), "n": None}
-            for e in sorted(os.listdir(p))
-            if e.startswith(("batch-", "op-"))
-        ]
-        if os.path.isdir(p)
-        else []
-    )
-
-
-def pending_tombstones(root: str, cat: dict | None = None) -> int | None:
+def pending_tombstones(root: str, cat: dict | None = None) -> int:
     """Total tombstoned doc_ids awaiting compaction — catalog sums, zero
-    Spark jobs (None on a legacy root whose counts are unknown).
-    ``cat``: the catalog already read (else it is read here)."""
-    files = tombstone_files(root, cat)
-    if any(f.get("n") is None for f in files):
-        return None
-    return sum(int(f["n"]) for f in files)
+    Spark jobs.  ``cat``: the catalog already read (else it is read
+    here)."""
+    return sum(int(f["n"]) for f in tombstone_files(root, cat))
 
 
 # Pending-tombstone gauge threshold: search stays correct and
@@ -208,9 +166,8 @@ def compaction_overdue(
     (default COMPACTION_OVERDUE_TOMBSTONES) — the LSM health gauge the
     compaction policy should watch alongside segment count.  ``cat``:
     the catalog already read (else it is read here)."""
-    n = pending_tombstones(root, cat)
     t = COMPACTION_OVERDUE_TOMBSTONES if threshold is None else threshold
-    return n is not None and n > t
+    return pending_tombstones(root, cat) > t
 
 
 def _union_all(dfs: list):
@@ -220,47 +177,20 @@ def _union_all(dfs: list):
     return u
 
 
-def _read_tomb_file(spark: SparkSession, path: str):
-    """One tombstone parquet as a (seg, doc_id) DataFrame, or None when
-    the file is gone.
-
-    Two layouts: batch/op files are written ``partitionBy("seg")`` (seg
-    recovered via partition discovery), and legacy flat files carry seg
-    as a data column."""
-    if not os.path.isdir(path):
-        return None
-    if any(e.startswith("seg=") for e in os.listdir(path)):
-        return read_parquet_cached(spark, path).select(
-            F.col("seg").cast("string").alias("seg"), "doc_id"
-        )
-    return read_parquet_cached(spark, path).select("seg", "doc_id")
-
-
 def _tombstone_parts(
     root: str, seg_names: list[str], files: list[dict]
-) -> dict[str, list]:
-    """{segment_dir: [(parquet dir, flat)]}: the tombstone ``files``
-    (tombstone_files) holding each segment's rows, found by driver-side
-    listdir.
-
-    Two layouts: batch/op files are written ``partitionBy("seg")`` and
-    contribute only the seg= subdirs that exist (flat=False, a doc_id
-    column); legacy flat files carry seg as a data column and are
-    listed for every segment (flat=True, filter on seg when read)."""
-    out: dict[str, list] = {s: [] for s in seg_names}
-    for f in files:
-        path = os.path.join(root, f["file"])
-        if not os.path.isdir(path):
-            continue
-        if any(e.startswith("seg=") for e in os.listdir(path)):
-            for s in seg_names:
-                p = os.path.join(path, f"seg={s}")
-                if os.path.isdir(p):
-                    out[s].append((p, False))
-        else:
-            for s in seg_names:
-                out[s].append((path, True))
-    return out
+) -> dict[str, list[str]]:
+    """{segment_dir: [seg= parquet dirs]}: the subdirs of the tombstone
+    ``files`` (tombstone_files) holding each segment's rows, found by
+    driver-side stat."""
+    return {
+        s: [
+            p
+            for f in files
+            if os.path.isdir(p := os.path.join(root, f["file"], f"seg={s}"))
+        ]
+        for s in seg_names
+    }
 
 
 def tombstones_for_segments(
@@ -282,33 +212,27 @@ def tombstones_for_segments(
         if not parts:
             out[s] = None
             continue
-        out[s] = _union_all(
-            [
-                read_parquet_cached(spark, p).filter(F.col("seg") == s).select("doc_id")
-                if flat
-                else read_parquet_cached(spark, p).select("doc_id")
-                for p, flat in parts
-            ]
-        ).select(
+        out[s] = _union_all([read_parquet(spark, p) for p in parts]).select(
             (F.col("doc_id") % n_shards).cast("int").alias("shard"),
             F.col("doc_id").cast("long").alias("doc_id"),
         )
     return out
 
 
-def _tombstone_ids(parts: list, seg: str) -> np.ndarray:
-    """The in-process side's tombstone mask: segment ``seg``'s local
-    doc_ids read with pyarrow from its ``_tombstone_parts`` files."""
+def _tombstone_ids(parts: list[str]) -> np.ndarray:
+    """The in-process side's tombstone mask: a segment's local doc_ids
+    read with pyarrow from its ``_tombstone_parts`` dirs."""
     import pyarrow.dataset as pads
 
-    ids = [
-        pads.dataset(p, format="parquet")
-        .to_table(columns=["doc_id"], filter=(pads.field("seg") == seg) if flat else None)
-        .column("doc_id")
-        .to_numpy()
-        for p, flat in parts
-    ]
-    return np.unique(np.concatenate(ids))
+    return np.unique(
+        np.concatenate(
+            [
+                pads.dataset(p, format="parquet").to_table(columns=["doc_id"])
+                .column("doc_id").to_numpy()
+                for p in parts
+            ]
+        )
+    )
 
 
 def read_tombstones(
@@ -319,20 +243,14 @@ def read_tombstones(
     (merge_many_indexes takes per-segment arrays); the search path uses
     tombstones_for_segments and never collects these.  Visibility is
     catalog-gated (see tombstone_files); pass ``files`` to read an exact
-    snapshot."""
+    snapshot.  A listed file that is gone raises."""
     if files is None:
         files = tombstone_files(root)
     if not files:
         return {}
-    parts = [
-        d
-        for f in files
-        if (d := _read_tomb_file(spark, os.path.join(root, f["file"])))
-        is not None
-    ]
-    if not parts:
-        return {}
-    rows = _union_all(parts).distinct().collect()
+    rows = _union_all(
+        [read_parquet(spark, os.path.join(root, f["file"])) for f in files]
+    ).select("seg", "doc_id").distinct().collect()
     out: dict[str, list] = {}
     for r in rows:
         out.setdefault(r["seg"], []).append(r["doc_id"])
@@ -357,12 +275,12 @@ def _write_tombstones(
     ``tombstone_files`` lists, so a crash before it leaves the old
     versions visible (not vanished).  Returns (catalog, hit count): the
     catalog is re-read AFTER the job, with this file's entry replacing
-    any earlier one (a legacy-root absorb of a crashed attempt's write,
-    count unknown); a file with no hits is removed instead of listed."""
+    any earlier one; a file with no hits is removed instead of
+    listed."""
     tomb_path = os.path.join(root, tomb_rel)
     hits = _union_all(
         [
-            IndexStorage(os.path.join(root, seg["dir"]))
+            IndexStorage.open(os.path.join(root, seg["dir"]))
             .read_table(spark, "docs")
             .join(urls, "url", "semi")
             .select(F.lit(seg["dir"]).alias("seg"), "doc_id")
@@ -376,7 +294,6 @@ def _write_tombstones(
     finally:
         hits.unpersist()
     cat = read_live_catalog(root)
-    _ensure_tombstone_listing(cat, root)
     cat["tombstone_files"] = [
         f for f in cat["tombstone_files"] if f["file"] != tomb_rel
     ]
@@ -448,7 +365,7 @@ def apply_pages_batch(
         cat["lineage"].append(
             {"event": "empty_batch", "batch_id": batch_id, "ts": time.time()}
         )
-        _write_live_catalog(root, cat)
+        write_record(root, CATALOG_NAME, cat)
         return None
 
     from websearchengine_spark.operators.build import build_index
@@ -461,7 +378,6 @@ def apply_pages_batch(
     cat = read_live_catalog(root)  # re-read: the build can take a while
     if batch_id in cat["applied_batches"]:
         return None
-    _ensure_tombstone_listing(cat, root)
 
     n_tombstoned = 0
     if upsert and cat["segments"]:
@@ -495,7 +411,7 @@ def apply_pages_batch(
             "ts": time.time(),
         }
     )
-    _write_live_catalog(root, cat)
+    write_record(root, CATALOG_NAME, cat)
     return seg_root
 
 
@@ -531,7 +447,7 @@ def delete_urls(
             "ts": time.time(),
         }
     )
-    _write_live_catalog(root, cat)
+    write_record(root, CATALOG_NAME, cat)
     return n
 
 
@@ -623,7 +539,6 @@ def compact_live(
     num_docs = int(out_cfg["num_docs"])
 
     cat = read_live_catalog(root)
-    _ensure_tombstone_listing(cat, root)
     merged_dirs = {s["dir"] for s in segs}
     # a segment appended while the merge ran (writers should be
     # single-threaded, but the sink + a driver-side compact can race)
@@ -658,7 +573,7 @@ def compact_live(
             "ts": time.time(),
         }
     )
-    _write_live_catalog(root, cat)
+    write_record(root, CATALOG_NAME, cat)
     if gc:
         for r in seg_roots:
             shutil.rmtree(r, ignore_errors=True)
@@ -681,7 +596,7 @@ def live_stats(spark: SparkSession, root: str) -> tuple[int, int, int]:
     num_docs = total_tf = 0
     n_shards = None
     for seg in live_segment_roots(root):
-        cfg = IndexStorage(seg).read_manifest()["config"]
+        cfg = IndexStorage.open(seg).read_manifest()["config"]
         num_docs += int(cfg["num_docs"])
         total_tf += int(cfg["total_tf"])
         n_shards = int(cfg["n_shards"])
@@ -756,7 +671,7 @@ def _search_segments(
     stores = [store.segment(n) for n in names]
     cfgs = [s.read_manifest()["config"] for s in stores]
     n_shards = int(cfgs[0]["n_shards"])
-    offsets = doc_id_offsets([segment_id_span(c) for c in cfgs], n_shards)
+    offsets = doc_id_offsets([int(c["id_span"]) for c in cfgs], n_shards)
     num_docs = sum(int(c["num_docs"]) for c in cfgs)
     total_tf = sum(int(c["total_tf"]) for c in cfgs)
 
@@ -769,7 +684,7 @@ def _search_segments(
             for w in ws
         }
     )
-    seg_stats = [_df_lookup(spark, s, terms) for s in stores]
+    seg_stats = [_df_lookup(s, terms) for s in stores]
     gstats: dict[str, tuple[int, int]] = {}
     for st in seg_stats:
         for t, (df, ctf) in st.items():
@@ -785,16 +700,12 @@ def _search_segments(
         if sc is None:  # a query term absent here: no match
             hits.append((seg, off, *NO_HITS))
             continue
-        if inproc_k is not None:
-            parts = tomb_parts[name]
-            # a legacy root's backlog size is unknown: Spark side
-            tombs = (pending if pending is not None else float("inf")) if parts else 0
-            if sc.postings + tombs <= INPROC_MAX_POSTINGS:
-                exclude = _tombstone_ids(parts, name) if parts else None
-                h = _local_topk(seg, sc, inproc_k, exclude)
-                if h is not None:
-                    hits.append((seg, off, *h))
-                    continue
+        parts = tomb_parts[name]
+        cost = sc.postings + (pending if parts else 0)
+        if inproc_k is not None and cost <= INPROC_MAX_POSTINGS:
+            exclude = _tombstone_ids(parts) if parts else None
+            hits.append((seg, off, *_local_topk(seg, sc, inproc_k, exclude)))
+            continue
         if seg_tombs is None:
             seg_tombs = tombstones_for_segments(spark, root, n_shards, names, files)
         p = spark_side(seg, sc, seg_tombs[name])
